@@ -7,10 +7,10 @@ back-to-back runs (plus the min, reported separately): this box's
 throughput drifts ±10-30% between sessions (BENCH/BASELINE.md
 repeatability notes), so single runs are not comparable across rounds.
 
-The shared extraction/vocab/pairs/canon tables consumed by the carb
-and kg query families are materialized ONCE and billed to their own
-``shared_materialization_sec`` line — previously that cost fell
-outside every timed region entirely.
+The shared tables consumed by the carb, kg and datapipe query
+families (``__spark_entry__.shared_builds``) are materialized ONCE
+before the timed queries; ``shared_tables_sec`` gives each table's own
+build seconds and ``shared_materialization_sec`` their sum.
 
 Also usable for the two-parallelism scaling evidence
 (BASELINE.md): SPARK_GRAFT_CPUS=8 python bench.py  vs  =32.
@@ -65,29 +65,13 @@ def main() -> None:
      .mapInPandas(_warm, "id long").write.mode("overwrite")
      .format("noop").save())
 
-    # Shared memoized tables (rule triples + kg vocab/pairs/canon):
-    # built once, consumed by ~10 queries — billed explicitly here so
-    # the cost is visible instead of falling outside every timed query.
-    t0 = time.perf_counter()
-    e._triples_memo(spark, sf_dir)
-    e._kg_parts(spark, sf_dir)
-    e._graph_parts(spark, sf_dir)
-    # shared winnow fingerprint table (dp_winnow_pairs + dp_containment)
-    e._winnow_fp_memo(spark, sf_dir)
-    # shared co-mention pair table (truss / clustering / wpagerank)
-    e._comention_memo(spark, sf_dir)
-    # shared source-labeled BFS ball (kg_khop + kg_harmonic)
-    e._seedball_memo(spark, sf_dir)
-    # shared keyed/partitioned carb eval inputs (all five carb queries)
-    e._carb_parts(spark, sf_dir)
-    # shared k-means assignment (dp_kmeans_stats reads the table)
-    e._kmeans_memo(spark, sf_dir)
-    # the incremental pair's shared prior-graph + merge build (lazy
-    # checkpoints — force them so the cost lands here, not in whichever
-    # incremental query runs first)
-    for df in e._incremental_parts(spark, sf_dir):
-        df.write.mode("overwrite").format("noop").save()
-    shared_sec = round(time.perf_counter() - t0, 4)
+    # Shared tables (the KG stage tables, carb inputs, BFS ball, ...):
+    # built once, consumed by many queries — billed explicitly here, per
+    # table, so the cost is visible instead of falling outside every
+    # timed query.
+    for name in e.shared_builds():
+        e._shared(spark, sf_dir, name)
+    shared_tables = dict(e.shared_seconds)
 
     timings: dict[str, float] = {}
     t_min: dict[str, float] = {}
@@ -126,7 +110,8 @@ def main() -> None:
         "queries": timings,
         "queries_min": t_min,
         "repeats": repeats,
-        "shared_materialization_sec": shared_sec,
+        "shared_materialization_sec": round(sum(shared_tables.values()), 4),
+        "shared_tables_sec": shared_tables,
         "rows": n_rows,
         "triples_per_sec": triples_sec,
         "triples_per_sec_median": triples_sec_med,

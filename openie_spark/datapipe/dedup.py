@@ -115,9 +115,11 @@ def minhash_pairs_docs(docs: DataFrame,
     vs ~10s on a 10x replica with 10-copy groups)."""
     from openie_spark.functions.partitioning import spread
 
+    # group key = (text IS NULL, md5(text)) as one string: md5 is 32
+    # hex digits, so the NULL marker collides with no text at all
     keyed = spread(docs, "doc_id").select(
         "doc_id", "text",
-        F.md5(F.coalesce(F.col("text"), F.lit("\x00NULL"))).alias("gkey"),
+        F.coalesce(F.md5(F.col("text")), F.lit("NULL")).alias("gkey"),
     ).localCheckpoint(eager=False)     # feeds reps AND the member map
     reps = (
         keyed.groupBy("gkey")

@@ -140,8 +140,8 @@ def _with_key(df: DataFrame) -> DataFrame:
     A pre-computed ``norm_key`` column is REUSED (aliased, not
     recomputed): callers that materialize a keyed, hash-partitioned
     eval table once (the warehouse pattern — see __spark_entry__'s
-    carb memo) keep both the key computation and, because ProjectExec
-    is alias-aware, the partitioning.
+    carb_gold shared table) keep both the key computation and,
+    because ProjectExec is alias-aware, the partitioning.
     """
     key = (F.col("norm_key") if "norm_key" in df.columns
            else normalize_key_col(F.col("sent")))

@@ -802,14 +802,15 @@ def khop_distances(nodes: DataFrame, edges: DataFrame,
     partitions like any other join.
 
     Pass a precomputed ``ball`` (seed_ball_distances' labeled
-    (src, entity_id, dist) table, same k/seed_mod) to skip the BFS
+    (src, entity_id, dist) table, default k/seed_mod) to skip the BFS
     entirely: the seed-SET distance is exactly min over sources of the
     per-source distance, so when harmonic centrality has already paid
     for the labeled BFS this collapses to ONE partial-agg groupBy —
     the warehouse memo pattern shared with kg_harmonic.
     """
     if ball is not None:
-        return ball.groupBy("entity_id").agg(F.min("dist").alias("dist"))
+        return (_seed_ball(nodes, edges, k, seed_mod, ball)
+                .groupBy("entity_id").agg(F.min("dist").alias("dist")))
     und = undirected_edges(edges)
     sym = und.unionAll(
         und.select(F.col("b").alias("a"), F.col("a").alias("b"))
@@ -874,6 +875,20 @@ def seed_ball_distances(nodes: DataFrame, edges: DataFrame,
     return dist
 
 
+def _seed_ball(nodes: DataFrame, edges: DataFrame, k: int, seed_mod: int,
+               ball: DataFrame | None) -> DataFrame:
+    """The labeled BFS for (k, seed_mod), or the precomputed ``ball``.
+    A ball was built with the default k and seed_mod, so passing other
+    values with it is an error rather than silently ignored."""
+    if ball is None:
+        return seed_ball_distances(nodes, edges, k, seed_mod)
+    if (k, seed_mod) != (KHOP_K, KHOP_SEED_MOD):
+        raise ValueError(
+            f"a precomputed ball has k={KHOP_K}, seed_mod={KHOP_SEED_MOD}; "
+            f"got k={k}, seed_mod={seed_mod}")
+    return ball
+
+
 def harmonic_centrality(nodes: DataFrame, edges: DataFrame,
                         k: int = KHOP_K,
                         seed_mod: int = KHOP_SEED_MOD,
@@ -890,8 +905,7 @@ def harmonic_centrality(nodes: DataFrame, edges: DataFrame,
     Scale shape: seed_ball_distances (the labeled BFS — see there) +
     ONE partial-agg groupBy(src) rollup. Pass a precomputed ``ball``
     to reuse a memoized labeled-BFS table (shared with khop)."""
-    dist = (ball if ball is not None
-            else seed_ball_distances(nodes, edges, k, seed_mod))
+    dist = _seed_ball(nodes, edges, k, seed_mod, ball)
     return (
         dist.where(F.col("dist") > 0)
         .groupBy("src")
@@ -925,8 +939,7 @@ def seed_pair_distances(nodes: DataFrame, edges: DataFrame,
     construction); no BFS of its own when ``ball`` is passed."""
     from openie_spark.datapipe.hashing import md5h60
 
-    dist = (ball if ball is not None
-            else seed_ball_distances(nodes, edges, k, seed_mod))
+    dist = _seed_ball(nodes, edges, k, seed_mod, ball)
     return (
         dist.where(F.col("dist") > 0)
         .where(md5h60(F.concat(F.lit(f"{KHOP_SALT}#"), F.col("entity_id")))

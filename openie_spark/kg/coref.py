@@ -86,7 +86,7 @@ def coref_edges(triples: DataFrame, canon: DataFrame) -> DataFrame:
     vocabulary-map joins (broadcast, same as build_edges_from_norm's
     small-vocab strategy). The inner map joins drop rows whose
     un-repaired side is a stopword/empty for free — identical edge
-    semantics to kg.graph.build_edges."""
+    semantics to kg.graph.build_edges_from_norm."""
     from openie_spark.kg.graph import norm_triples
 
     prov = ["conv_id", "turn_idx", "sent_idx", "ext_idx"]

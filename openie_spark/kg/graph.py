@@ -24,7 +24,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from openie_spark.functions.joins import salted_equi_join
-from openie_spark.kg.mentions import norm_mention_col
 
 _PROV = ["conv_id", "turn_idx", "sent_idx", "ext_idx"]
 
@@ -87,14 +86,6 @@ def build_edges_from_norm(tn: DataFrame, canon: DataFrame,
 
     edges = attach(attach(tn, "subj_norm", "src_id"), "obj_norm", "dst_id")
     return edges.select("src_id", "dst_id", "pred", *_PROV)
-
-
-def build_edges(triples: DataFrame, canon: DataFrame,
-                strategy: str = "broadcast") -> DataFrame:
-    """Convenience composition for one-shot queries: normalize + join.
-    The batch pipeline uses norm_triples / build_edges_from_norm with
-    the normalized table materialized between them."""
-    return build_edges_from_norm(norm_triples(triples), canon, strategy)
 
 
 def display_labels(canon: DataFrame) -> DataFrame:

@@ -159,9 +159,10 @@ def extract_triples(transcripts: DataFrame, backend: str = "rule", limit: int | 
     """transcripts → triples: the full extraction pipeline A→E.
 
     backend: 'rule' (pure codegen column expressions) |
-    'rule_arrow' (same semantics fused into one mapInPandas — faster
-    in this Spark build, row-identical by tests/test_fast_extract.py) |
-    'neural' (numpy BiLSTM+CRF)."""
+    'rule_arrow' (same semantics fused into one mapInPandas,
+    row-identical by tests/test_fast_extract.py; timings vs 'rule' in
+    operators/fast_extract.py) | 'neural' (numpy BiLSTM+CRF) |
+    'neural_fused' (the neural chain in one mapInPandas)."""
     from openie_spark.operators.sentences import segment_transcripts
 
     if backend == "rule_arrow":
@@ -186,8 +187,6 @@ def extract_triples(transcripts: DataFrame, backend: str = "rule", limit: int | 
         from openie_spark.model.infer import tag_joint_neural
 
         return assemble_triples(tag_joint_neural(sentences))
-    if backend == "neural_staged":  # explicit alias for A/B runs
-        backend = "neural"
     tagged = tag_predicates(sentences, backend=backend)
     if backend == "rule":
         return assemble_triples_fast(fan_out_spans(tagged, limit))

@@ -5,14 +5,30 @@ tag_predicates -> fan_out_spans -> assemble_triples_fast), pinned
 row-identical by tests/test_fast_extract.py. The plan is still narrow:
 scan -> mapInPandas, no shuffle.
 
-Measured honestly (round 2): per-turn CORE time of the fused kernel is
-cheaper than the fold-lambda expressions (~845us/turn), but END-TO-END
-the codegen `rule` path wins at every parallelism level tried
-(local[2]/[8]/[32]) — Arrow serialization of the wide triple rows plus
-python-worker contention eats the kernel win. `rule` is therefore the
-default backend; this path remains useful where JVM heap pressure, not
-CPU, is the binding constraint, and as the process-parallel reference
-the neural backend shares its batch plumbing with.
+rule vs rule_arrow, measured (the one record; other docstrings point
+here):
+
+* Round 2, 32-core box, the extraction job end to end at
+  local[2]/[8]/[32]: `rule` won at every level. The fused kernel's
+  per-turn core time is lower (~845us/turn less), but Arrow
+  serialization of the wide triple rows plus Python-worker contention
+  ate that win. `rule` is therefore the default backend.
+* 4-cpu box (nproc 4), local[4], sf0.1 (53,516 triples), timing
+  ``extract_triples(...).localCheckpoint(eager=True)`` (the driver's
+  shared triples build) in two processes with alternating order, 4 runs
+  per backend each:
+  - steady state (7 runs per backend, each backend's first run in a
+    process excluded): rule_arrow min 1.06 s, median 1.19 s; rule min
+    1.80 s, median 2.17 s;
+  - a backend's first run in an already-warm JVM: rule_arrow 4.5 s
+    (Python worker start), rule 5.4 s (code generation);
+  - the first job of a fresh JVM: rule_arrow 11.5 s, rule 12.2 s.
+
+So on 4 cpus rule_arrow is the cheaper shared build, which is why the
+driver's shared tables use it; the pipeline default stays `rule` until
+an end-to-end KGPipeline comparison on the same box says otherwise.
+This path is also the process-parallel reference the neural backend
+shares its batch plumbing with.
 
 Reference parity is inherited from the codegen path's own parity
 anchors: segmentation ≙ utils/dataset.py:28-53 block reading with

@@ -28,12 +28,23 @@ from __future__ import annotations
 import json
 import os
 import time
+from collections.abc import Callable
 from dataclasses import dataclass, field
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from openie_spark import config as C
+from openie_spark.kg import analytics as A
+from openie_spark.kg.coref import coref_edges
+from openie_spark.kg.dialogue import topic_segments
+from openie_spark.kg.enrich import entity_salience, entity_types, relation_schema
+from openie_spark.kg.graph import build_edges_from_norm, build_nodes, norm_triples
+from openie_spark.kg.linking import exact_pairs, minhash_pairs, skew_stats
+from openie_spark.kg.mentions import mention_vocab, mentions_from_norm
+from openie_spark.operators.extract import extract_triples
+from openie_spark.sources.transcripts import read_transcripts
 
 ENGINE_VERSION = "openie-spark-0.1"
 N_BUCKETS = 32
@@ -134,9 +145,144 @@ class StageResult:
     manifest: dict = field(default_factory=dict)
 
 
+# --------------------------------------------------------- stage table
+# The KG DAG, declared once. KGPipeline.run persists these rows with
+# manifests; the driver queries (__spark_entry__._shared) build the
+# core rows in memory from the same functions.
+
+
+@dataclass(frozen=True)
+class Stage:
+    """One stage: ``build(job, *tables)`` gets the KGPipeline (its
+    spark, input_dir, backend and pair_mode) and the upstream tables,
+    in ``upstream`` order and without their ``bucket`` column.
+    ``bucket`` is the column hashed into the persisted ``bucket``
+    lineage column; ``metrics(out)`` adds manifest metrics over the
+    written table."""
+
+    name: str
+    build: Callable[..., DataFrame]
+    upstream: tuple[str, ...]
+    bucket: str
+    metrics: Callable[[DataFrame], dict] | None = None
+
+
+def _pure(fn: Callable[..., DataFrame]) -> Callable[..., DataFrame]:
+    """A build that reads only its upstream tables."""
+    return lambda job, *tables: fn(*tables)
+
+
+def _transcripts(job) -> DataFrame:
+    return read_transcripts(job.spark, job.input_dir)
+
+
+def _triples(job) -> DataFrame:
+    return extract_triples(_transcripts(job), backend=job.backend)
+
+
+def _pairs(job, vocab: DataFrame) -> DataFrame:
+    return (exact_pairs if job.pair_mode == "exact" else minhash_pairs)(vocab)
+
+
+def _components(job, vocab: DataFrame, pairs: DataFrame) -> DataFrame:
+    # imported here, not at module level: connected_components is
+    # looked up at call time so a tracer can wrap it
+    from openie_spark.kg.canon import canonical_map, connected_components
+
+    return canonical_map(vocab, connected_components(pairs))
+
+
+def _edges(job, tnorm: DataFrame, components: DataFrame) -> DataFrame:
+    strategy = "salted" if job.pair_mode == "minhash" else "broadcast"
+    return build_edges_from_norm(tnorm, components, strategy=strategy)
+
+
+def _vocab_skew(out: DataFrame) -> dict:
+    return {"skew": skew_stats(out.drop("bucket")).collect()[0].asDict()}
+
+
+KG_STAGES = (
+    Stage("triples", _triples, (), "conv_id"),
+    # normalization materialized ONCE; vocab and edges reuse it
+    Stage("triples_norm", _pure(norm_triples), ("triples",), "conv_id"),
+    Stage("vocab", lambda job, tn: mention_vocab(mentions_from_norm(tn)),
+          ("triples_norm",), "norm", _vocab_skew),
+    Stage("pairs", _pairs, ("vocab",), "a"),
+    Stage("components", _components, ("vocab", "pairs"), "component"),
+    Stage("nodes", _pure(build_nodes), ("components",), "entity_id"),
+    Stage("edges", _edges, ("triples_norm", "components"), "src_id"),
+    # compact weighted sink: what a KG consumer reads instead of the
+    # occurrence-scale provenance edges (north rule: "finally
+    # materializing node/edge tables")
+    Stage("relations", _pure(A.relation_weights), ("edges",), "src_id"),
+)
+
+
+def _truss_backbone(job, nodes: DataFrame, edges: DataFrame) -> DataFrame:
+    co = (A.comention_pairs(edges)
+          .where(F.col("n_convs") >= A.ASSOC_MIN_CONVS)
+          .select(F.col("a").alias("src_id"), F.col("b").alias("dst_id")))
+    return A.truss(nodes, co)
+
+
+_NE = ("nodes", "edges")
+
+# optional stage-I analytics over the materialized graph — resumable
+# like every other stage, reading the already-written nodes/edges
+# tables (not re-deriving)
+ANALYTICS_STAGES = (
+    Stage("pagerank", _pure(A.pagerank), _NE, "entity_id"),
+    Stage("triangles", _pure(A.triangle_counts), _NE, "entity_id"),
+    Stage("khop", lambda job, n, e: A.khop_distances(n, e, ball=job.seed_ball()),
+          _NE, "entity_id"),
+    Stage("harmonic",
+          lambda job, n, e: A.harmonic_centrality(n, e, ball=job.seed_ball()),
+          _NE, "entity_id"),
+    Stage("seed_distances",
+          lambda job, n, e: A.seed_pair_distances(n, e, ball=job.seed_ball()),
+          _NE, "src"),
+    Stage("communities", _pure(A.label_prop_communities), _NE, "entity_id"),
+    Stage("kcore", _pure(A.kcore), _NE, "entity_id"),
+    Stage("degree_hist", _pure(A.degree_histogram), _NE, "bin"),
+    Stage("salsa", _pure(A.salsa), _NE, "entity_id"),
+    Stage("rel_cardinality", _pure(A.relation_cardinality), ("edges",), "pred"),
+    Stage("truss", _truss_backbone, _NE, "a"),
+    Stage("rules", _pure(A.rule_implications), ("edges",), "body"),
+    Stage("conflicts", _pure(A.functional_conflicts), ("edges",), "pred"),
+    Stage("type_graph", _pure(A.type_pair_graph), _NE, "src_type"),
+)
+
+# optional consumer-facing sinks: temporal relation intervals
+# (time-sliced KG queries), the N-Triples interchange table, growth
+EXPORT_STAGES = (
+    Stage("temporal", lambda job, e: A.temporal_relations(e, _transcripts(job)),
+          ("edges",), "src_id"),
+    Stage("export_nt", _pure(A.export_ntriples), _NE, "nt"),
+    Stage("growth", lambda job, e: A.kg_growth(e, _transcripts(job)),
+          ("edges",), "day"),
+)
+
+# optional stage-I+ enrichment sinks: typing, schema induction,
+# per-conversation salience, coref-recovered edges, topic segments,
+# timelines, link-prediction splits, extraction yield
+ENRICH_STAGES = (
+    Stage("entity_types", _pure(entity_types), ("nodes",), "entity_id"),
+    Stage("schema", lambda job, n, e: relation_schema(e, n), _NE, "rel_canon"),
+    Stage("salience", _pure(entity_salience), ("edges",), "conv_id"),
+    Stage("coref_edges", _pure(coref_edges), ("triples", "components"), "src_id"),
+    Stage("segments", lambda job: topic_segments(_transcripts(job)), (), "conv_id"),
+    Stage("timeline", lambda job, e: A.entity_timeline(e, _transcripts(job)),
+          ("edges",), "entity_id"),
+    Stage("edge_split", _pure(A.edge_split), ("edges",), "src_id"),
+    Stage("yield", lambda job, t: A.extraction_yield(_transcripts(job), t),
+          ("triples",), "conv_id"),
+)
+
+
 class KGPipeline:
-    """Orchestrates: triples → mentions → vocab → pairs → components →
-    nodes + edges, each stage a Parquet table + manifest."""
+    """Orchestrates the stage table (KG_STAGES, plus the optional
+    analytics / export / enrich rows), each stage a Parquet table +
+    manifest."""
 
     def __init__(self, spark: SparkSession, input_dir: str, output_dir: str,
                  backend: str = "rule", pair_mode: str = "exact",
@@ -152,6 +298,7 @@ class KGPipeline:
         self.enrich = enrich
         self.io = table_io if table_io is not None else make_table_io(spark, output_dir)
         self.results: list[StageResult] = []
+        self.tables: dict[str, DataFrame] = {}   # this run's stage outputs
 
     # ------------------------------------------------------------ io
 
@@ -306,230 +453,31 @@ class KGPipeline:
 
     # -------------------------------------------------------- stages
 
+    def seed_ball(self) -> DataFrame:
+        """One labeled BFS serves khop (min over sources), harmonic
+        (per-source rollup) and seed_distances — a lazy checkpoint,
+        built only when one of them is, so a fully-resumed run never
+        pays for it."""
+        if "seed_ball" not in self.tables:
+            self.tables["seed_ball"] = A.seed_ball_distances(
+                self.tables["nodes"], self.tables["edges"]
+            ).localCheckpoint(eager=False)
+        return self.tables["seed_ball"]
+
     def run(self, resume: bool = True) -> dict:
-        from openie_spark.kg.canon import canonical_map, connected_components
-        from openie_spark.kg.analytics import relation_weights
-        from openie_spark.kg.graph import build_edges_from_norm, build_nodes, norm_triples
-        from openie_spark.kg.linking import exact_pairs, minhash_pairs, skew_stats
-        from openie_spark.kg.mentions import mention_vocab, mentions_from_norm
-        from openie_spark.operators.extract import extract_triples
-        from openie_spark.sources.transcripts import read_transcripts
-
         t_total = time.time()
-        spark = self.spark
-
-        triples = self._run_stage(
-            "triples",
-            lambda: extract_triples(read_transcripts(spark, self.input_dir), backend=self.backend),
-            "conv_id", [], resume,
-        )
-        # normalization materialized ONCE; vocab and edges reuse it
-        tnorm = self._run_stage(
-            "triples_norm",
-            lambda: norm_triples(triples.drop("bucket")),
-            "conv_id", ["triples"], resume,
-        )
-        vocab = self._run_stage(
-            "vocab",
-            lambda: mention_vocab(mentions_from_norm(tnorm.drop("bucket"))),
-            "norm", ["triples_norm"], resume,
-            extra_metrics=lambda out: {
-                "skew": skew_stats(out.drop("bucket")).collect()[0].asDict()
-            },
-        )
-        pair_fn = exact_pairs if self.pair_mode == "exact" else minhash_pairs
-        pairs = self._run_stage(
-            "pairs",
-            lambda: pair_fn(vocab.drop("bucket")),
-            "a", ["vocab"], resume,
-        )
-        components = self._run_stage(
-            "components",
-            lambda: canonical_map(vocab.drop("bucket"), connected_components(pairs.drop("bucket"))),
-            "component", ["vocab", "pairs"], resume,
-        )
-        nodes = self._run_stage(
-            "nodes",
-            lambda: build_nodes(components.drop("bucket")),
-            "entity_id", ["components"], resume,
-        )
-        edges = self._run_stage(
-            "edges",
-            lambda: build_edges_from_norm(
-                tnorm.drop("bucket"), components.drop("bucket"),
-                strategy="salted" if self.pair_mode == "minhash" else "broadcast",
-            ),
-            "src_id", ["triples_norm", "components"], resume,
-        )
-
-        # compact weighted sink: what a KG consumer reads instead of
-        # the occurrence-scale provenance edges (north rule: "finally
-        # materializing node/edge tables")
-        relations = self._run_stage(
-            "relations",
-            lambda: relation_weights(edges.drop("bucket")),
-            "src_id", ["edges"], resume,
-        )
-
-        if self.analytics:
-            # optional stage-I analytics over the materialized graph —
-            # resumable like every other stage, reading the
-            # already-written nodes/edges tables (not re-deriving)
-            from openie_spark.kg.analytics import (
-                ASSOC_MIN_CONVS,
-                comention_pairs,
-                degree_histogram,
-                harmonic_centrality,
-                kcore,
-                khop_distances,
-                label_prop_communities,
-                pagerank,
-                relation_cardinality,
-                salsa,
-                seed_ball_distances,
-                seed_pair_distances,
-                triangle_counts,
-                truss,
-            )
-
-            n_df, e_df = nodes.drop("bucket"), edges.drop("bucket")
-            self._run_stage(
-                "pagerank", lambda: pagerank(n_df, e_df),
-                "entity_id", ["nodes", "edges"], resume)
-            self._run_stage(
-                "triangles", lambda: triangle_counts(n_df, e_df),
-                "entity_id", ["nodes", "edges"], resume)
-            # one labeled BFS serves khop (min over sources), harmonic
-            # (per-source rollup), and the landmark distance matrix —
-            # lazy checkpoint, so a fully-resumed run never pays for it
-            ball = seed_ball_distances(n_df, e_df).localCheckpoint(
-                eager=False)
-            self._run_stage(
-                "khop", lambda: khop_distances(n_df, e_df, ball=ball),
-                "entity_id", ["nodes", "edges"], resume)
-            self._run_stage(
-                "harmonic",
-                lambda: harmonic_centrality(n_df, e_df, ball=ball),
-                "entity_id", ["nodes", "edges"], resume)
-            self._run_stage(
-                "seed_distances",
-                lambda: seed_pair_distances(n_df, e_df, ball=ball),
-                "src", ["nodes", "edges"], resume)
-            self._run_stage(
-                "communities", lambda: label_prop_communities(n_df, e_df),
-                "entity_id", ["nodes", "edges"], resume)
-            self._run_stage(
-                "kcore", lambda: kcore(n_df, e_df),
-                "entity_id", ["nodes", "edges"], resume)
-            self._run_stage(
-                "degree_hist", lambda: degree_histogram(n_df, e_df),
-                "bin", ["nodes", "edges"], resume)
-            self._run_stage(
-                "salsa", lambda: salsa(n_df, e_df),
-                "entity_id", ["nodes", "edges"], resume)
-            self._run_stage(
-                "rel_cardinality", lambda: relation_cardinality(e_df),
-                "pred", ["edges"], resume)
-
-            def _truss_backbone():
-                co = (comention_pairs(e_df)
-                      .where(F.col("n_convs") >= ASSOC_MIN_CONVS)
-                      .select(F.col("a").alias("src_id"),
-                              F.col("b").alias("dst_id")))
-                return truss(n_df, co)
-
-            self._run_stage(
-                "truss", _truss_backbone,
-                "a", ["nodes", "edges"], resume)
-            from openie_spark.kg.analytics import (
-                functional_conflicts,
-                rule_implications,
-                type_pair_graph,
-            )
-
-            self._run_stage(
-                "rules", lambda: rule_implications(e_df),
-                "body", ["edges"], resume)
-            self._run_stage(
-                "conflicts", lambda: functional_conflicts(e_df),
-                "pred", ["edges"], resume)
-            self._run_stage(
-                "type_graph", lambda: type_pair_graph(n_df, e_df),
-                "src_type", ["nodes", "edges"], resume)
-
-        if self.export:
-            # optional consumer-facing sinks: temporal relation
-            # intervals (time-sliced KG queries) and the N-Triples
-            # interchange table — resumable stages like everything else
-            from openie_spark.kg.analytics import export_ntriples, temporal_relations
-
-            n_df, e_df = nodes.drop("bucket"), edges.drop("bucket")
-            self._run_stage(
-                "temporal",
-                lambda: temporal_relations(e_df, read_transcripts(spark, self.input_dir)),
-                "src_id", ["edges"], resume)
-            self._run_stage(
-                "export_nt", lambda: export_ntriples(n_df, e_df),
-                "nt", ["nodes", "edges"], resume)
-            from openie_spark.kg.analytics import kg_growth
-
-            self._run_stage(
-                "growth",
-                lambda: kg_growth(e_df, read_transcripts(spark, self.input_dir)),
-                "day", ["edges"], resume)
-
-        if self.enrich:
-            # optional stage-I+ enrichment sinks: typing, schema
-            # induction, per-conversation salience, coref-recovered
-            # edges, topic segments — resumable stages reading the
-            # already-materialized tables like analytics/export do
-            from openie_spark.kg.coref import coref_edges
-            from openie_spark.kg.dialogue import topic_segments
-            from openie_spark.kg.enrich import (
-                entity_salience,
-                entity_types,
-                relation_schema,
-            )
-
-            n_df, e_df = nodes.drop("bucket"), edges.drop("bucket")
-            self._run_stage(
-                "entity_types", lambda: entity_types(n_df),
-                "entity_id", ["nodes"], resume)
-            self._run_stage(
-                "schema", lambda: relation_schema(e_df, n_df),
-                "rel_canon", ["nodes", "edges"], resume)
-            self._run_stage(
-                "salience", lambda: entity_salience(e_df),
-                "conv_id", ["edges"], resume)
-            self._run_stage(
-                "coref_edges",
-                lambda: coref_edges(triples.drop("bucket"),
-                                    components.drop("bucket")),
-                "src_id", ["triples", "components"], resume)
-            self._run_stage(
-                "segments",
-                lambda: topic_segments(read_transcripts(spark, self.input_dir)),
-                "conv_id", [], resume)
-            from openie_spark.kg.analytics import (
-                edge_split,
-                entity_timeline,
-                extraction_yield,
-            )
-
-            self._run_stage(
-                "timeline",
-                lambda: entity_timeline(
-                    e_df, read_transcripts(spark, self.input_dir)),
-                "entity_id", ["edges"], resume)
-            self._run_stage(
-                "edge_split", lambda: edge_split(e_df),
-                "src_id", ["edges"], resume)
-            self._run_stage(
-                "yield",
-                lambda: extraction_yield(
-                    read_transcripts(spark, self.input_dir),
-                    triples.drop("bucket")),
-                "conv_id", ["triples"], resume)
+        stages = KG_STAGES
+        for on, rows in ((self.analytics, ANALYTICS_STAGES),
+                         (self.export, EXPORT_STAGES),
+                         (self.enrich, ENRICH_STAGES)):
+            if on:
+                stages += rows
+        self.tables = {}
+        for st in stages:
+            build = partial(st.build, self, *(self.tables[u] for u in st.upstream))
+            out = self._run_stage(st.name, build, st.bucket, list(st.upstream),
+                                  resume, extra_metrics=st.metrics)
+            self.tables[st.name] = out.drop("bucket")
 
         total = round(time.time() - t_total, 3)
         n_triples = next(r.rows for r in self.results if r.name == "triples")
@@ -538,9 +486,9 @@ class KGPipeline:
                        for r in self.results},
             "total_seconds": total,
             "triples": n_triples,
-            "nodes": nodes.count(),
-            "edges": edges.count(),
-            "relations": relations.count(),
+            "nodes": self.tables["nodes"].count(),
+            "edges": self.tables["edges"].count(),
+            "relations": self.tables["relations"].count(),
             "triples_per_sec": round(n_triples / max(total, 1e-9), 1),
             "model_version": model_version(self.backend),
         }
@@ -570,7 +518,7 @@ class KGPipeline:
         Stage resume fingerprints additionally pin the prior tables'
         write_ids, so pointing the same output at a rebuilt prior
         re-runs the merge rather than false-resuming."""
-        from openie_spark.kg.graph import build_edges_from_norm, build_nodes, norm_triples
+        from openie_spark.kg.canon import canonical_map
         from openie_spark.kg.incremental import (
             entity_remap,
             incremental_exact_pairs,
@@ -579,11 +527,6 @@ class KGPipeline:
             merge_vocab,
             remap_edges,
         )
-        from openie_spark.kg.canon import canonical_map
-        from openie_spark.kg.linking import skew_stats
-        from openie_spark.kg.mentions import mention_vocab, mentions_from_norm
-        from openie_spark.operators.extract import extract_triples
-        from openie_spark.sources.transcripts import read_transcripts
 
         if self.pair_mode != "exact":
             raise ValueError(
@@ -609,9 +552,7 @@ class KGPipeline:
                     "prior": {n: prior_write_id(n) for n in names}}
 
         triples = self._run_stage(
-            "triples",
-            lambda: extract_triples(read_transcripts(spark, self.input_dir), backend=self.backend),
-            "conv_id", [], resume, extra_fp=fp_of(),
+            "triples", lambda: _triples(self), "conv_id", [], resume, extra_fp=fp_of(),
         )
         if check_disjoint:
             overlap = (
@@ -635,9 +576,7 @@ class KGPipeline:
                 prior("vocab"),
                 mention_vocab(mentions_from_norm(tnorm.drop("bucket")))),
             "norm", ["triples_norm"], resume, extra_fp=fp_of("vocab"),
-            extra_metrics=lambda out: {
-                "skew": skew_stats(out.drop("bucket")).collect()[0].asDict()
-            },
+            extra_metrics=_vocab_skew,
         )
         pairs = self._run_stage(
             "pairs",

@@ -85,6 +85,18 @@ def test_minhash_exact_duplicate_groups_full_pairset(spark):
     assert not any(a >= 30 or b >= 30 for a, b in got if (a, b) != (30, 31))
 
 
+def test_minhash_null_text_is_not_the_null_marker_text(spark):
+    """A NULL-text document and one whose text is the string
+    "\\x00NULL" are different documents: the exact-duplicate collapse
+    must not group them, so no pair comes back (NULL text has no
+    shingles)."""
+    from openie_spark.datapipe.dedup import minhash_pairs_docs
+
+    df = spark.createDataFrame([(1, None), (2, "\x00NULL")],
+                               "doc_id long, text string")
+    assert minhash_pairs_docs(df, threshold=0.5).collect() == []
+
+
 def test_simhash_near_dups(docs):
     from openie_spark.datapipe.dedup import planted_docs, simhash_docs, simhash_pairs
 

@@ -99,7 +99,12 @@ def test_graph_end_to_end(spark):
     """triples → mentions → pairs → components → nodes/edges, with
     alias merge collapsing near-duplicate entities into one node."""
     from openie_spark.kg.canon import canonical_map, connected_components
-    from openie_spark.kg.graph import build_edges, build_nodes, degree_stats
+    from openie_spark.kg.graph import (
+        build_edges_from_norm,
+        build_nodes,
+        degree_stats,
+        norm_triples,
+    )
     from openie_spark.kg.linking import exact_pairs
     from openie_spark.kg.mentions import extract_mentions, mention_vocab
 
@@ -112,7 +117,7 @@ def test_graph_end_to_end(spark):
     pairs = exact_pairs(vocab, threshold=0.5)
     canon = canonical_map(vocab, connected_components(pairs))
     nodes = build_nodes(canon)
-    edges = build_edges(triples, canon, strategy="broadcast")
+    edges = build_edges_from_norm(norm_triples(triples), canon, strategy="broadcast")
 
     by_canon = {r.canonical: r for r in nodes.collect()}
     assert "barack h obama" in by_canon
@@ -127,7 +132,7 @@ def test_graph_end_to_end(spark):
     assert len({r.src_id for r in obama_edges}) == 1
 
     # salted strategy produces identical edges
-    salted = build_edges(triples, canon, strategy="salted")
+    salted = build_edges_from_norm(norm_triples(triples), canon, strategy="salted")
     assert {tuple(r) for r in salted.collect()} == {tuple(r) for r in e}
 
     deg = {r.entity_id: (r.out_deg, r.in_deg) for r in degree_stats(edges).collect()}

@@ -282,6 +282,29 @@ def test_seed_pair_distances_hand_golden(spark):
     assert via == got
 
 
+def test_ball_rejects_non_default_k_or_seed_mod(spark):
+    """A precomputed ball fixes k and seed_mod; asking any of its three
+    consumers for other values raises instead of silently answering
+    for the ball's values."""
+    from openie_spark.kg.analytics import (
+        KHOP_K,
+        KHOP_SEED_MOD,
+        harmonic_centrality,
+        khop_distances,
+        seed_pair_distances,
+    )
+
+    nodes = spark.createDataFrame([("a",), ("b",)], "entity_id string")
+    edges = spark.createDataFrame([("a", "b")], "src_id string, dst_id string")
+    ball = spark.createDataFrame(
+        [("a", "a", 0)], "src string, entity_id string, dist int")
+    for fn in (khop_distances, harmonic_centrality, seed_pair_distances):
+        for kw in ({"k": KHOP_K + 1}, {"seed_mod": KHOP_SEED_MOD + 1}):
+            with pytest.raises(ValueError, match="precomputed ball"):
+                fn(nodes, edges, ball=ball, **kw)
+        fn(nodes, edges, ball=ball, k=KHOP_K, seed_mod=KHOP_SEED_MOD)
+
+
 def test_graph_summary_hand_values(spark):
     """Triangle + pendant + isolated node; one duplicated provenance
     edge and one self-loop mention."""

@@ -307,3 +307,24 @@ def test_manifest_storage_stats(pipeline_out):
                  for f in os.listdir(os.path.join(out, stage))
                  if not f.startswith(("_", ".")))
         assert man["data_bytes"] == sz
+
+
+def test_pipeline_tables_equal_the_driver_shared_tables(spark, pipeline_out):
+    """One DAG: the stage tables KGPipeline writes equal, row for row,
+    the in-memory tables the driver queries share
+    (__spark_entry__._shared), which are built from the same stage
+    table (different extraction backend: rule vs rule_arrow)."""
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "__spark_entry__",
+        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                     "__spark_entry__.py"))
+    entry = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(entry)
+    out, _ = pipeline_out
+    for name in ("triples", "vocab", "pairs", "components", "nodes", "edges"):
+        shared = entry._shared(spark, SF, name)
+        written = spark.read.parquet(os.path.join(out, name)).select(*shared.columns)
+        got = sorted(map(repr, written.collect()))
+        assert got and got == sorted(map(repr, shared.collect())), name

@@ -2,8 +2,9 @@
 """A/B drift bisect (VERDICT r4 watch-item #2): the r4 record showed a
 broad +5-6% slowdown on small UNTOUCHED queries vs r3 (e.g.
 dp_quality_gopher 1.73->2.79s) with two candidate causes — box phase
-vs executor-memory pressure from the memos r4 added (_carb_parts /
-_kmeans_memo persist for the whole sweep).
+vs executor-memory pressure from the shared tables r4 added (the
+carb gold/pred and k-means tables, now ``_shared`` builds in
+__spark_entry__.py, persist for the whole sweep).
 
 Protocol: check both HEADs out as worktrees, run bench.py on each in
 interleaved A/B/A/B order (same box session, so a box phase hits both
@@ -20,6 +21,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import subprocess
 import sys
 
@@ -43,6 +45,31 @@ def run_bench(tree: str, tag: str, idx: int) -> dict:
     return res
 
 
+def git(*args: str, cwd: str = REPO) -> str:
+    return subprocess.run(["git", *args], cwd=cwd, check=True,
+                          capture_output=True, text=True).stdout.strip()
+
+
+def worktree(rev: str) -> str:
+    """A clean worktree at ``rev``. An existing /tmp/drift_<rev> is
+    reused only when its HEAD is that commit and no tracked file is
+    modified; otherwise it is recreated, so a stale or hand-edited
+    directory never benchmarks the wrong code."""
+    wt = f"/tmp/drift_{rev}"
+    want = git("rev-parse", f"{rev}^{{commit}}")
+    if os.path.exists(wt):
+        try:
+            if (git("rev-parse", "HEAD", cwd=wt) == want
+                    and not git("status", "--porcelain", "--untracked-files=no", cwd=wt)):
+                return wt
+        except subprocess.CalledProcessError:   # not a git checkout
+            pass
+        shutil.rmtree(wt)
+        git("worktree", "prune")
+    git("worktree", "add", "--detach", wt, want)
+    return wt
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--a", default="baf7115", help="r3 HEAD")
@@ -51,13 +78,7 @@ def main() -> None:
     ap.add_argument("--json-out", default="/tmp/bisect_drift.json")
     args = ap.parse_args()
 
-    trees = {}
-    for tag, rev in (("A", args.a), ("B", args.b)):
-        wt = f"/tmp/drift_{rev}"
-        if not os.path.exists(wt):
-            subprocess.run(["git", "worktree", "add", "--detach", wt, rev],
-                           cwd=REPO, check=True)
-        trees[tag] = wt
+    trees = {tag: worktree(rev) for tag, rev in (("A", args.a), ("B", args.b))}
 
     runs: dict[str, list[dict]] = {"A": [], "B": []}
     for i in range(args.rounds):         # interleaved: A B A B ...

@@ -32,12 +32,10 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True)
     ap.add_argument("--output", required=True)
-    # 'rule' default: measured end-to-end it beats the Arrow-fused
-    # backend at every parallelism level tried (local[2]/[8]/[32]) —
-    # the fused kernel's per-turn core-time win is eaten by Arrow
-    # serialization + python-worker contention (see BENCH/BASELINE.md).
+    # 'rule' default; rule vs rule_arrow measurements are recorded in
+    # openie_spark/operators/fast_extract.py.
     ap.add_argument("--backend", default="rule",
-                    choices=["rule", "rule_arrow", "neural", "neural_staged", "neural_fused"])
+                    choices=["rule", "rule_arrow", "neural", "neural_fused"])
     ap.add_argument("--pair-mode", default="exact", choices=["exact", "minhash"])
     ap.add_argument("--no-resume", action="store_true")
     ap.add_argument("--analytics", action="store_true",

@@ -101,7 +101,7 @@ def main() -> None:
     # decomposition (2->8 cores, 8->32 threads, 1->4 executor JVMs).
     ap.add_argument("--cpus", default="2,8")
     ap.add_argument("--backend", default="rule",
-                    choices=["rule", "rule_arrow", "neural", "neural_staged", "neural_fused"],
+                    choices=["rule", "rule_arrow", "neural", "neural_fused"],
                     help="extraction backend for both legs (the neural "
                          "path is the north-star-shaped one: batched "
                          "pandas UDFs calling the sequence model)")
