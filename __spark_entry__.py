@@ -222,7 +222,8 @@ def _job(spark: SparkSession, sf_dir: str):
 
 
 def _stage_build(stage):
-    """A KG stage row as a shared build, eagerly localCheckpointed."""
+    """A KG stage or merge row as a shared build, eagerly
+    localCheckpointed."""
     def build(spark, sf_dir, *tables):
         return stage.build(_job(spark, sf_dir), *tables).localCheckpoint(eager=True)
 
@@ -304,59 +305,31 @@ def _kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kmeans_assign(_emb(spark, sf_dir)).localCheckpoint(eager=True)
 
 
-def _incr_vocab(spark: SparkSession, sf_dir: str, prior_vocab: DataFrame,
-                delta_vocab: DataFrame) -> DataFrame:
-    from openie_spark.kg.incremental import merge_vocab
-
-    return merge_vocab(prior_vocab, delta_vocab).localCheckpoint(eager=True)
-
-
-def _incr_pairs(spark: SparkSession, sf_dir: str, prior_pairs: DataFrame,
-                prior_vocab: DataFrame, vocab: DataFrame) -> DataFrame:
-    from openie_spark.kg.incremental import incremental_exact_pairs
-
-    return incremental_exact_pairs(prior_pairs, prior_vocab, vocab).localCheckpoint(eager=True)
-
-
-def _incr_components(spark: SparkSession, sf_dir: str, vocab: DataFrame,
-                     prior_components: DataFrame, pairs: DataFrame) -> DataFrame:
-    from openie_spark.kg.canon import canonical_map
-    from openie_spark.kg.incremental import merge_components
-
-    return canonical_map(
-        vocab, merge_components(prior_components, pairs)).localCheckpoint(eager=True)
-
-
 @functools.cache
 def shared_builds() -> dict:
     """name -> (upstream names, build(spark, sf_dir, *upstream tables)).
 
     The incremental queries build the KG on the even-parity half of the
     conversations (``prior_*``: the same stage rows over that half),
-    then MERGE the odd half (``delta_*``) through the incremental
-    algebra (kg/incremental.py, ``incr_*``). Their oracles are the
-    FULL-recompute SQL, so a hash match IS the proof that
+    then MERGE the odd half into it (``incr_*``: the stage and merge
+    rows ``run_incremental`` runs, pipeline.MERGES). Their oracles are
+    the FULL-recompute SQL, so a hash match IS the proof that
     incremental(old ⊎ delta) ≡ full(old ∪ delta)."""
-    from openie_spark.pipeline import KG_STAGES
+    from openie_spark.pipeline import KG_STAGES, MERGES
 
     core = {st.name: st for st in KG_STAGES}
 
     def over(half: str, name: str):
-        st = core[name]
-        return tuple(f"{half}_{u}" for u in st.upstream), _stage_build(st)
+        row = MERGES.get(name) if half == "incr" else None
+        if row is None:
+            return tuple(f"{half}_{u}" for u in core[name].upstream), _stage_build(core[name])
+        return (tuple(n if n.startswith("prior_") else f"incr_{n}" for n in row.inputs),
+                _stage_build(row))
 
-    return {
+    builds = {
         **{st.name: (st.upstream, _stage_build(st)) for st in KG_STAGES},
         "prior_triples_norm": (("triples_norm",), _half(0)),
-        "delta_triples_norm": (("triples_norm",), _half(1)),
-        "prior_vocab": over("prior", "vocab"),
-        "prior_pairs": over("prior", "pairs"),
-        "prior_components": over("prior", "components"),
-        "delta_vocab": over("delta", "vocab"),
-        "incr_vocab": (("prior_vocab", "delta_vocab"), _incr_vocab),
-        "incr_pairs": (("prior_pairs", "prior_vocab", "incr_vocab"), _incr_pairs),
-        "incr_components": (("incr_vocab", "prior_components", "incr_pairs"),
-                            _incr_components),
+        "incr_triples_norm": (("triples_norm",), _half(1)),
         "winnow_fp": ((), _winnow_fp),
         "comention": (("edges",), _comention),
         "seed_ball": (("nodes", "edges"), _seed_ball),
@@ -364,6 +337,14 @@ def shared_builds() -> dict:
         "carb_pred": (("carb_gold",), _carb_pred),
         "kmeans": ((), _kmeans),
     }
+    # the incremental tables the queries read, and what those read
+    todo = ["incr_pairs", "incr_nodes", "incr_edges"]
+    while todo:
+        name = todo.pop()
+        if name not in builds:
+            builds[name] = over(*name.split("_", 1))
+            todo += builds[name][0]
+    return builds
 
 
 def _q_carb_self(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -743,9 +724,7 @@ def _q_kg_nodes_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta merged via touched-block pair recompute + seeded component
     merge) — oracle = the full-recompute kg_nodes SQL, so hash-green
     means the incremental algebra is exact."""
-    from openie_spark.kg.graph import build_nodes
-
-    return build_nodes(_shared(spark, sf_dir, "incr_components")).select(
+    return _shared(spark, sf_dir, "incr_nodes").select(
         "entity_id", "canonical", "n_aliases", "freq")
 
 
@@ -754,16 +733,7 @@ def _q_kg_edges_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast entity-id remap (map-only — old occurrence data is never
     re-normalized or re-joined), delta-half edges built against the
     merged canon, unioned. Oracle = full-recompute kg_edges SQL."""
-    from openie_spark.kg.graph import build_edges_from_norm
-    from openie_spark.kg.incremental import entity_remap, remap_edges
-
-    canon_old = _shared(spark, sf_dir, "prior_components")
-    canon_m = _shared(spark, sf_dir, "incr_components")
-    old_edges = build_edges_from_norm(
-        _shared(spark, sf_dir, "prior_triples_norm"), canon_old)
-    delta_edges = build_edges_from_norm(
-        _shared(spark, sf_dir, "delta_triples_norm"), canon_m)
-    return remap_edges(old_edges, entity_remap(canon_old, canon_m)).unionByName(delta_edges)
+    return _shared(spark, sf_dir, "incr_edges")
 
 
 def _q_kg_pairs_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -21,8 +21,9 @@ guards the contract with a column-pruned semi-join (see
 ``KGPipeline.run_incremental``).
 
 Equivalence invariant (pinned by tests/test_incremental.py and by the
-``kg_nodes_incremental`` / ``kg_edges_incremental`` driver queries,
-whose DuckDB oracles are the FULL-recompute SQL): for every stage,
+``kg_*_incremental`` driver queries, whose DuckDB oracles are the
+FULL-recompute SQL; both run the merge rows ``pipeline.MERGES``, as
+``run_incremental`` does): for every stage,
 incremental(old ⊎ delta) ≡ full(old ∪ delta), row for row.
 """
 

@@ -37,10 +37,19 @@ from pyspark.sql import functions as F
 
 from openie_spark import config as C
 from openie_spark.kg import analytics as A
+from openie_spark.kg.canon import canonical_map
 from openie_spark.kg.coref import coref_edges
 from openie_spark.kg.dialogue import topic_segments
 from openie_spark.kg.enrich import entity_salience, entity_types, relation_schema
 from openie_spark.kg.graph import build_edges_from_norm, build_nodes, norm_triples
+from openie_spark.kg.incremental import (
+    entity_remap,
+    incremental_exact_pairs,
+    merge_components,
+    merge_relations,
+    merge_vocab,
+    remap_edges,
+)
 from openie_spark.kg.linking import exact_pairs, minhash_pairs, skew_stats
 from openie_spark.kg.mentions import mention_vocab, mentions_from_norm
 from openie_spark.operators.extract import extract_triples
@@ -127,7 +136,8 @@ def _fingerprint() -> dict:
 
 
 def model_version(backend: str) -> str:
-    if backend == "neural":
+    # neural and neural_fused run the same tagger weights
+    if backend in ("neural", "neural_fused"):
         from openie_spark.model.weights import ARG_SEED, PRED_SEED, get_tagger
 
         return f"{get_tagger(PRED_SEED).version}+{get_tagger(ARG_SEED).version}"
@@ -180,6 +190,10 @@ def _triples(job) -> DataFrame:
     return extract_triples(_transcripts(job), backend=job.backend)
 
 
+def _vocab(job, tnorm: DataFrame) -> DataFrame:
+    return mention_vocab(mentions_from_norm(tnorm))
+
+
 def _pairs(job, vocab: DataFrame) -> DataFrame:
     return (exact_pairs if job.pair_mode == "exact" else minhash_pairs)(vocab)
 
@@ -187,7 +201,7 @@ def _pairs(job, vocab: DataFrame) -> DataFrame:
 def _components(job, vocab: DataFrame, pairs: DataFrame) -> DataFrame:
     # imported here, not at module level: connected_components is
     # looked up at call time so a tracer can wrap it
-    from openie_spark.kg.canon import canonical_map, connected_components
+    from openie_spark.kg.canon import connected_components
 
     return canonical_map(vocab, connected_components(pairs))
 
@@ -205,8 +219,7 @@ KG_STAGES = (
     Stage("triples", _triples, (), "conv_id"),
     # normalization materialized ONCE; vocab and edges reuse it
     Stage("triples_norm", _pure(norm_triples), ("triples",), "conv_id"),
-    Stage("vocab", lambda job, tn: mention_vocab(mentions_from_norm(tn)),
-          ("triples_norm",), "norm", _vocab_skew),
+    Stage("vocab", _vocab, ("triples_norm",), "norm", _vocab_skew),
     Stage("pairs", _pairs, ("vocab",), "a"),
     Stage("components", _components, ("vocab", "pairs"), "component"),
     Stage("nodes", _pure(build_nodes), ("components",), "entity_id"),
@@ -216,6 +229,69 @@ KG_STAGES = (
     # materializing node/edge tables")
     Stage("relations", _pure(A.relation_weights), ("edges",), "src_id"),
 )
+
+
+# --------------------------------------------------------- merge table
+# run_incremental's merge DAG over kg/incremental.py, declared once: a
+# KG stage with a merge row builds it over prior ⊎ delta, the others
+# (triples, triples_norm, nodes) their own build over the delta. The
+# driver's incr_* shared tables come from the same rows.
+
+
+@dataclass(frozen=True)
+class Merge:
+    """``build(job, *tables)`` gets ``inputs`` in order: a stage name is
+    that table of this run (the delta's triples_norm, merged tables
+    after it), ``prior_<stage>`` that table of the prior output, and
+    ``remap`` the REMAP row's table."""
+
+    name: str
+    build: Callable[..., DataFrame]
+    inputs: tuple[str, ...]
+
+    @property
+    def prior(self) -> tuple[str, ...]:
+        """The prior tables the row reads, directly or via the remap."""
+        out: tuple[str, ...] = ()
+        for n in self.inputs:
+            if n.startswith("prior_"):
+                out += (n.removeprefix("prior_"),)
+            elif n == REMAP.name:
+                out += REMAP.prior
+        return out
+
+
+def _merge_edges(job, prior_edges: DataFrame, remap: DataFrame,
+                 tnorm: DataFrame, components: DataFrame) -> DataFrame:
+    # old edges only get their ids rewritten; the delta's are built
+    # against the merged components
+    return remap_edges(prior_edges, remap).unionByName(_edges(job, tnorm, components))
+
+
+def _merge_relations(job, prior_relations: DataFrame, remap: DataFrame,
+                     tnorm: DataFrame, components: DataFrame,
+                     edges: DataFrame) -> DataFrame:
+    return merge_relations(prior_relations, remap, _edges(job, tnorm, components), edges)
+
+
+# prior entity id -> merged entity id, for every prior entity: built
+# once per merge, before the first stage that reads it (edges)
+REMAP = Merge("remap", _pure(entity_remap), ("prior_components", "components"))
+
+MERGES = {m.name: m for m in (
+    Merge("vocab", lambda job, pv, tn: merge_vocab(pv, _vocab(job, tn)),
+          ("prior_vocab", "triples_norm")),
+    Merge("pairs", _pure(incremental_exact_pairs),
+          ("prior_pairs", "prior_vocab", "vocab")),
+    Merge("components",
+          lambda job, v, pc, p: canonical_map(v, merge_components(pc, p)),
+          ("vocab", "prior_components", "pairs")),
+    REMAP,
+    Merge("edges", _merge_edges,
+          ("prior_edges", "remap", "triples_norm", "components")),
+    Merge("relations", _merge_relations,
+          ("prior_relations", "remap", "triples_norm", "components", "edges")),
+)}
 
 
 def _truss_backbone(job, nodes: DataFrame, edges: DataFrame) -> DataFrame:
@@ -395,7 +471,7 @@ class KGPipeline:
             },
         }
 
-    def _run_stage(self, name: str, build, bucket_col: str | None,
+    def _run_stage(self, name: str, build, bucket_col: str,
                    upstream: list[str], resume: bool,
                    extra_metrics=None, extra_fp: dict | None = None) -> DataFrame:
         fp = self._stage_fingerprint(name, upstream)
@@ -408,11 +484,9 @@ class KGPipeline:
             return self.io.read(self.spark, name)
 
         t0 = time.time()
-        df = build()
-        if bucket_col is not None:
-            df = df.withColumn(
-                "bucket", F.pmod(F.xxhash64(F.col(bucket_col)), F.lit(N_BUCKETS)).cast("int")
-            ).repartition("bucket")
+        df = build().withColumn(
+            "bucket", F.pmod(F.xxhash64(F.col(bucket_col)), F.lit(N_BUCKETS)).cast("int")
+        ).repartition("bucket")
         self.io.write(self.spark, df, name)
         out = self.io.read(self.spark, name)
 
@@ -426,10 +500,9 @@ class KGPipeline:
         has_conv = "conv_id" in out.columns
         if has_conv:
             aggs += [F.min("conv_id").alias("lo"), F.max("conv_id").alias("hi")]
-        group = ["bucket"] if bucket_col is not None else []
-        stats = out.groupBy(*group).agg(*aggs).collect()
+        stats = out.groupBy("bucket").agg(*aggs).collect()
         rows = sum(r.n for r in stats)
-        per_bucket = {int(r.bucket): r.n for r in stats} if bucket_col is not None else {}
+        per_bucket = {int(r.bucket): r.n for r in stats}
         conv_range = None
         if has_conv and stats:
             conv_range = [min(r.lo for r in stats), max(r.hi for r in stats)]
@@ -464,28 +537,40 @@ class KGPipeline:
             ).localCheckpoint(eager=False)
         return self.tables["seed_ball"]
 
-    def run(self, resume: bool = True) -> dict:
-        t_total = time.time()
-        stages = KG_STAGES
-        for on, rows in ((self.analytics, ANALYTICS_STAGES),
-                         (self.export, EXPORT_STAGES),
-                         (self.enrich, ENRICH_STAGES)):
-            if on:
-                stages += rows
-        self.tables = {}
+    def _table(self, name: str) -> DataFrame:
+        """A build input: a stage table of this run, a ``prior_*`` table
+        of the prior output, or the remap, which is built on first use
+        as one eager checkpoint."""
+        if name == REMAP.name and name not in self.tables:
+            self.tables[name] = REMAP.build(
+                self, *map(self._table, REMAP.inputs)).localCheckpoint(eager=True)
+        return self.tables[name]
+
+    def _run_stages(self, stages, resume: bool, prior_fp=None) -> None:
+        """The stage loop of run and run_incremental. With ``prior_fp``
+        (an incremental run) a stage with a merge row builds that row,
+        and ``prior_fp(names)`` is the fingerprint extra pinning the
+        prior tables the stage reads."""
         for st in stages:
-            build = partial(st.build, self, *(self.tables[u] for u in st.upstream))
-            out = self._run_stage(st.name, build, st.bucket, list(st.upstream),
-                                  resume, extra_metrics=st.metrics)
+            row, extra_fp = None, None
+            if prior_fp:
+                row = MERGES.get(st.name)
+                extra_fp = prior_fp(row.prior if row else ())
+            inputs = row.inputs if row else st.upstream
+            build = partial((row or st).build, self, *map(self._table, inputs))
+            out = self._run_stage(st.name, build, st.bucket, list(st.upstream), resume,
+                                  extra_metrics=st.metrics, extra_fp=extra_fp)
             self.tables[st.name] = out.drop("bucket")
 
+    def _write_summary(self, t_total: float, triples_key: str, **head) -> dict:
         total = round(time.time() - t_total, 3)
         n_triples = next(r.rows for r in self.results if r.name == "triples")
         summary = {
+            **head,
             "stages": {r.name: {"rows": r.rows, "seconds": r.seconds, "resumed": r.resumed}
                        for r in self.results},
             "total_seconds": total,
-            "triples": n_triples,
+            triples_key: n_triples,
             "nodes": self.tables["nodes"].count(),
             "edges": self.tables["edges"].count(),
             "relations": self.tables["relations"].count(),
@@ -496,38 +581,41 @@ class KGPipeline:
                          json.dumps(summary, indent=1, sort_keys=True))
         return summary
 
+    def run(self, resume: bool = True) -> dict:
+        t_total = time.time()
+        stages = KG_STAGES
+        for on, rows in ((self.analytics, ANALYTICS_STAGES),
+                         (self.export, EXPORT_STAGES),
+                         (self.enrich, ENRICH_STAGES)):
+            if on:
+                stages += rows
+        self.tables = {}
+        self._run_stages(stages, resume)
+        return self._write_summary(t_total, "triples")
+
     # --------------------------------------------------- incremental
 
-    def run_incremental(self, prior_dir: str, resume: bool = True,
-                        check_disjoint: bool = True,
-                        prior_io=None) -> dict:
+    def run_incremental(self, prior_dir: str, resume: bool = True) -> dict:
         """Merge a DELTA of new conversations (``self.input_dir``) into
-        a completed prior pipeline output (``prior_dir``) — see
-        kg/incremental.py for the per-stage merge algebra and its
-        equivalence proof. The output dir is self-contained (merged
+        a completed prior pipeline output (``prior_dir``): the KG stages
+        with their merge rows (``MERGES``; algebra and equivalence proof
+        in kg/incremental.py). The output dir is self-contained (merged
         vocab/pairs/components/nodes/edges/relations; delta-only
         triples/triples_norm) so increments CHAIN: the next increment
         points its prior_dir here.
 
         Contract: delta conv_ids are disjoint from every prior
-        increment (new conversations only). ``check_disjoint`` guards
-        it with one column-pruned semi-join against the prior edge
-        table's conv_id column; disable on deployments where the
-        upstream ingestion already guarantees it.
+        increment (new conversations only), guarded by one column-pruned
+        semi-join against the prior edge table's conv_id column.
 
-        Stage resume fingerprints additionally pin the prior tables'
-        write_ids, so pointing the same output at a rebuilt prior
-        re-runs the merge rather than false-resuming."""
-        from openie_spark.kg.canon import canonical_map
-        from openie_spark.kg.incremental import (
-            entity_remap,
-            incremental_exact_pairs,
-            merge_components,
-            merge_relations,
-            merge_vocab,
-            remap_edges,
-        )
-
+        Stage resume fingerprints additionally pin the write_ids of the
+        prior tables the stage reads, so pointing the same output at a
+        rebuilt prior re-runs the merge rather than false-resuming."""
+        if self.analytics or self.export or self.enrich:
+            raise ValueError(
+                "run_incremental merges the KG stages only: the analytics, "
+                "export and enrich rows are not merged (several read the "
+                "delta's transcripts alone)")
         if self.pair_mode != "exact":
             raise ValueError(
                 "run_incremental supports pair_mode='exact' (the "
@@ -536,103 +624,32 @@ class KGPipeline:
                 "is not wired here)")
 
         t_total = time.time()
-        spark = self.spark
-        pio = prior_io if prior_io is not None else ParquetTableIO(prior_dir)
-
-        def prior(name: str) -> DataFrame:
-            df = pio.read(spark, name)
-            return df.drop("bucket") if "bucket" in df.columns else df
-
-        def prior_write_id(name: str) -> str | None:
-            raw = self._read_text(os.path.join(prior_dir, name, "_manifest.json"))
-            return None if raw is None else json.loads(raw).get("write_id")
-
-        def fp_of(*names: str) -> dict:
-            return {"prior_dir": prior_dir, "delta": True,
-                    "prior": {n: prior_write_id(n) for n in names}}
-
-        triples = self._run_stage(
-            "triples", lambda: _triples(self), "conv_id", [], resume, extra_fp=fp_of(),
-        )
-        if check_disjoint:
-            overlap = (
-                triples.select("conv_id").distinct()
-                .join(prior("edges").select("conv_id").distinct(), "conv_id", "semi")
-                .limit(1).count()
-            )
-            if overlap:
-                raise ValueError(
-                    "run_incremental: delta shares conv_ids with the prior "
-                    "graph — increments must carry NEW conversations only "
-                    "(n_convs support merges additively under that contract)")
-        tnorm = self._run_stage(
-            "triples_norm",
-            lambda: norm_triples(triples.drop("bucket")),
-            "conv_id", ["triples"], resume, extra_fp=fp_of(),
-        )
-        vocab = self._run_stage(
-            "vocab",
-            lambda: merge_vocab(
-                prior("vocab"),
-                mention_vocab(mentions_from_norm(tnorm.drop("bucket")))),
-            "norm", ["triples_norm"], resume, extra_fp=fp_of("vocab"),
-            extra_metrics=_vocab_skew,
-        )
-        pairs = self._run_stage(
-            "pairs",
-            lambda: incremental_exact_pairs(
-                prior("pairs"), prior("vocab"), vocab.drop("bucket")),
-            "a", ["vocab"], resume, extra_fp=fp_of("vocab", "pairs"),
-        )
-        components = self._run_stage(
-            "components",
-            lambda: canonical_map(
-                vocab.drop("bucket"),
-                merge_components(prior("components"), pairs.drop("bucket"))),
-            "component", ["vocab", "pairs"], resume,
-            extra_fp=fp_of("components"),
-        )
-        nodes = self._run_stage(
-            "nodes",
-            lambda: build_nodes(components.drop("bucket")),
-            "entity_id", ["components"], resume, extra_fp=fp_of(),
-        )
-        remap = entity_remap(prior("components"), components.drop("bucket")) \
-            .localCheckpoint(eager=True)
-        delta_edges = build_edges_from_norm(
-            tnorm.drop("bucket"), components.drop("bucket"),
-            strategy="broadcast",
-        )
-        edges = self._run_stage(
-            "edges",
-            lambda: remap_edges(prior("edges"), remap).unionByName(delta_edges),
-            "src_id", ["triples_norm", "components"], resume,
-            extra_fp=fp_of("edges", "components"),
-        )
-        relations = self._run_stage(
-            "relations",
-            lambda: merge_relations(
-                prior("relations"), remap,
-                delta_edges, edges.drop("bucket")),
-            "src_id", ["edges"], resume,
-            extra_fp=fp_of("relations", "edges", "components"),
-        )
-
-        total = round(time.time() - t_total, 3)
-        n_triples = next(r.rows for r in self.results if r.name == "triples")
-        summary = {
-            "mode": "incremental",
-            "prior_dir": prior_dir,
-            "stages": {r.name: {"rows": r.rows, "seconds": r.seconds, "resumed": r.resumed}
-                       for r in self.results},
-            "total_seconds": total,
-            "delta_triples": n_triples,
-            "nodes": nodes.count(),
-            "edges": edges.count(),
-            "relations": relations.count(),
-            "triples_per_sec": round(n_triples / max(total, 1e-9), 1),
-            "model_version": model_version(self.backend),
+        pio = ParquetTableIO(prior_dir)
+        self.tables = {
+            f"prior_{n}": pio.read(self.spark, n).drop("bucket")
+            for n in {p for m in MERGES.values() for p in m.prior}
         }
-        self._write_text(os.path.join(self.output_dir, "_pipeline_summary.json"),
-                         json.dumps(summary, indent=1, sort_keys=True))
-        return summary
+
+        def prior_fp(names: tuple[str, ...]) -> dict:
+            def write_id(name: str) -> str | None:
+                raw = self._read_text(os.path.join(prior_dir, name, "_manifest.json"))
+                return None if raw is None else json.loads(raw).get("write_id")
+
+            return {"prior_dir": prior_dir, "delta": True,
+                    "prior": {n: write_id(n) for n in names}}
+
+        self._run_stages(KG_STAGES[:1], resume, prior_fp)
+        overlap = (
+            self.tables["triples"].select("conv_id").distinct()
+            .join(self.tables["prior_edges"].select("conv_id").distinct(),
+                  "conv_id", "semi")
+            .limit(1).count()
+        )
+        if overlap:
+            raise ValueError(
+                "run_incremental: delta shares conv_ids with the prior "
+                "graph — increments must carry NEW conversations only "
+                "(n_convs support merges additively under that contract)")
+        self._run_stages(KG_STAGES[1:], resume, prior_fp)
+        return self._write_summary(t_total, "delta_triples",
+                                   mode="incremental", prior_dir=prior_dir)

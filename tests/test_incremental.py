@@ -236,11 +236,15 @@ def chained_run(spark, split_inputs, tmp_path_factory):
 
 def test_chained_increments_equal_full_rebuild(spark, chained_run):
     """THE invariant: base(⅓) + increment(⅓) + increment(⅓) produces
-    byte-identical vocab/components/nodes/edges/relations tables to
-    one full run over all conversations."""
+    byte-identical vocab/pairs/components/nodes/edges/relations tables
+    to one full run over all conversations (pairs with jaccard rounded,
+    as in ``_pair_set``)."""
     full_out, inc2_out, _, _ = chained_run
     for name in ("vocab", "components", "nodes", "edges", "relations"):
         assert _table(spark, full_out, name) == _table(spark, inc2_out, name), name
+    pairs = [_pair_set(spark.read.parquet(os.path.join(d, "pairs")))
+             for d in (full_out, inc2_out)]
+    assert pairs[0] and pairs[0] == pairs[1]
 
 
 def test_incremental_summary_and_manifests(chained_run):
@@ -281,3 +285,14 @@ def test_incremental_rejects_overlapping_convs(spark, split_inputs,
     with pytest.raises(ValueError, match="conv_ids"):
         KGPipeline(spark, split_inputs[0], out).run_incremental(
             prior_dir=inc2_out, resume=True)
+
+
+@pytest.mark.parametrize("flag", ["analytics", "export", "enrich"])
+def test_incremental_rejects_unmerged_stage_flags(spark, flag, tmp_path):
+    """The analytics/export/enrich rows are not merged: asking for them
+    in an incremental run fails loudly instead of being ignored."""
+    from openie_spark.pipeline import KGPipeline
+
+    pipe = KGPipeline(spark, SF, str(tmp_path / "out"), **{flag: True})
+    with pytest.raises(ValueError, match="merges the KG stages only"):
+        pipe.run_incremental(prior_dir=str(tmp_path / "prior"))

@@ -51,6 +51,14 @@ def test_manifests_lineage(pipeline_out):
     assert "skew" in vman["metrics"]
 
 
+def test_model_version_pins_the_neural_fused_weights():
+    """neural_fused runs the neural tagger weights, so its manifests
+    pin their hash and a weights change invalidates its resume."""
+    from openie_spark.pipeline import model_version
+
+    assert model_version("neural_fused") == model_version("neural") != "rule-v1"
+
+
 def test_full_resume_skips_everything(spark, pipeline_out):
     from openie_spark.pipeline import KGPipeline
 

@@ -56,7 +56,8 @@ def main() -> None:
                     help="Incremental mode: merge --input (NEW conv_ids "
                          "only) into the completed pipeline output at this "
                          "dir (kg/incremental.py); the output dir is "
-                         "self-contained and chains as the next --prior.")
+                         "self-contained and chains as the next --prior. "
+                         "KG stages only: rejects --analytics/--export/--enrich.")
     ap.add_argument("--master", default=None,
                     help="Override master (local runs). Under spark-submit leave unset.")
     ap.add_argument("--shuffle-partitions", type=int, default=None)
