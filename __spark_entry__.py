@@ -266,17 +266,18 @@ def _seed_ball(spark: SparkSession, sf_dir: str, nodes: DataFrame,
 def _carb_gold(spark: SparkSession, sf_dir: str, triples: DataFrame) -> DataFrame:
     """The carb family's gold side: engine triples as scorer tuples
     WITH the normalized sentence key computed, hash-REPARTITIONED on
-    norm_key to the session shuffle parallelism and PERSISTED (cache,
-    not localCheckpoint: a checkpointed RDD comes back as
-    UnknownPartitioning, while the cached plan keeps its
-    HashPartitioning). The cogroup in every carb query then starts
-    from co-partitioned children and elides both child exchanges."""
-    from openie_spark.eval.carb import normalize_key_col, triples_as_tuples
+    the scorers' sentence bucket (carb.sentence_bucket) to the session
+    shuffle parallelism and PERSISTED (cache, not localCheckpoint: a
+    checkpointed RDD comes back as UnknownPartitioning, while the
+    cached plan keeps its HashPartitioning). The bucket cogroup in
+    every carb query then starts from co-partitioned children and
+    elides both child exchanges."""
+    from openie_spark.eval.carb import normalize_key_col, sentence_bucket, triples_as_tuples
 
     n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     gold = (triples_as_tuples(triples)
             .withColumn("norm_key", normalize_key_col(F.col("sent")))
-            .repartition(n, "norm_key")
+            .repartition(n, sentence_bucket(F.col("norm_key"), n))
             .persist())
     gold.count()
     return gold
@@ -285,7 +286,7 @@ def _carb_gold(spark: SparkSession, sf_dir: str, triples: DataFrame) -> DataFram
 def _carb_pred(spark: SparkSession, sf_dir: str, gold: DataFrame) -> DataFrame:
     """The deterministically degraded, varied-confidence prediction
     side the four degraded-eval queries consume; a projection of the
-    gold side, so it keeps the norm_key hash partitioning."""
+    gold side, so it keeps the sentence-bucket hash partitioning."""
     from openie_spark.datapipe.hashing import md5h60
 
     pred = (gold

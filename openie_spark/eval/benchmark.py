@@ -5,11 +5,13 @@ reached via eval/oie_eval/eval.py:10-63; the default evaluation path
 pins E4, eval/evaluation.py:36).
 
 Spark shape: identical to eval/carb.py — one cogroup shuffle on the
-normalized sentence key; the per-sentence sequential matching loop
-(prediction *consumption*: a predicted extraction, once matched, may
-never match another gold — benchmark.py:79-99) runs inside the pandas
-kernel where it is tiny; global PR math needs only per-distinct-score
-(tp, n) counts, so the driver never holds per-extraction vectors.
+sentence bucket (``carb.cogroup_sentences``: one pandas call per
+bucket of sentences, not per sentence); the per-sentence sequential
+matching loop (prediction *consumption*: a predicted extraction, once
+matched, may never match another gold — benchmark.py:79-99) runs in
+plain Python inside the bucket call, where it is tiny; global PR math
+needs only per-distinct-score (tp, n) counts, so the driver never
+holds per-extraction vectors.
 Threshold boundedness mirrors eval.carb.MAX_EXACT_THRESHOLDS: beyond
 it, scores snap down to an approx-quantile grid (logged deviation).
 
@@ -40,13 +42,13 @@ Reference quirks preserved:
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from openie_spark.eval.carb import (
     MAX_EXACT_THRESHOLDS,
-    normalize_key_col,
+    _with_key,
+    cogroup_sentences,
 )
 from openie_spark.eval.matcher import (
     LEXICAL_THRESHOLD,
@@ -113,44 +115,34 @@ _OIE16_SCHEMA = ("norm_key string, y int, score double, "
                  "correct_add long, unmatched_add long")
 
 
-def _oie16_group(gold_pdf: pd.DataFrame, pred_pdf: pd.DataFrame,
-                 match_fn) -> pd.DataFrame:
-    # Matching CONSUMES predictions first-match-wins, so in-group order
-    # is semantic (the reference iterates file order, benchmark.py:73-99).
-    # An ``ext_order`` column reproduces it; otherwise a deterministic
-    # content sort replaces the reference's implicit file order (a
-    # documented deviation — distributed inputs have no file order).
-    # Plain-list sorting: the pandas astype/map/sort_index form cost
-    # more per group than the matching itself.
-    def _ordered(pdf: pd.DataFrame, with_conf: bool) -> list[tuple]:
-        cols_ = ["pred", "args"] + (["confidence"] if with_conf else [])
-        rows_ = list(zip(*(pdf[c] for c in cols_))) if len(pdf) else []
-        if "ext_order" in pdf.columns:
-            order = pdf["ext_order"].to_list()
-            return [rows_[i] for i in sorted(range(len(rows_)),
-                                             key=order.__getitem__)]
-        def k(r):
-            key_ = str(r[0]) + "\x1f" + "\x1f".join(r[1])
-            if with_conf:
-                key_ += "\x1f" + format(r[2], ".9g")
-            return key_
-        return sorted(rows_, key=k)
-
-    cols = ["norm_key", "y", "score", "correct_add", "unmatched_add"]
-    n_gold = len(gold_pdf)
-    if n_gold == 0:
-        # prediction-only: ignored entirely (benchmark.py:64)
-        return pd.DataFrame(columns=cols)
-    key = gold_pdf["norm_key"].iloc[0]
-    if len(pred_pdf) == 0:
+def _oie16_group(golds: list, preds: list, match_fn,
+                 gold_ordered: bool = False,
+                 pred_ordered: bool = False) -> list[tuple]:
+    """One gold sentence's (y, score, correct_add, unmatched_add) rows;
+    gold rows are (pred, args[, ext_order]), pred rows (pred, args,
+    confidence[, ext_order]); ``*_ordered`` says a side carries
+    ext_order."""
+    n_gold = len(golds)
+    if not preds:
         # quirk: += len(goldExtractions) PER gold extraction → n²
         # (benchmark.py:66-71)
-        return pd.DataFrame(
-            [[key, None, None, n_gold * n_gold, n_gold * n_gold]],
-            columns=cols)
+        return [(None, None, n_gold * n_gold, n_gold * n_gold)]
 
-    golds_sorted = _ordered(gold_pdf, with_conf=False)
-    preds = _ordered(pred_pdf, with_conf=True)
+    # Matching CONSUMES predictions first-match-wins, so in-sentence
+    # order is semantic (the reference iterates file order,
+    # benchmark.py:73-99). An ``ext_order`` column reproduces it;
+    # otherwise a deterministic content sort replaces the reference's
+    # implicit file order (a documented deviation — distributed inputs
+    # have no file order).
+    def content(r):
+        return str(r[0]) + "\x1f" + "\x1f".join(r[1])
+
+    def ext_order(r):
+        return r[-1]
+
+    golds_sorted = sorted(golds, key=ext_order if gold_ordered else content)
+    preds = sorted(preds, key=ext_order if pred_ordered else (
+        lambda r: content(r) + "\x1f" + format(r[2], ".9g")))
     consumed = [False] * len(preds)
     if match_fn == _LEXICAL_FAST:
         # default-matcher fast path: lexicalMatch's nested equal-pair
@@ -162,9 +154,9 @@ def _oie16_group(gold_pdf: pd.DataFrame, pred_pdf: pd.DataFrame,
 
         g_pre = [
             (Counter(c := _bow(gp, list(ga)).split(" ")), len(c))
-            for gp, ga in golds_sorted
+            for gp, ga, *_ in golds_sorted
         ]
-        p_pre = [Counter(_bow(ep, list(ea)).split(" ")) for ep, ea, _ in preds]
+        p_pre = [Counter(_bow(ep, list(ea)).split(" ")) for ep, ea, *_ in preds]
 
         def hit(i: int, j: int) -> bool:
             g_cnt, g_len = g_pre[i]
@@ -174,33 +166,27 @@ def _oie16_group(gold_pdf: pd.DataFrame, pred_pdf: pd.DataFrame,
 
     else:
         def hit(i: int, j: int) -> bool:
-            gp, ga = golds_sorted[i]
-            ep, ea, _ = preds[j]
+            gp, ga, *_ = golds_sorted[i]
+            ep, ea, *_ = preds[j]
             return bool(match_fn(gp, list(ga), ep, list(ea)))
 
+    def finite(conf) -> float:
+        score = float(conf)
+        return score if np.isfinite(score) else 0.0
+
     rows = []
-    correct = 0
     unmatched = 0
     for i in range(n_gold):
-        correct += 1
-        found = False
         for j in range(len(preds)):
-            if consumed[j]:
-                continue
-            if hit(i, j):
-                score = float(preds[j][2])
-                rows.append([key, 1, score if np.isfinite(score) else 0.0, 0, 0])
+            if not consumed[j] and hit(i, j):
+                rows.append((1, finite(preds[j][2]), 0, 0))
                 consumed[j] = True
-                found = True
                 break
-        if not found:
+        else:
             unmatched += 1
-    for j, (ep, ea, conf) in enumerate(preds):
-        if not consumed[j]:
-            score = float(conf)
-            rows.append([key, 0, score if np.isfinite(score) else 0.0, 0, 0])
-    rows.append([key, None, None, correct, unmatched])
-    return pd.DataFrame(rows, columns=cols)
+    rows += [(0, finite(p[2]), 0, 0) for j, p in enumerate(preds) if not consumed[j]]
+    rows.append((None, None, n_gold, unmatched))
+    return rows
 
 
 def _bool_match(match_fn):
@@ -225,25 +211,18 @@ def oie16_compare(gold: DataFrame, pred: DataFrame,
     """
     fn = _LEXICAL_FAST if match_fn is lexical_match else _bool_match(match_fn)
 
-    def _proj(df: DataFrame, with_conf: bool) -> DataFrame:
-        cols = [F.col("sent").alias("sent"), F.col("pred").alias("pred"),
-                F.col("args").alias("args")]
-        if with_conf:
-            cols.append(F.col("confidence").cast("double").alias("confidence"))
-        if "ext_order" in df.columns:
-            cols.append(F.col("ext_order").cast("long").alias("ext_order"))
-        # reuse a pre-computed key (alias-aware projection keeps any
-        # upstream hash-partitioning on it — see carb._with_key)
-        cols.append((F.col("norm_key") if "norm_key" in df.columns
-                     else normalize_key_col(F.col("sent"))).alias("norm_key"))
-        return df.select(*cols)
+    gold_ordered = "ext_order" in gold.columns
+    pred_ordered = "ext_order" in pred.columns
 
-    g = _proj(gold, with_conf=False)
-    p = _proj(pred, with_conf=True)
-    raw = (
-        g.groupBy("norm_key")
-        .cogroup(p.groupBy("norm_key"))
-        .applyInPandas(lambda l, r: _oie16_group(l, r, fn), _OIE16_SCHEMA)
+    def order(ordered: bool) -> list:
+        return [F.col("ext_order").cast("long").alias("ext_order")] if ordered else []
+
+    raw = cogroup_sentences(
+        _with_key(gold, *order(gold_ordered)),
+        _with_key(pred, F.col("confidence").cast("double").alias("confidence"),
+                  *order(pred_ordered)),
+        lambda golds, preds: _oie16_group(golds, preds, fn, gold_ordered, pred_ordered),
+        _OIE16_SCHEMA,
     ).localCheckpoint(eager=False)
 
     counts = raw.agg(

@@ -6,21 +6,27 @@ threshold sweep degenerates to one point; /root/reference/eval/oie_eval/carb.py:
 
     gold, pred : DataFrame[sent string, pred string, args array<string>]
       → add norm_key (E1, pure Catalyst string exprs)
-      → cogroup on norm_key, per-sentence score matrix + greedy match
-        (E2/E5, applyInPandas — matrices are ≤ ~10×10 per sentence)
+      → cogroup on the sentence bucket pmod(xxhash64(norm_key), N)
+        (cogroup_sentences): each pandas call loops its bucket's gold
+        sentences in plain Python and runs the per-sentence score
+        matrix + greedy match (E2/E5 — matrices are ≤ ~10×10 per
+        sentence)
       → global sum + driver-free final select (E6)
 
-Scale notes: the cogroup is ONE hash-partition shuffle on the sentence
-key; with 10^12 turns both sides partition-prune on the same key and
-the per-group work is O(gold×pred) tiny. Sentence-key skew (dup
-sentences collapse into one group, raw2col-style T10) is bounded by
-dropDuplicates upstream. The reference walks a Python dict of the whole
-corpus in one process (/root/reference/eval/oie_eval/carb.py:92-160).
+Spark shape: ONE hash-partition shuffle on the sentence bucket, N =
+spark.sql.shuffle.partitions, so one pandas call scores ~1/N of the
+corpus instead of one sentence: the per-group Arrow and frame cost is
+paid N times, not once per sentence. A keyed eval table repartitioned
+on the same bucket expression (sentence_bucket; __spark_entry__'s
+carb_gold) needs no exchange before the cogroup. Sentence-key skew
+(dup sentences collapse into one sentence, raw2col-style T10) is
+bounded by dropDuplicates upstream. The reference walks a Python dict
+of the whole corpus in one process (its eval/oie_eval/carb.py:92-160).
 
 Reference quirks preserved:
   * sentences present only in predictions are IGNORED entirely (the
-    loop is over gold keys: carb.py:92-97) — cogroup emits zeros for
-    pred-only groups.
+    loop is over gold keys: carb.py:92-97) — the bucket loop runs the
+    kernels on gold keys only.
   * gold sentences with no predictions only inflate the recall
     denominator (carb.py:159-160).
   * greedy precision matching scans the matrix row-major and takes the
@@ -67,20 +73,88 @@ def normalize_key_col(sent: Column) -> Column:
     return F.translate(c, string.punctuation, "")
 
 
+def sentence_bucket(norm_key: Column, n: int) -> Column:
+    """The scorers' cogroup key: ``pmod(xxhash64(norm_key), n)``. A
+    keyed eval table repartitioned on this expression (with ``n`` the
+    session's shuffle parallelism) reaches the cogroup with no exchange
+    (ProjectExec is alias-aware). NULL keys hash to one bucket."""
+    return F.pmod(F.xxhash64(norm_key), F.lit(n))
+
+
+def cogroup_sentences(gold: DataFrame, pred: DataFrame, kernel,
+                      schema: str) -> DataFrame:
+    """Run ``kernel(gold_rows, pred_rows) -> list[tuple]`` once per gold
+    sentence; each output tuple is prefixed with its ``norm_key`` to
+    form a ``schema`` row. Both inputs carry a ``norm_key`` column; a
+    sentence's rows are tuples of the other columns, in column order.
+
+    The cogroup keys on ``sentence_bucket(norm_key, N)``, N =
+    ``spark.sql.shuffle.partitions``, and each pandas call groups its
+    bucket by ``norm_key`` in plain Python: the per-group Arrow and
+    frame cost is paid once per bucket instead of once per sentence.
+    Memory trade: one call holds a whole bucket (~1/N of the eval rows
+    of each side, plus its output rows) instead of one sentence. The
+    cogroup already sends that bucket's rows to one task, so this
+    raises a call's working set, not the task's input. Prediction-only
+    sentences reach no kernel (the reference loops gold keys,
+    carb.py:92-97); NULL-key rows form one sentence, as a Spark
+    grouping on ``norm_key`` does."""
+    n = int(gold.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    names = [c.split()[0] for c in schema.split(",")]
+
+    def by_sentence(pdf: pd.DataFrame) -> dict:
+        cols = [pdf[c] for c in pdf.columns if c not in ("norm_key", "_bucket")]
+        groups: dict = {}
+        for key, *row in zip(pdf["norm_key"], *cols):
+            groups.setdefault(key, []).append(row)
+        return groups
+
+    def score_bucket(gold_pdf: pd.DataFrame, pred_pdf: pd.DataFrame) -> pd.DataFrame:
+        preds = by_sentence(pred_pdf)
+        out = [(key, *r) for key, golds in by_sentence(gold_pdf).items()
+               for r in kernel(golds, preds.get(key, []))]
+        return pd.DataFrame.from_records(out, columns=names)
+
+    def keyed(df: DataFrame):
+        return df.withColumn("_bucket", sentence_bucket(F.col("norm_key"), n)).groupBy("_bucket")
+
+    return keyed(gold).cogroup(keyed(pred)).applyInPandas(score_bucket, schema)
+
+
+def _greedy_sum(scores: list[list], cols: list[int], which: int) -> float:
+    """Greedy one-to-one matching (carb.py:128-150): min(|gold|,
+    |cols|) rounds, each scanning the unused (gold, pred) pairs
+    row-major and taking the first strictly-greater ``score[which]``
+    (0 = precision, 1 = recall) — ties resolve to the earliest pair."""
+    total = 0.0
+    used_rows: set[int] = set()
+    used_cols: set[int] = set()
+    for _ in range(min(len(scores), len(cols))):
+        best, best_i, best_j = -1.0, -1, -1
+        for i, row in enumerate(scores):
+            if i in used_rows:
+                continue
+            for j in cols:
+                if j in used_cols:
+                    continue
+                if row[j][which] > best:
+                    best, best_i, best_j = row[j][which], i, j
+        used_rows.add(best_i)
+        used_cols.add(best_j)
+        total += best
+    return total
+
+
 _SCORE_SCHEMA = "norm_key string, p double, pl long, r double, rl long"
 
 
-def _score_group(gold_pdf: pd.DataFrame, pred_pdf: pd.DataFrame,
-                 match_fn=binary_lenient_match) -> pd.DataFrame:
-    if len(gold_pdf) == 0:
-        # prediction-only sentence: contributes nothing (carb.py:92-97)
-        return pd.DataFrame(columns=["norm_key", "p", "pl", "r", "rl"])
-    key = gold_pdf["norm_key"].iloc[0]
-    n_gold = len(gold_pdf)
-    n_pred = len(pred_pdf)
+def _score_group(golds: list, preds: list,
+                 match_fn=binary_lenient_match) -> list[tuple]:
+    """One gold sentence's (p, pl, r, rl); rows are (pred, args)."""
+    n_gold = len(golds)
+    n_pred = len(preds)
     if n_pred == 0:
-        return pd.DataFrame([[key, 0.0, 0, 0.0, n_gold]],
-                            columns=["norm_key", "p", "pl", "r", "rl"])
+        return [(0.0, 0, 0.0, n_gold)]
 
     if match_fn is binary_lenient_match:
         # fast path: split each extraction ONCE, not per pair (the
@@ -92,63 +166,43 @@ def _score_group(gold_pdf: pd.DataFrame, pred_pdf: pd.DataFrame,
             pre_pred,
         )
 
-        gs = [pre_gold(gp, list(ga))
-              for gp, ga in zip(gold_pdf["pred"], gold_pdf["args"])]
-        ps = [pre_pred(ep, list(ea))
-              for ep, ea in zip(pred_pdf["pred"], pred_pdf["args"])]
+        gs = [pre_gold(gp, list(ga)) for gp, ga in golds]
+        ps = [pre_pred(ep, list(ea)) for ep, ea in preds]
         scores = [[binary_lenient_match_tokens(g, p) for p in ps] for g in gs]
     else:
-        gold = list(zip(gold_pdf["pred"], gold_pdf["args"]))
-        pred = list(zip(pred_pdf["pred"], pred_pdf["args"]))
         scores = [
-            [match_fn(gp, list(ga), ep, list(ea)) for ep, ea in pred]
-            for gp, ga in gold
+            [match_fn(gp, list(ga), ep, list(ea)) for ep, ea in preds]
+            for gp, ga in golds
         ]
 
     recall_num = sum(max((row[j][1] for j in range(n_pred)), default=0) for row in scores)
-
-    precision_num = 0.0
-    used_rows: set[int] = set()
-    used_cols: set[int] = set()
-    for _ in range(min(n_gold, n_pred)):
-        best_p, best_i, best_j = -1.0, -1, -1
-        for i in range(n_gold):
-            if i in used_rows:
-                continue
-            for j in range(n_pred):
-                if j in used_cols:
-                    continue
-                if scores[i][j][0] > best_p:
-                    best_p, best_i, best_j = scores[i][j][0], i, j
-        used_rows.add(best_i)
-        used_cols.add(best_j)
-        precision_num += best_p
-
-    return pd.DataFrame([[key, precision_num, n_pred, recall_num, n_gold]],
-                        columns=["norm_key", "p", "pl", "r", "rl"])
+    precision_num = _greedy_sum(scores, list(range(n_pred)), 0)
+    return [(precision_num, n_pred, recall_num, n_gold)]
 
 
-def _with_key(df: DataFrame) -> DataFrame:
-    """Project (sent, pred, args, norm_key) through FRESH aliases.
+def _with_key(df: DataFrame, *extra: Column) -> DataFrame:
+    """Project (pred, args, *extra, norm_key) through FRESH aliases.
 
     The re-alias matters: scoring a DataFrame against itself (the
     parity self-check) makes both cogroup children share attribute ids;
     Catalyst's column pruning under the downstream aggregate then
     drops the duplicated child columns and the pandas kernel receives
     key-only frames. Fresh exprIds per side keep the plans disjoint.
+    ``extra`` columns must be aliased by the caller.
 
     A pre-computed ``norm_key`` column is REUSED (aliased, not
-    recomputed): callers that materialize a keyed, hash-partitioned
-    eval table once (the warehouse pattern — see __spark_entry__'s
-    carb_gold shared table) keep both the key computation and,
-    because ProjectExec is alias-aware, the partitioning.
+    recomputed): callers that materialize a keyed eval table once,
+    repartitioned on ``sentence_bucket`` (the warehouse pattern — see
+    __spark_entry__'s carb_gold shared table), keep both the key
+    computation and, because ProjectExec is alias-aware, the
+    partitioning.
     """
     key = (F.col("norm_key") if "norm_key" in df.columns
            else normalize_key_col(F.col("sent")))
     return df.select(
-        F.col("sent").alias("sent"),
         F.col("pred").alias("pred"),
         F.col("args").alias("args"),
+        *extra,
         key.alias("norm_key"),
     )
 
@@ -164,8 +218,8 @@ def sentence_scores(gold: DataFrame, pred: DataFrame,
 
     Documented deviation — post-normalization key collisions: two RAW
     sentences that normalize to the same key (differ only in spaces /
-    punctuation / PTB escapes) are cogrouped here, so their extraction
-    lists UNION. The reference's normalizeDict
+    punctuation / PTB escapes) are scored as one sentence here, so
+    their extraction lists UNION. The reference's normalizeDict
     (eval/oie_eval/carb.py:263-266) rebuilds a dict, so the collider
     whose raw key was inserted LAST (file read order) silently wins.
     That order has no distributed analogue — a cluster read has no
@@ -174,13 +228,9 @@ def sentence_scores(gold: DataFrame, pred: DataFrame,
     sentences == distinct norm keys at every sf dir), so results are
     identical today; on a colliding corpus the reference drops gold
     tuples nondeterministically by input order and we keep them."""
-    g = _with_key(gold)
-    p = _with_key(pred)
-    return (
-        g.groupBy("norm_key")
-        .cogroup(p.groupBy("norm_key"))
-        .applyInPandas(lambda l, r: _score_group(l, r, match_fn), _SCORE_SCHEMA)
-    )
+    return cogroup_sentences(
+        _with_key(gold), _with_key(pred),
+        lambda golds, preds: _score_group(golds, preds, match_fn), _SCORE_SCHEMA)
 
 
 def carb_compare(gold: DataFrame, pred: DataFrame, binary: bool = False,
@@ -297,22 +347,18 @@ _SWEEP_SCHEMA = ("norm_key string, t_lo int, t_hi int, "
 MAX_EXACT_THRESHOLDS = 1024
 
 
-def _sweep_group(gold_pdf: pd.DataFrame, pred_pdf: pd.DataFrame,
-                 grid: list[float], recall_strategy: str = "m2o") -> pd.DataFrame:
+def _sweep_group(golds: list, preds: list, grid: list[float],
+                 recall_strategy: str = "m2o") -> list[tuple]:
+    """One gold sentence's (t_lo, t_hi, p, pl, r, rl) brackets; gold
+    rows are (pred, args), pred rows (pred, args, confidence)."""
     import bisect
 
     num_conf = len(grid)
-    conf_index = {c: i for i, c in enumerate(grid)}
-    cols = ["norm_key", "t_lo", "t_hi", "p", "pl", "r", "rl"]
-    if len(gold_pdf) == 0:
-        # prediction-only sentence: ignored entirely (carb.py:92-97)
-        return pd.DataFrame(columns=cols)
-    key = gold_pdf["norm_key"].iloc[0]
-    n_gold = len(gold_pdf)
+    n_gold = len(golds)
     # rl accumulates n_gold at every slot (loop brackets + carb.py:159)
-    rows = [[key, 0, num_conf - 1, 0.0, 0, 0.0, n_gold]]
-    if len(pred_pdf) == 0 or num_conf == 0:
-        return pd.DataFrame(rows, columns=cols)
+    rows = [(0, num_conf - 1, 0.0, 0, 0.0, n_gold)]
+    if not preds or num_conf == 0:
+        return rows
 
     from openie_spark.eval.matcher import (
         binary_lenient_match_tokens,
@@ -320,67 +366,30 @@ def _sweep_group(gold_pdf: pd.DataFrame, pred_pdf: pd.DataFrame,
         pre_pred,
     )
 
-    gs = [pre_gold(gp, list(ga))
-          for gp, ga in zip(gold_pdf["pred"], gold_pdf["args"])]
-    ps = [pre_pred(ep, list(ea))
-          for ep, ea in zip(pred_pdf["pred"], pred_pdf["args"])]
-    # Snap each local confidence DOWN to its grid value ("pred with
+    gs = [pre_gold(gp, list(ga)) for gp, ga in golds]
+    ps = [pre_pred(ep, list(ea)) for ep, ea, _ in preds]
+    # Snap each local confidence DOWN to its grid slot ("pred with
     # conf c participates at every threshold <= c").  On the exact path
     # the grid contains every distinct confidence, so this is the
     # identity and the reference bracket loop is reproduced verbatim.
-    confs = [
-        grid[max(bisect.bisect_right(grid, c) - 1, 0)]
-        for c in pred_pdf["confidence"]
-    ]
+    slots = [max(bisect.bisect_right(grid, c) - 1, 0) for _, _, c in preds]
     # tokens split once per extraction, not per (pair x bracket)
     scores = [[binary_lenient_match_tokens(g, p) for p in ps] for g in gs]
 
     prev_c = 0
-    for conf in sorted(set(confs)):
-        c = conf_index[conf]
-        ext = [j for j, cf in enumerate(confs) if cf >= conf]
+    for c in sorted(set(slots)):
+        ext = [j for j, sl in enumerate(slots) if sl >= c]
         if recall_strategy == "o2o":
             # one-to-one recall: the same greedy bipartite scan as
             # precision but over rec fractions
-            # (/root/reference/eval/oie_eval/benchmark.py:218-243)
-            r_num = 0.0
-            used_r: set[int] = set()
-            used_c: set[int] = set()
-            for _ in range(min(n_gold, len(ext))):
-                best_r, best_i, best_j = -1.0, -1, -1
-                for i in range(n_gold):
-                    if i in used_r:
-                        continue
-                    for j in ext:
-                        if j in used_c:
-                            continue
-                        if scores[i][j][1] > best_r:
-                            best_r, best_i, best_j = scores[i][j][1], i, j
-                used_r.add(best_i)
-                used_c.add(best_j)
-                r_num += best_r
+            # (reference eval/oie_eval/benchmark.py:218-243)
+            r_num = _greedy_sum(scores, ext, 1)
         else:
             # many-to-one (default): per-gold max (carb.py:123-126)
             r_num = sum(max((row[j][1] for j in ext), default=0) for row in scores)
-        p_num = 0.0
-        used_rows: set[int] = set()
-        used_cols: set[int] = set()
-        for _ in range(min(n_gold, len(ext))):
-            best_p, best_i, best_j = -1.0, -1, -1
-            for i in range(n_gold):
-                if i in used_rows:
-                    continue
-                for j in ext:
-                    if j in used_cols:
-                        continue
-                    if scores[i][j][0] > best_p:
-                        best_p, best_i, best_j = scores[i][j][0], i, j
-            used_rows.add(best_i)
-            used_cols.add(best_j)
-            p_num += best_p
-        rows.append([key, prev_c, c, p_num, len(ext), r_num, 0])
+        rows.append((prev_c, c, _greedy_sum(scores, ext, 0), len(ext), r_num, 0))
         prev_c = c + 1
-    return pd.DataFrame(rows, columns=cols)
+    return rows
 
 
 def carb_pr_curve(gold: DataFrame, pred: DataFrame,
@@ -398,9 +407,10 @@ def carb_pr_curve(gold: DataFrame, pred: DataFrame,
     ``max_thresholds`` values (deviation logged) so neither the driver
     list nor the per-group bracket loop grows with corpus size.
 
-    Scale shape: the same single cogroup shuffle as the one-point
-    scorer; the ≤ max_thresholds grid is closure-captured into the
-    cogroup kernel and broadcast back for the bracket → slot expansion.
+    Scale shape: the same single bucket cogroup as the one-point
+    scorer (cogroup_sentences); the ≤ max_thresholds grid is
+    closure-captured into the kernel and broadcast back for the
+    bracket → slot expansion.
     """
     spark = gold.sparkSession
     pred = pred.withColumn("confidence", F.col("confidence").cast("double"))
@@ -437,22 +447,10 @@ def carb_pr_curve(gold: DataFrame, pred: DataFrame,
             stats.n_distinct, max_thresholds, len(grid))
     num_conf = len(grid)
 
-    g = _with_key(gold)
-    pkey = (F.col("norm_key") if "norm_key" in pred.columns
-            else normalize_key_col(F.col("sent")))
-    p = pred.select(
-        F.col("sent").alias("sent"),
-        F.col("pred").alias("pred"),
-        F.col("args").alias("args"),
-        F.col("confidence").alias("confidence"),
-        pkey.alias("norm_key"),
-    )
-    brackets = (
-        g.groupBy("norm_key")
-        .cogroup(p.groupBy("norm_key"))
-        .applyInPandas(lambda l, r: _sweep_group(l, r, grid, recall_strategy),
-                       _SWEEP_SCHEMA)
-    )
+    brackets = cogroup_sentences(
+        _with_key(gold), _with_key(pred, F.col("confidence").alias("confidence")),
+        lambda golds, preds: _sweep_group(golds, preds, grid, recall_strategy),
+        _SWEEP_SCHEMA)
     if num_conf == 0:
         return spark.createDataFrame(
             [], "t int, conf double, precision double, recall double, f1 double")

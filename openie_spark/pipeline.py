@@ -505,7 +505,10 @@ class KGPipeline:
         per_bucket = {int(r.bucket): r.n for r in stats}
         conv_range = None
         if has_conv and stats:
-            conv_range = [min(r.lo for r in stats), max(r.hi for r in stats)]
+            # SQL MIN/MAX over the bucket ranges: a bucket holding only
+            # NULL conv_ids has lo = hi = None and is ignored
+            conv_range = [min((r.lo for r in stats if r.lo is not None), default=None),
+                          max((r.hi for r in stats if r.hi is not None), default=None)]
         manifest = {
             "stage": name,
             "status": "complete",

@@ -162,6 +162,29 @@ def test_oie16_compare_parity_vs_reference(spark, tmp_path):
             tuple(float(v) for v in want_opt), abs=1e-6), seed
 
 
+def test_oie16_ext_order_sets_the_consumption_order(spark):
+    """A prediction, once matched, is consumed: with ``ext_order`` the
+    first prediction in extraction order takes the gold match; without
+    it the content sort (confidence last) decides. Both predictions
+    match the one gold tuple, so the order alone moves the optimum."""
+    from openie_spark.eval.benchmark import oie16_compare
+
+    gold = spark.createDataFrame(
+        [("A is B .", "is", ["A", "B"], 0)],
+        "sent string, pred string, args array<string>, ext_order long")
+    pred = spark.createDataFrame(
+        [("A is B .", "is", ["A", "B"], 0.9, 0),
+         ("A is B .", "is", ["A", "B"], 0.2, 1)],
+        "sent string, pred string, args array<string>, confidence double, "
+        "ext_order long")
+    ordered = oie16_compare(gold, pred)
+    assert ordered["optimal"] == (1.0, 1.0, 1.0)
+    assert ordered["auc"] == pytest.approx(1.0)
+    by_content = oie16_compare(gold.drop("ext_order"), pred.drop("ext_order"))
+    assert by_content["optimal"] == (0.5, 1.0, 0.666667)
+    assert by_content["auc"] == pytest.approx(0.25)
+
+
 def test_carb_o2o_parity_vs_reference(spark, tmp_path):
     """carb_pr_curve(recall_strategy='o2o') + carb_sweep_summary vs the
     imported reference CaRB_compare(recall_strategy='o2o')."""

@@ -628,3 +628,97 @@ def test_carb_prekeyed_inputs_match_unkeyed(spark):
                   .repartition(4, "norm_key").persist())
     keyed = carb_compare(keyed_gold, keyed_pred).collect()
     assert [tuple(r) for r in direct] == [tuple(r) for r in keyed]
+
+
+# ------------------------------------------------- sentence buckets
+
+def _null_sentence_frames(spark):
+    gold = spark.createDataFrame([
+        ("Alice founded Acme .", "founded", ["Alice", "Acme"]),
+        (None, "joined", ["Bob", "Acme"]),
+        (None, "left", ["Carol", "Beta"]),
+        ("Dan met Eve .", "met", ["Dan", "Eve"]),
+    ], "sent string, pred string, args array<string>")
+    pred = spark.createDataFrame([
+        ("Alice founded Acme .", "founded", ["Alice", "Acme"], 1.0),
+        (None, "joined", ["Bob", "Acme"], 0.5),
+        ("Zed ran .", "ran", ["Zed"], 0.75),
+    ], "sent string, pred string, args array<string>, confidence double")
+    return gold, pred
+
+
+def test_null_sentence_rows_score_as_one_sentence(spark):
+    """Rows with a NULL sentence form ONE sentence in every scorer, as
+    a Spark grouping on norm_key does; values pinned from the
+    per-sentence cogroup."""
+    from openie_spark.eval.benchmark import oie16_compare
+    from openie_spark.eval.carb import carb_compare, carb_pr_curve, sentence_scores
+
+    gold, pred = _null_sentence_frames(spark)
+    point = carb_compare(gold, pred.drop("confidence")).collect()[0]
+    assert tuple(point) == (1.0, 0.5, 0.666667, 0.5, 3)
+    curve = [tuple(r) for r in carb_pr_curve(gold, pred).orderBy("t").collect()]
+    assert curve == [(0, 0.5, 1.0, 0.5, 0.666667), (1, 0.75, 1.0, 0.25, 0.4),
+                     (2, 1.0, 1.0, 0.25, 0.4)]
+    oie = oie16_compare(gold, pred)
+    assert oie["auc"] == pytest.approx(0.5)
+    assert (oie["correct_total"], oie["unmatched"]) == (4, 2)
+    assert oie["optimal"] == (1.0, 0.5, 0.666667)
+    rows = sentence_scores(gold, pred.drop("confidence")).collect()
+    assert (None, 1.0, 1, 1.0, 2) in [tuple(r) for r in rows]
+
+
+def _bucket_fixture(spark):
+    """~40 sentences: multi-extraction, gold-only, pred-only and
+    duplicated sentences, varied confidences."""
+    rng = random.Random(11)
+    words = ["alpha", "beta", "gamma", "delta", "said", "is", "ran", "the", "of"]
+    gold_rows, pred_rows = [], []
+    for s in range(40):
+        sent = f"S{s} " + " ".join(rng.choices(words, k=4)) + " ."
+        for _ in range(rng.randint(1, 3)):
+            pr = rng.choice(words)
+            args = [" ".join(rng.choices(words, k=rng.randint(1, 2))) for _ in range(2)]
+            if s % 7 != 3:
+                gold_rows.append((sent, pr, args))
+            if s % 5 != 1:
+                p_args = args if rng.random() < 0.5 else [args[0], rng.choice(words)]
+                pred_rows.append((sent, pr, p_args, rng.choice([0.2, 0.4, 0.6, 0.8, 1.0])))
+    gold = spark.createDataFrame(gold_rows, "sent string, pred string, args array<string>")
+    pred = spark.createDataFrame(
+        pred_rows, "sent string, pred string, args array<string>, confidence double")
+    return gold_rows, pred_rows, gold, pred
+
+
+def test_scores_do_not_depend_on_the_bucket_count(spark):
+    """The scorers cogroup on pmod(xxhash64(norm_key), N) with N the
+    session's shuffle parallelism: one bucket and seven buckets give
+    the same CaRB point, PR curve and OIE16 result, and the curve is
+    the reference sweep's."""
+    from openie_spark.eval.benchmark import oie16_compare
+    from openie_spark.eval.carb import carb_compare, carb_pr_curve
+
+    gold_rows, pred_rows, gold, pred = _bucket_fixture(spark)
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    results = []
+    try:
+        for n in (1, 7):
+            spark.conf.set("spark.sql.shuffle.partitions", str(n))
+            point = tuple(carb_compare(gold, pred.drop("confidence")).collect()[0])
+            curve = [tuple(r) for r in carb_pr_curve(gold, pred).orderBy("t").collect()]
+            oie = oie16_compare(gold, pred)
+            results.append((point, curve, oie))
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+    assert results[0] == results[1]
+
+    g_dict, p_dict = {}, {}
+    for s, pr, ar in gold_rows:
+        g_dict.setdefault(normalize_key(s), []).append((pr, ar, 1.0))
+    for s, pr, ar, cf in pred_rows:
+        p_dict.setdefault(normalize_key(s), []).append((pr, ar, cf))
+    confs, want_p, want_r = _reference_sweep(g_dict, p_dict)
+    curve = results[0][1]
+    assert [r[1] for r in curve] == confs
+    assert [r[2] for r in curve] == [round(x, 6) for x in want_p]
+    assert [r[3] for r in curve] == [round(x, 6) for x in want_r]

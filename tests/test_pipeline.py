@@ -51,6 +51,32 @@ def test_manifests_lineage(pipeline_out):
     assert "skew" in vman["metrics"]
 
 
+def test_null_conv_id_bucket_keeps_sql_min_max_range(spark, tmp_path):
+    """A stage bucket that holds only NULL conv_ids must not crash the
+    manifest's conv_id_range: the range ignores NULLs, as SQL MIN/MAX
+    do."""
+    import datetime
+
+    from openie_spark.pipeline import KGPipeline
+
+    ts = datetime.datetime(2024, 1, 1)
+    text = "spark group query row data slow small filter customer line"
+    turns = [("conv-000001", i, "user", text, None, ts) for i in range(5)]
+    turns.append((None, 0, "user", "the fast key order sort table scan merge part", None, ts))
+    in_dir = str(tmp_path / "in")
+    spark.createDataFrame(
+        turns, "conv_id string, turn_idx int, role string, text string, "
+               "tool string, ts timestamp",
+    ).write.parquet(os.path.join(in_dir, "transcripts.parquet"))
+
+    out = str(tmp_path / "kg")
+    KGPipeline(spark, in_dir, out).run(resume=False)
+    with open(os.path.join(out, "triples", "_manifest.json")) as f:
+        man = json.load(f)
+    assert len(man["per_bucket_rows"]) == 2
+    assert man["conv_id_range"] == ["conv-000001", "conv-000001"]
+
+
 def test_model_version_pins_the_neural_fused_weights():
     """neural_fused runs the neural tagger weights, so its manifests
     pin their hash and a weights change invalidates its resume."""

@@ -1,7 +1,8 @@
 """Physical-plan regression guards: the scale properties PLANS.md
 audits are asserted here for key queries so a refactor cannot silently
 reintroduce a cross join, an unpruned scan, or a per-row Python eval.
-explain()-only — no query executes."""
+explain()-only — no query executes — except the carb co-partitioning
+guard, which reads the final adaptive plan."""
 
 from __future__ import annotations
 
@@ -151,3 +152,44 @@ def test_metapaths_all_equi_joins_and_capped_windows(spark, entry):
     plan = _plan(entry.queries()["kg_metapaths"](spark, SF))
     assert _count(plan, r"CartesianProduct|BroadcastNestedLoopJoin") == 0
     assert _count(plan, r"WindowGroupLimit") >= 2
+
+
+def _plan_nodes(node):
+    """Executed-plan children, through AQE wrappers and query stages
+    (an InMemoryTableScan is a leaf: its cached plan is not walked)."""
+    name = node.nodeName()
+    if name == "AdaptiveSparkPlan":
+        return [node.executedPlan()]
+    if name.endswith("QueryStage"):
+        return [node.plan()]
+    ch = node.children()
+    return [ch.apply(i) for i in range(ch.size())]
+
+
+def _subtree_names(node) -> list[str]:
+    return [node.nodeName()] + [n for c in _plan_nodes(node) for n in _subtree_names(c)]
+
+
+def _find(node, name: str):
+    if node.nodeName() == name:
+        return node
+    for c in _plan_nodes(node):
+        hit = _find(c, name)
+        if hit is not None:
+            return hit
+    return None
+
+
+@pytest.mark.parametrize("query", ["carb_score_degraded", "carb_pr_sweep"])
+def test_carb_cogroup_reads_the_cached_eval_tables_without_exchange(spark, entry, query):
+    """carb_gold is repartitioned on the scorers' sentence bucket, so
+    the bucket cogroup starts from co-partitioned cached children: no
+    Exchange between the cached tables and FlatMapCoGroupsInPandas.
+    Executes the query (AQE plans are final only after a run)."""
+    df = entry.queries()[query](spark, SF)
+    df.collect()
+    cogroup = _find(df._jdf.queryExecution().executedPlan(), "FlatMapCoGroupsInPandas")
+    assert cogroup is not None
+    names = _subtree_names(cogroup)
+    assert names.count("InMemoryTableScan") == 2
+    assert not [n for n in names if "Exchange" in n], names
