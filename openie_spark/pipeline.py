@@ -30,7 +30,7 @@ import os
 import time
 from collections.abc import Callable
 from dataclasses import dataclass, field
-from functools import partial
+from functools import cached_property, partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -81,8 +81,11 @@ class ParquetTableIO:
     def location(self, name: str) -> str:
         return os.path.join(self.output_dir, name)
 
-    def write(self, spark: SparkSession, df: DataFrame, name: str) -> None:
+    def write(self, spark: SparkSession, df: DataFrame, name: str) -> DataFrame:
+        """Write ``df`` and return the written table, read back with the
+        schema it was written with (no schema-inference job)."""
         df.write.mode("overwrite").parquet(self.location(name))
+        return spark.read.schema(df.schema).parquet(self.location(name))
 
     def read(self, spark: SparkSession, name: str) -> DataFrame:
         return spark.read.parquet(self.location(name))
@@ -108,9 +111,10 @@ class IcebergTableIO:
     def location(self, name: str) -> str:
         return self.qualified(name)
 
-    def write(self, spark: SparkSession, df: DataFrame, name: str) -> None:
+    def write(self, spark: SparkSession, df: DataFrame, name: str) -> DataFrame:
         spark.sql(f"CREATE NAMESPACE IF NOT EXISTS {self.catalog}.{self.namespace}")
         df.writeTo(self.qualified(name)).using("iceberg").createOrReplace()
+        return self.read(spark, name)
 
     def read(self, spark: SparkSession, name: str) -> DataFrame:
         return spark.table(self.qualified(name))
@@ -375,56 +379,47 @@ class KGPipeline:
         self.io = table_io if table_io is not None else make_table_io(spark, output_dir)
         self.results: list[StageResult] = []
         self.tables: dict[str, DataFrame] = {}   # this run's stage outputs
+        self.manifests: dict[str, dict] = {}     # ... and their manifests
 
     # ------------------------------------------------------------ io
 
-    def _manifest_path(self, name: str) -> str:
+    def _manifest_path(self, name: str, root: str | None = None) -> str:
         # manifests are sidecars under output_dir regardless of the
         # table format (they carry the resume contract)
-        return os.path.join(self.output_dir, name, "_manifest.json")
+        return os.path.join(root or self.output_dir, name, "_manifest.json")
 
     # Manifests go through the Hadoop FileSystem API, not driver-local
     # open(): tools/kg_job.py advertises spark-submit with a warehouse
     # output path, and an hdfs:///s3a:// output_dir must carry the
     # checkpoint-resume contract too (stage data already does via the
-    # Spark writers).
+    # Spark writers). A run keeps the manifests it writes or resumes in
+    # memory; disk is read only for the resume check and the prior
+    # output of run_incremental, one file per JVM read.
 
     def _jpath(self, path: str):
         return self.spark._jvm.org.apache.hadoop.fs.Path(path)
 
+    @cached_property
     def _fs(self):
         return self._jpath(self.output_dir).getFileSystem(
             self.spark._jsc.hadoopConfiguration())
 
     def _write_text(self, path: str, content: str) -> None:
-        out = self._fs().create(self._jpath(path), True)
+        out = self._fs.create(self._jpath(path), True)
         try:
             out.write(bytearray(content.encode("utf-8")))
         finally:
             out.close()
 
-    def _read_text(self, path: str) -> str | None:
-        fs = self._fs()
-        p = self._jpath(path)
-        if not fs.exists(p):
+    def _read_manifest(self, name: str, root: str | None = None) -> dict | None:
+        p = self._jpath(self._manifest_path(name, root))
+        if not self._fs.exists(p):
             return None
-        jvm = self.spark._jvm
-        reader = jvm.java.io.BufferedReader(
-            jvm.java.io.InputStreamReader(fs.open(p), "UTF-8"))
+        stream = self._fs.open(p)
         try:
-            lines = []
-            while True:
-                line = reader.readLine()
-                if line is None:
-                    break
-                lines.append(line)
+            return json.loads(stream.readAllBytes())
         finally:
-            reader.close()
-        return "\n".join(lines)
-
-    def _read_manifest(self, name: str) -> dict | None:
-        raw = self._read_text(self._manifest_path(name))
-        return None if raw is None else json.loads(raw)
+            stream.close()
 
     def _storage_stats(self, location: str) -> dict:
         """Physical-layout lineage for a stage's written table: file
@@ -435,8 +430,7 @@ class KGPipeline:
         data read; best-effort for table-catalog (Iceberg) locations
         where the directory layout is the catalog's business."""
         try:
-            fs = self._fs()
-            it = fs.listFiles(self._jpath(location), True)
+            it = self._fs.listFiles(self._jpath(location), True)
             n_files, total = 0, 0
             while it.hasNext():
                 st = it.next()
@@ -465,8 +459,7 @@ class KGPipeline:
             "model_version": model_version(self.backend),
             "input_dir": self.input_dir,
             "upstream": {
-                u: {k: (self._read_manifest(u) or {}).get(k)
-                    for k in ("rows", "write_id")}
+                u: {k: self.manifests.get(u, {}).get(k) for k in ("rows", "write_id")}
                 for u in upstream
             },
         }
@@ -477,9 +470,10 @@ class KGPipeline:
         fp = self._stage_fingerprint(name, upstream)
         if extra_fp:
             fp = {**fp, **extra_fp}
-        man = self._read_manifest(name)
+        man = self._read_manifest(name) if resume else None
         sd = self.io.location(name)
-        if resume and man and man.get("status") == "complete" and man.get("fingerprint") == fp:
+        if man and man.get("status") == "complete" and man.get("fingerprint") == fp:
+            self.manifests[name] = man
             self.results.append(StageResult(name, sd, man["rows"], 0.0, True, man))
             return self.io.read(self.spark, name)
 
@@ -487,8 +481,7 @@ class KGPipeline:
         df = build().withColumn(
             "bucket", F.pmod(F.xxhash64(F.col(bucket_col)), F.lit(N_BUCKETS)).cast("int")
         ).repartition("bucket")
-        self.io.write(self.spark, df, name)
-        out = self.io.read(self.spark, name)
+        out = self.io.write(self.spark, df, name)
 
         # ONE column-pruned scan for all lineage stats: per-bucket
         # counts + conv range come from a single grouped aggregate
@@ -524,6 +517,7 @@ class KGPipeline:
             manifest["metrics"] = extra_metrics(out)
         self._write_text(self._manifest_path(name),
                          json.dumps(manifest, indent=1, sort_keys=True))
+        self.manifests[name] = manifest
         self.results.append(StageResult(name, sd, rows, manifest["seconds"], False, manifest))
         return out
 
@@ -567,17 +561,15 @@ class KGPipeline:
 
     def _write_summary(self, t_total: float, triples_key: str, **head) -> dict:
         total = round(time.time() - t_total, 3)
-        n_triples = next(r.rows for r in self.results if r.name == "triples")
+        rows = {name: man["rows"] for name, man in self.manifests.items()}
         summary = {
             **head,
             "stages": {r.name: {"rows": r.rows, "seconds": r.seconds, "resumed": r.resumed}
                        for r in self.results},
             "total_seconds": total,
-            triples_key: n_triples,
-            "nodes": self.tables["nodes"].count(),
-            "edges": self.tables["edges"].count(),
-            "relations": self.tables["relations"].count(),
-            "triples_per_sec": round(n_triples / max(total, 1e-9), 1),
+            triples_key: rows["triples"],
+            **{name: rows[name] for name in ("nodes", "edges", "relations")},
+            "triples_per_sec": round(rows["triples"] / max(total, 1e-9), 1),
             "model_version": model_version(self.backend),
         }
         self._write_text(os.path.join(self.output_dir, "_pipeline_summary.json"),
@@ -592,7 +584,7 @@ class KGPipeline:
                          (self.enrich, ENRICH_STAGES)):
             if on:
                 stages += rows
-        self.tables = {}
+        self.tables, self.manifests = {}, {}
         self._run_stages(stages, resume)
         return self._write_summary(t_total, "triples")
 
@@ -613,7 +605,8 @@ class KGPipeline:
 
         Stage resume fingerprints additionally pin the write_ids of the
         prior tables the stage reads, so pointing the same output at a
-        rebuilt prior re-runs the merge rather than false-resuming."""
+        rebuilt prior re-runs the merge rather than false-resuming. A
+        prior table the merge reads must have a complete manifest."""
         if self.analytics or self.export or self.enrich:
             raise ValueError(
                 "run_incremental merges the KG stages only: the analytics, "
@@ -627,19 +620,21 @@ class KGPipeline:
                 "is not wired here)")
 
         t_total = time.time()
+        write_ids = {}      # prior write_ids, read once per run
+        for n in sorted({p for m in MERGES.values() for p in m.prior}):
+            man = self._read_manifest(n, prior_dir) or {}
+            if man.get("status") != "complete":
+                raise ValueError(
+                    f"run_incremental: prior stage {n!r} under {prior_dir} has no "
+                    "complete manifest — the merge would read an incomplete output")
+            write_ids[n] = man.get("write_id")
         pio = ParquetTableIO(prior_dir)
-        self.tables = {
-            f"prior_{n}": pio.read(self.spark, n).drop("bucket")
-            for n in {p for m in MERGES.values() for p in m.prior}
-        }
+        self.tables = {f"prior_{n}": pio.read(self.spark, n).drop("bucket") for n in write_ids}
+        self.manifests = {}
 
         def prior_fp(names: tuple[str, ...]) -> dict:
-            def write_id(name: str) -> str | None:
-                raw = self._read_text(os.path.join(prior_dir, name, "_manifest.json"))
-                return None if raw is None else json.loads(raw).get("write_id")
-
             return {"prior_dir": prior_dir, "delta": True,
-                    "prior": {n: write_id(n) for n in names}}
+                    "prior": {n: write_ids[n] for n in names}}
 
         self._run_stages(KG_STAGES[:1], resume, prior_fp)
         overlap = (

@@ -262,6 +262,35 @@ def test_incremental_summary_and_manifests(chained_run):
     assert s2["edges"] == full_sum["edges"]
 
 
+def test_incremental_summary_counts_are_the_table_counts(spark, chained_run):
+    """Each increment's summary counts equal the counts of the tables it
+    wrote (the delta's triples, the merged graph)."""
+    _, inc2_out, s1, s2 = chained_run
+    for summary, out in ((s1, s2["prior_dir"]), (s2, inc2_out)):
+        assert summary["delta_triples"] == spark.read.parquet(
+            os.path.join(out, "triples")).count()
+        for name in ("nodes", "edges", "relations"):
+            assert summary[name] == spark.read.parquet(os.path.join(out, name)).count(), name
+
+
+def test_incremental_rejects_a_prior_stage_without_manifest(spark, split_inputs,
+                                                            chained_run, tmp_path):
+    """A prior output whose edges manifest is missing (a run killed
+    while writing edges) is not merged against: the merge names the
+    incomplete stage instead of pinning a missing write_id."""
+    import shutil
+
+    from openie_spark.pipeline import KGPipeline
+
+    _, _, s1, _ = chained_run
+    prior = str(tmp_path / "prior")
+    shutil.copytree(s1["prior_dir"], prior)
+    os.remove(os.path.join(prior, "edges", "_manifest.json"))
+    with pytest.raises(ValueError, match="'edges'"):
+        KGPipeline(spark, split_inputs[1], str(tmp_path / "out")).run_incremental(
+            prior_dir=prior, resume=True)
+
+
 def test_incremental_resume_skips_everything(spark, split_inputs, chained_run):
     from openie_spark.pipeline import KGPipeline
 

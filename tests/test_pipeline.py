@@ -12,13 +12,30 @@ SF = "/root/testdata/sf0.001"
 
 
 @pytest.fixture(scope="module")
-def pipeline_out(spark, tmp_path_factory):
+def pipeline_run(spark, tmp_path_factory):
     from openie_spark.pipeline import KGPipeline
 
-    out = str(tmp_path_factory.mktemp("kg"))
-    pipe = KGPipeline(spark, SF, out)
-    summary = pipe.run(resume=True)
-    return out, summary
+    pipe = KGPipeline(spark, SF, str(tmp_path_factory.mktemp("kg")))
+    return pipe, pipe.run(resume=True)
+
+
+@pytest.fixture(scope="module")
+def pipeline_out(pipeline_run):
+    pipe, summary = pipeline_run
+    return pipe.output_dir, summary
+
+
+def _job_ids(spark, group: str, fn):
+    """(fn(), ids of the Spark jobs fn ran), fn run in job group ``group``."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()   # the tracker is fed async
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_pipeline_summary_counts(pipeline_out):
@@ -30,6 +47,56 @@ def test_pipeline_summary_counts(pipeline_out):
     assert set(summary["stages"]) == {
         "triples", "triples_norm", "vocab", "pairs", "components", "nodes", "edges",
         "relations"}
+
+
+def test_summary_counts_are_the_table_counts(spark, pipeline_out):
+    out, summary = pipeline_out
+    for name in ("triples", "nodes", "edges", "relations"):
+        assert summary[name] == spark.read.parquet(os.path.join(out, name)).count(), name
+
+
+def test_held_tables_have_the_written_schema(spark, pipeline_run):
+    """The table a run holds for each stage (its build input downstream)
+    has the schema Spark reads back from the written files: same
+    fields, types, nullability and metadata."""
+    from openie_spark.pipeline import KG_STAGES
+
+    pipe, _ = pipeline_run
+    for st in KG_STAGES:
+        written = spark.read.parquet(pipe.io.location(st.name)).drop("bucket")
+        assert pipe.tables[st.name].schema == written.schema, st.name
+
+
+def test_write_summary_runs_no_spark_job(spark, pipeline_run):
+    """The summary's counts come from the run's manifests, not from
+    count() queries over the stage tables."""
+    import time
+
+    pipe, summary = pipeline_run
+    again, jobs = _job_ids(spark, "summary-guard",
+                           lambda: pipe._write_summary(time.time(), "triples"))
+    assert jobs == []
+    assert {k: again[k] for k in ("triples", "nodes", "edges", "relations")} == \
+        {k: summary[k] for k in ("triples", "nodes", "edges", "relations")}
+
+
+def test_table_write_runs_only_the_write_jobs(spark, tmp_path):
+    """ParquetTableIO.write returns the written table without a
+    schema-inference job: it runs exactly the jobs of a plain
+    ``df.write.parquet`` of the same frame."""
+    from pyspark.sql import functions as F
+
+    from openie_spark.pipeline import ParquetTableIO
+
+    df = spark.range(200).select(
+        F.col("id"), (F.col("id") % 7).alias("k"),
+        F.concat(F.lit("x"), F.col("id").cast("string")).alias("s")).repartition(3, "k")
+    _, plain = _job_ids(spark, "plain-write", lambda: df.write.parquet(str(tmp_path / "plain")))
+    io = ParquetTableIO(str(tmp_path))
+    cols, seam = _job_ids(spark, "seam-write",
+                          lambda: io.write(spark, df, "seam").columns)
+    assert plain and len(seam) == len(plain)
+    assert cols == df.columns
 
 
 def test_manifests_lineage(pipeline_out):
