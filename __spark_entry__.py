@@ -634,22 +634,6 @@ def _q_kg_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     return negative_samples(nodes, edges)
 
 
-def _q_dp_ev_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered-sequence funnel (view → click → purchase) — one
-    shuffle: running-min windows + a grouped aggregate."""
-    from openie_spark.datapipe.events import funnel_progress
-
-    return funnel_progress(_events(spark, sf_dir))
-
-
-def _q_dp_ev_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Day-granularity cohort retention: first-active-day cohorts,
-    per-offset distinct-user activity, exact integer-ppm rate."""
-    from openie_spark.datapipe.events import retention_cohorts
-
-    return retention_cohorts(_events(spark, sf_dir))
-
-
 def _q_dp_bloom_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-filter membership pre-filter with exact audit (planted
     exact twins as ground truth): ≤m_bits broadcast bitmap, k-bit
@@ -659,34 +643,6 @@ def _q_dp_bloom_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bloom_flags(planted_exact(_docs(spark, sf_dir)))
 
 
-def _q_dp_ev_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user behavioral feature rollup (event counts, active days,
-    top type by min-by vote, epoch-micros bounds, exact cents sums) —
-    two partial-agg shuffles + user-sized joins, no windows."""
-    from openie_spark.datapipe.events import user_profiles
-
-    return user_profiles(_events(spark, sf_dir))
-
-
-def _q_dp_ev_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Event-type Markov transition matrix: per-user chronologically
-    adjacent type bigrams with exact row-normalized ppm shares — one
-    user_id window shuffle, types²-bounded output."""
-    from openie_spark.datapipe.events import event_transitions
-
-    return event_transitions(_events(spark, sf_dir))
-
-
-def _q_dp_ev_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Order-3 sequential pattern mining: per-user chronologically
-    adjacent event-type trigrams with occurrence and distinct-user
-    support — the same user_id window shuffle as the transition
-    matrix, types³-bounded output."""
-    from openie_spark.datapipe.events import event_trigrams
-
-    return event_trigrams(_events(spark, sf_dir))
-
-
 def _q_kg_mixing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree-assortativity sufficient statistics over the undirected
     simple graph: one row of exact BIGINT sums (Newman's r follows in
@@ -694,23 +650,6 @@ def _q_kg_mixing(spark: SparkSession, sf_dir: str) -> DataFrame:
     from openie_spark.kg.analytics import degree_mixing_sums
 
     return degree_mixing_sums(_shared(spark, sf_dir, "edges"))
-
-
-def _q_dp_ev_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hour-of-day activity profile per event type: integer epoch-hour
-    mod 24 cells with distinct-user reach and exact-ppm type shares —
-    one 24×types-bounded partial agg."""
-    from openie_spark.datapipe.events import hourly_profile
-
-    return hourly_profile(_events(spark, sf_dir))
-
-
-def _q_dp_ev_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Robust daily-volume anomaly flags per event type: integer
-    nearest-rank median/MAD, modified-z-score cutoff."""
-    from openie_spark.datapipe.events import daily_anomalies
-
-    return daily_anomalies(_events(spark, sf_dir))
 
 
 def _conv_parity(col: str = "conv_id") -> F.Column:
@@ -1079,15 +1018,6 @@ def _q_kg_linking_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pair_generation_audit(pairs, minhash_pairs(vocab))
 
 
-def _q_dp_ev_gap_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Inter-event gap histogram (log2 whole-second bins) — the
-    empirical basis for the sessionization gap threshold; one user
-    window + <= 64-group collapse."""
-    from openie_spark.datapipe.events import gap_histogram
-
-    return gap_histogram(_events(spark, sf_dir))
-
-
 def _q_kg_alias_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Alias-count histogram over the node table — the over/under-
     merge audit of canonicalization; map-only + tiny collapse."""
@@ -1229,94 +1159,6 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _tune(spark).read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _tune(spark).read.parquet(f"{sf_dir}/events.parquet")
-
-
-def _q_dp_ev_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization over the events stream table —
-    lag-flag + running-sum over one user_id window; integer-microsecond
-    time arithmetic keeps it engine-portable."""
-    from openie_spark.datapipe.events import session_stats
-
-    return session_stats(_events(spark, sf_dir))
-
-
-def _q_dp_ev_sessions_sw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same gap sessions via Spark's NATIVE session_window merge —
-    the exact aggregation that runs incrementally under Structured
-    Streaming (streaming/ingest.streaming_session_stats)."""
-    from openie_spark.datapipe.events import session_window_stats
-
-    return session_window_stats(_events(spark, sf_dir))
-
-
-def _q_dp_ev_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling-window counts/value sums per event_type (F.window) —
-    same expression runs under Structured Streaming with a watermark."""
-    from openie_spark.datapipe.events import windowed_counts
-
-    return windowed_counts(_events(spark, sf_dir))
-
-
-def _q_dp_ev_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding-window (20 min / 5 min slide) counts, distinct users and
-    value sums per event_type — native F.window(ts, L, S) explode."""
-    from openie_spark.datapipe.events import sliding_counts
-
-    return sliding_counts(_events(spark, sf_dir))
-
-
-def _q_dp_ev_active(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rolling engagement: per active epoch day, DAU, trailing-7-day
-    WAU, and the exact-ppm DAU/WAU stickiness ratio."""
-    from openie_spark.datapipe.events import active_users
-
-    return active_users(_events(spark, sf_dir))
-
-
-def _q_dp_ev_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Event-type affinity: same-session co-membership scored by
-    exact-integer Dice (the market-basket view of the stream)."""
-    from openie_spark.datapipe.events import type_affinity
-
-    return type_affinity(_events(spark, sf_dir))
-
-
-def _q_dp_ev_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-type value-cents quantile sketch (bottom-k-by-hash uniform
-    sample, nearest-rank integer quantiles, exact n/min/max)."""
-    from openie_spark.datapipe.events import value_quantiles
-
-    return value_quantiles(_events(spark, sf_dir))
-
-
-def _q_dp_ev_props(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Typed JSON extraction from the semi-structured props column."""
-    from openie_spark.datapipe.events import props_k
-
-    return props_k(_events(spark, sf_dir))
-
-
-def _q_dp_ev_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of join: latest same-user 'error' event at-or-before each
-    event — union-marker + one window (one shuffle), not a theta
-    join."""
-    from openie_spark.datapipe.events import asof_last_ref
-
-    return asof_last_ref(_events(spark, sf_dir))
-
-
-def _q_dp_ev_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bounded-interval range join: events inside any same-user
-    [error.ts, error.ts + 15 min) window — interval-to-bucket
-    expansion turns the range predicate into an equi-join (the oracle
-    is the naive theta join)."""
-    from openie_spark.datapipe.events import interval_events
-
-    return interval_events(_events(spark, sf_dir))
-
-
 def _q_dp_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from openie_spark.datapipe.dedup import exact_dedup_groups
 
@@ -1345,15 +1187,6 @@ def _q_dp_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from openie_spark.datapipe.dedup import minhash_pairs_docs, planted_docs
 
     return minhash_pairs_docs(planted_docs(_docs(spark, sf_dir)))
-
-
-def _q_dp_ev_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Daily growth accounting: active users decomposed into new /
-    retained / resurrected — one (user, day) dedup + one user window +
-    a day-bounded rollup."""
-    from openie_spark.datapipe.events import growth_accounting
-
-    return growth_accounting(_events(spark, sf_dir))
 
 
 def _q_dp_dedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1848,9 +1681,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_tool_sequences": _q_kg_tool_sequences,
         "kg_alias_hist": _q_kg_alias_hist,
         "dp_length_hist": _q_dp_length_hist,
-        "dp_ev_gap_hist": _q_dp_ev_gap_hist,
         "dp_dedup_eval": _q_dp_dedup_eval,
-        "dp_ev_growth": _q_dp_ev_growth,
         "kg_salsa": _q_kg_salsa,
         "kg_degree_hist": _q_kg_degree_hist,
         "kg_conv_neardup": _q_kg_conv_neardup,
@@ -1909,23 +1740,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dp_embedding_groups": _q_dp_embedding_groups,
         "dp_media_features": _q_dp_media_features,
         "dp_media_frames": _q_dp_media_frames,
-        "dp_ev_sessions": _q_dp_ev_sessions,
-        "dp_ev_sessions_sw": _q_dp_ev_sessions_sw,
-        "dp_ev_windowed": _q_dp_ev_windowed,
-        "dp_ev_sliding": _q_dp_ev_sliding,
-        "dp_ev_active": _q_dp_ev_active,
-        "dp_ev_affinity": _q_dp_ev_affinity,
-        "dp_ev_quantiles": _q_dp_ev_quantiles,
-        "dp_ev_props": _q_dp_ev_props,
-        "dp_ev_asof": _q_dp_ev_asof,
-        "dp_ev_intervals": _q_dp_ev_intervals,
-        "dp_ev_funnel": _q_dp_ev_funnel,
-        "dp_ev_retention": _q_dp_ev_retention,
-        "dp_ev_anomaly": _q_dp_ev_anomaly,
-        "dp_ev_transitions": _q_dp_ev_transitions,
-        "dp_ev_trigrams": _q_dp_ev_trigrams,
-        "dp_ev_hourly": _q_dp_ev_hourly,
-        "dp_ev_profiles": _q_dp_ev_profiles,
         "dp_bloom_flags": _q_dp_bloom_flags,
     }
 
@@ -2002,9 +1816,7 @@ def oracle_sql() -> dict[str, str]:
         "kg_tool_sequences": o.kg_tool_sequences_sql(),
         "kg_alias_hist": o.kg_alias_hist_sql(),
         "dp_length_hist": dp.length_histogram_sql(),
-        "dp_ev_gap_hist": dp.gap_histogram_sql(),
         "dp_dedup_eval": dp.dedup_eval_sql(),
-        "dp_ev_growth": dp.growth_accounting_sql(),
         "kg_salsa": o.kg_salsa_sql(),
         "kg_degree_hist": o.kg_degree_hist_sql(),
         "kg_conv_neardup": dp.conv_minhash_pairs_sql(),
@@ -2063,22 +1875,5 @@ def oracle_sql() -> dict[str, str]:
         "dp_embedding_groups": dp.embedding_groups_sql(),
         "dp_media_features": dp.media_features_sql(),
         "dp_media_frames": dp.media_frames_sql(),
-        "dp_ev_sessions": dp.session_stats_sql(),
-        "dp_ev_sessions_sw": dp.session_window_stats_sql(),
-        "dp_ev_windowed": dp.windowed_counts_sql(),
-        "dp_ev_sliding": dp.sliding_counts_sql(),
-        "dp_ev_active": dp.active_users_sql(),
-        "dp_ev_affinity": dp.type_affinity_sql(),
-        "dp_ev_quantiles": dp.value_quantiles_sql(),
-        "dp_ev_props": dp.props_k_sql(),
-        "dp_ev_asof": dp.asof_last_ref_sql(),
-        "dp_ev_intervals": dp.interval_events_sql(),
-        "dp_ev_funnel": dp.funnel_sql(),
-        "dp_ev_retention": dp.retention_sql(),
-        "dp_ev_anomaly": dp.anomalies_sql(),
-        "dp_ev_transitions": dp.event_transitions_sql(),
-        "dp_ev_trigrams": dp.event_trigrams_sql(),
-        "dp_ev_hourly": dp.hourly_profile_sql(),
-        "dp_ev_profiles": dp.user_profiles_sql(),
         "dp_bloom_flags": dp.bloom_flags_sql(),
     }

@@ -8,14 +8,17 @@ Each stage materializes one table under <output>/<stage>/ plus a
     stage, status, rows, per-bucket row counts (bucket = conv_id /
     entity hash bucket — the 'per-partition lineage'), conv_id range,
     model version (tagger weights content-hash or 'rule-v1'), engine
-    config fingerprint, upstream stage fingerprints, wall seconds.
+    config fingerprint, upstream stage fingerprints, wall seconds, and
+    the schema the table was written with.
 
 Resume semantics: a stage re-runs iff its manifest is missing,
-incomplete, or its recorded upstream fingerprint differs (so resuming
-after a config/model change invalidates exactly the dirty suffix of
-the DAG). Writes are atomic-per-stage: data lands under the stage dir
-first, the manifest is written LAST — a job killed mid-stage leaves no
-manifest and the stage re-runs cleanly (idempotent overwrite).
+incomplete, carries no schema, or its recorded upstream fingerprint
+differs (so resuming after a config/model change invalidates exactly
+the dirty suffix of the DAG). A resumed table is read back with the
+manifest's schema, so resuming runs no schema-inference job. Writes
+are atomic-per-stage: data lands under the stage dir first, the
+manifest is written LAST — a job killed mid-stage leaves no manifest
+and the stage re-runs cleanly (idempotent overwrite).
 
 Storage: Parquet with a persisted ``bucket`` column (hash of conv_id /
 entity id). On a real deployment swap TableIO for Iceberg
@@ -34,6 +37,7 @@ from functools import cached_property, partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from openie_spark import config as C
 from openie_spark.kg import analytics as A
@@ -85,10 +89,14 @@ class ParquetTableIO:
         """Write ``df`` and return the written table, read back with the
         schema it was written with (no schema-inference job)."""
         df.write.mode("overwrite").parquet(self.location(name))
-        return spark.read.schema(df.schema).parquet(self.location(name))
+        return self.read(spark, name, df.schema)
 
-    def read(self, spark: SparkSession, name: str) -> DataFrame:
-        return spark.read.parquet(self.location(name))
+    def read(self, spark: SparkSession, name: str,
+             schema: StructType | None = None) -> DataFrame:
+        """The table ``name``; with ``schema`` it is read with that
+        schema instead of inferring one from the files (a Spark job)."""
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(self.location(name))
 
 
 class IcebergTableIO:
@@ -116,8 +124,9 @@ class IcebergTableIO:
         df.writeTo(self.qualified(name)).using("iceberg").createOrReplace()
         return self.read(spark, name)
 
-    def read(self, spark: SparkSession, name: str) -> DataFrame:
-        return spark.table(self.qualified(name))
+    def read(self, spark: SparkSession, name: str,
+             schema: StructType | None = None) -> DataFrame:
+        return spark.table(self.qualified(name))    # the catalog holds the schema
 
 
 def make_table_io(spark: SparkSession, output_dir: str):
@@ -472,10 +481,11 @@ class KGPipeline:
             fp = {**fp, **extra_fp}
         man = self._read_manifest(name) if resume else None
         sd = self.io.location(name)
-        if man and man.get("status") == "complete" and man.get("fingerprint") == fp:
+        if (man and man.get("status") == "complete" and "schema" in man
+                and man.get("fingerprint") == fp):
             self.manifests[name] = man
             self.results.append(StageResult(name, sd, man["rows"], 0.0, True, man))
-            return self.io.read(self.spark, name)
+            return self.io.read(self.spark, name, StructType.fromJson(man["schema"]))
 
         t0 = time.time()
         df = build().withColumn(
@@ -511,6 +521,7 @@ class KGPipeline:
             "conv_id_range": conv_range,
             "fingerprint": fp,
             "seconds": round(time.time() - t0, 3),
+            "schema": out.schema.jsonValue(),
             **self._storage_stats(sd),
         }
         if extra_metrics:
@@ -606,7 +617,8 @@ class KGPipeline:
         Stage resume fingerprints additionally pin the write_ids of the
         prior tables the stage reads, so pointing the same output at a
         rebuilt prior re-runs the merge rather than false-resuming. A
-        prior table the merge reads must have a complete manifest."""
+        prior table the merge reads must have a complete manifest that
+        carries its schema."""
         if self.analytics or self.export or self.enrich:
             raise ValueError(
                 "run_incremental merges the KG stages only: the analytics, "
@@ -620,21 +632,23 @@ class KGPipeline:
                 "is not wired here)")
 
         t_total = time.time()
-        write_ids = {}      # prior write_ids, read once per run
+        prior = {}          # prior manifests, read once per run
         for n in sorted({p for m in MERGES.values() for p in m.prior}):
             man = self._read_manifest(n, prior_dir) or {}
-            if man.get("status") != "complete":
+            if man.get("status") != "complete" or "schema" not in man:
                 raise ValueError(
                     f"run_incremental: prior stage {n!r} under {prior_dir} has no "
                     "complete manifest — the merge would read an incomplete output")
-            write_ids[n] = man.get("write_id")
+            prior[n] = man
         pio = ParquetTableIO(prior_dir)
-        self.tables = {f"prior_{n}": pio.read(self.spark, n).drop("bucket") for n in write_ids}
+        self.tables = {
+            f"prior_{n}": pio.read(self.spark, n, StructType.fromJson(man["schema"]))
+            .drop("bucket") for n, man in prior.items()}
         self.manifests = {}
 
         def prior_fp(names: tuple[str, ...]) -> dict:
             return {"prior_dir": prior_dir, "delta": True,
-                    "prior": {n: write_ids[n] for n in names}}
+                    "prior": {n: prior[n].get("write_id") for n in names}}
 
         self._run_stages(KG_STAGES[:1], resume, prior_fp)
         overlap = (

@@ -867,104 +867,6 @@ FROM (SELECT doc_id AS media_id, strlen(text) AS nb
      unnest(range(0, (nb + {FRAME_BYTES - 1}) // {FRAME_BYTES}, {FRAME_STRIDE})) u(f)"""
 
 
-# ------------------------------------------------------------ events
-
-def session_stats_sql() -> str:
-    """Mirrors events.session_stats: integer-microsecond gap rule,
-    (ts, event_id) tie order, cents-integer value sums."""
-    from openie_spark.datapipe.events import SESSION_GAP_MINUTES
-
-    gap_us = SESSION_GAP_MINUTES * 60 * 1_000_000
-    return f"""WITH e AS (
-  SELECT event_id, user_id, value, epoch_us(ts) AS us FROM events
-),
-b AS (
-  SELECT *, CASE WHEN us - lag(us) OVER w > {gap_us} THEN 1 ELSE 0 END AS brk
-  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)
-),
-s AS (
-  SELECT *, CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY us, event_id
-                                ROWS UNBOUNDED PRECEDING) AS INT) AS session_idx
-  FROM b
-)
-SELECT user_id, session_idx,
-       COUNT(*) AS n_events,
-       CAST(min(us) // 1000000 AS BIGINT) AS t_start,
-       CAST(max(us) // 1000000 AS BIGINT) AS t_end,
-       CAST((max(us) - min(us)) // 1000000 AS BIGINT) AS duration_sec,
-       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS sum_value_cents
-FROM s GROUP BY user_id, session_idx"""
-
-
-def session_window_stats_sql() -> str:
-    """Mirrors events.session_window_stats (native F.session_window):
-    merge semantics verified empirically — an exact-gap event still
-    merges, so the break condition is gap > gap_us, identical to
-    session_stats. Sessions are keyed by their start second rather
-    than a per-user ordinal."""
-    from openie_spark.datapipe.events import SESSION_GAP_MINUTES
-
-    gap_us = SESSION_GAP_MINUTES * 60 * 1_000_000
-    return f"""WITH e AS (
-  SELECT event_id, user_id, value, epoch_us(ts) AS us FROM events
-),
-b AS (
-  SELECT *, CASE WHEN us - lag(us) OVER w > {gap_us} THEN 1 ELSE 0 END AS brk
-  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)
-),
-s AS (
-  SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY us, event_id
-                           ROWS UNBOUNDED PRECEDING) AS sess
-  FROM b
-)
-SELECT user_id,
-       CAST(min(us) // 1000000 AS BIGINT) AS t_start,
-       CAST(max(us) // 1000000 AS BIGINT) AS t_end,
-       COUNT(*) AS n_events,
-       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS sum_value_cents
-FROM s GROUP BY user_id, sess"""
-
-
-def windowed_counts_sql() -> str:
-    from openie_spark.datapipe.events import WINDOW_MINUTES
-
-    bucket_s = WINDOW_MINUTES * 60
-    return f"""SELECT
-  CAST((epoch_us(ts) // 1000000 // {bucket_s}) * {bucket_s} AS BIGINT) AS bucket_start,
-  event_type,
-  COUNT(*) AS n,
-  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS sum_value_cents
-FROM events GROUP BY 1, 2"""
-
-
-def sliding_counts_sql() -> str:
-    """Twin of events.sliding_counts: each event belongs to the L/S
-    slide-aligned windows covering it — enumerated with an explicit
-    k-offset unnest (Spark's F.window(ts, L, S) explode, replayed) —
-    then the same integer-cents aggregate."""
-    from openie_spark.datapipe.events import (
-        SLIDE_MINUTES,
-        SLIDING_WINDOW_MINUTES,
-    )
-
-    s = SLIDE_MINUTES * 60
-    n_k = SLIDING_WINDOW_MINUTES // SLIDE_MINUTES
-    return f"""SELECT
-  CAST(((epoch_us(ts) // 1000000 // {s}) - k.k) * {s} AS BIGINT) AS window_start,
-  event_type,
-  COUNT(*) AS n,
-  CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
-  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS sum_value_cents
-FROM events, (SELECT unnest(range(0, {n_k})) AS k) k
-GROUP BY 1, 2"""
-
-
-def props_k_sql() -> str:
-    return """SELECT event_id, event_type,
-       CAST(json_extract_string(props, '$.k') AS INT) AS k
-FROM events"""
-
-
 # ----------------------------------------------------------- quality
 
 def gopher_signals_sql() -> str:
@@ -1226,78 +1128,6 @@ SELECT *, is_unique AND passes_quality AND in_sample AND is_clean AS kept
 FROM flags"""
 
 
-def asof_last_ref_sql() -> str:
-    """Twin of events.asof_last_ref: same union-marker window, same
-    (us, is_probe, event_id) tie order."""
-    from openie_spark.datapipe.events import ASOF_REF_TYPE
-
-    return f"""WITH u AS (
-  SELECT user_id, epoch_us(ts) AS us, event_id, event_type, 1 AS is_probe,
-         CAST(NULL AS BIGINT) AS ref_id, CAST(NULL AS BIGINT) AS ref_us
-  FROM events
-  UNION ALL
-  SELECT user_id, epoch_us(ts), event_id, event_type, 0, event_id, epoch_us(ts)
-  FROM events WHERE event_type = '{ASOF_REF_TYPE}'
-),
-w AS (
-  SELECT *, last_value(ref_id IGNORE NULLS) OVER win AS last_ref_id,
-            last_value(ref_us IGNORE NULLS) OVER win AS last_ref_us
-  FROM u
-  WINDOW win AS (PARTITION BY user_id ORDER BY us, is_probe, event_id
-                 ROWS UNBOUNDED PRECEDING)
-)
-SELECT event_id, user_id, event_type,
-       COALESCE(last_ref_id, -1) AS last_ref_id,
-       CAST(COALESCE(us - last_ref_us, -1) AS BIGINT) AS us_since_ref
-FROM w WHERE is_probe = 1"""
-
-
-def interval_events_sql() -> str:
-    """Twin of events.interval_events — deliberately the NAIVE theta
-    join (an independent formulation; quadratic is fine at oracle
-    scale), vs the engine's bucketed equi-join."""
-    from openie_spark.datapipe.events import ASOF_REF_TYPE, INTERVAL_MINUTES
-
-    len_us = INTERVAL_MINUTES * 60 * 1_000_000
-    return f"""SELECT r.event_id AS interval_id, e.event_id, e.user_id,
-       CAST(epoch_us(e.ts) - epoch_us(r.ts) AS BIGINT) AS offset_us
-FROM events r JOIN events e
-  ON e.user_id = r.user_id
- AND epoch_us(e.ts) >= epoch_us(r.ts)
- AND epoch_us(e.ts) < epoch_us(r.ts) + {len_us}
-WHERE r.event_type = '{ASOF_REF_TYPE}'"""
-
-
-def funnel_sql() -> str:
-    """Twin of events.funnel_progress: running-min windows chain the
-    strictly-after constraints, one grouped aggregate per user."""
-    from openie_spark.datapipe.events import FUNNEL_STEPS
-
-    s1, s2, s3 = FUNNEL_STEPS
-    return f"""WITH e AS (
-  SELECT user_id, event_id, event_type, epoch_us(ts) AS us FROM events
-),
-s0 AS (
-  SELECT *, CASE WHEN event_type = '{s1}' THEN us END AS c0 FROM e
-),
-s1 AS (
-  SELECT *, CASE WHEN event_type = '{s2}' AND us > min(c0) OVER w THEN us END AS c1
-  FROM s0
-  WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id ROWS UNBOUNDED PRECEDING)
-),
-s2 AS (
-  SELECT *, CASE WHEN event_type = '{s3}' AND us > min(c1) OVER w THEN us END AS c2
-  FROM s1
-  WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id ROWS UNBOUNDED PRECEDING)
-)
-SELECT user_id,
-       min(c0) AS t1_us, min(c1) AS t2_us, min(c2) AS t3_us,
-       CAST(CASE WHEN min(c2) IS NOT NULL THEN 3
-                 WHEN min(c1) IS NOT NULL THEN 2
-                 ELSE 1 END AS INT) AS reached
-FROM s2 GROUP BY user_id HAVING min(c0) IS NOT NULL"""
-
-
 def _grams_cte(src_sql: str, n: int) -> str:
     """Shared t/grams CTE pair: distinct (doc_id, md5h60 gram hash) of
     word ``n``-grams over ``src_sql`` (doc_id, text) — the twin of
@@ -1455,30 +1285,6 @@ SELECT lang, source, n_docs, n_tokens,
 FROM per"""
 
 
-def retention_sql() -> str:
-    """Twin of events.retention_cohorts: integer epoch-day buckets,
-    distinct (user, day) activity, first-day cohorts, exact-ppm rate."""
-    return """WITH ev_days AS (
-  SELECT DISTINCT user_id, epoch_us(ts) // 86400000000 AS day FROM events
-),
-ev_cohort AS (
-  SELECT user_id, min(day) AS cohort_day FROM ev_days GROUP BY 1
-),
-ev_act AS (
-  SELECT c.cohort_day, CAST(d.day - c.cohort_day AS INT) AS offset_days,
-         CAST(count(*) AS BIGINT) AS n_active
-  FROM ev_days d JOIN ev_cohort c USING (user_id) GROUP BY 1, 2
-),
-ev_size AS (
-  SELECT cohort_day, CAST(count(*) AS BIGINT) AS n_cohort
-  FROM ev_cohort GROUP BY 1
-)
-SELECT a.cohort_day, a.offset_days, a.n_active, s.n_cohort,
-       (2 * a.n_active * 1000000 + s.n_cohort)
-         // (2 * s.n_cohort) AS retained_ppm
-FROM ev_act a JOIN ev_size s USING (cohort_day)"""
-
-
 def winnow_pairs_sql() -> str:
     """Twin of dedup.winnow_pairs on top of winnow_sql's selection:
     distinct (doc, fp), boilerplate buckets dropped whole, exact-ppm
@@ -1507,42 +1313,6 @@ SELECT a, b, n_shared, ca.nf AS nf_a, cb.nf AS nf_b,
 FROM wp JOIN wnf ca ON wp.a = ca.doc_id JOIN wnf cb ON wp.b = cb.doc_id
 WHERE (2 * n_shared * 1000000 + (ca.nf + cb.nf - n_shared))
         // (2 * (ca.nf + cb.nf - n_shared)) >= {WINNOW_MIN_JACCARD_PPM}"""
-
-
-def anomalies_sql() -> str:
-    """Twin of events.daily_anomalies: lower nearest-rank median/MAD
-    in pure integers, modified-z-score flag."""
-    from openie_spark.datapipe.events import ANOM_K
-
-    return f"""WITH an_daily AS (
-  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-         CAST(count(*) AS BIGINT) AS n_events
-  FROM events GROUP BY 1, 2
-),
-an_med AS (
-  SELECT event_type, n_events AS med FROM (
-    SELECT *, row_number() OVER (PARTITION BY event_type
-                                 ORDER BY n_events, day) AS rn,
-           count(*) OVER (PARTITION BY event_type) AS cnt
-    FROM an_daily)
-  WHERE rn = (cnt + 1) // 2
-),
-an_d2 AS (
-  SELECT d.*, m.med, abs(n_events - med) AS adev
-  FROM an_daily d JOIN an_med m USING (event_type)
-),
-an_mad AS (
-  SELECT event_type, adev AS mad FROM (
-    SELECT *, row_number() OVER (PARTITION BY event_type
-                                 ORDER BY adev, day) AS rn,
-           count(*) OVER (PARTITION BY event_type) AS cnt
-    FROM an_d2)
-  WHERE rn = (cnt + 1) // 2
-)
-SELECT an_d2.event_type, day, n_events, med, mad,
-       ((mad > 0 AND adev > {ANOM_K} * mad)
-        OR (mad = 0 AND adev > 0)) AS is_anomaly
-FROM an_d2 JOIN an_mad USING (event_type)"""
 
 
 def cms_heavy_hitters_sql() -> str:
@@ -1587,28 +1357,6 @@ SELECT CAST(rank AS INT) AS rank, word,
 FROM ranked WHERE rank <= {CMS_TOPK}"""
 
 
-def event_transitions_sql() -> str:
-    """Twin of events.event_transitions: lead() over the total
-    (ts, event_id) per-user order, types^2 bigram collapse, row totals,
-    exact round-down row_ppm."""
-    return """WITH seq AS (
-  SELECT event_type AS from_type,
-         lead(event_type) OVER (PARTITION BY user_id
-                                ORDER BY ts, event_id) AS to_type
-  FROM events
-),
-pairs AS (
-  SELECT from_type, to_type, CAST(count(*) AS BIGINT) AS n_transitions
-  FROM seq WHERE to_type IS NOT NULL GROUP BY 1, 2
-),
-totals AS (
-  SELECT from_type, sum(n_transitions) AS n_from FROM pairs GROUP BY 1
-)
-SELECT p.from_type, p.to_type, p.n_transitions,
-       CAST(p.n_transitions * 1000000 // t.n_from AS BIGINT) AS row_ppm
-FROM pairs p JOIN totals t USING (from_type)"""
-
-
 def conv_minhash_pairs_sql() -> str:
     """Twin of kg.dialogue.conv_neardup_pairs: conversations flattened
     via ORDER BY turn_idx string_agg (≡ Spark's array_sort on
@@ -1629,42 +1377,6 @@ planted AS (
                                      (x, i) -> i % {PERTURB_DROP} <> 0), ' ') AS text
   FROM convdoc)"""
     return minhash_pairs_sql(planted_cte=conv_planted)
-
-
-def user_profiles_sql() -> str:
-    """Twin of events.user_profiles: per-user rollups with the exact
-    integer definitions (epoch-micros bounds, epoch-day activity,
-    cents sums) and min-by-(−count, type) top_type tie order."""
-    return """WITH base AS (
-  SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
-         min(epoch_us(ts)) AS first_us, max(epoch_us(ts)) AS last_us,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-           AS value_cents_sum
-  FROM events GROUP BY 1
-),
-days AS (
-  SELECT user_id, CAST(count(*) AS BIGINT) AS n_active_days FROM (
-    SELECT DISTINCT user_id, epoch_us(ts) // 86400000000 AS day FROM events)
-  GROUP BY 1
-),
-tc AS (
-  SELECT user_id, event_type, count(*) AS n FROM events GROUP BY 1, 2
-),
-nt AS (
-  SELECT user_id, CAST(count(*) AS BIGINT) AS n_types FROM tc GROUP BY 1
-),
-types AS (
-  SELECT t.user_id, nt.n_types, t.event_type AS top_type FROM (
-    SELECT user_id, event_type,
-           row_number() OVER (PARTITION BY user_id
-                              ORDER BY n DESC, event_type ASC) AS rn
-    FROM tc) t JOIN nt USING (user_id) WHERE t.rn = 1
-)
-SELECT b.user_id, b.n_events, d.n_active_days, t.n_types, t.top_type,
-       b.first_us, b.last_us,
-       (b.last_us - b.first_us) // 86400000000 AS span_days,
-       b.value_cents_sum
-FROM base b JOIN days d USING (user_id) JOIN types t USING (user_id)"""
 
 
 def bloom_flags_sql() -> str:
@@ -1709,30 +1421,6 @@ SELECT t.doc_id,
        COALESCE(hi.n_set, 0) = {BLOOM_K} AS bloom_hit,
        t.h IN (SELECT h FROM keys) AS true_member
 FROM train t LEFT JOIN hits hi USING (doc_id)"""
-
-
-def active_users_sql() -> str:
-    """Twin of events.active_users: distinct (user, day) epoch-day
-    activity, DAU count, trailing-window WAU via a bounded k-offset
-    unnest (each user-day supports the window ending on day+k), exact
-    round-down ppm stickiness."""
-    from openie_spark.datapipe.events import WAU_WINDOW_DAYS
-
-    return f"""WITH au_ud AS MATERIALIZED (
-  SELECT DISTINCT user_id, epoch_us(ts) // 86400000000 AS day FROM events
-),
-au_dau AS (
-  SELECT day, CAST(count(*) AS BIGINT) AS dau FROM au_ud GROUP BY 1
-),
-au_wau AS (
-  SELECT u.day + k.k AS day,
-         CAST(count(DISTINCT user_id) AS BIGINT) AS wau
-  FROM au_ud u, (SELECT unnest(range(0, {WAU_WINDOW_DAYS})) AS k) k
-  GROUP BY 1
-)
-SELECT d.day, d.dau, w.wau,
-       CAST((1000000 * d.dau) // w.wau AS BIGINT) AS stickiness_ppm
-FROM au_dau d JOIN au_wau w USING (day)"""
 
 
 def containment_pairs_sql() -> str:
@@ -1790,131 +1478,6 @@ SELECT d.doc_id,
 FROM documents d LEFT JOIN bl_d s USING (doc_id)"""
 
 
-def type_affinity_sql() -> str:
-    """Twin of events.type_affinity: sessionize CTE (gap rule,
-    (ts, event_id) tie order), distinct session-type membership,
-    within-session pairs with a min-session floor, round-half-up ppm
-    Dice against type marginals."""
-    from openie_spark.datapipe.events import (
-        AFFINITY_MIN_SESSIONS,
-        SESSION_GAP_MINUTES,
-    )
-
-    gap_us = SESSION_GAP_MINUTES * 60 * 1_000_000
-    return f"""WITH ta_e AS (
-  SELECT event_id, user_id, event_type, epoch_us(ts) AS us FROM events
-),
-ta_b AS (
-  SELECT *, CASE WHEN us - lag(us) OVER w > {gap_us} THEN 1 ELSE 0 END AS brk
-  FROM ta_e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)
-),
-ta_s AS (
-  SELECT *, CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY us, event_id
-                                ROWS UNBOUNDED PRECEDING) AS INT) AS session_idx
-  FROM ta_b
-),
-ta_st AS MATERIALIZED (
-  SELECT DISTINCT user_id, session_idx, event_type FROM ta_s
-),
-ta_marg AS (
-  SELECT event_type, CAST(count(*) AS BIGINT) AS n_e FROM ta_st GROUP BY 1
-),
-ta_p AS (
-  SELECT l.event_type AS ta, r.event_type AS tb,
-         CAST(count(*) AS BIGINT) AS n_sessions
-  FROM ta_st l JOIN ta_st r
-    ON l.user_id = r.user_id AND l.session_idx = r.session_idx
-   AND l.event_type < r.event_type
-  GROUP BY 1, 2 HAVING count(*) >= {AFFINITY_MIN_SESSIONS}
-)
-SELECT p.ta, p.tb, p.n_sessions, ma.n_e AS n_a, mb.n_e AS n_b,
-       (2 * (2 * p.n_sessions) * 1000000 + (ma.n_e + mb.n_e))
-         // (2 * (ma.n_e + mb.n_e)) AS dice_ppm
-FROM ta_p p
-JOIN ta_marg ma ON p.ta = ma.event_type
-JOIN ta_marg mb ON p.tb = mb.event_type"""
-
-
-def value_quantiles_sql() -> str:
-    """Twin of events.value_quantiles: bottom-k-by-md5h60(event_id)
-    uniform sample per type (two-level salted top-k == global, oracle
-    skips the salt), nearest-rank integer-cents quantiles, exact
-    n/min/max from a full pass. (h, cents) keep order, (cents, h)
-    quantile rank order — mirrors the Spark windows/sort_array."""
-    from openie_spark.datapipe.events import VQ_K, VQ_PCTS
-
-    picks = ",\n       ".join(
-        f"max(CASE WHEN vr = (n_sample * {p} + 99) // 100 THEN cents END)"
-        f" AS p{p}" for p in VQ_PCTS)
-    return f"""WITH vq_stats AS (
-  SELECT event_type,
-         CAST(round(value * 100) AS BIGINT) AS cents,
-         {_md5h60('CAST(event_id AS VARCHAR)')} AS h
-  FROM events
-),
-vq_exact AS (
-  SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
-         min(cents) AS min_cents, max(cents) AS max_cents
-  FROM vq_stats GROUP BY 1
-),
-vq_kept AS (
-  SELECT event_type, cents, h FROM (
-    SELECT event_type, cents, h,
-           row_number() OVER (PARTITION BY event_type ORDER BY h, cents) AS r
-    FROM vq_stats
-  ) WHERE r <= {VQ_K}
-),
-vq_ranked AS (
-  SELECT event_type, cents,
-         row_number() OVER (PARTITION BY event_type ORDER BY cents, h) AS vr,
-         CAST(count(*) OVER (PARTITION BY event_type) AS INT) AS n_sample
-  FROM vq_kept
-)
-SELECT e.event_type, e.n_events, max(r.n_sample) AS n_sample,
-       e.min_cents, e.max_cents,
-       {picks}
-FROM vq_ranked r JOIN vq_exact e USING (event_type)
-GROUP BY e.event_type, e.n_events, e.min_cents, e.max_cents"""
-
-
-def event_trigrams_sql() -> str:
-    """Twin of events.event_trigrams: two leads over the total
-    (ts, event_id) per-user order, types^3 collapse with distinct-user
-    support, min-count floor."""
-    from openie_spark.datapipe.events import TRIGRAM_MIN_COUNT
-
-    return f"""WITH seq AS (
-  SELECT user_id, event_type AS t1,
-         lead(event_type, 1) OVER w AS t2,
-         lead(event_type, 2) OVER w AS t3
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-)
-SELECT t1, t2, t3,
-       CAST(count(*) AS BIGINT) AS n_occurrences,
-       CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
-FROM seq WHERE t3 IS NOT NULL
-GROUP BY 1, 2, 3 HAVING count(*) >= {TRIGRAM_MIN_COUNT}"""
-
-
-def hourly_profile_sql() -> str:
-    """Twin of events.hourly_profile: integer hour-of-day cells with
-    distinct-user reach and round-half-up ppm type shares."""
-    return """WITH cells AS (
-  SELECT (epoch_us(ts) // 3600000000) % 24 AS hour, event_type,
-         CAST(count(*) AS BIGINT) AS n,
-         CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
-  FROM events GROUP BY 1, 2
-),
-totals AS (
-  SELECT event_type, sum(n) AS n_type FROM cells GROUP BY 1
-)
-SELECT CAST(c.hour AS INT) AS hour, c.event_type, c.n, c.n_users,
-       CAST((2 * c.n * 1000000 + t.n_type) // (2 * t.n_type) AS BIGINT)
-         AS share_ppm
-FROM cells c JOIN totals t USING (event_type)"""
-
-
 def dup_group_histogram_sql() -> str:
     """Twin of dedup.dup_group_histogram: md5 text groups binned by
     bit_length(group size)."""
@@ -1943,24 +1506,6 @@ SELECT CAST(CASE WHEN n = 0 THEN 0 ELSE length(bin(n)) END AS INT) AS bin,
        CAST(max(n) AS BIGINT) AS max_tokens,
        CAST(sum(n) AS BIGINT) AS sum_tokens
 FROM n GROUP BY 1"""
-
-
-def gap_histogram_sql() -> str:
-    """Twin of events.gap_histogram: per-user adjacent gaps in whole
-    seconds (floor), bit-length bins, zero gaps in bin 0."""
-    return """WITH gaps AS (
-  SELECT (epoch_us(ts) - lag(epoch_us(ts)) OVER w) // 1000000 AS gap_sec
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-)
-SELECT CAST(CASE WHEN gap_sec = 0 THEN 0
-            ELSE length(bin(gap_sec)) END AS INT) AS bin,
-       CAST(count(*) AS BIGINT) AS n_gaps,
-       CAST(min(gap_sec) AS BIGINT) AS min_sec,
-       CAST(max(gap_sec) AS BIGINT) AS max_sec,
-       CAST(sum(gap_sec) AS BIGINT) AS sum_sec
-FROM gaps WHERE gap_sec IS NOT NULL
-GROUP BY 1"""
 
 
 def dedup_eval_sql() -> str:
@@ -1995,30 +1540,6 @@ SELECT n_exact, n_candidate, n_both,
          (2 * n_both * 1000000 + n_exact) // (2 * n_exact) END AS recall_ppm,
        n_candidate - n_both AS n_extra
 FROM agg"""
-
-
-def growth_accounting_sql() -> str:
-    """Twin of events.growth_accounting: (user, day) dedup, previous
-    active day via lag, new/retained/resurrected day rollup."""
-    return """WITH ud AS (
-  SELECT DISTINCT user_id, epoch_us(ts) // 86400000000 AS day FROM events
-),
-flagged AS (
-  SELECT day,
-         CASE WHEN prev_day IS NULL THEN 1 ELSE 0 END AS is_new,
-         CASE WHEN prev_day = day - 1 THEN 1 ELSE 0 END AS is_retained,
-         CASE WHEN prev_day IS NOT NULL AND prev_day < day - 1
-              THEN 1 ELSE 0 END AS is_resurrected
-  FROM (
-    SELECT day, lag(day) OVER (PARTITION BY user_id ORDER BY day) AS prev_day
-    FROM ud)
-)
-SELECT day,
-       CAST(count(*) AS BIGINT) AS n_active,
-       CAST(sum(is_new) AS BIGINT) AS n_new,
-       CAST(sum(is_retained) AS BIGINT) AS n_retained,
-       CAST(sum(is_resurrected) AS BIGINT) AS n_resurrected
-FROM flagged GROUP BY 1"""
 
 
 def _kmeans_ctes() -> str:

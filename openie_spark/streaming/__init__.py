@@ -1,18 +1,11 @@
 from openie_spark.streaming.dedup import (  # noqa: F401
     stream_exact_dedup,
-    stream_event_transitions,
-    stream_event_trigrams,
     write_dedup_stream,
-    write_transitions_stream,
 )
 from openie_spark.streaming.ingest import (  # noqa: F401
-    EVENTS_SCHEMA,
     TRANSCRIPT_SCHEMA,
-    stream_events,
     stream_transcripts,
     stream_triples,
-    streaming_session_stats,
-    streaming_sliding_counts,
     windowed_triple_counts,
     windowed_turn_stats,
     write_triples_stream,

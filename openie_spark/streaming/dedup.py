@@ -71,142 +71,3 @@ def write_dedup_stream(keepers: DataFrame, out_path: str, checkpoint: str):
         .trigger(availableNow=True)
         .start()
     )
-
-
-def stream_event_transitions(events: DataFrame) -> DataFrame:
-    """Streaming events(user_id, ts, event_id, event_type, …) →
-    transition rows (user_id, from_type, to_type, ts_us): the
-    cross-batch complement of datapipe.events.event_transitions. The
-    batch operator orders each user's whole history at once; a
-    continuously-ingesting pipeline sees a user's stream sliced across
-    micro-batches, so the chain must survive the batch boundary — the
-    canonical per-key "remember the last event" applyInPandasWithState
-    use (state = ONE tiny row per user: last (ts_us, event_id, type)).
-
-    Pinned semantics: within an invocation rows chain in (ts_us,
-    event_id) order (same total key as the batch operator); across
-    invocations the chain continues from the stored last event in
-    ARRIVAL order — the at-ingest reading. A late event (ts before the
-    stored last) still chains where it arrived; feed ordered batches
-    (or pre-sort with a watermark upstream) for the batch-identical
-    result. State is bytes per user; the shuffle key is user_id.
-    """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    def chain(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        rows = [pdf for pdf in pdfs if len(pdf)]
-        if not rows:
-            return iter(())
-        batch = pd.concat(rows).sort_values(
-            ["ts_us", "event_id"], kind="mergesort")
-        last_type = state.get[2] if state.exists else None
-        out_from, out_to, out_ts = [], [], []
-        for ts_us, _eid, etype in zip(
-                batch["ts_us"], batch["event_id"], batch["event_type"]):
-            if last_type is not None:
-                out_from.append(last_type)
-                out_to.append(etype)
-                out_ts.append(int(ts_us))
-            last_type = etype
-        tail = batch.iloc[-1]
-        state.update((int(tail["ts_us"]), int(tail["event_id"]),
-                      str(tail["event_type"])))
-        if not out_from:
-            return iter(())
-        return iter([pd.DataFrame({
-            "user_id": key[0], "from_type": out_from,
-            "to_type": out_to, "ts_us": out_ts})])
-
-    keyed = events.select(
-        "user_id", F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-        "event_id", "event_type")
-    return keyed.groupBy("user_id").applyInPandasWithState(
-        chain,
-        outputStructType=("user_id long, from_type string, "
-                          "to_type string, ts_us long"),
-        stateStructType="ts_us long, event_id long, etype string",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def write_transitions_stream(trans: DataFrame, out_path: str, checkpoint: str):
-    """Parquet sink + checkpoint, availableNow drain."""
-    return (
-        trans.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def stream_event_trigrams(events: DataFrame) -> DataFrame:
-    """Streaming events → trigram rows (user_id, t1, t2, t3, ts_us):
-    the cross-batch complement of datapipe.events.event_trigrams,
-    extending stream_event_transitions' "remember the last event"
-    state to the last TWO events per user so an order-3 chain survives
-    micro-batch boundaries (state stays bytes per user — two (ts_us,
-    event_id, type) slots, not the event list).
-
-    Same pinned semantics as the transition stream: rows chain in
-    (ts_us, event_id) order within an invocation and in arrival order
-    across invocations; a downstream groupBy(t1,t2,t3) over the sink
-    reproduces event_trigrams' counts when batches arrive ordered.
-    The shuffle key is user_id.
-
-    STATE-SCHEMA BREAK (v2): the state struct gained a leading
-    ``n_seen int`` occupancy field (7 fields, was 6 with a ts-sign
-    sentinel). A job restarted from a checkpoint written by the
-    6-field version will fail/misparse its carried state — upgrading
-    requires a NEW checkpoint directory (drain-and-restart), the
-    standard Structured Streaming state-evolution procedure."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    def chain(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        rows = [pdf for pdf in pdfs if len(pdf)]
-        if not rows:
-            return iter(())
-        batch = pd.concat(rows).sort_values(
-            ["ts_us", "event_id"], kind="mergesort")
-        if state.exists:
-            n_seen, ts1, eid1, t1, ts2, eid2, t2 = state.get
-            # explicit occupancy count (NOT a ts-sign sentinel): events
-            # with pre-1970 timestamps have negative unix micros and
-            # must survive the cross-batch carry like any other
-            prev = [(ts1, eid1, t1), (ts2, eid2, t2)][2 - n_seen:]
-        else:
-            prev = []
-        o1, o2, o3, ots = [], [], [], []
-        for ts_us, eid, etype in zip(
-                batch["ts_us"], batch["event_id"], batch["event_type"]):
-            cur = (int(ts_us), int(eid), str(etype))
-            if len(prev) == 2:
-                o1.append(prev[0][2])
-                o2.append(prev[1][2])
-                o3.append(cur[2])
-                ots.append(cur[0])
-            prev = (prev + [cur])[-2:]
-        pad = [(0, 0, "")] * (2 - len(prev)) + prev
-        state.update((len(prev),
-                      pad[0][0], pad[0][1], pad[0][2],
-                      pad[1][0], pad[1][1], pad[1][2]))
-        if not o1:
-            return iter(())
-        return iter([pd.DataFrame({
-            "user_id": key[0], "t1": o1, "t2": o2, "t3": o3,
-            "ts_us": ots})])
-
-    keyed = events.select(
-        "user_id", F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-        "event_id", "event_type")
-    return keyed.groupBy("user_id").applyInPandasWithState(
-        chain,
-        outputStructType=("user_id long, t1 string, t2 string, "
-                          "t3 string, ts_us long"),
-        stateStructType=("n_seen int, ts1 long, eid1 long, t1 string, "
-                         "ts2 long, eid2 long, t2 string"),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )

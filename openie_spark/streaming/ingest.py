@@ -84,41 +84,6 @@ def windowed_turn_stats(transcripts: DataFrame, window: str = "10 minutes",
     )
 
 
-EVENTS_SCHEMA = (
-    "event_id bigint, ts timestamp, user_id bigint, "
-    "event_type string, value double, props string"
-)
-
-
-def stream_events(spark: SparkSession, path: str,
-                  max_files_per_trigger: int | None = None) -> DataFrame:
-    """File-source stream over an events parquet directory."""
-    reader = spark.readStream.schema(EVENTS_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(path)
-
-
-def streaming_session_stats(events: DataFrame, watermark: str = "60 minutes",
-                            gap_minutes: int | None = None) -> DataFrame:
-    """The batch session_window_stats aggregation, unchanged, over a
-    watermarked stream: Structured Streaming MERGES a user's per-event
-    session windows incrementally and emits a session exactly once —
-    when the watermark passes its close (append mode).  State is one
-    row per open session; late events beyond the watermark are dropped
-    rather than corrupting an emitted session.
-
-    test_streaming.py proves the drained stream output row-identical to
-    the batch twin over the same files (modulo sessions still open at
-    the final watermark, which append mode correctly withholds).
-    """
-    from openie_spark.datapipe.events import (SESSION_GAP_MINUTES,
-                                              session_window_stats)
-
-    gap = SESSION_GAP_MINUTES if gap_minutes is None else gap_minutes
-    return session_window_stats(events.withWatermark("ts", watermark), gap)
-
-
 def windowed_triple_counts(triples: DataFrame, transcripts_static: DataFrame,
                            window: str = "10 minutes",
                            watermark: str = "30 minutes") -> DataFrame:
@@ -134,42 +99,4 @@ def windowed_triple_counts(triples: DataFrame, transcripts_static: DataFrame,
         .agg(F.count(F.lit(1)).alias("n_triples"))
         .select(F.col("w.start").alias("w_start"), F.col("w.end").alias("w_end"),
                 "n_triples")
-    )
-
-
-def streaming_sliding_counts(events: DataFrame,
-                             watermark: str = "60 minutes") -> DataFrame:
-    """The batch sliding_counts aggregation over a watermarked stream,
-    MINUS its exact n_users column: COUNT(DISTINCT) is not
-    incrementally maintainable without keeping the whole id set in
-    state (the batch docstring pins this), so the streaming twin
-    carries the additive aggregates only (count + integer-cents sum).
-    Each event updates its L/S overlapping windows' state; append mode
-    emits a (window, type) row exactly once, when the watermark passes
-    the window end; late events beyond the watermark are dropped.
-
-    test_streaming.py proves the drained stream row-identical to the
-    batch twin (n_users dropped) over the same files, modulo windows
-    still open at the final watermark."""
-    from openie_spark.datapipe.events import (
-        _US_PER_SEC,
-        SLIDE_MINUTES,
-        SLIDING_WINDOW_MINUTES,
-        _cents,
-    )
-
-    win = F.window("ts", f"{SLIDING_WINDOW_MINUTES} minutes",
-                   f"{SLIDE_MINUTES} minutes")
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(win.alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(_cents(F.col("value"))).alias("sum_value_cents"),
-        )
-        .select(
-            (F.unix_micros(F.col("w.start")) / _US_PER_SEC).cast("long")
-            .alias("window_start"),
-            "event_type", "n", "sum_value_cents",
-        )
     )

@@ -291,6 +291,26 @@ def test_incremental_rejects_a_prior_stage_without_manifest(spark, split_inputs,
             prior_dir=prior, resume=True)
 
 
+def test_incremental_rejects_a_prior_manifest_without_schema(spark, split_inputs,
+                                                            chained_run, tmp_path):
+    """A prior manifest that records no schema (written before manifests
+    carried one) is rejected like a missing one: the prior tables are
+    read with their recorded schemas, never by inference."""
+    import shutil
+
+    from openie_spark.pipeline import KGPipeline
+
+    _, _, s1, _ = chained_run
+    prior = str(tmp_path / "prior")
+    shutil.copytree(s1["prior_dir"], prior)
+    pipe = KGPipeline(spark, split_inputs[1], str(tmp_path / "out"))
+    man = pipe._read_manifest("edges", prior)
+    del man["schema"]
+    pipe._write_text(pipe._manifest_path("edges", prior), json.dumps(man))
+    with pytest.raises(ValueError, match="'edges'"):
+        pipe.run_incremental(prior_dir=prior, resume=True)
+
+
 def test_incremental_resume_skips_everything(spark, split_inputs, chained_run):
     from openie_spark.pipeline import KGPipeline
 

@@ -163,6 +163,40 @@ def test_full_resume_skips_everything(spark, pipeline_out):
     assert s2["edges"] == summary["edges"]
 
 
+def test_full_resume_runs_no_spark_job(spark, pipeline_run):
+    """A fully resumed run reads every stage back with the schema its
+    manifest records: no schema-inference job, and the held tables
+    have the fresh run's schemas."""
+    from openie_spark.pipeline import KG_STAGES, KGPipeline
+
+    fresh, _ = pipeline_run
+    pipe = KGPipeline(spark, SF, fresh.output_dir)
+    summary, jobs = _job_ids(spark, "resume-guard", lambda: pipe.run(resume=True))
+    assert all(st["resumed"] for st in summary["stages"].values())
+    assert jobs == []
+    for st in KG_STAGES:
+        assert pipe.tables[st.name].schema == fresh.tables[st.name].schema, st.name
+
+
+def test_manifest_without_schema_reruns_its_stage(spark, pipeline_out):
+    """A complete manifest that records no schema (written before
+    manifests carried one) re-runs its stage, as a fingerprint
+    mismatch does; the rewritten manifest carries the schema."""
+    from openie_spark.pipeline import KGPipeline
+
+    out, summary = pipeline_out
+    pipe = KGPipeline(spark, SF, out)
+    man = pipe._read_manifest("relations")
+    del man["schema"]
+    pipe._write_text(pipe._manifest_path("relations"), json.dumps(man))
+    s2 = pipe.run(resume=True)
+    st = s2["stages"]
+    assert all(st[n]["resumed"] for n in st if n != "relations")
+    assert not st["relations"]["resumed"]
+    assert s2["relations"] == summary["relations"]
+    assert "schema" in pipe._read_manifest("relations")
+
+
 def test_partial_resume_rebuilds_dirty_suffix(spark, pipeline_out):
     """Simulate a kill between stages: drop the nodes/edges manifests;
     resume must skip the completed prefix and rebuild only the suffix,

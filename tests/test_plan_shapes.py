@@ -53,21 +53,9 @@ def test_no_nested_loop_joins_on_scale_paths(spark, entry):
     qs = entry.queries()
     for name in ("dp_minhash_pairs", "dp_simhash_pairs", "dp_embedding_pairs",
                  "dp_embedding_lsh", "dp_embedding_ivf", "dp_decontam",
-                 "dp_ev_intervals", "kg_pairs_minhash"):
+                 "kg_pairs_minhash"):
         plan = _plan(qs[name](spark, SF))
         assert _count(plan, r"CartesianProduct|BroadcastNestedLoopJoin") == 0, name
-
-
-def test_asof_join_is_single_window_single_exchange_chain(spark, entry):
-    """dp_ev_asof's whole point is ONE hash partition on user_id plus a
-    window — a theta-join formulation would show a nested loop and a
-    second user-side exchange."""
-    plan = _plan(entry.queries()["dp_ev_asof"](spark, SF))
-    assert _count(plan, r"CartesianProduct|BroadcastNestedLoopJoin") == 0
-    assert _count(plan, r"\bWindow\b") >= 1
-    # union feeds one shuffle per branch on the same key; anything >2
-    # means an extra repartition crept in
-    assert _count(plan, r"\bExchange\b") <= 2
 
 
 def test_chunking_is_map_only(spark, entry):

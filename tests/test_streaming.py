@@ -3,8 +3,6 @@ exactly-once checkpoint resume, and watermarked windowed aggregation."""
 
 from __future__ import annotations
 
-import os
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -104,59 +102,6 @@ def test_windowed_triple_counts_stream_static(spark, landing):
     assert total == extract_triples(static).count()
 
 
-def test_streaming_session_stats_append(spark, tmp_path):
-    """Session-window aggregation in APPEND mode: a session is emitted
-    exactly once, when the watermark passes its close. Sentinel drops
-    advance the watermark deterministically (one drain per drop, same
-    checkpoint), after which the streamed output is row-identical to
-    the batch twin over the real events."""
-    import datetime as dt
-
-    from openie_spark.datapipe.events import session_window_stats
-    from openie_spark.streaming import stream_events, streaming_session_stats
-
-    landing = str(tmp_path / "events")
-    out = str(tmp_path / "sessions")
-    ckpt = str(tmp_path / "ckpt")
-    schema = ("event_id long, ts timestamp, user_id long, "
-              "event_type string, value double, props string")
-    t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
-    real = [
-        (0, t0, 1, "click", 1.00, "{}"),
-        (1, t0 + dt.timedelta(minutes=10), 1, "view", 2.50, "{}"),
-        (2, t0 + dt.timedelta(minutes=51), 1, "error", 4.00, "{}"),
-        (3, t0 + dt.timedelta(minutes=30), 2, "view", 2.20, "{}"),
-    ]
-    spark.createDataFrame(real, schema).repartition(1) \
-        .write.mode("overwrite").parquet(landing)
-
-    def drain():
-        s = streaming_session_stats(stream_events(spark, landing))
-        q = (
-            s.writeStream.format("parquet").option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        q.awaitTermination(120)
-
-    drain()  # watermark now max(real) - 60min: nothing emitted yet
-    # two sentinel drops, each a separate drain so the watermark commit
-    # from drop N is in force while drop N+1 is processed
-    for i, days in enumerate((2, 4)):
-        spark.createDataFrame(
-            [(100 + i, t0 + dt.timedelta(days=days), 900 + i,
-              "flush", 0.0, "{}")], schema
-        ).repartition(1).write.mode("append").parquet(landing)
-        drain()
-
-    got = spark.read.parquet(out).filter(F.col("user_id") < 900)
-    batch = session_window_stats(
-        spark.createDataFrame(real, schema))
-    assert got.count() == 3  # (1, two sessions) + (2, one session)
-    assert got.exceptAll(batch).count() == 0
-    assert batch.exceptAll(got).count() == 0
-
-
 def test_stream_exact_dedup_across_batches(spark, tmp_path):
     """applyInPandasWithState dedup: a hash first seen in batch 1 must
     suppress duplicates arriving in batch 2; keeper = min doc_id."""
@@ -188,153 +133,3 @@ def test_stream_exact_dedup_across_batches(spark, tmp_path):
     final = {r.text_hash: r.doc_id for r in spark.read.parquet(out).collect()}
     assert len(final) == 3                      # duplicate suppressed
     assert set(final.values()) == {1, 5, 7}
-
-
-def test_stream_event_transitions_across_batches(spark, tmp_path):
-    """The per-user chain must survive the micro-batch boundary: the
-    first event of batch 2 pairs with the LAST event of batch 1."""
-    import datetime as dt
-
-    from openie_spark.streaming import (
-        stream_event_transitions,
-        write_transitions_stream,
-    )
-
-    landing = str(tmp_path / "ev")
-    out = str(tmp_path / "trans")
-    ckpt = str(tmp_path / "ckpt")
-    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
-    s = dt.timedelta(seconds=1)
-    schema = ("event_id long, ts timestamp_ntz, user_id long, "
-              "event_type string, value double, props string")
-    spark.createDataFrame(
-        [(1, t0, 1, "view", 0.0, "{}"),
-         (2, t0 + s, 1, "click", 0.0, "{}"),
-         (3, t0, 2, "view", 0.0, "{}")], schema
-    ).repartition(1).write.mode("overwrite").parquet(landing)
-
-    def drain():
-        src = spark.readStream.schema(schema).parquet(landing)
-        q = write_transitions_stream(stream_event_transitions(src), out, ckpt)
-        q.awaitTermination(120)
-
-    drain()
-    got = {(r.user_id, r.from_type, r.to_type)
-           for r in spark.read.parquet(out).collect()}
-    assert got == {(1, "view", "click")}   # u2 has one event: no pair yet
-
-    spark.createDataFrame(
-        [(4, t0 + 2 * s, 1, "purchase", 0.0, "{}"),
-         (5, t0 + s, 2, "click", 0.0, "{}")], schema
-    ).repartition(1).write.mode("append").parquet(landing)
-    drain()
-    got = {(r.user_id, r.from_type, r.to_type)
-           for r in spark.read.parquet(out).collect()}
-    assert got == {(1, "view", "click"),
-                   (1, "click", "purchase"),   # cross-batch chain
-                   (2, "view", "click")}       # u2 completes in batch 2
-
-
-def test_streaming_sliding_counts_append(spark, tmp_path):
-    """Sliding-window (20m/5m) aggregation in APPEND mode: each
-    (window, type) cell emits exactly once when the watermark passes
-    the window end, and the drained output is row-identical to the
-    batch sliding_counts twin (n_users dropped — COUNT DISTINCT is
-    not incrementally maintainable) over the same files."""
-    import datetime as dt
-
-    from openie_spark.datapipe.events import sliding_counts
-    from openie_spark.streaming import (
-        stream_events,
-        streaming_sliding_counts,
-    )
-
-    landing = str(tmp_path / "events")
-    out = str(tmp_path / "sliding")
-    ckpt = str(tmp_path / "ckpt")
-    schema = ("event_id long, ts timestamp, user_id long, "
-              "event_type string, value double, props string")
-    t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
-    real = [
-        (0, t0, 1, "click", 1.00, "{}"),
-        (1, t0 + dt.timedelta(minutes=10), 1, "view", 2.50, "{}"),
-        (2, t0 + dt.timedelta(minutes=20), 2, "click", 0.25, "{}"),
-        (3, t0 + dt.timedelta(minutes=30), 2, "view", 2.20, "{}"),
-    ]
-    spark.createDataFrame(real, schema).repartition(1) \
-        .write.mode("overwrite").parquet(landing)
-
-    def drain():
-        s = streaming_sliding_counts(stream_events(spark, landing))
-        q = (
-            s.writeStream.format("parquet").option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        q.awaitTermination(120)
-
-    drain()  # watermark at max(real) - 60min: nothing closed yet
-    for i, days in enumerate((2, 4)):
-        spark.createDataFrame(
-            [(100 + i, t0 + dt.timedelta(days=days), 900 + i,
-              "flush", 0.0, "{}")], schema
-        ).repartition(1).write.mode("append").parquet(landing)
-        drain()
-
-    batch = sliding_counts(
-        spark.createDataFrame(real, schema)).drop("n_users")
-    got = spark.read.parquet(out).filter(F.col("event_type") != "flush")
-    # every real event lands in 4 windows; all real windows are closed
-    # by the sentinel watermark advance
-    assert got.count() == batch.count() > 0
-    assert got.exceptAll(batch).count() == 0
-    assert batch.exceptAll(got).count() == 0
-
-
-def test_stream_event_trigrams_across_batches(spark, tmp_path):
-    """Order-3 chains must survive micro-batch boundaries: the first
-    event of batch 2 completes a trigram whose first two legs arrived
-    in batch 1, and a user with only two events emits nothing until
-    the third arrives."""
-    import datetime as dt
-
-    from openie_spark.streaming import stream_event_trigrams
-
-    landing = str(tmp_path / "ev3")
-    out = str(tmp_path / "tri")
-    ckpt = str(tmp_path / "ckpt3")
-    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
-    s = dt.timedelta(seconds=1)
-    schema = ("event_id long, ts timestamp_ntz, user_id long, "
-              "event_type string, value double, props string")
-    spark.createDataFrame(
-        [(1, t0, 1, "view", 0.0, "{}"),
-         (2, t0 + s, 1, "click", 0.0, "{}"),
-         (3, t0, 2, "view", 0.0, "{}"),
-         (4, t0 + s, 2, "click", 0.0, "{}")], schema
-    ).repartition(1).write.mode("overwrite").parquet(landing)
-
-    def drain():
-        src = spark.readStream.schema(schema).parquet(landing)
-        q = (stream_event_trigrams(src).writeStream.format("parquet")
-             .option("path", out).option("checkpointLocation", ckpt)
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination(120)
-
-    drain()
-    import os
-    got = (set() if not os.path.exists(out) or not
-           [f for f in os.listdir(out) if f.endswith(".parquet")]
-           else {(r.user_id, r.t1, r.t2, r.t3)
-                 for r in spark.read.parquet(out).collect()})
-    assert got == set()          # two events per user: no trigram yet
-
-    spark.createDataFrame(
-        [(5, t0 + 2 * s, 1, "purchase", 0.0, "{}"),
-         (6, t0 + 3 * s, 1, "view", 0.0, "{}")], schema
-    ).repartition(1).write.mode("append").parquet(landing)
-    drain()
-    got = {(r.user_id, r.t1, r.t2, r.t3)
-           for r in spark.read.parquet(out).collect()}
-    assert got == {(1, "view", "click", "purchase"),
-                   (1, "click", "purchase", "view")}

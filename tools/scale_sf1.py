@@ -58,7 +58,7 @@ QUADRATIC = {"dp_embedding_topk", "dp_embedding_topk_np"}
 
 
 def gen(src: str, out: str, factor: int) -> dict:
-    """x`factor` id-offset replication of documents/embeddings/events.
+    """x`factor` id-offset replication of documents/embeddings.
     Offsets are round multiples of 10^7 so every derived quantity
     (conv fold, role cycle, tool pick, ts minutes) stays in-range and
     copies never collide."""
@@ -78,7 +78,6 @@ def gen(src: str, out: str, factor: int) -> dict:
     specs = {
         "documents": ("doc_id", 100_000),
         "embeddings": ("vec_id", 10_000_000),
-        "events": ("event_id", 100_000_000),
     }
     for t, (idcol, off) in specs.items():
         df = spark.read.parquet(f"{src}/{t}.parquet")
@@ -86,9 +85,6 @@ def gen(src: str, out: str, factor: int) -> dict:
             df.withColumn(
                 "k", F.explode(F.sequence(F.lit(0), F.lit(factor - 1))))
             .withColumn(idcol, F.col(idcol) + F.col("k") * off))
-        if t == "events":   # user space must grow too or every user 10x's
-            big = big.withColumn(
-                "user_id", F.col("user_id") + F.col("k") * 1_000_000)
         if t == "documents":
             # per-copy md5 remap of LONG lowercase tokens (>=5 alpha
             # chars), length-preserving: copies are distinct texts with
@@ -123,8 +119,7 @@ def gen(src: str, out: str, factor: int) -> dict:
                          F.slice(e, F.lit(1), F.pmod(F.col("k"), d))))
             big = big.withColumn("embedding", rote)
         big = big.drop("k")
-        n_files = 64 if t != "events" else 128
-        big.repartition(n_files, idcol).write.mode("overwrite").parquet(
+        big.repartition(64, idcol).write.mode("overwrite").parquet(
             f"{out}/{t}.parquet")
         counts[t] = spark.read.parquet(f"{out}/{t}.parquet").count()
     spark.stop()
