@@ -18,6 +18,7 @@ Scale notes:
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -52,8 +53,15 @@ def _cc_driver(spark, pair_rows) -> DataFrame:
         r = find(v)
         if r not in comp_min or v < comp_min[r]:
             comp_min[r] = v
-    rows = [(v, comp_min[find(v)]) for v in parent]
-    return spark.createDataFrame(rows, "norm string, component string")
+    # an Arrow table becomes a local relation: no Python RDD pickles
+    # the rows, and building the frame runs no Spark job. Vertices may
+    # be any scalar (the dedup callers pass long ids): the cast gives
+    # their string form, as the schema's string columns always did.
+    norms = list(parent)
+    return spark.createDataFrame(pa.table({
+        "norm": pa.array(norms).cast(pa.string()),
+        "component": pa.array([comp_min[find(v)] for v in norms]).cast(pa.string()),
+    }))
 
 
 def connected_components(pairs: DataFrame, max_iter: int = 25,

@@ -91,8 +91,14 @@ def exact_pairs(vocab: DataFrame, threshold: float = LINK_JACCARD,
                 max_block: int = MAX_BLOCK) -> DataFrame:
     # materialized once: the self-join would otherwise recompute the
     # explode + hot-block anti-join branch on both sides (same fix as
-    # minhash_pairs / simhash_pairs).
-    b = blocked_vocab(linkable(vocab), max_block).localCheckpoint(eager=False)
+    # minhash_pairs / simhash_pairs). Hash-partitioned on the block key
+    # first: AQE would coalesce the small vocab into one partition and
+    # verify every candidate pair in one task; this way the join's probe
+    # side keeps shuffle-partitions tasks, and a shuffle join (no
+    # broadcast) reuses the same bkey partitioning.
+    n = int(vocab.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    b = (blocked_vocab(linkable(vocab), max_block).repartition(n, "bkey")
+         .localCheckpoint(eager=False))
     left = b.select("bkey", F.col("norm").alias("a"), F.col("tokens").alias("ta"))
     right = b.select("bkey", F.col("norm").alias("b"), F.col("tokens").alias("tb"))
     pairs = (

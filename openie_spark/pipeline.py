@@ -11,14 +11,32 @@ Each stage materializes one table under <output>/<stage>/ plus a
     config fingerprint, upstream stage fingerprints, wall seconds, and
     the schema the table was written with.
 
-Resume semantics: a stage re-runs iff its manifest is missing,
-incomplete, carries no schema, or its recorded upstream fingerprint
-differs (so resuming after a config/model change invalidates exactly
-the dirty suffix of the DAG). A resumed table is read back with the
-manifest's schema, so resuming runs no schema-inference job. Writes
-are atomic-per-stage: data lands under the stage dir first, the
-manifest is written LAST — a job killed mid-stage leaves no manifest
-and the stage re-runs cleanly (idempotent overwrite).
+Schedule: the stage rows run as the DAG their ``upstream`` declares,
+one thread per row (the threads only wait; Spark's task slots bound
+the parallelism). A stage builds as soon as the tables it reads are
+written, not after every earlier row: ``nodes`` and ``edges`` build
+side by side. Once its write returns, a stage publishes its table to
+the stages downstream and only then does its bookkeeping (the grouped
+lineage scan, storage stats, ``metrics``), so that overlaps the
+stages after it. Its manifest is written after its table and after
+its upstream stages' manifests, because the fingerprint carries their
+``rows`` and ``write_id``. Each thread inherits the caller's Spark
+local properties (job group included). The loop returns once every
+stage and manifest is done, and re-raises the first error (in row
+order) only then; a stage whose upstream failed fails with it and
+writes no manifest.
+
+Resume semantics: a stage whose upstream was rebuilt in this run is
+rebuilt without reading its manifest (the fingerprint holds that
+upstream's fresh ``write_id``, so it cannot match). A stage whose
+upstream stages all resumed re-runs iff its manifest is missing,
+incomplete, carries no schema, or its recorded fingerprint differs (so
+resuming after a config/model change invalidates exactly the dirty
+suffix of the DAG). A resumed table is read back with the manifest's
+schema, so resuming runs no schema-inference job. Writes are
+atomic-per-stage: data lands under the stage dir first, the manifest
+is written LAST — a job killed mid-stage leaves no manifest and the
+stage re-runs cleanly (idempotent overwrite).
 
 Storage: Parquet with a persisted ``bucket`` column (hash of conv_id /
 entity id). On a real deployment swap TableIO for Iceberg
@@ -30,11 +48,15 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 import time
+import uuid
 from collections.abc import Callable
+from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field
-from functools import cached_property, partial
+from functools import cached_property
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -387,8 +409,18 @@ class KGPipeline:
         self.enrich = enrich
         self.io = table_io if table_io is not None else make_table_io(spark, output_dir)
         self.results: list[StageResult] = []
-        self.tables: dict[str, DataFrame] = {}   # this run's stage outputs
-        self.manifests: dict[str, dict] = {}     # ... and their manifests
+        self._reset({})
+        self._lock = threading.Lock()   # builds the shared lazy tables once
+
+    def _reset(self, tables: dict[str, DataFrame]) -> None:
+        """Per-run state: stage outputs once published, their manifests,
+        and per stage a future that resolves once its table is published
+        (to True when this run built it, False when it resumed) and one
+        that resolves to its StageResult once its manifest is done."""
+        self.tables = tables
+        self.manifests: dict[str, dict] = {}
+        self._written: dict[str, Future] = {}
+        self._done: dict[str, Future] = {}
 
     # ------------------------------------------------------------ io
 
@@ -452,7 +484,8 @@ class KGPipeline:
         except Exception:               # pragma: no cover - remote FS quirks
             return {}
 
-    def _stage_fingerprint(self, name: str, upstream: list[str]) -> dict:
+    def _stage_fingerprint(self, name: str, upstream: list[str],
+                           extra_fp: dict | None = None) -> dict:
         # Upstream identity = rows + per-write nonce: an upstream
         # rebuilt from changed input with a coincidentally-equal row
         # count still gets a fresh write_id, so downstream stages
@@ -471,39 +504,47 @@ class KGPipeline:
                 u: {k: self.manifests.get(u, {}).get(k) for k in ("rows", "write_id")}
                 for u in upstream
             },
+            **(extra_fp or {}),
         }
 
     def _run_stage(self, name: str, build, bucket_col: str,
                    upstream: list[str], resume: bool,
-                   extra_metrics=None, extra_fp: dict | None = None) -> DataFrame:
-        fp = self._stage_fingerprint(name, upstream)
-        if extra_fp:
-            fp = {**fp, **extra_fp}
-        man = self._read_manifest(name) if resume else None
+                   extra_metrics=None, extra_fp: dict | None = None) -> StageResult:
+        """One stage, in its own thread: waits for its upstream tables,
+        resumes or builds, writes and publishes its table, then does its
+        bookkeeping and, after its upstream manifests, its manifest."""
+        written = self._written[name]
+        fresh = [u for u in upstream if self._written[u].result()]
         sd = self.io.location(name)
-        if (man and man.get("status") == "complete" and "schema" in man
-                and man.get("fingerprint") == fp):
-            self.manifests[name] = man
-            self.results.append(StageResult(name, sd, man["rows"], 0.0, True, man))
-            return self.io.read(self.spark, name, StructType.fromJson(man["schema"]))
+        if resume and not fresh:
+            man = self._read_manifest(name)
+            if (man and man.get("status") == "complete" and "schema" in man
+                    and man.get("fingerprint") == self._stage_fingerprint(
+                        name, upstream, extra_fp)):
+                self.manifests[name] = man
+                self.tables[name] = self.io.read(
+                    self.spark, name, StructType.fromJson(man["schema"])).drop("bucket")
+                written.set_result(False)
+                return StageResult(name, sd, man["rows"], 0.0, True, man)
 
         t0 = time.time()
         df = build().withColumn(
             "bucket", F.pmod(F.xxhash64(F.col(bucket_col)), F.lit(N_BUCKETS)).cast("int")
         ).repartition("bucket")
         out = self.io.write(self.spark, df, name)
+        self.tables[name] = out.drop("bucket")
+        written.set_result(True)
 
         # ONE column-pruned scan for all lineage stats: per-bucket
         # counts + conv range come from a single grouped aggregate
         # (rows = their sum); the parquet reader only decodes the
         # bucket/conv_id columns.
-        import uuid
-
         aggs = [F.count(F.lit(1)).alias("n")]
         has_conv = "conv_id" in out.columns
         if has_conv:
             aggs += [F.min("conv_id").alias("lo"), F.max("conv_id").alias("hi")]
         stats = out.groupBy("bucket").agg(*aggs).collect()
+        seconds = round(time.time() - t0, 3)
         rows = sum(r.n for r in stats)
         per_bucket = {int(r.bucket): r.n for r in stats}
         conv_range = None
@@ -519,18 +560,19 @@ class KGPipeline:
             "write_id": uuid.uuid4().hex,
             "per_bucket_rows": per_bucket,
             "conv_id_range": conv_range,
-            "fingerprint": fp,
-            "seconds": round(time.time() - t0, 3),
+            "seconds": seconds,
             "schema": out.schema.jsonValue(),
             **self._storage_stats(sd),
         }
         if extra_metrics:
             manifest["metrics"] = extra_metrics(out)
+        for u in upstream:
+            self._done[u].result()
+        manifest["fingerprint"] = self._stage_fingerprint(name, upstream, extra_fp)
         self._write_text(self._manifest_path(name),
                          json.dumps(manifest, indent=1, sort_keys=True))
         self.manifests[name] = manifest
-        self.results.append(StageResult(name, sd, rows, manifest["seconds"], False, manifest))
-        return out
+        return StageResult(name, sd, rows, seconds, False, manifest)
 
     # -------------------------------------------------------- stages
 
@@ -538,37 +580,66 @@ class KGPipeline:
         """One labeled BFS serves khop (min over sources), harmonic
         (per-source rollup) and seed_distances — a lazy checkpoint,
         built only when one of them is, so a fully-resumed run never
-        pays for it."""
-        if "seed_ball" not in self.tables:
-            self.tables["seed_ball"] = A.seed_ball_distances(
-                self.tables["nodes"], self.tables["edges"]
-            ).localCheckpoint(eager=False)
+        pays for it (once, under the lock: the three build side by
+        side)."""
+        with self._lock:
+            if "seed_ball" not in self.tables:
+                self.tables["seed_ball"] = A.seed_ball_distances(
+                    self.tables["nodes"], self.tables["edges"]
+                ).localCheckpoint(eager=True)
         return self.tables["seed_ball"]
 
     def _table(self, name: str) -> DataFrame:
-        """A build input: a stage table of this run, a ``prior_*`` table
-        of the prior output, or the remap, which is built on first use
-        as one eager checkpoint."""
-        if name == REMAP.name and name not in self.tables:
-            self.tables[name] = REMAP.build(
-                self, *map(self._table, REMAP.inputs)).localCheckpoint(eager=True)
+        """A build input: a stage table of this run once it is written, a
+        ``prior_*`` table of the prior output, or the remap, which is
+        built on first use as one eager checkpoint (once, under the lock:
+        two merge rows read it)."""
+        if name == REMAP.name:
+            with self._lock:
+                if name not in self.tables:
+                    self.tables[name] = REMAP.build(
+                        self, *map(self._table, REMAP.inputs)).localCheckpoint(eager=True)
+        elif name in self._written:
+            self._written[name].result()
         return self.tables[name]
 
+    def _stage(self, st: Stage, resume: bool, prior_fp) -> StageResult:
+        """The thread target of one stage row: its build reads its inputs
+        when it runs, and a failure fails the stages downstream too."""
+        row = MERGES.get(st.name) if prior_fp else None
+        inputs = row.inputs if row else st.upstream
+
+        def build() -> DataFrame:
+            return (row or st).build(self, *map(self._table, inputs))
+
+        try:
+            extra_fp = prior_fp(row.prior if row else ()) if prior_fp else None
+            return self._run_stage(st.name, build, st.bucket, list(st.upstream), resume,
+                                   extra_metrics=st.metrics, extra_fp=extra_fp)
+        except BaseException as e:
+            if not self._written[st.name].done():
+                self._written[st.name].set_exception(e)   # fails the stages downstream
+            raise
+
     def _run_stages(self, stages, resume: bool, prior_fp=None) -> None:
-        """The stage loop of run and run_incremental. With ``prior_fp``
-        (an incremental run) a stage with a merge row builds that row,
-        and ``prior_fp(names)`` is the fingerprint extra pinning the
-        prior tables the stage reads."""
+        """The stage loop of run and run_incremental, one thread per row
+        (schedule in the module docstring). With ``prior_fp`` (an
+        incremental run) a stage with a merge row builds that row, and
+        ``prior_fp(names)`` is the fingerprint extra pinning the prior
+        tables the stage reads."""
         for st in stages:
-            row, extra_fp = None, None
-            if prior_fp:
-                row = MERGES.get(st.name)
-                extra_fp = prior_fp(row.prior if row else ())
-            inputs = row.inputs if row else st.upstream
-            build = partial((row or st).build, self, *map(self._table, inputs))
-            out = self._run_stage(st.name, build, st.bucket, list(st.upstream), resume,
-                                  extra_metrics=st.metrics, extra_fp=extra_fp)
-            self.tables[st.name] = out.drop("bucket")
+            self._written[st.name] = Future()
+        with ThreadPoolExecutor(max_workers=len(stages)) as pool:
+            for st in stages:
+                # wrapped per task: each thread gets its own copy of the
+                # caller's local properties (the job group)
+                task = inheritable_thread_target(self.spark)(self._stage)
+                self._done[st.name] = pool.submit(task, st, resume, prior_fp)
+        done = [self._done[st.name] for st in stages]
+        self.results += [f.result() for f in done if f.exception() is None]
+        for f in done:
+            if f.exception() is not None:
+                raise f.exception()
 
     def _write_summary(self, t_total: float, triples_key: str, **head) -> dict:
         total = round(time.time() - t_total, 3)
@@ -595,7 +666,7 @@ class KGPipeline:
                          (self.enrich, ENRICH_STAGES)):
             if on:
                 stages += rows
-        self.tables, self.manifests = {}, {}
+        self._reset({})
         self._run_stages(stages, resume)
         return self._write_summary(t_total, "triples")
 
@@ -641,10 +712,9 @@ class KGPipeline:
                     "complete manifest — the merge would read an incomplete output")
             prior[n] = man
         pio = ParquetTableIO(prior_dir)
-        self.tables = {
+        self._reset({
             f"prior_{n}": pio.read(self.spark, n, StructType.fromJson(man["schema"]))
-            .drop("bucket") for n, man in prior.items()}
-        self.manifests = {}
+            .drop("bucket") for n, man in prior.items()})
 
         def prior_fp(names: tuple[str, ...]) -> dict:
             return {"prior_dir": prior_dir, "delta": True,

@@ -240,7 +240,9 @@ def test_oie_eval_cli_self_perfect(tmp_path):
     g.write_text("John ate the cake .\tate\tJohn\tthe cake\n"
                  "Mary ran home .\tran\tMary\thome\n")
     out = subprocess.run(
-        [sys.executable, "/root/repo/tools/oie_eval.py",
+        [sys.executable,
+         os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                      "tools", "oie_eval.py"),
          "--gold", str(g), "--pred", str(g), "--master", "local[4]"],
         capture_output=True, text=True, timeout=240)
     assert out.returncode == 0, out.stderr[-2000:]

@@ -52,6 +52,42 @@ def test_exact_pairs_skew_cap(spark):
     assert stats.n_dropped_mentions >= 30
 
 
+def _plan_nodes(plan):
+    """Every node of an executed physical plan, through the adaptive
+    wrapper and its query stages."""
+    yield plan
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        yield from _plan_nodes(plan.executedPlan())
+    elif name.endswith("QueryStageExec"):
+        yield from _plan_nodes(plan.plan())
+    children = plan.children()
+    for i in range(children.size()):
+        yield from _plan_nodes(children.apply(i))
+
+
+def test_exact_pairs_probe_side_keeps_shuffle_partitions(spark):
+    """On the sf0.001 vocab the block self-join's probe side has
+    spark.sql.shuffle.partitions partitions: the checkpointed block
+    table is hash-partitioned on bkey, so AQE cannot coalesce the tiny
+    vocab into one partition and verify every candidate in one task."""
+    from openie_spark.kg.graph import norm_triples
+    from openie_spark.kg.linking import exact_pairs
+    from openie_spark.kg.mentions import mention_vocab, mentions_from_norm
+    from openie_spark.operators.extract import extract_triples
+    from openie_spark.sources.transcripts import read_transcripts
+
+    vocab = mention_vocab(mentions_from_norm(norm_triples(
+        extract_triples(read_transcripts(spark, "/root/testdata/sf0.001")))))
+    pairs = exact_pairs(vocab)
+    assert pairs.collect()
+    joins = [p for p in _plan_nodes(pairs._jdf.queryExecution().executedPlan())
+             if p.getClass().getSimpleName() == "BroadcastHashJoinExec"]
+    assert len(joins) == 1
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert joins[0].streamedPlan().execute().getNumPartitions() == n
+
+
 def test_minhash_recall_vs_exact(spark):
     """LSH candidates (jaccard-verified) must recover the clear
     duplicate pairs the exact path finds on near-duplicate names."""
@@ -189,6 +225,38 @@ def test_cc_driver_and_distributed_agree(spark):
     assert fast == slow
     comp = dict(fast)
     assert comp["c"] == "a" and comp["m"] == "a" and comp["z"] == "x" and comp["q2"] == "q"
+
+
+def test_cc_driver_builds_a_local_frame(spark):
+    """The driver route's labeling is built from an Arrow table: a local
+    relation with the (norm, component) nullable-string schema, for
+    empty input and long ids too, whose building and collecting run no
+    Spark job."""
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    from openie_spark.kg.canon import _cc_driver
+
+    sc = spark.sparkContext
+    group = "cc-driver-guard"
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        full = _cc_driver(spark, [("b", "a"), ("c", "b"), ("x", "y")])
+        empty = _cc_driver(spark, [])
+        ids = _cc_driver(spark, [(12, 3), (3, 20)])
+        got, got_empty = sorted(map(tuple, full.collect())), empty.collect()
+        got_ids = sorted(map(tuple, ids.collect()))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    schema = StructType([StructField("norm", StringType()),
+                         StructField("component", StringType())])
+    assert full.schema == empty.schema == ids.schema == schema
+    assert got == [("a", "a"), ("b", "a"), ("c", "a"), ("x", "x"), ("y", "x")]
+    assert got_empty == []
+    # long ids (the dedup callers) keep their string form and numeric min
+    assert got_ids == [("12", "3"), ("20", "3"), ("3", "3")]
 
 
 def test_editdist_pairs_typo_tolerance(spark):

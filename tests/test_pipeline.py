@@ -118,6 +118,115 @@ def test_manifests_lineage(pipeline_out):
     assert "skew" in vman["metrics"]
 
 
+def test_manifest_fingerprints_carry_the_upstream_manifests(spark, tmp_path):
+    """Stages run side by side, but each manifest is written after its
+    upstream manifests: its fingerprint pins their rows and write_id
+    as they are on disk, for every KG stage. Each stage's bookkeeping
+    is held until the stages reading it have written their tables, so
+    a downstream manifest that did not wait would see none."""
+    import dataclasses
+
+    from openie_spark.pipeline import KG_STAGES, KGPipeline
+
+    pipe = KGPipeline(spark, SF, str(tmp_path))
+    readers = {st.name: [d.name for d in KG_STAGES if st.name in d.upstream]
+               for st in KG_STAGES}
+
+    def held(st):
+        def metrics(out):
+            for d in readers[st.name]:
+                pipe._written[d].result(timeout=300)
+            return st.metrics(out) if st.metrics else {}
+        return dataclasses.replace(st, metrics=metrics)
+
+    pipe._run_stages(tuple(held(st) for st in KG_STAGES), resume=False)
+    man = {}
+    for st in KG_STAGES:
+        with open(pipe._manifest_path(st.name)) as f:
+            man[st.name] = json.load(f)
+    for st in KG_STAGES:
+        assert man[st.name]["fingerprint"]["upstream"] == {
+            u: {"rows": man[u]["rows"], "write_id": man[u]["write_id"]}
+            for u in st.upstream}, st.name
+
+
+def test_failed_stage_writes_no_manifest_downstream(spark, tmp_path):
+    """A stage whose build raises: the error comes out of _run_stages
+    after the stages still running are done; neither that stage nor
+    any stage downstream of it gets a manifest (the stages upstream
+    do), and no thread _run_stages started is left."""
+    import dataclasses
+    import threading
+
+    from openie_spark.pipeline import KG_STAGES, KGPipeline
+
+    class Boom(RuntimeError):
+        pass
+
+    def boom(job, *tables):
+        raise Boom("components build failed")
+
+    stages = tuple(dataclasses.replace(st, build=boom) if st.name == "components" else st
+                   for st in KG_STAGES)
+    pipe = KGPipeline(spark, SF, str(tmp_path))
+    before = set(threading.enumerate())
+    with pytest.raises(Boom):
+        pipe._run_stages(stages, resume=False)
+    assert [t for t in threading.enumerate() if t not in before] == []
+    with_manifest = {st.name for st in KG_STAGES
+                     if os.path.exists(pipe._manifest_path(st.name))}
+    assert with_manifest == {"triples", "triples_norm", "vocab", "pairs"}
+
+
+def test_shared_lazy_table_is_built_once_under_contention(spark, monkeypatch, tmp_path):
+    """Stage threads share the lazily built seed ball: with more
+    threads than cores and a short switch interval, it is still built
+    exactly once and every caller gets the same table."""
+    import sys
+    import threading
+
+    from openie_spark import pipeline
+
+    builds = []
+
+    def ball(nodes, edges):
+        builds.append(1)
+        return nodes
+
+    monkeypatch.setattr(pipeline.A, "seed_ball_distances", ball)
+    pipe = pipeline.KGPipeline(spark, SF, str(tmp_path))
+    pipe.tables.update(nodes=spark.range(3), edges=spark.range(3))
+    got = []
+    threads = [threading.Thread(target=lambda: got.append(pipe.seed_ball()))
+               for _ in range(16)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert len(builds) == 1
+    assert len(got) == 16 and all(g is got[0] for g in got)
+
+
+def test_run_runs_no_ungrouped_spark_job(spark, tmp_path):
+    """Every Spark job of a run, whichever stage thread submits it,
+    carries the caller's job group."""
+    from openie_spark.pipeline import KGPipeline
+
+    tracker = spark.sparkContext.statusTracker()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    before = set(tracker.getJobIdsForGroup(None))      # jobs without a group
+    _, jobs = _job_ids(spark, "run-guard",
+                       lambda: KGPipeline(spark, SF, str(tmp_path)).run(resume=False))
+    assert jobs
+    assert set(tracker.getJobIdsForGroup(None)) - before == set()
+
+
 def test_null_conv_id_bucket_keeps_sql_min_max_range(spark, tmp_path):
     """A stage bucket that holds only NULL conv_ids must not crash the
     manifest's conv_id_range: the range ignores NULLs, as SQL MIN/MAX

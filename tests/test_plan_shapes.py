@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 import re
 
 import pytest
@@ -30,7 +31,9 @@ def _count(plan: str, pat: str) -> int:
 def entry(spark):
     import importlib.util
     spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", "/root/repo/__spark_entry__.py")
+        "__spark_entry__",
+        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                     "__spark_entry__.py"))
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod

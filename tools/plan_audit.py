@@ -10,10 +10,12 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 # the two queries whose cross join IS the labeled quadratic ground
 # truth (COVERAGE.md) — a cartesian there is by design
@@ -32,7 +34,7 @@ def audit(sf_dir: str = "/root/testdata/sf0.01") -> list[dict]:
     from openie_spark.session import get_spark
 
     spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", "/root/repo/__spark_entry__.py")
+        "__spark_entry__", os.path.join(REPO, "__spark_entry__.py"))
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     spark = get_spark(app_name="plan-audit", master="local[8]",
@@ -106,7 +108,7 @@ def main() -> int:
             f"| {r['query']} | {r['exchanges']} | {r['scans']} | {r['python']} "
             f"| {r['broadcast_joins']} | {r['cartesian']} | "
             f"{'y' if r['pruned'] else 'n'} | {note} |")
-    with open("/root/repo/PLANS.md", "w", encoding="utf-8") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w", encoding="utf-8") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote PLANS.md ({len(rows)} queries, {bad} flagged)")
     return bad
