@@ -11,7 +11,10 @@ matching loop (prediction *consumption*: a predicted extraction, once
 matched, may never match another gold — benchmark.py:79-99) runs in
 plain Python inside the bucket call, where it is tiny; global PR math
 needs only per-distinct-score (tp, n) counts, so the driver never
-holds per-extraction vectors.
+holds per-extraction vectors. One grouped action on the score reads
+those counts and, from the NULL-score group of per-sentence trailer
+rows, correctTotal and unmatchedCount: 4 Spark jobs in all (the two
+cogroup inputs, the scoring stage, the grouped read).
 Threshold boundedness mirrors eval.carb.MAX_EXACT_THRESHOLDS: beyond
 it, scores snap down to an approx-quantile grid (logged deviation).
 
@@ -42,6 +45,7 @@ Reference quirks preserved:
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -200,6 +204,42 @@ def _bool_match(match_fn):
     return fn
 
 
+def _quantized_counts(raw: DataFrame, max_thresholds: int):
+    """(correct_total, unmatched, per-score rows descending) of the
+    cogroup output ``raw`` when it holds more than ``max_thresholds``
+    distinct scores: scores snap down to an approx-quantile grid of
+    ``max_thresholds`` values (logged deviation)."""
+    import logging
+
+    counts = raw.agg(
+        F.sum("correct_add").alias("correct"),
+        F.sum("unmatched_add").alias("unmatched")).first()
+    y = raw.filter(F.col("y").isNotNull())
+    n_distinct = y.agg(F.count_distinct("score")).first()[0]
+    qs = [i / (max_thresholds - 1) for i in range(max_thresholds)]
+    row = y.agg(F.percentile_approx("score", qs, 10_000).alias("g"),
+                F.min("score").alias("m")).first()
+    grid = sorted({float(row.m), *(float(v) for v in row.g)})
+    logging.getLogger(__name__).warning(
+        "oie16_compare: %d distinct scores > %d; snapping to a "
+        "%d-value grid", n_distinct, max_thresholds, len(grid))
+    # floor-snap via a broadcast theta-join on the tiny grid table:
+    # each sample keeps the largest grid value <= its score
+    gdf = raw.sparkSession.createDataFrame(
+        pa.table({"gs": pa.array(grid, pa.float64())}))
+    y = (y.withColumn("_rid", F.monotonically_increasing_id())
+         .join(F.broadcast(gdf), F.col("score") >= F.col("gs"), "left")
+         .groupBy("_rid")
+         .agg(F.first("y").alias("y"),
+              F.coalesce(F.max("gs"), F.first("score")).alias("score")))
+    by_score = (
+        y.groupBy("score")
+        .agg(F.sum("y").alias("tp"), F.count(F.lit(1)).alias("n"))
+        .orderBy(F.desc("score"))
+        .collect())
+    return int(counts.correct or 0), int(counts.unmatched or 0), by_score
+
+
 def oie16_compare(gold: DataFrame, pred: DataFrame,
                   match_fn=lexical_match,
                   max_thresholds: int = MAX_EXACT_THRESHOLDS) -> dict:
@@ -225,38 +265,24 @@ def oie16_compare(gold: DataFrame, pred: DataFrame,
         _OIE16_SCHEMA,
     ).localCheckpoint(eager=False)
 
-    counts = raw.agg(
-        F.sum("correct_add").alias("correct"),
-        F.sum("unmatched_add").alias("unmatched")).first()
-    correct_total = int(counts.correct or 0)
-    unmatched = int(counts.unmatched or 0)
-
-    y = raw.filter(F.col("y").isNotNull())
-    n_distinct = y.agg(F.count_distinct("score")).first()[0]
-    if n_distinct > max_thresholds:
-        import logging
-
-        qs = [i / (max_thresholds - 1) for i in range(max_thresholds)]
-        row = y.agg(F.percentile_approx("score", qs, 10_000).alias("g"),
-                    F.min("score").alias("m")).first()
-        grid = sorted({float(row.m), *(float(v) for v in row.g)})
-        logging.getLogger(__name__).warning(
-            "oie16_compare: %d distinct scores > %d; snapping to a "
-            "%d-value grid", n_distinct, max_thresholds, len(grid))
-        # floor-snap via a broadcast theta-join on the tiny grid table:
-        # each sample keeps the largest grid value <= its score
-        gdf = y.sparkSession.createDataFrame(
-            [(float(v),) for v in grid], "gs double")
-        y = (y.withColumn("_rid", F.monotonically_increasing_id())
-             .join(F.broadcast(gdf), F.col("score") >= F.col("gs"), "left")
-             .groupBy("_rid")
-             .agg(F.first("y").alias("y"),
-                  F.coalesce(F.max("gs"), F.first("score")).alias("score")))
-    by_score = (
-        y.groupBy("score")
-        .agg(F.sum("y").alias("tp"), F.count(F.lit(1)).alias("n"))
-        .orderBy(F.desc("score"))
+    # one action: the NULL-score group sums the per-sentence trailer
+    # rows (correct_total, unmatched); every other group is one distinct
+    # score's (tp, n) — at most max_thresholds + 1 of them are read
+    groups = (
+        raw.groupBy("score")
+        .agg(F.sum("y").alias("tp"), F.count(F.lit(1)).alias("n"),
+             F.sum("correct_add").alias("correct"),
+             F.sum("unmatched_add").alias("unmatched"))
+        .limit(max_thresholds + 2)
         .collect())
+    by_score = sorted((r for r in groups if r.score is not None),
+                      key=lambda r: r.score, reverse=True)
+    if len(by_score) > max_thresholds:
+        correct_total, unmatched, by_score = _quantized_counts(raw, max_thresholds)
+    else:
+        trailer = next((r for r in groups if r.score is None), None)
+        correct_total = int(trailer.correct or 0) if trailer else 0
+        unmatched = int(trailer.unmatched or 0) if trailer else 0
     if not by_score:
         return {"auc": 0.0, "optimal": (0.0, 0.0, 0.0),
                 "correct_total": correct_total, "unmatched": unmatched,
@@ -284,8 +310,12 @@ def oie16_compare(gold: DataFrame, pred: DataFrame,
 
 def oie16_summary_df(spark, result: dict) -> DataFrame:
     """One-row DataFrame wrapper for the driver gate."""
-    return spark.createDataFrame(
-        [(result["auc"], *result["optimal"],
-          result["correct_total"], result["unmatched"])],
-        "auc double, optimal_precision double, optimal_recall double, "
-        "optimal_f1 double, correct_total long, unmatched long")
+    p, r, f1 = result["optimal"]
+    return spark.createDataFrame(pa.table({
+        "auc": pa.array([result["auc"]], pa.float64()),
+        "optimal_precision": pa.array([p], pa.float64()),
+        "optimal_recall": pa.array([r], pa.float64()),
+        "optimal_f1": pa.array([f1], pa.float64()),
+        "correct_total": pa.array([result["correct_total"]], pa.int64()),
+        "unmatched": pa.array([result["unmatched"]], pa.int64()),
+    }))

@@ -16,7 +16,11 @@ threshold sweep degenerates to one point; /root/reference/eval/oie_eval/carb.py:
 Spark shape: ONE hash-partition shuffle on the sentence bucket, N =
 spark.sql.shuffle.partitions, so one pandas call scores ~1/N of the
 corpus instead of one sentence: the per-group Arrow and frame cost is
-paid N times, not once per sentence. A keyed eval table repartitioned
+paid N times, not once per sentence. carb_compare finalizes in one
+action (4 Spark jobs: the two cogroup inputs, the global sum, the
+result); carb_pr_curve adds one distinct-limit action for its exact
+threshold grid and one bracket-sum stage (7 jobs from building to
+collecting the curve); its threshold table is a local relation. A keyed eval table repartitioned
 on the same bucket expression (sentence_bucket; __spark_entry__'s
 carb_gold) needs no exchange before the cogroup. Sentence-key skew
 (dup sentences collapse into one sentence, raw2col-style T10) is
@@ -43,6 +47,7 @@ from __future__ import annotations
 import string
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -392,28 +397,12 @@ def _sweep_group(golds: list, preds: list, grid: list[float],
     return rows
 
 
-def carb_pr_curve(gold: DataFrame, pred: DataFrame,
-                  max_thresholds: int = MAX_EXACT_THRESHOLDS,
-                  recall_strategy: str = "m2o") -> DataFrame:
-    """(t, conf, precision, recall, f1) — one row per threshold,
-    ascending. ``pred`` must carry a ``confidence`` column; ``gold``
-    needs (sent, pred, args).
-
-    Threshold set is BOUNDED: one aggregate counts the distinct
-    confidences; when ≤ ``max_thresholds`` the sweep is exact over all
-    of them (reference semantics, carb.py:80-86, which holds the full
-    list in memory — safe only because it is bounded here), otherwise
-    the confidences are quantized down to an approx-quantile grid of
-    ``max_thresholds`` values (deviation logged) so neither the driver
-    list nor the per-group bracket loop grows with corpus size.
-
-    Scale shape: the same single bucket cogroup as the one-point
-    scorer (cogroup_sentences); the ≤ max_thresholds grid is
-    closure-captured into the kernel and broadcast back for the
-    bracket → slot expansion.
-    """
-    spark = gold.sparkSession
-    pred = pred.withColumn("confidence", F.col("confidence").cast("double"))
+def _checked_quantized_grid(pred: DataFrame, max_thresholds: int) -> list[float]:
+    """The threshold grid when the distinct-confidence probe held a
+    NULL/NaN or more than ``max_thresholds`` values: raise on any
+    NULL/NaN confidence (counted over every row, so one the probe's
+    limit cut off is caught too), else quantize to an approx-quantile
+    grid of ``max_thresholds`` values (deviation logged)."""
     stats = pred.agg(
         F.count_distinct("confidence").alias("n_distinct"),
         F.sum(F.when(F.col("confidence").isNull()
@@ -427,24 +416,55 @@ def carb_pr_curve(gold: DataFrame, pred: DataFrame,
         raise ValueError(
             f"carb_pr_curve: {stats.n_bad} prediction(s) have NULL/NaN "
             "confidence — fix or filter them before sweeping")
-    if stats.n_distinct <= max_thresholds:
-        grid = sorted(
-            r[0] for r in pred.select("confidence").distinct().collect()
-            if r[0] is not None)
-    else:
-        import logging
+    import logging
 
-        qs = [i / (max_thresholds - 1) for i in range(max_thresholds)]
-        approx = pred.agg(
-            F.percentile_approx("confidence", qs, 10_000).alias("g")
-        ).first().g
-        grid = sorted({float(stats.cmin), *(float(v) for v in approx)})
-        logging.getLogger(__name__).warning(
-            "carb_pr_curve: %d distinct confidences > max_thresholds=%d; "
-            "quantized to a %d-value approx-quantile grid (confidences "
-            "snap down to the grid — PR points are exact for the "
-            "quantized assignment)",
-            stats.n_distinct, max_thresholds, len(grid))
+    qs = [i / (max_thresholds - 1) for i in range(max_thresholds)]
+    approx = pred.agg(
+        F.percentile_approx("confidence", qs, 10_000).alias("g")
+    ).first().g
+    grid = sorted({float(stats.cmin), *(float(v) for v in approx)})
+    logging.getLogger(__name__).warning(
+        "carb_pr_curve: %d distinct confidences > max_thresholds=%d; "
+        "quantized to a %d-value approx-quantile grid (confidences "
+        "snap down to the grid — PR points are exact for the "
+        "quantized assignment)",
+        stats.n_distinct, max_thresholds, len(grid))
+    return grid
+
+
+def carb_pr_curve(gold: DataFrame, pred: DataFrame,
+                  max_thresholds: int = MAX_EXACT_THRESHOLDS,
+                  recall_strategy: str = "m2o") -> DataFrame:
+    """(t, conf, precision, recall, f1) — one row per threshold,
+    ascending. ``pred`` must carry a ``confidence`` column; ``gold``
+    needs (sent, pred, args).
+
+    Threshold set is BOUNDED: one action reads at most
+    ``max_thresholds`` + 1 distinct confidences; when there are ≤
+    ``max_thresholds`` the sweep is exact over all of them (reference
+    semantics, carb.py:80-86, which holds the full list in memory —
+    safe only because it is bounded here), otherwise the confidences
+    are quantized down to an approx-quantile grid of ``max_thresholds``
+    values (deviation logged) so neither the driver list nor the
+    per-group bracket loop grows with corpus size. A NULL/NaN
+    confidence raises ``ValueError`` on either path.
+
+    Scale shape: the same single bucket cogroup as the one-point
+    scorer (cogroup_sentences); the ≤ max_thresholds grid is
+    closure-captured into the kernel and broadcast back, as an Arrow
+    local relation, for the bracket → slot expansion. The curve has ≤
+    max_thresholds rows, so one task sorts it (no range exchange).
+    """
+    spark = gold.sparkSession
+    pred = pred.withColumn("confidence", F.col("confidence").cast("double"))
+    # one action reads the exact grid when it is small: the distinct
+    # confidences, at most max_thresholds + 1 of them
+    grid = [r[0] for r in
+            pred.select("confidence").distinct().limit(max_thresholds + 1).collect()]
+    if len(grid) > max_thresholds or any(c is None or c != c for c in grid):
+        grid = _checked_quantized_grid(pred, max_thresholds)
+    else:
+        grid.sort()
     num_conf = len(grid)
 
     brackets = cogroup_sentences(
@@ -452,10 +472,15 @@ def carb_pr_curve(gold: DataFrame, pred: DataFrame,
         lambda golds, preds: _sweep_group(golds, preds, grid, recall_strategy),
         _SWEEP_SCHEMA)
     if num_conf == 0:
-        return spark.createDataFrame(
-            [], "t int, conf double, precision double, recall double, f1 double")
-    tdf = spark.createDataFrame(
-        [(i, float(c)) for i, c in enumerate(grid)], "t int, conf double")
+        return spark.createDataFrame(pa.table(
+            {"t": pa.array([], pa.int32()),
+             **{c: pa.array([], pa.float64())
+                for c in ("conf", "precision", "recall", "f1")}}))
+    # an Arrow table is a local relation: broadcasting it runs no
+    # Python job
+    tdf = spark.createDataFrame(pa.table({
+        "t": pa.array(range(num_conf), pa.int32()),
+        "conf": pa.array(grid, pa.float64())}))
     # bracket -> slot expansion: explode the [t_lo, t_hi] range (always
     # ascending: brackets are emitted with prev_c <= c) and attach conf
     # AFTER aggregation via a broadcast hash equi-join on the
@@ -483,7 +508,8 @@ def carb_pr_curve(gold: DataFrame, pred: DataFrame,
                        / (F.col("precision") + F.col("recall"))
                        ).otherwise(F.lit(0.0)), 6).alias("f1"),
         )
-        .orderBy("t")
+        # <= max_thresholds rows: one task sorts them, no range exchange
+        .coalesce(1).sortWithinPartitions("t")
     )
 
 

@@ -15,6 +15,13 @@ Batch shape notes for scale: rows are processed in length-sorted
 sub-batches of SUB_BATCH sentences so padding waste stays bounded
 regardless of ``spark.sql.execution.arrow.maxRecordsPerBatch``; the
 plan stays narrow (no shuffle) — each input partition maps 1:1.
+
+Parallelism comes from ``operators.sentences.segment_transcripts``:
+its ``spread`` gives the sentences at least the session's default
+parallelism in partitions, and the span fan-out is a narrow descendant,
+so the kernels start from that many tasks. Building a plan here runs no
+Spark job (``df.rdd.getNumPartitions()`` on a frame below a shuffle
+would execute that shuffle stage under AQE).
 """
 
 from __future__ import annotations
@@ -35,23 +42,6 @@ from pyspark.sql.types import (
 from openie_spark.config import IDX2TAG
 
 SUB_BATCH = 256
-
-
-def _ensure_parallelism(df: DataFrame) -> DataFrame:
-    """The inference UDF is the compute-bound stage; a small upstream
-    file (one split) must not serialize it. At 100 TB the scan already
-    yields thousands of splits and this is a no-op; locally it round-
-    robins rows across all cores. Round-robin (not hash) — no key skew,
-    and sentence order is immaterial to tagging."""
-    if df.isStreaming:
-        # streaming plans have no rdd; micro-batch parallelism comes
-        # from the source's maxFilesPerTrigger / file splits instead
-        return df
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
 
 
 def _decode_words(words_batch: list[list[str]], seg_word_batch, seed: int) -> list[list[str]]:
@@ -103,7 +93,7 @@ def tag_predicates_neural(sentences: DataFrame, seed: int | None = None) -> Data
                 out["pred_tags"] = tags
                 yield out
 
-    return _ensure_parallelism(sentences).mapInPandas(run, schema)
+    return sentences.mapInPandas(run, schema)
 
 
 def _seqie_spans_py(tags: list[str]) -> list[list[int]]:
@@ -143,8 +133,8 @@ def tag_joint_neural(sentences: DataFrame) -> DataFrame:
       them back per-span, D in) — stage C multiplies rows ~6x, so the
       saved traffic is the fanned copy, the largest of the three.
 
-    The plan stays narrow (the only exchange is the upstream
-    round-robin repartition), so the fusion changes nothing at
+    The plan stays narrow (the only exchange is segment_transcripts'
+    upstream ``spread``), so the fusion changes nothing at
     100 TB scale except fewer workers and less Arrow traffic.
     """
     from openie_spark.model.weights import ARG_SEED, PRED_SEED
@@ -208,7 +198,7 @@ def tag_joint_neural(sentences: DataFrame) -> DataFrame:
                 })
                 yield out
 
-    return _ensure_parallelism(sentences).mapInPandas(run, schema)
+    return sentences.mapInPandas(run, schema)
 
 
 def tag_arguments_neural(fanned: DataFrame, seed: int | None = None) -> DataFrame:
@@ -236,4 +226,4 @@ def tag_arguments_neural(fanned: DataFrame, seed: int | None = None) -> DataFram
                 out["tags"] = tags
                 yield out
 
-    return _ensure_parallelism(fanned).mapInPandas(run, schema)
+    return fanned.mapInPandas(run, schema)

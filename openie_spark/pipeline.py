@@ -151,6 +151,18 @@ class IcebergTableIO:
         return spark.table(self.qualified(name))    # the catalog holds the schema
 
 
+def conv_ranges_may_meet(a: dict, b: dict) -> bool:
+    """False when two stage manifests' ``conv_id_range`` entries prove
+    their tables share no conv_id: either range is ``None`` or has a
+    ``None`` bound (no non-NULL conv_id; NULLs never join), or the
+    ranges are disjoint. Python orders strings by code point, which is
+    the UTF-8 byte order Spark's MIN/MAX use."""
+    ra, rb = a["conv_id_range"], b["conv_id_range"]
+    if ra is None or rb is None or None in ra or None in rb:
+        return False
+    return ra[0] <= rb[1] and rb[0] <= ra[1]
+
+
 def make_table_io(spark: SparkSession, output_dir: str):
     """Iceberg when a catalog is configured, Parquet+manifest
     otherwise (catalog-absent behavior unchanged — unit-pinned)."""
@@ -683,7 +695,9 @@ class KGPipeline:
 
         Contract: delta conv_ids are disjoint from every prior
         increment (new conversations only), guarded by one column-pruned
-        semi-join against the prior edge table's conv_id column.
+        semi-join against the prior edge table's conv_id column. The
+        join is skipped when the manifests' conv_id ranges show that no
+        conv_id can be in both (``conv_ranges_may_meet``).
 
         Stage resume fingerprints additionally pin the write_ids of the
         prior tables the stage reads, so pointing the same output at a
@@ -721,7 +735,8 @@ class KGPipeline:
                     "prior": {n: prior[n].get("write_id") for n in names}}
 
         self._run_stages(KG_STAGES[:1], resume, prior_fp)
-        overlap = (
+        overlap = conv_ranges_may_meet(
+            self.manifests["triples"], prior["edges"]) and (
             self.tables["triples"].select("conv_id").distinct()
             .join(self.tables["prior_edges"].select("conv_id").distinct(),
                   "conv_id", "semi")

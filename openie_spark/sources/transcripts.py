@@ -24,6 +24,10 @@ from openie_spark.config import ROLES, TURNS_PER_CONV
 
 _EPOCH = "2024-01-01 00:00:00"
 
+# The documents columns the derivation reads, as the shipped and the
+# generated corpora store them.
+DOCUMENTS_SCHEMA = "doc_id bigint, text string"
+
 # Deterministic tool-name variety for tool-bearing turns (the agent
 # corpora this models run many tools; a single constant would make the
 # per-tool analytics vacuous). Picked by conversation arithmetic —
@@ -36,8 +40,10 @@ TOOLS = ("browse", "calc", "code_run", "db_query",
 
 
 def derive_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents(doc_id, text, …) → transcripts (deterministic)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    """documents(doc_id, text, …) → transcripts (deterministic). The
+    read names the two columns it uses, so building the frame runs no
+    schema-inference job."""
+    docs = spark.read.schema(DOCUMENTS_SCHEMA).parquet(f"{sf_dir}/documents.parquet")
     role = F.element_at(
         F.array(*[F.lit(r) for r in ROLES]),
         (F.col("doc_id") % len(ROLES)).cast("int") + 1,

@@ -12,5 +12,23 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def job_ids(spark):
+    """``job_ids(group, fn)`` → (fn(), ids of the Spark jobs fn ran),
+    fn run in job group ``group``."""
+    sc = spark.sparkContext
+
+    def run(group: str, fn):
+        prev = sc.getLocalProperty("spark.jobGroup.id")
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", prev)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()   # the tracker is fed async
+        return out, list(sc.statusTracker().getJobIdsForGroup(group))
+    return run
+
+
 def rows(df):
     return [tuple(r) for r in df.collect()]

@@ -185,6 +185,70 @@ def test_oie16_ext_order_sets_the_consumption_order(spark):
     assert by_content["auc"] == pytest.approx(0.25)
 
 
+def _oie16_frames(spark):
+    """A seeded 30-sentence gold/pred pair (20 distinct confidences),
+    without ext_order."""
+    vocab = ["John", "Mary", "the", "of", "is", "ran", "said", "be",
+             "was", "tall", "baker", "to", "London", "cat"]
+    gold_rows, pred_rows = _rand_corpus(random.Random(11), 30, vocab)
+    gold = spark.createDataFrame(
+        [r[:3] for r in gold_rows], "sent string, pred string, args array<string>")
+    pred = spark.createDataFrame(
+        [r[:4] for r in pred_rows],
+        "sent string, pred string, args array<string>, confidence double")
+    return gold, pred
+
+
+def test_oie16_compare_runs_one_action_after_the_cogroup(spark, job_ids):
+    """One grouped action reads the trailer counts and every score's
+    (tp, n): oie16_compare runs 4 Spark jobs (the cogroup's two inputs,
+    the scoring stage, the grouped read), with the exact path's
+    results."""
+    from openie_spark.eval.benchmark import oie16_compare
+
+    gold, pred = _oie16_frames(spark)
+    got, jobs = job_ids("oie16", lambda: oie16_compare(gold, pred))
+    assert len(jobs) <= 4, len(jobs)
+    assert got["correct_total"] == 71 and got["unmatched"] == 40
+    assert got["optimal"] == (0.469697, 0.43662, 0.452555)
+    assert got["auc"] == pytest.approx(0.16760454378356593, rel=1e-12)
+    precision, recall, thresholds = got["curve"]
+    assert len(thresholds) == 19 and thresholds == sorted(thresholds)
+    assert len(precision) == len(recall) == 20
+
+
+def test_oie16_quantized_path_values(spark):
+    """More distinct scores than max_thresholds: the scores snap down to
+    an approx-quantile grid (here of 2 values) before the curve."""
+    from openie_spark.eval.benchmark import oie16_compare
+
+    gold, pred = _oie16_frames(spark)
+    got = oie16_compare(gold, pred, max_thresholds=2)
+    assert got["correct_total"] == 71 and got["unmatched"] == 40
+    assert got["optimal"] == (0.462687, 0.43662, 0.449275)
+    assert got["auc"] == pytest.approx(0.1010090393104898, rel=1e-12)
+    precision, recall, thresholds = got["curve"]
+    assert thresholds == [0.03, 0.911]
+    assert precision == pytest.approx([0.4626865671641791, 0.0, 1.0], rel=1e-12)
+    assert recall == pytest.approx([0.43661971830985913, 0.0, 0.0], rel=1e-12)
+
+
+def test_oie16_summary_df_schema(spark):
+    """The one-row summary frame keeps the gate's schema (nullable
+    columns) and values."""
+    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+
+    from openie_spark.eval.benchmark import oie16_summary_df
+
+    df = oie16_summary_df(spark, {"auc": 0.5, "optimal": (0.1, 0.2, 0.3),
+                                  "correct_total": 3, "unmatched": 1})
+    assert df.schema == StructType(
+        [StructField(c, DoubleType()) for c in
+         ("auc", "optimal_precision", "optimal_recall", "optimal_f1")]
+        + [StructField(c, LongType()) for c in ("correct_total", "unmatched")])
+    assert [tuple(r) for r in df.collect()] == [(0.5, 0.1, 0.2, 0.3, 3, 1)]
+
+
 def test_carb_o2o_parity_vs_reference(spark, tmp_path):
     """carb_pr_curve(recall_strategy='o2o') + carb_sweep_summary vs the
     imported reference CaRB_compare(recall_strategy='o2o')."""

@@ -11,6 +11,7 @@ import sys
 import types
 
 import pytest
+from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
 from openie_spark.eval.carb import normalize_key
 from openie_spark.eval.matcher import binary_lenient_match, lenient_match
@@ -506,6 +507,40 @@ def test_carb_gold_only_and_pred_only_sentences(spark):
     # precision: only the gold-matched sentence's predictions count
     assert row.precision == 1.0
 
+
+def test_pr_curve_runs_one_grid_action(spark, job_ids):
+    """The exact grid comes from one distinct-limit action and the
+    threshold table is a local relation: building and collecting the
+    curve runs 7 Spark jobs (grid 2, the cogroup's two inputs 2, the
+    bracket sums 1, the result 2). The rows come in threshold order,
+    with the column types of the empty curve."""
+    from openie_spark.eval.carb import carb_pr_curve
+
+    gold = spark.createDataFrame(
+        [("A is B .", "is", ["A", "B"]), ("C was D .", "was", ["C", "D"]),
+         ("E is F .", "is", ["E", "F"])],
+        "sent string, pred string, args array<string>")
+    pred = spark.createDataFrame(
+        [("A is B .", "is", ["A", "B"], 0.9), ("A is B .", "is", ["A", "x"], 0.3),
+         ("C was D .", "was", ["C", "D"], 0.6), ("Z is Q .", "is", ["Z", "Q"], 0.1)],
+        "sent string, pred string, args array<string>, confidence double")
+
+    def build_and_collect():
+        curve = carb_pr_curve(gold, pred)
+        return curve, curve.collect()
+
+    (curve, got), jobs = job_ids("pr-curve", build_and_collect)
+    assert len(jobs) <= 7, len(jobs)
+    assert [(r.t, r.conf) for r in got] == [(0, 0.1), (1, 0.3), (2, 0.6), (3, 0.9)]
+    empty = carb_pr_curve(gold, pred.limit(0))
+    assert empty.collect() == []
+    assert empty.schema == StructType([
+        StructField("t", IntegerType()), *(StructField(c, DoubleType()) for c in
+                                           ("conf", "precision", "recall", "f1"))])
+    assert [(f.name, f.dataType) for f in curve.schema] == \
+        [(f.name, f.dataType) for f in empty.schema]
+
+
 def test_pr_curve_rejects_null_and_nan_confidence(spark):
     """A single malformed 'tab' line (NULL confidence) or a NaN must
     fail fast with a clear error, not a worker KeyError/TypeError."""
@@ -521,6 +556,15 @@ def test_pr_curve_rejects_null_and_nan_confidence(spark):
             "sent string, pred string, args array<string>, confidence double")
         with pytest.raises(ValueError, match="NULL/NaN confidence"):
             carb_pr_curve(gold, pred).collect()
+    # a NULL among more distinct confidences than max_thresholds: the
+    # grid probe reads only max_thresholds + 1 of them, and the full
+    # count still finds the NULL
+    pred = spark.createDataFrame(
+        [("A is B .", "is", ["A", "B"], c / 10) for c in range(1, 9)]
+        + [("A is B .", "is", ["A", "B"], None)],
+        "sent string, pred string, args array<string>, confidence double")
+    with pytest.raises(ValueError, match="1 prediction.*NULL/NaN confidence"):
+        carb_pr_curve(gold, pred, max_thresholds=2).collect()
 
 
 def test_pr_curve_bounded_thresholds_at_1e5_distinct_confs(spark):

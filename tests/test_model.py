@@ -182,6 +182,22 @@ def _content_hash(df):
     return len(lines), h.hexdigest()
 
 
+@pytest.mark.parametrize("backend", ["neural", "neural_fused"])
+def test_neural_plan_builds_without_spark_jobs(spark, job_ids, backend):
+    """Building a neural extraction plan runs no Spark job: no schema
+    inference on the documents read, and no partition-count probe below
+    segment_transcripts' shuffle (one would execute that shuffle stage
+    under AQE). The tagging starts from at least the session's default
+    parallelism."""
+    from openie_spark.operators.extract import extract_triples
+    from openie_spark.sources.transcripts import read_transcripts
+
+    plan, jobs = job_ids(f"plan-{backend}", lambda: extract_triples(
+        read_transcripts(spark, _SF0001), backend=backend))
+    assert jobs == []
+    assert plan.rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism
+
+
 def test_neural_staged_equals_fused_sf0001(spark):
     """backend='neural_fused' (B+C+D in one mapInPandas,
     model/infer.tag_joint_neural) must be ROW-IDENTICAL to the staged

@@ -25,19 +25,6 @@ def pipeline_out(pipeline_run):
     return pipe.output_dir, summary
 
 
-def _job_ids(spark, group: str, fn):
-    """(fn(), ids of the Spark jobs fn ran), fn run in job group ``group``."""
-    sc = spark.sparkContext
-    prev = sc.getLocalProperty("spark.jobGroup.id")
-    sc.setLocalProperty("spark.jobGroup.id", group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", prev)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()   # the tracker is fed async
-    return out, list(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_pipeline_summary_counts(pipeline_out):
     out, summary = pipeline_out
     assert summary["triples"] > 0
@@ -67,20 +54,20 @@ def test_held_tables_have_the_written_schema(spark, pipeline_run):
         assert pipe.tables[st.name].schema == written.schema, st.name
 
 
-def test_write_summary_runs_no_spark_job(spark, pipeline_run):
+def test_write_summary_runs_no_spark_job(pipeline_run, job_ids):
     """The summary's counts come from the run's manifests, not from
     count() queries over the stage tables."""
     import time
 
     pipe, summary = pipeline_run
-    again, jobs = _job_ids(spark, "summary-guard",
-                           lambda: pipe._write_summary(time.time(), "triples"))
+    again, jobs = job_ids("summary-guard",
+                          lambda: pipe._write_summary(time.time(), "triples"))
     assert jobs == []
     assert {k: again[k] for k in ("triples", "nodes", "edges", "relations")} == \
         {k: summary[k] for k in ("triples", "nodes", "edges", "relations")}
 
 
-def test_table_write_runs_only_the_write_jobs(spark, tmp_path):
+def test_table_write_runs_only_the_write_jobs(spark, tmp_path, job_ids):
     """ParquetTableIO.write returns the written table without a
     schema-inference job: it runs exactly the jobs of a plain
     ``df.write.parquet`` of the same frame."""
@@ -91,10 +78,10 @@ def test_table_write_runs_only_the_write_jobs(spark, tmp_path):
     df = spark.range(200).select(
         F.col("id"), (F.col("id") % 7).alias("k"),
         F.concat(F.lit("x"), F.col("id").cast("string")).alias("s")).repartition(3, "k")
-    _, plain = _job_ids(spark, "plain-write", lambda: df.write.parquet(str(tmp_path / "plain")))
+    _, plain = job_ids("plain-write", lambda: df.write.parquet(str(tmp_path / "plain")))
     io = ParquetTableIO(str(tmp_path))
-    cols, seam = _job_ids(spark, "seam-write",
-                          lambda: io.write(spark, df, "seam").columns)
+    cols, seam = job_ids("seam-write",
+                         lambda: io.write(spark, df, "seam").columns)
     assert plain and len(seam) == len(plain)
     assert cols == df.columns
 
@@ -213,7 +200,7 @@ def test_shared_lazy_table_is_built_once_under_contention(spark, monkeypatch, tm
     assert len(got) == 16 and all(g is got[0] for g in got)
 
 
-def test_run_runs_no_ungrouped_spark_job(spark, tmp_path):
+def test_run_runs_no_ungrouped_spark_job(spark, tmp_path, job_ids):
     """Every Spark job of a run, whichever stage thread submits it,
     carries the caller's job group."""
     from openie_spark.pipeline import KGPipeline
@@ -221,8 +208,8 @@ def test_run_runs_no_ungrouped_spark_job(spark, tmp_path):
     tracker = spark.sparkContext.statusTracker()
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
     before = set(tracker.getJobIdsForGroup(None))      # jobs without a group
-    _, jobs = _job_ids(spark, "run-guard",
-                       lambda: KGPipeline(spark, SF, str(tmp_path)).run(resume=False))
+    _, jobs = job_ids("run-guard",
+                      lambda: KGPipeline(spark, SF, str(tmp_path)).run(resume=False))
     assert jobs
     assert set(tracker.getJobIdsForGroup(None)) - before == set()
 
@@ -253,6 +240,52 @@ def test_null_conv_id_bucket_keeps_sql_min_max_range(spark, tmp_path):
     assert man["conv_id_range"] == ["conv-000001", "conv-000001"]
 
 
+def test_conv_ranges_may_meet_rule():
+    """run_incremental skips its conv-overlap join exactly when the two
+    manifests' conv_id ranges prove no shared conv_id."""
+    from openie_spark.pipeline import conv_ranges_may_meet
+
+    def man(r):
+        return {"conv_id_range": r}
+
+    lo, hi = man(["conv-000000", "conv-000009"]), man(["conv-000010", "conv-000019"])
+    assert not conv_ranges_may_meet(lo, hi)
+    assert not conv_ranges_may_meet(hi, lo)
+    assert conv_ranges_may_meet(lo, man(["conv-000009", "conv-000012"]))   # touching bound
+    assert conv_ranges_may_meet(man(["conv-000003", "conv-000004"]), lo)   # nested
+    for empty in (None, [None, None]):        # no rows, or NULL conv_ids only
+        assert not conv_ranges_may_meet(lo, man(empty))
+        assert not conv_ranges_may_meet(man(empty), lo)
+    # code-point order is UTF-8 byte order: "é" (U+00E9) sorts after "z"
+    assert not conv_ranges_may_meet(man(["a", "z"]), man(["é", "é"]))
+
+
+def test_read_transcripts_runs_no_job(spark, job_ids):
+    """Deriving transcripts from documents reads the two columns it uses
+    with a given schema: building the frame runs no Spark job, and its
+    rows are the DuckDB twin's."""
+    import duckdb
+    from pyspark.sql import functions as F
+
+    from openie_spark.sources.transcripts import TRANSCRIPTS_CTE_DUCKDB, read_transcripts
+
+    df, jobs = job_ids("transcripts-read", lambda: read_transcripts(spark, SF))
+    assert jobs == []
+    assert df.schema.simpleString() == (
+        "struct<conv_id:string,turn_idx:int,role:string,text:string,"
+        "tool:string,ts:timestamp>")
+    got = sorted(map(tuple, df.select(
+        "conv_id", "turn_idx", "role", "text", "tool",
+        F.date_format("ts", "yyyy-MM-dd HH:mm:ss")).collect()), key=repr)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{SF}/documents.parquet'")
+    want = sorted(con.execute(
+        f"WITH {TRANSCRIPTS_CTE_DUCKDB} SELECT conv_id, turn_idx, role, text, tool, "
+        "strftime(ts, '%Y-%m-%d %H:%M:%S') FROM transcripts").fetchall(), key=repr)
+    assert len(got) == len(want) > 0
+    assert got == want
+
+
 def test_model_version_pins_the_neural_fused_weights():
     """neural_fused runs the neural tagger weights, so its manifests
     pin their hash and a weights change invalidates its resume."""
@@ -272,7 +305,7 @@ def test_full_resume_skips_everything(spark, pipeline_out):
     assert s2["edges"] == summary["edges"]
 
 
-def test_full_resume_runs_no_spark_job(spark, pipeline_run):
+def test_full_resume_runs_no_spark_job(spark, pipeline_run, job_ids):
     """A fully resumed run reads every stage back with the schema its
     manifest records: no schema-inference job, and the held tables
     have the fresh run's schemas."""
@@ -280,7 +313,7 @@ def test_full_resume_runs_no_spark_job(spark, pipeline_run):
 
     fresh, _ = pipeline_run
     pipe = KGPipeline(spark, SF, fresh.output_dir)
-    summary, jobs = _job_ids(spark, "resume-guard", lambda: pipe.run(resume=True))
+    summary, jobs = job_ids("resume-guard", lambda: pipe.run(resume=True))
     assert all(st["resumed"] for st in summary["stages"].values())
     assert jobs == []
     for st in KG_STAGES:
