@@ -16,39 +16,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-_PKG_ZIP: str | None = None
-_SHIPPED: set[str] = set()
-
-
-def _ship_package(spark: SparkSession) -> None:
-    """Make openie_spark importable on executor Python workers
-    regardless of the driver's cwd/PYTHONPATH: pandas-UDF closures
-    reference the module by name, and a vanilla session launched from
-    another directory has no way to import it. addPyFile distributes a
-    zip and prepends it to every worker's sys.path."""
-    global _PKG_ZIP
-    import os
-    import tempfile
-    import zipfile
-
-    if _PKG_ZIP is None:
-        root = os.path.dirname(os.path.abspath(__file__))
-        zp = os.path.join(tempfile.mkdtemp(prefix="openie_spark_pkg"), "openie_spark.zip")
-        with zipfile.ZipFile(zp, "w") as z:
-            for dirpath, _, files in os.walk(os.path.join(root, "openie_spark")):
-                for f in files:
-                    # .txt rides along for package data (the WordPiece
-                    # vocab must reach zipimport-ed executor workers).
-                    if f.endswith((".py", ".txt")):
-                        full = os.path.join(dirpath, f)
-                        z.write(full, os.path.relpath(full, root))
-        _PKG_ZIP = zp
-    app = spark.sparkContext.applicationId
-    if app not in _SHIPPED:
-        spark.sparkContext.addPyFile(_PKG_ZIP)
-        _SHIPPED.add(app)
-
-
 def _tune(spark: SparkSession) -> SparkSession:
     """Driver may hand us a vanilla session; apply runtime-settable conf."""
     for k, v in {
@@ -64,7 +31,9 @@ def _tune(spark: SparkSession) -> SparkSession:
     # this works even on the driver's vanilla already-started session.
     for k in ("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS", "MKL_NUM_THREADS"):
         spark.sparkContext.environment.setdefault(k, "1")
-    _ship_package(spark)
+    from openie_spark.session import ship_package
+
+    ship_package(spark)
     return spark
 
 
@@ -175,7 +144,7 @@ def _q_triples_neural(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sides. The KG core tables come from the pipeline's own stage table
 # (pipeline.KG_STAGES); the others are the named builds below. Queries
 # that report a shared table's own build cost (triples_extract,
-# kg_edges, kg_comention, dp_winnow, dp_kmeans) stay un-memoized.
+# kg_edges, kg_comention) stay un-memoized.
 
 _shared_key: tuple | None = None
 _shared_tables: dict[str, DataFrame] = {}
@@ -235,16 +204,6 @@ def _half(parity: int):
     return lambda spark, sf_dir, tnorm: tnorm.where(_conv_parity() == parity)
 
 
-def _winnow_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct (doc_id, fp) winnowing fingerprints: dp_winnow_pairs
-    and dp_containment start from it, and the winnowing pass (md5 per
-    char-8-gram) is the dominant cost of each."""
-    from openie_spark.datapipe.textstats import winnow_fingerprints
-
-    return (winnow_fingerprints(_docs(spark, sf_dir))
-            .select("doc_id", "fp").distinct().localCheckpoint(eager=True))
-
-
 def _comention(spark: SparkSession, sf_dir: str, edges: DataFrame) -> DataFrame:
     """The co-mention pair table (a, b, n_convs) that truss,
     clustering, assoc Dice and weighted PageRank start from."""
@@ -287,7 +246,7 @@ def _carb_pred(spark: SparkSession, sf_dir: str, gold: DataFrame) -> DataFrame:
     """The deterministically degraded, varied-confidence prediction
     side the four degraded-eval queries consume; a projection of the
     gold side, so it keeps the sentence-bucket hash partitioning."""
-    from openie_spark.datapipe.hashing import md5h60
+    from openie_spark.functions.hashing import md5h60
 
     pred = (gold
             .withColumn("args", F.transform("args", lambda a: F.split(a, " ")[0]))
@@ -296,14 +255,6 @@ def _carb_pred(spark: SparkSession, sf_dir: str, gold: DataFrame) -> DataFrame:
             .persist())
     pred.count()
     return pred
-
-
-def _kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The k-means assignment table: a curation run clusters once and
-    every readout (semdedup, stats, diverse sample) reads it."""
-    from openie_spark.datapipe.cluster import kmeans_assign
-
-    return kmeans_assign(_emb(spark, sf_dir)).localCheckpoint(eager=True)
 
 
 @functools.cache
@@ -331,12 +282,10 @@ def shared_builds() -> dict:
         **{st.name: (st.upstream, _stage_build(st)) for st in KG_STAGES},
         "prior_triples_norm": (("triples_norm",), _half(0)),
         "incr_triples_norm": (("triples_norm",), _half(1)),
-        "winnow_fp": ((), _winnow_fp),
         "comention": (("edges",), _comention),
         "seed_ball": (("nodes", "edges"), _seed_ball),
         "carb_gold": (("triples",), _carb_gold),
         "carb_pred": (("carb_gold",), _carb_pred),
-        "kmeans": ((), _kmeans),
     }
     # the incremental tables the queries read, and what those read
     todo = ["incr_pairs", "incr_nodes", "incr_edges"]
@@ -632,15 +581,6 @@ def _q_kg_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     nodes = _shared(spark, sf_dir, "nodes")
     edges = _shared(spark, sf_dir, "edges")
     return negative_samples(nodes, edges)
-
-
-def _q_dp_bloom_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bloom-filter membership pre-filter with exact audit (planted
-    exact twins as ground truth): ≤m_bits broadcast bitmap, k-bit
-    probe join, one partial agg — the shuffle-free anti-join stand-in."""
-    from openie_spark.datapipe.decontam import bloom_flags, planted_exact
-
-    return bloom_flags(planted_exact(_docs(spark, sf_dir)))
 
 
 def _q_kg_mixing(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1056,15 +996,6 @@ def _q_kg_tool_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tool_sequences(read_transcripts(_tune(spark), sf_dir))
 
 
-def _q_dp_length_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Log2-binned document-length profile (token counts; empty docs
-    in bin 0) — the corpus shape report, <= 64 rows; map-only count
-    plus one tiny collapse."""
-    from openie_spark.datapipe.textstats import length_histogram
-
-    return length_histogram(_docs(spark, sf_dir))
-
-
 def _q_kg_kge_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Filtered-ranking KGE evaluation harness (Bordes 2013 protocol)
     over the graph's own split + negatives, scored with md5-integer
@@ -1149,464 +1080,6 @@ def _q_kg_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
                           ball=_shared(spark, sf_dir, "seed_ball"))
 
 
-# ------------------------------------------------- datapipe (documents)
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _tune(spark).read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _tune(spark).read.parquet(f"{sf_dir}/embeddings.parquet")
-
-
-def _q_dp_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from openie_spark.datapipe.dedup import exact_dedup_groups
-
-    return exact_dedup_groups(_docs(spark, sf_dir))
-
-
-def _q_dp_dup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Log2-binned exact-duplicate group-size profile — the dedup
-    audit readout (unique mass vs removable redundancy), <= 64 rows."""
-    from openie_spark.datapipe.dedup import dup_group_histogram
-
-    return dup_group_histogram(_docs(spark, sf_dir))
-
-
-def _q_dp_ngram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact all-pairs ground truth — quadratic by design, so the query
-    caps the corpus at a deterministic doc_id slice (the LSH paths
-    below run uncapped; this one exists to verify them)."""
-    from openie_spark.datapipe.dedup import NGRAM_CAP, ngram_jaccard_pairs, planted_docs
-
-    return ngram_jaccard_pairs(
-        planted_docs(_docs(spark, sf_dir).filter(F.col("doc_id") < NGRAM_CAP)))
-
-
-def _q_dp_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from openie_spark.datapipe.dedup import minhash_pairs_docs, planted_docs
-
-    return minhash_pairs_docs(planted_docs(_docs(spark, sf_dir)))
-
-
-def _q_dp_dedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dedup-stage quality audit (the kg_linking_eval twin on the
-    document axis): one-row recall of the minhash-LSH candidate path
-    against the exact all-pairs n-gram ground truth, both on the SAME
-    capped planted slice."""
-    from openie_spark.datapipe.dedup import (
-        NGRAM_CAP,
-        minhash_pairs_docs,
-        ngram_jaccard_pairs,
-        planted_docs,
-    )
-    from openie_spark.kg.linking import pair_generation_audit
-
-    capped = planted_docs(_docs(spark, sf_dir).filter(F.col("doc_id") < NGRAM_CAP))
-    capped = capped.localCheckpoint(eager=False)   # both generators share it
-    return pair_generation_audit(
-        ngram_jaccard_pairs(capped), minhash_pairs_docs(capped))
-
-
-def _q_dp_substr_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact duplicated substrings (Lee et al. 2022 ExactSubstr as
-    distributed gram-hash counting): maximal token spans whose every
-    10-token gram occurs >= 2 times in the planted corpus — one shuffle
-    on the gram hash, one on doc_id for the island merge."""
-    from openie_spark.datapipe.dedup import planted_docs, substr_dup_spans
-
-    return substr_dup_spans(planted_docs(_docs(spark, sf_dir)))
-
-
-def _q_dp_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from openie_spark.datapipe.dedup import planted_docs, simhash_docs
-
-    return simhash_docs(planted_docs(_docs(spark, sf_dir)))
-
-
-def _q_dp_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from openie_spark.datapipe.dedup import planted_docs, simhash_pairs
-
-    return simhash_pairs(planted_docs(_docs(spark, sf_dir)))
-
-
-def _q_dp_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from openie_spark.datapipe.textstats import doc_stats
-
-    return doc_stats(_docs(spark, sf_dir))
-
-
-def _q_dp_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from openie_spark.datapipe.textstats import lang_id
-
-    return lang_id(_docs(spark, sf_dir))
-
-
-def _q_dp_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from openie_spark.datapipe.textstats import token_count_bpe
-
-    return token_count_bpe(_docs(spark, sf_dir))
-
-
-def _q_dp_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from openie_spark.datapipe.textstats import fingerprint
-
-    return fingerprint(_docs(spark, sf_dir))
-
-
-def _q_dp_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winnowing fingerprint selection (SIGMOD'03): per-window minimum
-    k-gram hash, rightmost on ties — map-only, zero shuffles."""
-    from openie_spark.datapipe.textstats import winnow_fingerprints
-
-    return winnow_fingerprints(_docs(spark, sf_dir))
-
-
-def _q_dp_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Substring-level near-dup pairs from shared winnow fingerprints
-    (boilerplate buckets dropped whole; exact-ppm set Jaccard)."""
-    from openie_spark.datapipe.dedup import winnow_pairs
-
-    return winnow_pairs(_docs(spark, sf_dir),
-                        fp=_shared(spark, sf_dir, "winnow_fp"))
-
-
-def _q_dp_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Asymmetric containment pairs over winnow fingerprint sets —
-    the quote/excerpt signal Jaccard misses (both directional ppm
-    ratios, either-side threshold)."""
-    from openie_spark.datapipe.dedup import containment_pairs
-
-    return containment_pairs(_docs(spark, sf_dir),
-                             fp=_shared(spark, sf_dir, "winnow_fp"))
-
-
-def _q_dp_bigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-bigram likelihood quality score per document (count-based
-    LM-perplexity stand-in; exact BIGINT mean bigram frequency)."""
-    from openie_spark.datapipe.textstats import bigram_likelihood
-
-    return bigram_likelihood(_docs(spark, sf_dir))
-
-
-def _q_dp_bpe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE tokenizer-training pair counts: word-frequency collapse
-    then vocab-sized pair explode — top pairs by corpus weight."""
-    from openie_spark.datapipe.textstats import bpe_pair_counts
-
-    return bpe_pair_counts(_docs(spark, sf_dir))
-
-
-def _q_dp_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full BPE merge-loop training (Sennrich et al. 2016): 12 merges
-    over the corpus-weighted vocabulary, each round one vocab-scale
-    pair count + a one-row argmax collect + a JVM-side fold merge.
-    Oracle-backed: the fixed round count unrolls to 12 argmax+replace
-    CTE rounds in DuckDB (plans.datapipe_oracles.bpe_merges_sql — the
-    double-space string representation makes leftmost non-overlap
-    merging exactly SQL replace()); also value-pinned by pytest parity
-    vs an independent transcription of the public algorithm
-    (tests/test_datapipe.py)."""
-    from openie_spark.datapipe.textstats import bpe_learn_merges
-
-    return bpe_learn_merges(_docs(spark, sf_dir))
-
-
-def _q_dp_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-lang token-count quantile sketch: bottom-k-by-hash uniform
-    sample + nearest-rank integer quantiles, exact n_docs/min/max."""
-    from openie_spark.datapipe.textstats import sampled_quantiles
-
-    return sampled_quantiles(_docs(spark, sf_dir))
-
-
-def _q_dp_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HyperLogLog register sketch: per-lang distinct word-3-gram
-    estimate with exact-integer harmonic sums (no transcendental in
-    the emitted numbers — engine-portable)."""
-    from openie_spark.datapipe.textstats import hll_distinct
-
-    return hll_distinct(_docs(spark, sf_dir))
-
-
-def _q_dp_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Adjacent-word collocations ranked by exact-integer Dice ppm
-    (2*n_xy/(n_x+n_y)); min-count floor, deterministic top-k."""
-    from openie_spark.datapipe.textstats import collocations
-
-    return collocations(_docs(spark, sf_dir))
-
-
-def _q_dp_cms_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-Min-sketch heavy hitters: top-k words by min-of-rows
-    sketch estimate with the exact count + one-sided over_ppm audit;
-    ONE corpus shuffle (the word collapse), counter table bounded at
-    depth*width rows. Oracle recomputes the full sketch in SQL."""
-    from openie_spark.datapipe.textstats import cms_heavy_hitters
-
-    return cms_heavy_hitters(_docs(spark, sf_dir))
-
-
-def _q_dp_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KMV cardinality sketch: estimated distinct word-3-gram count
-    per language from the k smallest md5 hashes (salted two-level
-    top-k; exact below k). Oracle recomputes the full sketch in SQL."""
-    from openie_spark.datapipe.textstats import kmv_distinct
-
-    return kmv_distinct(_docs(spark, sf_dir))
-
-
-def _q_dp_curated(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full curation funnel composed in one plan (exact-dedup
-    keeper ∧ quality threshold ∧ mixing sample) with auditable
-    per-stage flags. Oracle composes the three stage oracles."""
-    from openie_spark.datapipe.quality import curated_corpus
-
-    return curated_corpus(_docs(spark, sf_dir))
-
-
-def _q_dp_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Greedy sequential sequence packing (concatenate-then-chunk) in
-    a deterministic md5-shuffled order; pack assignment = where the doc
-    STARTS in the token stream. Oracle: one SQL window cumsum."""
-    from openie_spark.datapipe.quality import pack_sequences
-
-    return pack_sequences(_docs(spark, sf_dir))
-
-
-def _q_dp_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic stratified data-mixing sample: per-language
-    md5-ticket bernoulli keep (downweight 'en', keep the rest) — no
-    RNG state, same selection at any parallelism. Oracle recomputes
-    the identical tickets in SQL."""
-    from openie_spark.datapipe.quality import stratified_sample
-
-    return stratified_sample(_docs(spark, sf_dir))
-
-
-def _q_dp_neardup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-duplicate CLUSTERS over the planted corpus: connected
-    components (kg.canon machinery) over minhash-LSH verified pairs,
-    keeper = min member. Oracle: recursive reachability CTE over the
-    recomputed pair graph."""
-    from openie_spark.datapipe.dedup import neardup_groups, planted_docs
-
-    return neardup_groups(planted_docs(_docs(spark, sf_dir)))
-
-
-def _q_dp_quality_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-paper quality/repetition signals per document (word-shape
-    rules + top-2-gram char fraction + duplicate-5-gram instance
-    fraction) with the pass/fail flag. Oracle recomputes the exact-ppm
-    formulas and the n-gram aggregations in SQL."""
-    from openie_spark.datapipe.quality import gopher_signals
-
-    return gopher_signals(_docs(spark, sf_dir))
-
-
-def _q_dp_tfidf_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-3 corpus TF-IDF terms per document (exact-integer rational
-    idf — see quality.py for why not ln). Oracle runs the identical
-    two-step integer division in DuckDB."""
-    from openie_spark.datapipe.quality import tfidf_top_terms
-
-    return tfidf_top_terms(_docs(spark, sf_dir))
-
-
-def _q_dp_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Email/URL/phone counting + redaction over documents with
-    deterministically planted PII (doc_id-derived twins, same pattern
-    as the dedup family's planted_docs)."""
-    from openie_spark.datapipe.quality import pii_scrub, planted_pii
-
-    return pii_scrub(planted_pii(_docs(spark, sf_dir)))
-
-
-def _q_dp_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-window chunking with overlap (size 32 / stride 24): the
-    map-only, shuffle-free sharding step before embedding a corpus.
-    Zero-token docs emit nothing; the last chunk may be short."""
-    from openie_spark.datapipe.quality import chunk_documents
-
-    return chunk_documents(_docs(spark, sf_dir))
-
-
-def _q_dp_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus composition report (per lang x source doc/token counts
-    and exact-ppm shares): one partial-agg groupBy to stratum
-    granularity, share window over the tiny aggregate only."""
-    from openie_spark.datapipe.quality import corpus_mixture
-
-    return corpus_mixture(_docs(spark, sf_dir))
-
-
-def _q_dp_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination: per-train-doc distinct word-8-gram
-    overlap against a deterministic md5-ticket eval slice; the planted
-    duplicate docs crossing the split are the contamination ground
-    truth. Gram hashes (8-byte keys) are what shuffles, never gram
-    strings; the eval side is benchmark-sized -> AQE broadcast."""
-    from openie_spark.datapipe.decontam import decontaminate
-
-    return decontaminate(_docs(spark, sf_dir))
-
-
-def _q_dp_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sub-document boilerplate scrub (RefinedWeb/CCNet-style): word
-    8-grams in >= BOILER_MIN_DOCS distinct docs are boilerplate; a
-    fixed banner planted on every 5th doc is the ground truth. Shares
-    decontam's gram plan — one doc_id shuffle for the gram build, one
-    partial-aggregated count over 8-byte gram hashes (map-side combine
-    absorbs exactly the hot-gram skew the operator exists to find)."""
-    from openie_spark.datapipe.decontam import boilerplate_stats, planted_boilerplate
-
-    return boilerplate_stats(planted_boilerplate(_docs(spark, sf_dir)))
-
-
-def _q_dp_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from openie_spark.datapipe.similarity import brute_topk_sql
-
-    return brute_topk_sql(_emb(spark, sf_dir))
-
-
-def _q_dp_hash_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Feature-hashing document vectors (hashing trick): sparse
-    (doc_id, dim_idx, val) signed-count rows — deterministic text
-    featurization feeding the vector ops with no trained model; one
-    (doc_id, bucket) partial-agg shuffle."""
-    from openie_spark.datapipe.cluster import hash_doc_vectors
-
-    return hash_doc_vectors(_docs(spark, sf_dir))
-
-
-def _q_dp_diverse_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Diversity sampling from the k-means buckets (SemDeDup-style
-    selection): up to DIVERSE_PER_CLUSTER md5-ticket picks from EVERY
-    semantic bucket — an even, reproducible slice of the embedding
-    space instead of a front-to-back truncation. Reads the shared
-    assignment table; one cluster-partitioned window."""
-    from openie_spark.datapipe.cluster import cluster_diverse_sample
-
-    return cluster_diverse_sample(
-        _emb(spark, sf_dir), assignment=_shared(spark, sf_dir, "kmeans"))
-
-
-def _q_dp_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Integer-exact Lloyd k-means over the embedding table (SemDeDup-
-    style semantic bucketing for curation): fixed-point quantization,
-    md5-bucket seeds, 4 fixed rounds; map-only assignment with literal
-    centroids + one K x dim partial-agg shuffle per round."""
-    from openie_spark.datapipe.cluster import kmeans_assign
-
-    return kmeans_assign(_emb(spark, sf_dir))
-
-
-def _q_dp_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup within-bucket near-dedup (Abbas et al. 2023): close
-    pairs inside each k-means bucket with the farther-from-centroid
-    member marked for dropping — reads the shared assignment
-    table."""
-    from openie_spark.datapipe.cluster import semdedup_pairs
-
-    return semdedup_pairs(
-        _emb(spark, sf_dir), assignment=_shared(spark, sf_dir, "kmeans"))
-
-
-def _q_dp_kmeans_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-cluster curation readout for the k-means buckets: size,
-    integer inertia, and the majority ``label`` with support — the
-    purity signal deciding whether semantic buckets track the
-    taxonomy. Reads the shared assignment table (cluster once, roll
-    up many — the warehouse pattern)."""
-    from openie_spark.datapipe.cluster import kmeans_stats
-
-    return kmeans_stats(_emb(spark, sf_dir),
-                        assignment=_shared(spark, sf_dir, "kmeans"))
-
-
-def _q_dp_embedding_topk_np(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Numpy top-k (mapInPandas over broadcast corpus, gated on a
-    corpus-size check) — row-identical to dp_embedding_topk, so it
-    shares the brute-force SQL oracle.
-
-    The former round-boundary risk is closed: the kernel now folds
-    dims sequentially in _dot_fixed's exact float64 operation order
-    and rounds HALF_UP (copysign/floor(+0.5)), so its cosines are
-    bit-identical to the SQL path and the oracle at ANY sf — no
-    tolerance needed. Zero-norm embeddings (NULL units from
-    with_unit's guard; all-NaN units in the oracle's native math) are
-    excluded on both paths and in the oracle; under ANSI mode the
-    unguarded divide would otherwise abort the job on one bad vector."""
-    from openie_spark.datapipe.similarity import brute_topk_np
-
-    return brute_topk_np(_emb(spark, sf_dir))
-
-
-def _q_dp_embedding_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF coarse-quantized ANN top-k (md5-sampled deterministic
-    centroids, argmax cell assignment, nprobe probing, exact
-    rescoring) — the whole structure is DuckDB-recomputable
-    (ivf_topk_sql), so unlike the sign-LSH variant this approximate
-    path gets the full hash check."""
-    from openie_spark.datapipe.similarity import ivf_topk
-
-    return ivf_topk(_emb(spark, sf_dir))
-
-
-def _q_dp_embedding_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVFPQ ANN top-k: IVF cells bound candidates, product-
-    quantization codes rank them with an ids+codes-only shuffle; full
-    vectors re-attach only for the bounded exact-rescore shortlist.
-    md5-deterministic codebooks make it fully DuckDB-recomputable."""
-    from openie_spark.datapipe.similarity import ivfpq_topk
-
-    return ivfpq_topk(_emb(spark, sf_dir))
-
-
-def _q_dp_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sign-LSH bucketed ANN over planted twins — full DuckDB oracle
-    (lsh_topk_sql recomputes planes → sketches → buckets → rescore),
-    hash-checked; recall vs brute force additionally pinned in tests."""
-    from openie_spark.datapipe.similarity import lsh_topk, planted_embeddings
-
-    return lsh_topk(planted_embeddings(_emb(spark, sf_dir)), k=1, query_mod=10)
-
-
-def _q_dp_embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cosine near-dup pairs via sign-LSH candidate buckets + exact
-    rescoring (the 100 TB shape — no all-pairs cross join); the oracle
-    recomputes the identical md5-deterministic sketches."""
-    from openie_spark.datapipe.similarity import embedding_pairs, planted_embeddings
-
-    return embedding_pairs(planted_embeddings(_emb(spark, sf_dir)))
-
-
-def _q_dp_embedding_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semantic near-dup CLUSTERS over the sign-LSH pair graph with
-    keeper selection (min vec_id) — the embedding-space twin of
-    dp_neardup_groups; every planted twin collapses into a 2-group."""
-    from openie_spark.datapipe.similarity import embedding_groups, planted_embeddings
-
-    return embedding_groups(planted_embeddings(_emb(spark, sf_dir)))
-
-
-def _q_dp_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Byte-histogram featurizer over opaque media blobs (mapInPandas),
-    exploded to scalar (media_id, kind, n_bytes, bin_idx, n) rows so
-    the result is canonicalizable and DuckDB-checkable (the payloads
-    are printable-ASCII utf-8, so the oracle recomputes the byte
-    histogram from code points)."""
-    from openie_spark.datapipe.multimodal import derive_media, media_features_flat
-
-    return media_features_flat(derive_media(_docs(spark, sf_dir)))
-
-
-def _q_dp_media_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from openie_spark.datapipe.multimodal import derive_media, frame_sample
-
-    return frame_sample(derive_media(_docs(spark, sf_dir)))
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         "transcripts_derive": _q_transcripts,
@@ -1680,8 +1153,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_tool_stats": _q_kg_tool_stats,
         "kg_tool_sequences": _q_kg_tool_sequences,
         "kg_alias_hist": _q_kg_alias_hist,
-        "dp_length_hist": _q_dp_length_hist,
-        "dp_dedup_eval": _q_dp_dedup_eval,
         "kg_salsa": _q_kg_salsa,
         "kg_degree_hist": _q_kg_degree_hist,
         "kg_conv_neardup": _q_kg_conv_neardup,
@@ -1693,59 +1164,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_reply_latency": _q_kg_reply_latency,
         "kg_summary": _q_kg_summary,
         "turn_text_invariant": _q_turn_invariant,
-        "dp_exact_dedup": _q_dp_exact_dedup,
-        "dp_dup_stats": _q_dp_dup_stats,
-        "dp_ngram_pairs": _q_dp_ngram_pairs,
-        "dp_minhash_pairs": _q_dp_minhash_pairs,
-        "dp_substr_spans": _q_dp_substr_spans,
-        "dp_simhash": _q_dp_simhash,
-        "dp_simhash_pairs": _q_dp_simhash_pairs,
-        "dp_doc_stats": _q_dp_doc_stats,
-        "dp_lang_id": _q_dp_lang_id,
-        "dp_token_count": _q_dp_token_count,
-        "dp_fingerprint": _q_dp_fingerprint,
-        "dp_winnow": _q_dp_winnow,
-        "dp_winnow_pairs": _q_dp_winnow_pairs,
-        "dp_containment": _q_dp_containment,
-        "dp_bigram_score": _q_dp_bigram_score,
-        "dp_bpe_pairs": _q_dp_bpe_pairs,
-        "dp_bpe_merges": _q_dp_bpe_merges,
-        "dp_kmv_distinct": _q_dp_kmv_distinct,
-        "dp_hll_distinct": _q_dp_hll_distinct,
-        "dp_cms_topk": _q_dp_cms_topk,
-        "dp_quantiles": _q_dp_quantiles,
-        "dp_collocations": _q_dp_collocations,
-        "dp_sample": _q_dp_sample,
-        "dp_pack": _q_dp_pack,
-        "dp_curated": _q_dp_curated,
-        "dp_neardup_groups": _q_dp_neardup_groups,
-        "dp_quality_gopher": _q_dp_quality_gopher,
-        "dp_tfidf_terms": _q_dp_tfidf_terms,
-        "dp_pii_scrub": _q_dp_pii_scrub,
-        "dp_decontam": _q_dp_decontam,
-        "dp_boilerplate": _q_dp_boilerplate,
-        "dp_chunks": _q_dp_chunks,
-        "dp_mixture": _q_dp_mixture,
-        "dp_embedding_topk": _q_dp_embedding_topk,
-        "dp_embedding_topk_np": _q_dp_embedding_topk_np,
-        "dp_hash_embed": _q_dp_hash_embed,
-        "dp_kmeans": _q_dp_kmeans,
-        "dp_diverse_sample": _q_dp_diverse_sample,
-        "dp_kmeans_stats": _q_dp_kmeans_stats,
-        "dp_semdedup": _q_dp_semdedup,
-        "dp_embedding_ivf": _q_dp_embedding_ivf,
-        "dp_embedding_ivfpq": _q_dp_embedding_ivfpq,
-        "dp_embedding_lsh": _q_dp_embedding_lsh,
-        "dp_embedding_pairs": _q_dp_embedding_pairs,
-        "dp_embedding_groups": _q_dp_embedding_groups,
-        "dp_media_features": _q_dp_media_features,
-        "dp_media_frames": _q_dp_media_frames,
-        "dp_bloom_flags": _q_dp_bloom_flags,
     }
 
 
 def oracle_sql() -> dict[str, str]:
-    from openie_spark.plans import datapipe_oracles as dp
     from openie_spark.plans import oracles as o
 
     return {
@@ -1815,11 +1237,9 @@ def oracle_sql() -> dict[str, str]:
         "kg_tool_stats": o.kg_tool_stats_sql(),
         "kg_tool_sequences": o.kg_tool_sequences_sql(),
         "kg_alias_hist": o.kg_alias_hist_sql(),
-        "dp_length_hist": dp.length_histogram_sql(),
-        "dp_dedup_eval": dp.dedup_eval_sql(),
         "kg_salsa": o.kg_salsa_sql(),
         "kg_degree_hist": o.kg_degree_hist_sql(),
-        "kg_conv_neardup": dp.conv_minhash_pairs_sql(),
+        "kg_conv_neardup": o.conv_minhash_pairs_sql(),
         "kg_walks": o.kg_walks_sql(),
         "kg_walk_pairs": o.kg_walk_pairs_sql(),
         "kg_edge_split": o.kg_edge_split_sql(),
@@ -1828,52 +1248,4 @@ def oracle_sql() -> dict[str, str]:
         "kg_reply_latency": o.kg_reply_latency_sql(),
         "kg_summary": o.kg_summary_sql(),
         "turn_text_invariant": o.turn_invariant_sql(),
-        "dp_exact_dedup": dp.exact_dedup_sql(),
-        "dp_dup_stats": dp.dup_group_histogram_sql(),
-        "dp_ngram_pairs": dp.ngram_pairs_sql(),
-        "dp_minhash_pairs": dp.minhash_pairs_sql(),
-        "dp_substr_spans": dp.substr_spans_sql(),
-        "dp_simhash": dp.simhash_sql(),
-        "dp_simhash_pairs": dp.simhash_pairs_sql(),
-        "dp_doc_stats": dp.doc_stats_sql(),
-        "dp_lang_id": dp.lang_id_sql(),
-        "dp_token_count": dp.token_count_sql(),
-        "dp_fingerprint": dp.fingerprint_sql(),
-        "dp_winnow": dp.winnow_sql(),
-        "dp_winnow_pairs": dp.winnow_pairs_sql(),
-        "dp_containment": dp.containment_pairs_sql(),
-        "dp_bigram_score": dp.bigram_likelihood_sql(),
-        "dp_bpe_pairs": dp.bpe_pairs_sql(),
-        "dp_bpe_merges": dp.bpe_merges_sql(),
-        "dp_kmv_distinct": dp.kmv_distinct_sql(),
-        "dp_hll_distinct": dp.hll_distinct_sql(),
-        "dp_cms_topk": dp.cms_heavy_hitters_sql(),
-        "dp_quantiles": dp.sampled_quantiles_sql(),
-        "dp_collocations": dp.collocations_sql(),
-        "dp_sample": dp.stratified_sample_sql(),
-        "dp_pack": dp.pack_sequences_sql(),
-        "dp_curated": dp.curated_corpus_sql(),
-        "dp_neardup_groups": dp.neardup_groups_sql(),
-        "dp_quality_gopher": dp.gopher_signals_sql(),
-        "dp_tfidf_terms": dp.tfidf_top_terms_sql(),
-        "dp_pii_scrub": dp.pii_scrub_sql(),
-        "dp_decontam": dp.decontaminate_sql(),
-        "dp_boilerplate": dp.boilerplate_sql(),
-        "dp_chunks": dp.chunk_documents_sql(),
-        "dp_mixture": dp.corpus_mixture_sql(),
-        "dp_embedding_topk": dp.brute_topk_sql_oracle(),
-        "dp_embedding_topk_np": dp.brute_topk_sql_oracle(),
-        "dp_hash_embed": dp.hash_embed_sql(),
-        "dp_kmeans": dp.kmeans_sql(),
-        "dp_diverse_sample": dp.cluster_diverse_sample_sql(),
-        "dp_kmeans_stats": dp.kmeans_stats_sql(),
-        "dp_semdedup": dp.semdedup_sql(),
-        "dp_embedding_ivf": dp.ivf_topk_sql(),
-        "dp_embedding_ivfpq": dp.ivfpq_topk_sql(),
-        "dp_embedding_lsh": dp.lsh_topk_sql(),
-        "dp_embedding_pairs": dp.embedding_pairs_sql(),
-        "dp_embedding_groups": dp.embedding_groups_sql(),
-        "dp_media_features": dp.media_features_sql(),
-        "dp_media_frames": dp.media_frames_sql(),
-        "dp_bloom_flags": dp.bloom_flags_sql(),
     }

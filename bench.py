@@ -7,8 +7,8 @@ back-to-back runs (plus the min, reported separately): this box's
 throughput drifts ±10-30% between sessions (BENCH/BASELINE.md
 repeatability notes), so single runs are not comparable across rounds.
 
-The shared tables consumed by the carb, kg and datapipe query
-families (``__spark_entry__.shared_builds``) are materialized ONCE
+The shared tables consumed by the carb and kg query families
+(``__spark_entry__.shared_builds``) are materialized ONCE
 before the timed queries; ``shared_tables_sec`` gives each table's own
 build seconds and ``shared_materialization_sec`` their sum.
 

@@ -1,4 +1,13 @@
-"""Engine-portable hash/shingle column builders (see package doc)."""
+"""Engine-portable hash/shingle column builders.
+
+Every hash that feeds a correctness-checked result is the 60-bit
+md5-prefix (``md5h60``): bit-identical in Spark (conv(substr(md5 …)))
+and DuckDB (CAST('0x'||substr(md5 …))), so even the minhash-LSH band
+structures of entity linking and conversation near-dup are verified
+against the SQL oracles, not just spot-tested. xxhash64 (faster,
+JVM-side) is reserved for purely internal keys (salts, shuffles) where
+cross-engine equality does not matter.
+"""
 
 from __future__ import annotations
 

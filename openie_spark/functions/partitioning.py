@@ -16,11 +16,7 @@ from pyspark.sql import DataFrame
 
 def spread(df: DataFrame, *cols: str) -> DataFrame:
     """Repartition up to the session default parallelism when the
-    plan's current partitioning is narrower; identity otherwise.
-    Streaming plans pass through untouched (micro-batch partitioning
-    is governed by maxFilesPerTrigger / source splits)."""
-    if df.isStreaming:
-        return df
+    plan's current partitioning is narrower; identity otherwise."""
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
         return df

@@ -469,7 +469,7 @@ def negative_samples(nodes: DataFrame, edges: DataFrame,
     positives at all, deterministic at any parallelism. Raise
     n_buckets for sample diversity; the table stays broadcast-sized
     up to millions of buckets."""
-    from openie_spark.datapipe.hashing import md5h60
+    from openie_spark.functions.hashing import md5h60
 
     reps = (
         nodes.select("entity_id")
@@ -618,7 +618,7 @@ def export_graphml(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     Scale shape: map-only projections over nodes plus one distinct()
     on the relation key — identical cost profile to export_ntriples.
     """
-    from openie_spark.datapipe.hashing import md5h60
+    from openie_spark.functions.hashing import md5h60
 
     spark = nodes.sparkSession
     header = spark.createDataFrame(
@@ -777,7 +777,7 @@ def graph_integrity(nodes: DataFrame, edges: DataFrame,
 def seed_entities(nodes: DataFrame, seed_mod: int = KHOP_SEED_MOD) -> DataFrame:
     """Deterministic md5-ticket seed slice of the entity set (the
     engine-portable stand-in for a user-supplied seed list)."""
-    from openie_spark.datapipe.hashing import md5h60
+    from openie_spark.functions.hashing import md5h60
 
     return nodes.select("entity_id").where(
         md5h60(F.concat(F.lit(f"{KHOP_SALT}#"), F.col("entity_id")))
@@ -937,7 +937,7 @@ def seed_pair_distances(nodes: DataFrame, edges: DataFrame,
     seed restriction is a map-only FILTER on the ball's entity_id
     column (no join at all; every reached entity is in nodes by
     construction); no BFS of its own when ``ball`` is passed."""
-    from openie_spark.datapipe.hashing import md5h60
+    from openie_spark.functions.hashing import md5h60
 
     dist = _seed_ball(nodes, edges, k, seed_mod, ball)
     return (
@@ -1071,7 +1071,7 @@ def edge_split(edges: DataFrame) -> DataFrame:
     and vocab-scale; AQE broadcasts them when small, hash-joins when
     not). No driver-side state.
     """
-    from openie_spark.datapipe.hashing import md5h60
+    from openie_spark.functions.hashing import md5h60
 
     t = (
         edges.select("src_id", "pred", "dst_id").distinct()
@@ -1343,7 +1343,7 @@ def hash_walks(nodes: DataFrame, edges: DataFrame,
     partition. ``length`` shuffles total; frontier localCheckpointed
     between steps.
     """
-    from openie_spark.datapipe.hashing import md5h60
+    from openie_spark.functions.hashing import md5h60
 
     und = undirected_edges(edges)
     sym = und.unionAll(
@@ -2061,7 +2061,7 @@ def _kge_comp(kind: str, ident, d: int) -> F.Column:
     """One embedding component in [-1000, 1000]: md5-derived, so both
     engines (and any two cluster runs) compute the identical vector
     with no stored model state."""
-    from openie_spark.datapipe.hashing import md5h60
+    from openie_spark.functions.hashing import md5h60
 
     return (md5h60(F.concat(F.lit(f"{KGE_SALT}#{kind}#"), ident,
                             F.lit(f"#{d}"))) % 2001 - 1000)

@@ -54,9 +54,9 @@ def _cc_driver(spark, pair_rows) -> DataFrame:
         if r not in comp_min or v < comp_min[r]:
             comp_min[r] = v
     # an Arrow table becomes a local relation: no Python RDD pickles
-    # the rows, and building the frame runs no Spark job. Vertices may
-    # be any scalar (the dedup callers pass long ids): the cast gives
-    # their string form, as the schema's string columns always did.
+    # the rows, and building the frame runs no Spark job. The cast
+    # keeps both columns string-typed when there are no pairs (Arrow
+    # types an empty list as null).
     norms = list(parent)
     return spark.createDataFrame(pa.table({
         "norm": pa.array(norms).cast(pa.string()),

@@ -24,6 +24,23 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from openie_spark.functions.hashing import (
+    band_hashes_md5,
+    minhash_sig_md5,
+    tokens_of,
+    word_ngrams,
+)
+from openie_spark.functions.partitioning import spread
+
+# conversation near-dup: word-3-gram minhash-LSH, 8 bands x 2 rows
+# (threshold ≈ (1/8)^(1/2) ≈ 0.35 — high recall at j ≥ 0.5), verified
+# at exact Jaccard ≥ DOC_JACCARD; the planted twin of a conversation
+# drops every PERTURB_DROPth token
+DOC_BANDS = 8
+DOC_ROWS = 2
+DOC_JACCARD = 0.5
+PERTURB_DROP = 15
+
 # a turn sharing under 40% of its distinct tokens with its predecessor
 # starts a new segment (picked against the sandbox corpus where
 # adjacent-turn overlap centers ~60%; real deployments tune per corpus)
@@ -159,20 +176,11 @@ def conv_documents(transcripts: DataFrame) -> DataFrame:
 
 def conv_neardup_pairs(transcripts: DataFrame) -> DataFrame:
     """Near-duplicate CONVERSATION pairs -> (a, b, jaccard): the
-    turn-flattened conversations (plus deterministic perturbed twins
-    as planted ground truth, same recipe as dedup.planted_docs) run
-    through the standard minhash-LSH + exact-Jaccard-verify pair path.
-
-    Scale shape is exactly minhash_pairs_docs' (signature table
-    checkpointed, ids-only band self-join, shingles re-attached for
-    the verify) — the only addition is the one conv_id groupBy that
-    builds the conversation documents."""
-    from openie_spark.datapipe.dedup import (
-        PERTURB_DROP,
-        minhash_pairs_docs,
-    )
-    from openie_spark.datapipe.hashing import tokens_of
-
+    turn-flattened conversations plus deterministic perturbed twins
+    (every PERTURB_DROPth token dropped; id ``conv_id~twin``) as
+    planted ground truth, through minhash_pairs_docs. The only step of
+    its own is the one conv_id groupBy that builds the conversation
+    documents."""
     conv = conv_documents(transcripts)
     toks = tokens_of(F.col("text"))
     twins = conv.select(
@@ -184,14 +192,108 @@ def conv_neardup_pairs(transcripts: DataFrame) -> DataFrame:
     return minhash_pairs_docs(conv.unionByName(twins))
 
 
+def minhash_pairs_docs(docs: DataFrame) -> DataFrame:
+    """(doc_id, text) -> (a, b, jaccard): minhash-LSH candidates
+    verified with exact word-3-gram Jaccard ≥ DOC_JACCARD, a < b.
+    Signature and band hashes are md5h60-based, so the DuckDB twin
+    (plans/oracles.conv_minhash_pairs_sql) recomputes the full LSH
+    structure.
+
+    Plan shape (scale-deliberate): the md5-heavy signature projection
+    runs ONCE per doc behind an exchange barrier (spread = full-core
+    parallelism AND no projection collapse into the 8-way band
+    explode); the band self-join carries only (doc_id, band hash) —
+    candidate (a, b) pairs dedup WITHOUT the shingle arrays in the
+    shuffle, and shingles re-attach afterwards by doc_id join for the
+    exact-Jaccard verify.
+
+    Exact-duplicate collapse (semantics-preserving): byte-identical
+    texts share the full signature (every band collides) and score
+    jaccard 1.0, so the LSH + verify runs once per DISTINCT text and
+    members fan back in by id join afterwards — identical output, but
+    the expensive verify stage is bounded by the distinct corpus.
+    Without this, a corpus where popular conversations repeat m times
+    pays m² shingle-array verifies per duplicate group (measured 703s
+    vs ~10s on a 10x replica with 10-copy groups)."""
+    # group key = (text IS NULL, md5(text)) as one string: md5 is 32
+    # hex digits, so the NULL marker collides with no text at all
+    keyed = spread(docs, "doc_id").select(
+        "doc_id", "text",
+        F.coalesce(F.md5(F.col("text")), F.lit("NULL")).alias("gkey"),
+    ).localCheckpoint(eager=False)     # feeds reps AND the member map
+    reps = (
+        keyed.groupBy("gkey")
+        .agg(F.min("doc_id").alias("doc_id"),
+             F.min("text").alias("text"))   # constant within the group
+    )
+    mem = (
+        keyed.select("doc_id", "gkey")
+        .join(reps.select("gkey", F.col("doc_id").alias("rep")), "gkey")
+        .select("doc_id", "rep")
+        .localCheckpoint(eager=False)      # feeds three fan-out joins
+    )
+
+    # both tables materialized once: sh feeds the signature AND the two
+    # verify joins; banded feeds both sides of the self-join (without
+    # the checkpoint the 16-slot md5 projection is evaluated twice per
+    # doc — the same fix kg exact_pairs carries)
+    sh = spread(reps, "doc_id").select(
+        "doc_id", word_ngrams(tokens_of(F.col("text"))).alias("shingles"),
+    ).localCheckpoint(eager=False)
+    sig = spread(
+        sh.select("doc_id", minhash_sig_md5(F.col("shingles"),
+                                            DOC_BANDS * DOC_ROWS).alias("sig")),
+        "doc_id",
+    )
+    banded = sig.select(
+        "doc_id",
+        F.posexplode(band_hashes_md5(F.col("sig"), DOC_BANDS, DOC_ROWS))
+        .alias("band_idx", "band_hash"),
+    ).localCheckpoint(eager=False)
+    left = banded.select("band_idx", "band_hash", F.col("doc_id").alias("a"))
+    right = banded.select("band_idx", "band_hash", F.col("doc_id").alias("b"))
+    cand = (
+        left.join(right, ["band_idx", "band_hash"])
+        .filter(F.col("a") < F.col("b"))
+        .select("a", "b").distinct()
+    )
+    inter = F.size(F.array_intersect(F.col("sa"), F.col("sb")))
+    rep_pairs = (
+        cand.join(sh.select(F.col("doc_id").alias("a"), F.col("shingles").alias("sa")), "a")
+        .join(sh.select(F.col("doc_id").alias("b"), F.col("shingles").alias("sb")), "b")
+        .withColumn("jaccard", inter / (F.size("sa") + F.size("sb") - inter))
+        .filter(F.col("jaccard") >= DOC_JACCARD)
+        .select("a", "b", F.round("jaccard", 6).alias("jaccard"))
+    )
+    # fan the rep-level pairs back out to every member combination, and
+    # add the within-group pairs (jaccard exactly 1.0; empty-shingle
+    # groups stay excluded, matching the NULL-jaccard filter above)
+    cross = (
+        rep_pairs
+        .join(mem.select(F.col("rep").alias("a"), F.col("doc_id").alias("ma")), "a")
+        .join(mem.select(F.col("rep").alias("b"), F.col("doc_id").alias("mb")), "b")
+        .select(F.least("ma", "mb").alias("a"),
+                F.greatest("ma", "mb").alias("b"), "jaccard")
+    )
+    nonempty = sh.where(F.size("shingles") > 0).select(F.col("doc_id").alias("rep"))
+    within = (
+        mem.join(nonempty, "rep")
+        .alias("l")
+        .join(mem.alias("r"), (F.col("l.rep") == F.col("r.rep"))
+              & (F.col("l.doc_id") < F.col("r.doc_id")))
+        .select(F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b"),
+                F.lit(1.0).alias("jaccard"))
+    )
+    return cross.unionByName(within)
+
+
 def role_transitions(transcripts: DataFrame) -> DataFrame:
     """Conversation-structure transition matrix -> (from_role, to_role,
     n_transitions, n_convs, row_ppm): adjacent-turn role bigrams in
     turn_idx order with conversation support and an exact round-down
     row-normalized share — the protocol profile of an agent corpus
     (how often does the assistant hand to a tool, does the user ever
-    follow a tool turn directly?). The dp_ev transition matrix's twin
-    on the transcript axis; reply_latency times ONE of these
+    follow a tool turn directly?). reply_latency times ONE of these
     transitions, this counts all of them.
 
     Scale shape: ONE conv_id window shuffle (partitions turn-bounded),

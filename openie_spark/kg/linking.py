@@ -160,7 +160,7 @@ def minhash_signature(norm: Column, num_perm: int = MINHASH_PERM) -> Column:
     codegen'd projection per row, no explode/shuffle. md5-derived (not
     xxhash64) so the DuckDB oracle can recompute the full LSH structure
     (plans/oracles.kg_pairs_minhash_sql)."""
-    from openie_spark.datapipe.hashing import minhash_sig_md5
+    from openie_spark.functions.hashing import minhash_sig_md5
 
     return minhash_sig_md5(char_shingles(norm), num_perm)
 
@@ -172,7 +172,7 @@ def lsh_buckets(vocab: DataFrame, bands: int = LSH_BANDS, rows: int = LSH_ROWS) 
     explode (the Generate node references the attribute, so the
     num_perm × per-shingle hashing runs once per mention, not once per
     band element)."""
-    from openie_spark.datapipe.hashing import band_hashes_md5
+    from openie_spark.functions.hashing import band_hashes_md5
 
     sigd = vocab.select(
         "norm", "tokens", minhash_signature(F.col("norm"), bands * rows).alias("sig"))

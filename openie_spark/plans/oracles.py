@@ -19,6 +19,12 @@ from __future__ import annotations
 from openie_spark.config import MAX_SENT_WORDS, PRED_LEXICON, SENT_PUNCT
 from openie_spark.sources.transcripts import TRANSCRIPTS_CTE_DUCKDB
 
+
+def _md5h60(x: str) -> str:
+    """DuckDB twin of functions.hashing.md5h60."""
+    return f"CAST(concat('0x', substr(md5({x}), 1, 15)) AS BIGINT)"
+
+
 _LEX = ", ".join(f"'{w}'" for w in PRED_LEXICON)
 _PUNCT = ", ".join(f"'{p}'" for p in SENT_PUNCT)
 
@@ -253,17 +259,16 @@ def _minhash_ctes() -> str:
         MAX_MENTION_TOKENS,
     )
 
-    md5h60 = "CAST(concat('0x', substr(md5({x}), 1, 15)) AS BIGINT)"
     shingles = ("list_distinct(list_transform("
                 "range(1, greatest(length(norm) - 2, 1) + 1),"
                 " i -> substr(norm, CAST(i AS INT), 3)))")
     slots = ", ".join(
         "list_min(list_transform(shingles, s -> "
-        + md5h60.format(x=f"s || '#{k}'") + "))"
+        + _md5h60(f"s || '#{k}'") + "))"
         for k in range(LSH_BANDS * LSH_ROWS)
     )
     band_exprs = ", ".join(
-        md5h60.format(x="concat_ws(','," + ", ".join(
+        _md5h60("concat_ws(','," + ", ".join(
             f"CAST(sig[{b * LSH_ROWS + r + 1}] AS VARCHAR)" for r in range(LSH_ROWS)
         ) + ")")
         for b in range(LSH_BANDS)
@@ -518,10 +523,9 @@ def kg_negatives_sql() -> str:
     min-entity representative, broadcast pick, collision drop)."""
     from openie_spark.kg.analytics import NEG_BUCKETS, NEG_PER_POS, NEG_SALT
 
-    h = "CAST(concat('0x', substr(md5({x}), 1, 15)) AS BIGINT)"
-    ebucket = h.format(x=f"'{NEG_SALT}e#' || entity_id") + f" % {NEG_BUCKETS}"
-    pbucket = (h.format(
-        x=f"'{NEG_SALT}#' || CAST(neg_idx AS VARCHAR) || '#' || src_id"
+    ebucket = _md5h60(f"'{NEG_SALT}e#' || entity_id") + f" % {NEG_BUCKETS}"
+    pbucket = (_md5h60(
+        f"'{NEG_SALT}#' || CAST(neg_idx AS VARCHAR) || '#' || src_id"
           f" || '#' || pred || '#' || dst_id") + f" % {NEG_BUCKETS}")
     return _with_kg(f"""
 SELECT p.src_id, p.pred, p.dst_id, r.neg_dst, CAST(p.neg_idx AS INT) AS neg_idx
@@ -1247,7 +1251,6 @@ WHERE norm IN ({frags}) AND antecedent IS NOT NULL""",
 def kg_export_graphml_sql() -> str:
     """Twin of kg.analytics.export_graphml: literal header/footer rows
     plus node/edge XML fragments with md5h60 line keys."""
-    h = "CAST(concat('0x', substr(md5({x}), 1, 15)) AS BIGINT)"
     return _with_kg(f"""
 SELECT CAST(part AS INT) AS part, CAST(line AS BIGINT) AS line, xml FROM (
   SELECT * FROM (VALUES
@@ -1259,12 +1262,12 @@ SELECT CAST(part AS INT) AS part, CAST(line AS BIGINT) AS line, xml FROM (
     (3, 0, '</graph>'),
     (3, 1, '</graphml>')) t(part, line, xml)
   UNION ALL
-  SELECT 1, {h.format(x='entity_id')},
+  SELECT 1, {_md5h60('entity_id')},
          '<node id="' || entity_id || '"><data key="label">'
            || canonical || '</data></node>'
   FROM nodes
   UNION ALL
-  SELECT 2, {h.format(x="src_id || '|' || pred || '|' || dst_id")},
+  SELECT 2, {_md5h60("src_id || '|' || pred || '|' || dst_id")},
          '<edge source="' || src_id || '" target="' || dst_id
            || '"><data key="pred">' || pred || '</data></edge>'
   FROM (SELECT DISTINCT src_id, dst_id, pred FROM kg_edges)
@@ -2169,12 +2172,11 @@ def kg_kge_eval_sql() -> str:
         SPLIT_VALID,
     )
 
-    h = "CAST(concat('0x', substr(md5({x}), 1, 15)) AS BIGINT)"
-    ticket = h.format(
-        x=f"'{SPLIT_SALT}' || '|' || src_id || '|' || pred || '|' || dst_id")
+    ticket = _md5h60(
+        f"'{SPLIT_SALT}' || '|' || src_id || '|' || pred || '|' || dst_id")
 
     def comp(kind: str, ident: str, d: int) -> str:
-        return ("(" + h.format(x=f"'{KGE_SALT}#{kind}#' || {ident} || '#{d}'")
+        return ("(" + _md5h60(f"'{KGE_SALT}#{kind}#' || {ident} || '#{d}'")
                 + " % 2001 - 1000)")
 
     def score(tail: str) -> str:
@@ -2183,9 +2185,9 @@ def kg_kge_eval_sql() -> str:
             f" - {comp('e', tail, d)})"
             for d in range(KGE_DIM))
 
-    ebucket = h.format(x=f"'{NEG_SALT}e#' || entity_id") + f" % {NEG_BUCKETS}"
-    pbucket = (h.format(
-        x=f"'{NEG_SALT}#' || CAST(neg_idx AS VARCHAR) || '#' || src_id"
+    ebucket = _md5h60(f"'{NEG_SALT}e#' || entity_id") + f" % {NEG_BUCKETS}"
+    pbucket = (_md5h60(
+        f"'{NEG_SALT}#' || CAST(neg_idx AS VARCHAR) || '#' || src_id"
           f" || '#' || pred || '#' || dst_id") + f" % {NEG_BUCKETS}")
     rate = "CASE WHEN n_test > 0 THEN (2 * {x} * 1000000 + n_test) // (2 * n_test) END"
     return _with_kg(f"""
@@ -2328,3 +2330,85 @@ SELECT CAST(length(bin(CAST(n_aliases AS BIGINT))) AS INT) AS bin,
        CAST(max(n_aliases) AS BIGINT) AS max_aliases,
        CAST(sum(n_aliases) AS BIGINT) AS sum_aliases
 FROM nodes GROUP BY 1""")
+
+
+# --------------------------------------------- conversation near-dup
+
+_TOKS = "list_filter(string_split({c}, ' '), x -> x <> '')"
+
+# word-3-gram shingles (distinct; whole-token-list fallback for short docs)
+_SHINGLES_CTE = f"""
+sh AS MATERIALIZED (
+  SELECT doc_id,
+         list_distinct(list_transform(
+           range(1, greatest(len(toks) - 2, 1) + 1),
+           i -> array_to_string(list_slice(toks, i, i + 2), ' '))) AS shingles
+  FROM (SELECT doc_id, {_TOKS.format(c='text')} AS toks FROM planted)
+)"""
+
+_JACCARD = ("CAST(len(list_intersect({a}, {b})) AS DOUBLE)"
+            " / (len({a}) + len({b}) - len(list_intersect({a}, {b})))")
+
+
+def _minhash_doc_ctes(planted: str) -> str:
+    """Minhash-LSH doc-pair path as a CTE chain ending in
+    ``mhp(a, b, jaccard)``: signature slots → band hashes →
+    band-bucket self-join → exact-Jaccard verification. ``planted``
+    is a CTE chain ending in planted(doc_id, text)."""
+    from openie_spark.kg.dialogue import DOC_BANDS, DOC_JACCARD, DOC_ROWS
+
+    perm = DOC_BANDS * DOC_ROWS
+    slot_list = []
+    for k in range(perm):
+        h = _md5h60("s || '#%d'" % k)
+        slot_list.append(f"list_min(list_transform(shingles, s -> {h}))")
+    slots = ", ".join(slot_list)
+    band_exprs = ", ".join(
+        _md5h60(
+            "concat_ws(','," + ", ".join(
+                f"CAST(sig[{b * DOC_ROWS + r + 1}] AS VARCHAR)" for r in range(DOC_ROWS)
+            ) + ")"
+        )
+        for b in range(DOC_BANDS)
+    )
+    j = _JACCARD.format(a="sa", b="sb")
+    return f"""{planted}, {_SHINGLES_CTE},
+sigs AS (
+  SELECT doc_id, shingles, [{slots}] AS sig FROM sh
+),
+banded AS MATERIALIZED (
+  SELECT doc_id, shingles, b AS band_idx, list_extract([{band_exprs}], b + 1) AS band_hash
+  FROM sigs, range(0, {DOC_BANDS}) t(b)
+),
+cand AS (
+  SELECT DISTINCT l.doc_id AS a, r.doc_id AS b,
+         l.shingles AS sa, r.shingles AS sb
+  FROM banded l JOIN banded r
+    ON l.band_idx = r.band_idx AND l.band_hash = r.band_hash AND l.doc_id < r.doc_id
+),
+mhp AS MATERIALIZED (
+  SELECT a, b, {j} AS jaccard FROM cand WHERE {j} >= {DOC_JACCARD}
+)"""
+
+
+def conv_minhash_pairs_sql() -> str:
+    """Twin of kg.dialogue.conv_neardup_pairs: conversations flattened
+    via ORDER BY turn_idx string_agg (≡ Spark's array_sort on
+    (turn_idx, text) structs — turn_idx is unique per conv), perturbed
+    twins planted with the same every-PERTURB_DROPth-token drop, then
+    the full minhash-LSH recomputation."""
+    from openie_spark.kg.dialogue import PERTURB_DROP
+
+    conv_planted = f"""{TRANSCRIPTS_CTE_DUCKDB},
+convdoc AS (
+  SELECT conv_id, string_agg(COALESCE(text, ''), ' ' ORDER BY turn_idx) AS text
+  FROM transcripts GROUP BY conv_id),
+planted AS (
+  SELECT conv_id AS doc_id, text FROM convdoc
+  UNION ALL
+  SELECT conv_id || '~twin' AS doc_id,
+         array_to_string(list_filter({_TOKS.format(c='text')},
+                                     (x, i) -> i % {PERTURB_DROP} <> 0), ' ') AS text
+  FROM convdoc)"""
+    return (f"WITH {_minhash_doc_ctes(conv_planted)}\n"
+            "SELECT a, b, round(jaccard, 6) AS jaccard FROM mhp")

@@ -8,9 +8,61 @@ model-inference UDF, shuffle partitions overridable per environment.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
+import zipfile
 
 from pyspark.sql import SparkSession
+
+_PKG_ZIP: str | None = None
+_SHIPPED: set[str] = set()
+
+
+def _driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM`` if set, else min(8g, a quarter of
+    physical RAM): every local session (tests, tools, bench) is one
+    driver JVM, and two fixed 8g heaps side by side can exhaust a
+    16 GB host."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(8192, ram_mb // 4)}m"
+
+
+def ship_package(spark: SparkSession) -> None:
+    """Make openie_spark importable on executor Python workers
+    regardless of the driver's cwd/PYTHONPATH: pandas-UDF closures
+    reference the module by name, and a session launched from another
+    directory has no way to import it. addPyFile distributes a zip and
+    prepends it to every worker's sys.path; the zip is built once per
+    process (and removed at its exit) and added once per application.
+    A package imported from a zip (``spark-submit --py-files``) is
+    already on the workers: nothing to ship."""
+    global _PKG_ZIP
+    pkg = os.path.dirname(os.path.abspath(__file__))
+    if not os.path.isdir(pkg):
+        return
+    if _PKG_ZIP is None:
+        root = os.path.dirname(pkg)
+        tmp = tempfile.mkdtemp(prefix="openie_spark_pkg")
+        atexit.register(shutil.rmtree, tmp, True)
+        zp = os.path.join(tmp, "openie_spark.zip")
+        with zipfile.ZipFile(zp, "w") as z:
+            for dirpath, _, files in os.walk(pkg):
+                for f in files:
+                    # .txt rides along for package data (the WordPiece
+                    # vocab must reach zipimport-ed executor workers).
+                    if f.endswith((".py", ".txt")):
+                        full = os.path.join(dirpath, f)
+                        z.write(full, os.path.relpath(full, root))
+        _PKG_ZIP = zp
+    app = spark.sparkContext.applicationId
+    if app not in _SHIPPED:
+        spark.sparkContext.addPyFile(_PKG_ZIP)
+        _SHIPPED.add(app)
 
 
 def get_spark(
@@ -39,7 +91,7 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         # --- Deterministic timestamps in tests regardless of host TZ.
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
         # One BLAS thread per python worker — Spark tasks are the
         # parallelism; multi-threaded OpenBLAS inside each of N

@@ -328,7 +328,7 @@ def test_wordpiece_longest_match_and_continuations():
 
 def test_vocab_loads_from_zipimport(tmp_path):
     """The --py-files deploy path: the package reaches executors as a
-    zip (``__spark_entry__._ship_package``), where ``__file__`` is not
+    zip (``openie_spark.session.ship_package``), where ``__file__`` is not
     openable.  load_vocab must serve the vocab through the zipimport
     resource reader — a plain open() here broke triples_extract_neural
     whenever the driver ran from a non-repo cwd."""

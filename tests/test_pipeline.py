@@ -571,6 +571,32 @@ def test_spark_submit_py_files_launch(tmp_path):
     assert man["rows"] == summary["triples"]
 
 
+def test_kg_job_python_udf_backend_runs_from_any_cwd(tmp_path):
+    """`python <checkout>/tools/kg_job.py` launched from a cwd outside
+    the checkout with a Python-UDF backend: the driver finds
+    openie_spark through the script's own path, and the executor
+    Python workers only through the package kg_job ships to them. The
+    shipped zip is removed when the job exits."""
+    import json as _json
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["PYSPARK_PYTHON"] = sys.executable
+    env["TMPDIR"] = str(tmp_path)
+    r = subprocess.run(
+        [sys.executable, os.path.join(root, "tools", "kg_job.py"),
+         "--input", SF, "--output", str(tmp_path / "out"),
+         "--backend", "rule_arrow", "--master", "local[2]",
+         "--driver-memory", "2g", "--shuffle-partitions", "4"],
+        cwd=str(tmp_path), env=env, capture_output=True, text=True, timeout=540,
+    )
+    assert r.returncode == 0, r.stderr[-3000:]
+    assert _json.loads(r.stdout.strip().splitlines()[-1])["triples"] > 0
+    assert not list(tmp_path.glob("openie_spark_pkg*"))
+
+
 def test_manifest_storage_stats(pipeline_out):
     """Every stage manifest carries physical-layout lineage: data file
     count and total bytes of the written table (sidecars excluded)."""

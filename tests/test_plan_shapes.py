@@ -49,43 +49,13 @@ def test_rule_extraction_is_pure_codegen(spark, entry):
 
 
 def test_no_nested_loop_joins_on_scale_paths(spark, entry):
-    """The LSH/IVF/near-dup family exists to avoid the quadratic join —
+    """The minhash-LSH pair paths exist to avoid the quadratic join —
     a BroadcastNestedLoopJoin/CartesianProduct appearing there means
-    the bucketing broke. (dp_embedding_topk / dp_ngram_pairs are the
-    LABELED quadratic ground truths and are exempt.)"""
+    the bucketing broke."""
     qs = entry.queries()
-    for name in ("dp_minhash_pairs", "dp_simhash_pairs", "dp_embedding_pairs",
-                 "dp_embedding_lsh", "dp_embedding_ivf", "dp_decontam",
-                 "kg_pairs_minhash"):
+    for name in ("kg_conv_neardup", "kg_pairs_minhash"):
         plan = _plan(qs[name](spark, SF))
         assert _count(plan, r"CartesianProduct|BroadcastNestedLoopJoin") == 0, name
-
-
-def test_chunking_is_map_only(spark, entry):
-    plan = _plan(entry.queries()["dp_chunks"](spark, SF))
-    assert _count(plan, r"\bExchange\b") == 0
-    assert _count(plan, r"ArrowEvalPython|BatchEvalPython|MapInPandas") == 0
-
-
-def test_mixture_window_runs_post_aggregation(spark, entry):
-    """corpus_mixture's unpartitioned window is safe ONLY because it
-    sees the post-agg stratum table: the plan must place HashAggregate
-    below the Window, and the single-partition exchange must feed the
-    window, not the scan."""
-    plan = _plan(entry.queries()["dp_mixture"](spark, SF))
-    w = plan.find("Window")
-    agg = [m.start() for m in re.finditer("HashAggregate", plan)]
-    assert w != -1 and agg and min(agg) > w  # formatted plan prints top-down
-
-
-def test_hll_registers_are_pure_codegen_group(spark, entry):
-    """dp_hll_distinct's point is the bounded register aggregation:
-    no Python stage, no sort/window, no join anywhere in the plan."""
-    plan = _plan(entry.queries()["dp_hll_distinct"](spark, SF))
-    assert _count(plan, r"ArrowEvalPython|BatchEvalPython|MapInPandas") == 0
-    assert _count(plan, r"CartesianProduct|BroadcastNestedLoopJoin") == 0
-    assert _count(plan, r"\bWindow\b") == 0
-    assert _count(plan, r"\bJoin\b") == 0
 
 
 def test_entity_types_is_map_only(spark, entry):
@@ -104,16 +74,6 @@ def test_salience_has_exactly_one_scalar_broadcast(spark, entry):
     # formatted explain prints every node twice (tree + detail block)
     assert _count(plan, r"BroadcastNestedLoopJoin") == 2
     assert _count(plan, r"CartesianProduct") == 0
-
-
-def test_winnow_is_map_only(spark, entry):
-    """Winnowing must stay embarrassingly parallel: no Exchange, no
-    Python stage, no join — and the k-gram hash array must be owned by
-    a Generate barrier (md5 once per gram, not re-inlined per window)."""
-    plan = _plan(entry.queries()["dp_winnow"](spark, SF))
-    assert _count(plan, r"\bExchange\b") == 0
-    assert _count(plan, r"ArrowEvalPython|BatchEvalPython|MapInPandas") == 0
-    assert _count(plan, r"\bJoin\b") == 0
 
 
 def test_coref_is_single_window_no_join(spark, entry):

@@ -29,7 +29,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 
-TABLES = "region nation customer supplier part orders lineitem documents embeddings".split()
+TABLES = "region nation customer supplier part orders lineitem documents".split()
 
 # DuckDB output types pandas cannot convert to a driver-hashable column.
 # HUGEINT/UHUGEINT -> float64 (123 -> 123.0, breaking the int hash);

@@ -96,6 +96,9 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     from openie_spark.pipeline import KGPipeline
+    from openie_spark.session import ship_package
+
+    ship_package(spark)     # Python-UDF backends import it on the workers
 
     if "://" not in args.output:        # remote warehouse paths are
         os.makedirs(args.output, exist_ok=True)  # created by the FS writers

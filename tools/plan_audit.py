@@ -17,10 +17,6 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-# the two queries whose cross join IS the labeled quadratic ground
-# truth (COVERAGE.md) — a cartesian there is by design
-QUADRATIC_BY_DESIGN = {"dp_embedding_topk", "dp_ngram_pairs"}
-
 # queries that attach a 1-ROW aggregate (a global scalar like a total
 # count) via broadcast cross join — a BroadcastNestedLoopJoin whose
 # build side is one row is the correct constant-cost plan at any
@@ -80,9 +76,8 @@ def main() -> int:
         "zero times — they read the block manager), python = Arrow-batched",
         "python stages (pandas UDF family; NO row-at-a-time UDF exists in",
         "this repo), cartesian counts CartesianProduct + BroadcastNested-",
-        "LoopJoin (flagged unless the query is a labeled quadratic ground",
-        "truth). `pruned` = the scan carries an explicit ReadSchema",
-        "projection.",
+        "LoopJoin (flagged unless its build side is bounded by design).",
+        "`pruned` = the scan carries an explicit ReadSchema projection.",
         "",
         "| query | exchanges | scans | python | bcast joins | cartesian | pruned | note |",
         "|---|---|---|---|---|---|---|---|",
@@ -95,11 +90,9 @@ def main() -> int:
             continue
         note = ""
         if r["cartesian"]:
-            if r["query"] in QUADRATIC_BY_DESIGN:
-                note = "quadratic ground truth (labeled)"
-            elif r["query"] in SCALAR_BROADCAST_BY_DESIGN:
+            if r["query"] in SCALAR_BROADCAST_BY_DESIGN:
                 note = "1-row scalar broadcast (by design)"
-            elif r["broadcast_joins"] or "embedding" in r["query"]:
+            elif r["broadcast_joins"]:
                 note = "broadcast NLJ (bounded side)"
             else:
                 note = "UNEXPECTED cartesian"

@@ -17,7 +17,7 @@ Usage:
     python tools/scale_bench.py [--copies 20] [--cpus 8,32] \
         [--sf-dir /root/testdata/sf0.1] [--workdir /tmp/openie_scale]
 
-Writes BENCH/BASELINE.md (repo root) and prints one JSON line.
+Writes BENCH/scale_bench_last_run.md (repo root) and prints one JSON line.
 """
 
 from __future__ import annotations

@@ -6,19 +6,18 @@ runs at sf0.1. This tool converts the plan audit into MEASURED
 evidence at 10x:
 
   gen       build an sf1-equivalent directory by deterministic x10
-            replication of the driver's sf0.1 tables. Ids are offset
-            per copy; long lowercase document tokens are md5-REMAPPED
-            per copy (length-preserving; entities, punctuation, and
-            the predicate lexicon pass through) and embedding DIMS
-            are ROTATED, so copies are distinct texts/directions
-            with identical length/token/norm statistics — a 10x
-            corpus whose duplication RATE matches the original
-            (real corpora grow by adding new content at a constant
-            dup rate; byte-identical copies would instead inflate
-            every duplicate GROUP 10x and blow up pair-emitting
-            operators quadratically — that stress case is covered by
-            the dedup family's planted fixtures, not this harness).
-            No external data.
+            replication of the driver's sf0.1 documents table. Ids
+            are offset per copy, and long lowercase tokens are
+            md5-REMAPPED per copy (length-preserving; entities,
+            punctuation, and the predicate lexicon pass through), so
+            copies are distinct texts with identical length/token
+            statistics — a 10x corpus whose duplication RATE matches
+            the original (real corpora grow by adding new content at
+            a constant dup rate; byte-identical copies would instead
+            inflate every duplicate GROUP 10x and blow up
+            pair-emitting operators quadratically — that stress case
+            is covered by the planted near-dup twins, not this
+            harness). No external data.
   pipeline  derive transcripts from the sf1 documents and run the
             full KG job (tools/kg_job.py) at local[32] per backend,
             recording per-stage wall seconds and the peak RSS of the
@@ -51,77 +50,52 @@ FACTOR = 10
 SLACK = 1.6   # super-linear flag: t_sf1 > FACTOR * SLACK * t_sf01 (+floor)
 FLOOR = 0.8   # ignore sub-second sf0.1 queries' fixed overheads
 
-# Labeled quadratic ground truths (PLANS.md): O(n^2) by DESIGN — they
-# exist to pin the recall of the bucketed scale paths, so a ~100x
-# ratio at 10x data is expected, not a regression.
-QUADRATIC = {"dp_embedding_topk", "dp_embedding_topk_np"}
-
 
 def gen(src: str, out: str, factor: int) -> dict:
-    """x`factor` id-offset replication of documents/embeddings.
-    Offsets are round multiples of 10^7 so every derived quantity
-    (conv fold, role cycle, tool pick, ts minutes) stays in-range and
-    copies never collide."""
+    """x`factor` id-offset replication of documents. Offsets are
+    round multiples of 10^5 so every derived quantity (conv fold, role
+    cycle, tool pick, ts minutes) stays in-range and copies never
+    collide."""
     from pyspark.sql import functions as F
 
+    from openie_spark.config import PRED_LEXICON
     from openie_spark.session import get_spark
 
     spark = get_spark(app_name="sf1-gen", master="local[32]")
     spark.sparkContext.setLogLevel("ERROR")
     os.makedirs(out, exist_ok=True)
-    counts = {}
-    # documents offset MUST keep doc_id under 5,000,000: the derived
+    # the doc_id offset MUST keep doc_id under 5,000,000: the derived
     # conv_id is lpad(doc_id DIV 5, 6, '0') and Spark lpad TRUNCATES
     # a 7-digit conv number, silently merging conversations across
     # copies into 151k-char monsters (found the hard way — the first
     # replica's kg blowups were all this)
-    specs = {
-        "documents": ("doc_id", 100_000),
-        "embeddings": ("vec_id", 10_000_000),
-    }
-    for t, (idcol, off) in specs.items():
-        df = spark.read.parquet(f"{src}/{t}.parquet")
-        big = (
-            df.withColumn(
-                "k", F.explode(F.sequence(F.lit(0), F.lit(factor - 1))))
-            .withColumn(idcol, F.col(idcol) + F.col("k") * off))
-        if t == "documents":
-            # per-copy md5 remap of LONG lowercase tokens (>=5 alpha
-            # chars), length-preserving: copies are distinct texts with
-            # identical token/length statistics, near-zero cross-copy
-            # n-gram jaccard (a token rotation instead preserves the
-            # circular n-gram set — copies stayed 0.9+ near-dups), and
-            # the extraction-relevant surface intact: capitalized
-            # entity tokens, punctuation-bearing tokens, short
-            # verbs/stopwords all pass through, so the KG sees the
-            # realistic "same entities, 10x new mentions" growth.
-            # Copy 0 is byte-identical to the source.
-            from openie_spark.config import PRED_LEXICON
-
-            toks = F.split(F.col("text"), " ")
-            remap = F.transform(
-                toks,
-                lambda w: F.when(
-                    (F.col("k") == 0) | ~w.rlike("^[a-z]{5,}$")
-                    | w.isin(*PRED_LEXICON),   # keep predicates: yield
-                    w                          # must scale ~10x, not 5x
-                ).otherwise(
-                    F.md5(F.concat(F.col("k").cast("string"),
-                                   F.lit("#"), w))
-                    .substr(F.lit(1), F.least(F.length(w), F.lit(32)))))
-            big = big.withColumn("text", F.array_join(remap, " "))
-        if t == "embeddings":
-            # rotate dims by k: same norm/quantization stats, a
-            # near-orthogonal direction per copy
-            e, d = F.col("embedding"), F.size("embedding")
-            rote = F.when((F.col("k") == 0) | (d < 2), e).otherwise(
-                F.concat(F.slice(e, F.pmod(F.col("k"), d) + 1, d),
-                         F.slice(e, F.lit(1), F.pmod(F.col("k"), d))))
-            big = big.withColumn("embedding", rote)
-        big = big.drop("k")
-        big.repartition(64, idcol).write.mode("overwrite").parquet(
-            f"{out}/{t}.parquet")
-        counts[t] = spark.read.parquet(f"{out}/{t}.parquet").count()
+    big = (
+        spark.read.parquet(f"{src}/documents.parquet")
+        .withColumn("k", F.explode(F.sequence(F.lit(0), F.lit(factor - 1))))
+        .withColumn("doc_id", F.col("doc_id") + F.col("k") * 100_000))
+    # per-copy md5 remap of LONG lowercase tokens (>=5 alpha chars),
+    # length-preserving: copies are distinct texts with identical
+    # token/length statistics, near-zero cross-copy n-gram jaccard (a
+    # token rotation instead preserves the circular n-gram set — copies
+    # stayed 0.9+ near-dups), and the extraction-relevant surface
+    # intact: capitalized entity tokens, punctuation-bearing tokens,
+    # short verbs/stopwords all pass through, so the KG sees the
+    # realistic "same entities, 10x new mentions" growth. Copy 0 is
+    # byte-identical to the source.
+    toks = F.split(F.col("text"), " ")
+    remap = F.transform(
+        toks,
+        lambda w: F.when(
+            (F.col("k") == 0) | ~w.rlike("^[a-z]{5,}$")
+            | w.isin(*PRED_LEXICON),   # keep predicates: yield
+            w                          # must scale ~10x, not 5x
+        ).otherwise(
+            F.md5(F.concat(F.col("k").cast("string"), F.lit("#"), w))
+            .substr(F.lit(1), F.least(F.length(w), F.lit(32)))))
+    big = big.withColumn("text", F.array_join(remap, " ")).drop("k")
+    big.repartition(64, "doc_id").write.mode("overwrite").parquet(
+        f"{out}/documents.parquet")
+    counts = {"documents": spark.read.parquet(f"{out}/documents.parquet").count()}
     spark.stop()
     json.dump({"factor": factor, "counts": counts},
               open(f"{out}/_gen.json", "w"))
@@ -236,11 +210,10 @@ def report(sf01_json: str, sf1_json: str, pipe_json: str | None,
         if t0 is None:
             continue
         ratio = t1 / max(t0, 1e-9)
-        flag = t1 > factor * SLACK * t0 + FLOOR and name not in QUADRATIC
+        flag = t1 > factor * SLACK * t0 + FLOOR
         if flag:
             flagged.append(name)
-        verdict = ("quadratic-by-design" if name in QUADRATIC
-                   else "**SUPER-LINEAR**" if flag else "ok")
+        verdict = "**SUPER-LINEAR**" if flag else "ok"
         rows.append(f"| {name} | {t0:.2f} | {t1:.2f} | {ratio:.1f}x |"
                     f" {verdict} |")
     md = [
