@@ -1,14 +1,5 @@
-"""Training-data pipeline operators over the ``documents`` /
-``embeddings`` tables: deduplication (exact, minhash-LSH, simhash,
-n-gram Jaccard, embedding-cosine), approximate similarity search,
-text analysis (language-ID, quality, token counts, fingerprints), and
-multimodal column plumbing.
-
-Engine-portable hashing: every hash that feeds a correctness-checked
-result is the 60-bit md5-prefix (``md5h60``) — bit-identical in Spark
-(conv(substr(md5 …))) and DuckDB (CAST('0x'||substr(md5 …))) — so even
-the minhash-LSH band structure is verified against the SQL oracle,
-not just spot-tested. xxhash64 (faster, JVM-side) is reserved for
-purely internal keys (salts, shuffles) where cross-engine equality
-doesn't matter.
+"""Document-curation operators over a ``documents`` table (doc_id,
+text): exact and substring-level deduplication, benchmark
+decontamination, corpus-quality signals and text statistics. No KG
+stage reads them; hashing helpers live in ``openie_spark.functions``.
 """

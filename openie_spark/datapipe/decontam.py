@@ -9,8 +9,8 @@ corpus itself (sandbox rule: no external data), which doubles as a
 ground-truth generator — the planted exact/near duplicates in the
 documents table produce real contamination hits across the split.
 
-Semantics (engine-portable, mirrored bit-for-bit by
-plans/datapipe_oracles.decontaminate_sql):
+Semantics (engine-portable; tests/test_decontam.py mirrors them with
+a brute-force Python reference):
 
 * tokens: split on single space, empty tokens dropped (repo-wide
   convention, hashing.tokens_of).
@@ -42,8 +42,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from openie_spark.datapipe.hashing import md5h60, tokens_of
 from openie_spark.datapipe.textstats import _ppm
+from openie_spark.functions.hashing import md5h60, tokens_of
 
 DECON_N = 8                  # word n-gram width
 DECON_HOLDOUT_PPM = 50_000   # 5% of docs act as the benchmark slice

@@ -1,52 +1,30 @@
-"""Deduplication operators over the ``documents`` table.
+"""Deduplication operators over a ``documents`` table (doc_id, text).
 
-Five dedup families, all shuffle-bounded:
-
-* ``exact_dedup_groups`` — md5(text) hash-groupBy. One shuffle on the
-  content hash; at 100 TB this is the canonical first pass (tiny keys,
-  map-side partial agg).
-* ``minhash_pairs_docs`` — word-3-gram minhash-LSH: signature + band
-  hashes are single-projection higher-order expressions (no explode);
-  the only shuffle is the band-bucket self-join; candidates verified
-  with exact n-gram Jaccard. All hashes are md5h60 → the full LSH
-  structure is DuckDB-oracle-checked.
-* ``simhash_docs`` / ``simhash_pairs`` — 60-bit simhash (per-bit
-  majority vote over token hashes, computed as one zip_with fold);
-  near-dup = band-equal candidates with Hamming distance ≤ k
-  (bit_count(xor)).
-* ``ngram_jaccard_pairs`` — blocked exact n-gram Jaccard (small-scale
-  ground truth for the LSH paths).
-* ``embedding_pairs`` (similarity.py) — cosine near-dup over vectors.
+* ``exact_dedup_groups`` / ``exact_dedup`` — md5(text) hash-groupBy.
+  One shuffle on the content hash: tiny keys, map-side partial agg.
+* ``ngram_jaccard_pairs`` — exact all-pairs word-3-gram Jaccard, the
+  small-scale ground truth for the minhash-LSH path
+  (``openie_spark.kg.dialogue.minhash_pairs_docs``).
+* ``substr_dup_spans`` — exact duplicated token spans (ExactSubstr).
+* ``winnow_pairs`` / ``containment_pairs`` — substring-level near-dup
+  pairs over shared winnowing fingerprints, symmetric and asymmetric.
+* ``dup_group_histogram`` — log2-binned exact-duplicate group sizes.
 
 ``planted_docs`` doubles the corpus with deterministically perturbed
-copies (every PERTURB_DROPth token dropped) so dedup queries have a
+copies (every PERTURB_DROPth token dropped) so dedup operators have a
 non-trivial, exactly-known answer on the synthetic testdata — the
 planted twin of doc i is doc i + PLANT_OFFSET.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from openie_spark.datapipe.hashing import (
-    band_hashes_md5,
-    md5h60,
-    minhash_sig_md5,
-    tokens_of,
-    word_ngrams,
-)
+from openie_spark.functions.hashing import md5h60, tokens_of, word_ngrams
+from openie_spark.kg.dialogue import DOC_JACCARD, PERTURB_DROP
 
-DOC_MINHASH_PERM = 16
-DOC_BANDS = 8
-DOC_ROWS = 2          # threshold ≈ (1/8)^(1/2) ≈ 0.35 — high recall at j≥0.5
-DOC_JACCARD = 0.5
-SIMHASH_BITS = 60
-SIMHASH_BAND_BITS = 15
-SIMHASH_MAX_HAMMING = 6
 PLANT_OFFSET = 10_000_000
-PERTURB_DROP = 15
-NGRAM_CAP = 1000      # doc_id cap for the quadratic exact-pairs oracle
 
 
 # ------------------------------------------------------------ exact
@@ -82,113 +60,13 @@ def planted_docs(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", "text").unionByName(perturbed)
 
 
-# ---------------------------------------------------------- minhash
-
-def _with_shingles(docs: DataFrame) -> DataFrame:
-    return docs.select(
-        "doc_id",
-        word_ngrams(tokens_of(F.col("text"))).alias("shingles"),
-    )
-
-
-def minhash_pairs_docs(docs: DataFrame,
-                       threshold: float = DOC_JACCARD,
-                       bands: int = DOC_BANDS, rows: int = DOC_ROWS) -> DataFrame:
-    """(a, b, jaccard): LSH candidates verified with exact n-gram
-    Jaccard. a/b are doc_ids, a < b.
-
-    Plan shape (scale-deliberate): the md5-heavy signature projection
-    runs ONCE per doc behind an exchange barrier (spread = full-core
-    parallelism AND no projection collapse into the 8-way band
-    explode); the band self-join carries only (doc_id, band hash) —
-    candidate (a, b) pairs dedup WITHOUT the shingle arrays in the
-    shuffle, and shingles re-attach afterwards by doc_id join for the
-    exact-Jaccard verify.
-
-    Exact-duplicate collapse (semantics-preserving): byte-identical
-    texts share the full signature (every band collides) and score
-    jaccard 1.0, so the LSH + verify runs once per DISTINCT text and
-    members fan back in by id join afterwards — identical output, but
-    the expensive verify stage is bounded by the distinct corpus.
-    Without this, a corpus where popular conversations repeat m times
-    pays m² shingle-array verifies per duplicate group (measured 703s
-    vs ~10s on a 10x replica with 10-copy groups)."""
-    from openie_spark.functions.partitioning import spread
-
-    # group key = (text IS NULL, md5(text)) as one string: md5 is 32
-    # hex digits, so the NULL marker collides with no text at all
-    keyed = spread(docs, "doc_id").select(
-        "doc_id", "text",
-        F.coalesce(F.md5(F.col("text")), F.lit("NULL")).alias("gkey"),
-    ).localCheckpoint(eager=False)     # feeds reps AND the member map
-    reps = (
-        keyed.groupBy("gkey")
-        .agg(F.min("doc_id").alias("doc_id"),
-             F.min("text").alias("text"))   # constant within the group
-    )
-    mem = (
-        keyed.select("doc_id", "gkey")
-        .join(reps.select("gkey", F.col("doc_id").alias("rep")), "gkey")
-        .select("doc_id", "rep")
-        .localCheckpoint(eager=False)      # feeds three fan-out joins
-    )
-
-    # both tables materialized once: sh feeds the signature AND the two
-    # verify joins; banded feeds both sides of the self-join (without
-    # the checkpoint the 16-slot md5 projection is evaluated twice per
-    # doc — the same fix simhash_pairs / kg exact_pairs carry)
-    sh = _with_shingles(spread(reps, "doc_id")).localCheckpoint(eager=False)
-    sig = spread(
-        sh.select("doc_id", minhash_sig_md5(F.col("shingles"), bands * rows).alias("sig")),
-        "doc_id",
-    )
-    banded = sig.select(
-        "doc_id",
-        F.posexplode(band_hashes_md5(F.col("sig"), bands, rows)).alias("band_idx", "band_hash"),
-    ).localCheckpoint(eager=False)
-    left = banded.select("band_idx", "band_hash", F.col("doc_id").alias("a"))
-    right = banded.select("band_idx", "band_hash", F.col("doc_id").alias("b"))
-    cand = (
-        left.join(right, ["band_idx", "band_hash"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b").distinct()
-    )
-    inter = F.size(F.array_intersect(F.col("sa"), F.col("sb")))
-    rep_pairs = (
-        cand.join(sh.select(F.col("doc_id").alias("a"), F.col("shingles").alias("sa")), "a")
-        .join(sh.select(F.col("doc_id").alias("b"), F.col("shingles").alias("sb")), "b")
-        .withColumn("jaccard", inter / (F.size("sa") + F.size("sb") - inter))
-        .filter(F.col("jaccard") >= threshold)
-        .select("a", "b", F.round("jaccard", 6).alias("jaccard"))
-    )
-    # fan the rep-level pairs back out to every member combination, and
-    # add the within-group pairs (jaccard exactly 1.0; empty-shingle
-    # groups stay excluded, matching the NULL-jaccard filter above)
-    cross = (
-        rep_pairs
-        .join(mem.select(F.col("rep").alias("a"), F.col("doc_id").alias("ma")), "a")
-        .join(mem.select(F.col("rep").alias("b"), F.col("doc_id").alias("mb")), "b")
-        .select(F.least("ma", "mb").alias("a"),
-                F.greatest("ma", "mb").alias("b"), "jaccard")
-    )
-    nonempty = sh.where(F.size("shingles") > 0).select(F.col("doc_id").alias("rep"))
-    within = (
-        mem.join(nonempty, "rep")
-        .alias("l")
-        .join(mem.alias("r"), (F.col("l.rep") == F.col("r.rep"))
-              & (F.col("l.doc_id") < F.col("r.doc_id")))
-        .select(F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b"),
-                F.lit(1.0).alias("jaccard"))
-    )
-    return cross.unionByName(within)
-
-
 def ngram_jaccard_pairs(docs: DataFrame, threshold: float = DOC_JACCARD) -> DataFrame:
     """Exact all-pairs n-gram Jaccard (cross join) — the small-scale
     ground truth; quadratic by construction, use the LSH path at scale."""
     from openie_spark.functions.partitioning import spread
 
-    sh = _with_shingles(spread(docs, "doc_id"))
+    sh = spread(docs, "doc_id").select(
+        "doc_id", word_ngrams(tokens_of(F.col("text"))).alias("shingles"))
     left = sh.select(F.col("doc_id").alias("a"), F.col("shingles").alias("sa"))
     right = sh.select(F.col("doc_id").alias("b"), F.col("shingles").alias("sb"))
     inter = F.size(F.array_intersect(F.col("sa"), F.col("sb")))
@@ -197,108 +75,6 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = DOC_JACCARD) -> Data
         .withColumn("jaccard", inter / (F.size("sa") + F.size("sb") - inter))
         .filter(F.col("jaccard") >= threshold)
         .select("a", "b", F.round("jaccard", 6).alias("jaccard"))
-    )
-
-
-# ---------------------------------------------------------- simhash
-
-def simhash_col(tokens: Column, bits: int = SIMHASH_BITS) -> Column:
-    """60-bit simhash: bit b set iff Σ_tokens (bit b of md5h60(token)
-    ? +1 : −1) ≥ 0. One fold over tokens with an array<int> accumulator
-    — no explode, mirrors the DuckDB per-bit vote exactly."""
-    zeros = F.array(*[F.lit(0) for _ in range(bits)])
-    masks = F.array(*[F.lit(1 << b).cast("long") for b in range(bits)])
-    votes = F.aggregate(
-        tokens,
-        zeros,
-        lambda acc, t: F.zip_with(
-            acc,
-            F.transform(masks, lambda m: F.when(md5h60(t).bitwiseAND(m) != 0, 1).otherwise(-1)),
-            lambda a, v: a + v,
-        ),
-    )
-    return F.aggregate(
-        F.zip_with(
-            votes, masks,
-            lambda v, m: F.when(v >= 0, m).otherwise(F.lit(0).cast("long")),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-
-def simhash_docs(docs: DataFrame) -> DataFrame:
-    from openie_spark.functions.partitioning import spread
-
-    return spread(docs, "doc_id").select(
-        "doc_id", simhash_col(tokens_of(F.col("text"))).alias("simhash"))
-
-
-def simhash_pairs(docs: DataFrame, max_hamming: int = SIMHASH_MAX_HAMMING) -> DataFrame:
-    """Near-dup pairs by simhash: candidates share at least one
-    15-bit band (pigeonhole: Hamming ≤ 3 guarantees a match across 4
-    bands; larger distances are best-effort), verified with
-    bit_count(xor) ≤ max_hamming."""
-    # materialize the sketch once: a self-join duplicates its branch of
-    # the DAG, so without this the 60-bit vote fold runs twice per doc.
-    # (At warehouse scale you persist sketches as a table instead —
-    # pipeline.py's triples_norm stage is that pattern.)
-    sh = simhash_docs(docs).localCheckpoint(eager=False)
-    n_bands = SIMHASH_BITS // SIMHASH_BAND_BITS
-    mask = (1 << SIMHASH_BAND_BITS) - 1
-    banded = sh.select(
-        "doc_id", "simhash",
-        F.posexplode(F.array(*[
-            F.shiftright(F.col("simhash"), b * SIMHASH_BAND_BITS).bitwiseAND(F.lit(mask))
-            for b in range(n_bands)
-        ])).alias("band_idx", "band_val"),
-    )
-    left = banded.select("band_idx", "band_val", F.col("doc_id").alias("a"), F.col("simhash").alias("ha"))
-    right = banded.select("band_idx", "band_val", F.col("doc_id").alias("b"), F.col("simhash").alias("hb"))
-    return (
-        left.join(right, ["band_idx", "band_val"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b", "ha", "hb").distinct()
-        .withColumn("hamming", F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("a", "b", "hamming")
-    )
-
-
-def neardup_groups(docs: DataFrame) -> DataFrame:
-    """(doc_id, group_id, group_size, is_keeper): near-duplicate
-    CLUSTERS — connected components over the minhash-LSH verified pair
-    graph, group label = min member doc_id, keeper = that min member.
-    Docs in no pair are singleton groups of themselves.
-
-    This is the curation step after pair generation: pairs alone don't
-    dedup a corpus (a~b, b~c must collapse to ONE keeper). Reuses the
-    KG entity-canonicalization component machinery
-    (openie_spark.kg.canon.connected_components: driver union-find
-    below its edge threshold, pointer-jumping min-label fixpoint
-    above), so the 100 TB shape is the same one the KG stages run.
-    """
-    from openie_spark.kg.canon import connected_components
-
-    pairs = minhash_pairs_docs(docs)
-    comp = connected_components(pairs).select(
-        F.col("norm").alias("doc_id"), F.col("component").alias("group_id"))
-    labeled = (
-        docs.select("doc_id")
-        .join(comp, "doc_id", "left")
-        .withColumn("group_id", F.coalesce("group_id", F.col("doc_id")))
-        # consumed twice (group sizes + final join) — materialize the
-        # slim (doc_id, group_id) table instead of re-deriving the
-        # whole pair graph per consumer (8 parquet scans otherwise)
-        .localCheckpoint(eager=False)
-    )
-    sizes = labeled.groupBy("group_id").agg(
-        F.count(F.lit(1)).alias("group_size"))
-    return (
-        labeled.join(sizes, "group_id")
-        # component label IS the min member, so keeper == label
-        .withColumn("is_keeper", F.col("doc_id") == F.col("group_id"))
-        .select("doc_id", "group_id", "group_size", "is_keeper")
     )
 
 

@@ -12,7 +12,7 @@ classic TF-IDF weighting, and plain-regex PII redaction as used by C4.
 
 Engine-parity discipline matches textstats.py: every ratio is exact
 integer ppm arithmetic (no float division before the final /1e6), so
-the DuckDB oracles reproduce values bit-for-bit; the TF-IDF score uses
+a SQL twin reproduces values bit-for-bit; the TF-IDF score uses
 a RAW rational idf (N+1)/(df+1) instead of the usual log — a
 documented variant chosen because ln() is not correctly-rounded in
 either engine and a 1-ulp difference could flip a rank at scale
@@ -41,8 +41,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from openie_spark.datapipe.hashing import tokens_of
 from openie_spark.datapipe.textstats import _ppm
+from openie_spark.functions.hashing import tokens_of
 
 # Gopher table-A1 word-level thresholds (public paper values; the
 # line-based rules are omitted — this corpus is single-line text, and
@@ -281,7 +281,7 @@ def stratified_sample(docs: DataFrame, rates: dict[str, float] | None = None,
     no shuffle, and at scale the stratum rates compose with partition
     pruning on a lang-partitioned layout. Returns
     (doc_id, lang, source, ticket)."""
-    from openie_spark.datapipe.hashing import md5h60
+    from openie_spark.functions.hashing import md5h60
 
     rates = SAMPLE_RATES if rates is None else rates
     rate = F.lit(default_ppm)
@@ -324,7 +324,7 @@ def pack_sequences(docs: DataFrame,
     Returns (doc_id, n_tokens, pack_id, pack_offset) — offset is the
     token position where the doc starts inside its pack's stream.
     """
-    from openie_spark.datapipe.hashing import md5h60, tokens_of
+    from openie_spark.functions.hashing import md5h60, tokens_of
 
     ticket = md5h60(
         F.concat(F.lit(f"{PACK_SALT}#"), F.col("doc_id").cast("string")))
@@ -373,7 +373,7 @@ def chunk_documents(docs: DataFrame,
     (≈1.3x) times; that expansion is the operator's spec, not a plan
     accident.
     """
-    from openie_spark.datapipe.hashing import tokens_of
+    from openie_spark.functions.hashing import tokens_of
 
     n_chunks = (
         F.ceil(F.greatest(F.col("n_tok") - size, F.lit(0)) / stride) + 1
@@ -463,7 +463,7 @@ def corpus_mixture(docs: DataFrame) -> DataFrame:
     window then runs over that TINY aggregate — the unpartitioned
     window is safe precisely because it sees post-agg rows, never the
     corpus."""
-    from openie_spark.datapipe.hashing import tokens_of
+    from openie_spark.functions.hashing import tokens_of
 
     per = (
         docs.select(

@@ -1,6 +1,7 @@
 """Text analysis over ``documents``: language-ID, quality scoring,
 token counting, document fingerprinting. All pure column expressions
-(whole-stage codegen, narrow plans) with DuckDB oracles.
+(whole-stage codegen, narrow plans) in engine-portable integer
+arithmetic.
 """
 
 from __future__ import annotations
@@ -10,7 +11,7 @@ from pyspark.sql import functions as F
 
 from pyspark.sql.window import Window
 
-from openie_spark.datapipe.hashing import md5h60, tokens_of, word_ngrams
+from openie_spark.functions.hashing import md5h60, tokens_of, word_ngrams
 
 # Tiny per-language stopword profiles for the n-gram/stopword-overlap
 # language heuristic (real deployments plug a fastText-style model into
@@ -51,7 +52,7 @@ def _ppm_wide(num: str, den: str):
     integer a*1000 commutes with round-half-up, and every intermediate
     stays under 2^63: num*1000 <= 4.6e18 and 2*ra*1000+den <
     2*den*1000 + den <= 9.2e18. DIV/% on BIGINT are engine-portable
-    (DuckDB ``//``/``%`` — plans mirror this via _ppm_wide_sql).
+    (DuckDB ``//``/``%``; tests/test_quality.py checks the twin).
 
     Takes SQL fragment strings (DIV only exists as a SQL operator);
     callers stage num/den as named columns first."""
@@ -211,13 +212,8 @@ def bpe_learn_merges(docs: DataFrame, n_merges: int = BPE_MERGES) -> DataFrame:
     tables are localCheckpointed per round so round k's plan never
     re-derives rounds < k.
 
-    Oracle-backed: the data-dependent argmax loop IS SQL-expressible
-    for a fixed merge budget — `dp_bpe_merges` ships an unrolled
-    12-round DuckDB twin (plans/datapipe_oracles.bpe_merges_sql) in
-    which each round's merge application is exact string replace()
-    over double-space-joined symbol strings. Also value-pinned by
-    pytest parity against an independent transcription of the
-    published algorithm (tests/test_datapipe.py).
+    Value-pinned by pytest parity against an independent
+    transcription of the published algorithm (tests/test_datapipe.py).
     """
     syms0 = F.split(F.concat(F.col("word"), F.lit(BPE_EOW)), "")
     vocab = (
@@ -540,7 +536,8 @@ def winnow_fingerprints(docs: DataFrame, k: int = WINNOW_K,
     work multiplies by w) → explode. Per-doc O(len·w) JVM-side array
     work, zero shuffles, so the operator scales embarrassingly at any
     corpus size. md5h60 gram hashes keep the full selection
-    DuckDB-recomputable (plans/datapipe_oracles.py::winnow_sql).
+    recomputable outside Spark (tests/test_datapipe.py rebuilds it in
+    pure Python).
     """
     alnum = sorted("abcdefghijklmnopqrstuvwxyz0123456789")
     clean_stage = docs.select(

@@ -1,5 +1,5 @@
-"""Training-data pipeline operator tests (dedup / similarity /
-textstats / multimodal) on /root/testdata/sf0.001."""
+"""Document-curation operator tests (dedup / textstats / decontam
+bloom) on /root/testdata/sf0.001."""
 
 from __future__ import annotations
 
@@ -12,11 +12,6 @@ SF = "/root/testdata/sf0.001"
 @pytest.fixture(scope="module")
 def docs(spark):
     return spark.read.parquet(f"{SF}/documents.parquet").cache()
-
-
-@pytest.fixture(scope="module")
-def emb(spark):
-    return spark.read.parquet(f"{SF}/embeddings.parquet").cache()
 
 
 # ------------------------------------------------------------- dedup
@@ -37,15 +32,15 @@ def test_exact_dedup(spark, docs):
 def test_planted_minhash_finds_twins(docs):
     from openie_spark.datapipe.dedup import (
         PLANT_OFFSET,
-        minhash_pairs_docs,
         ngram_jaccard_pairs,
         planted_docs,
     )
+    from openie_spark.kg.dialogue import minhash_pairs_docs
 
     planted = planted_docs(docs.select("doc_id", "text"))
     assert planted.count() == 2 * docs.count()
     exact = {(r.a, r.b) for r in ngram_jaccard_pairs(planted, threshold=0.5).collect()}
-    mh = {(r.a, r.b) for r in minhash_pairs_docs(planted, threshold=0.5).collect()}
+    mh = {(r.a, r.b) for r in minhash_pairs_docs(planted).collect()}
     twins = {(r.doc_id, r.doc_id + PLANT_OFFSET) for r in docs.select("doc_id").collect()}
     exact_twins = twins & exact
     assert len(exact_twins) >= 0.5 * len(twins), "perturbation too strong for 0.5 jaccard"
@@ -61,7 +56,7 @@ def test_minhash_exact_duplicate_groups_full_pairset(spark):
     cross-group member combination at the rep-level jaccard. Empty
     texts carry the [''] fallback shingle (word_ngrams), so identical
     empties pair at 1.0 — same as the pre-collapse path."""
-    from openie_spark.datapipe.dedup import minhash_pairs_docs
+    from openie_spark.kg.dialogue import minhash_pairs_docs
 
     base = ("the quick brown fox jumps over the lazy dog and then "
             "runs far away into the deep dark quiet forest tonight")
@@ -73,7 +68,7 @@ def test_minhash_exact_duplicate_groups_full_pairset(spark):
             (30, ""), (31, "")]               # empty texts: no pairs
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {(r.a, r.b): r.jaccard
-           for r in minhash_pairs_docs(df, threshold=0.5).collect()}
+           for r in minhash_pairs_docs(df).collect()}
     for pair in [(1, 2), (1, 3), (2, 3), (10, 11)]:
         assert got.get(pair) == 1.0, (pair, got)
     cross = {(1, 10), (1, 11), (2, 10), (2, 11), (3, 10), (3, 11)}
@@ -90,111 +85,11 @@ def test_minhash_null_text_is_not_the_null_marker_text(spark):
     "\\x00NULL" are different documents: the exact-duplicate collapse
     must not group them, so no pair comes back (NULL text has no
     shingles)."""
-    from openie_spark.datapipe.dedup import minhash_pairs_docs
+    from openie_spark.kg.dialogue import minhash_pairs_docs
 
     df = spark.createDataFrame([(1, None), (2, "\x00NULL")],
                                "doc_id long, text string")
-    assert minhash_pairs_docs(df, threshold=0.5).collect() == []
-
-
-def test_simhash_near_dups(docs):
-    from openie_spark.datapipe.dedup import planted_docs, simhash_docs, simhash_pairs
-
-    planted = planted_docs(docs.select("doc_id", "text"))
-    sh = simhash_docs(planted)
-    assert sh.filter(F.col("simhash") <= 0).count() == 0  # 60-bit, non-negative
-    # identical text → identical simhash (determinism)
-    s1 = {r.doc_id: r.simhash for r in sh.collect()}
-    s2 = {r.doc_id: r.simhash for r in simhash_docs(planted).collect()}
-    assert s1 == s2
-    pairs = simhash_pairs(planted, max_hamming=20)
-    assert pairs.count() > 0
-    for r in pairs.collect():
-        assert r.hamming <= 20
-
-
-# -------------------------------------------------------- similarity
-
-def test_brute_topk_sql_vs_np(emb):
-    """BIT-identical, not approx: the numpy kernel folds dims in
-    _dot_fixed's exact float64 operation order and rounds HALF_UP,
-    so cosines match the SQL path to the last bit at any sf."""
-    from openie_spark.datapipe.similarity import brute_topk_np, brute_topk_sql
-
-    sql_rows = {(r.q_id, r.rank): (r.vec_id, r.cos) for r in brute_topk_sql(emb, k=5, query_mod=10).collect()}
-    np_rows = {(r.q_id, r.rank): (r.vec_id, r.cos) for r in brute_topk_np(emb, k=5, query_mod=10).collect()}
-    assert sql_rows == np_rows
-
-
-def test_brute_topk_zero_vector_excluded_both_paths(spark, emb):
-    """A zero embedding has no direction; under ANSI mode the naive
-    x/0.0 divide would abort the whole job, and left in, its undefined
-    cosine would poison every result list (NaN ranks first under
-    Spark's NaN-greatest ordering). with_unit marks such vectors with
-    a NULL unit and both top-k paths drop them — planting a zero
-    vector (as corpus vector AND as a query id: 999_990 % 10 == 0)
-    must not change the result set at all, on either path."""
-    from openie_spark.datapipe.similarity import brute_topk_np, brute_topk_sql
-
-    dim = len(emb.select("embedding").first()[0])
-    base = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
-    zeros = spark.createDataFrame(
-        [(999_990, [0.0] * dim), (999_999, [0.0] * dim)],
-        "vec_id long, embedding array<double>")
-    corpus = base.unionByName(zeros)
-
-    clean = sorted((r.q_id, r.rank, r.vec_id, r.cos)
-                   for r in brute_topk_sql(base, k=5, query_mod=10).collect())
-    sql_rows = sorted((r.q_id, r.rank, r.vec_id, r.cos)
-                      for r in brute_topk_sql(corpus, k=5, query_mod=10).collect())
-    np_rows = sorted((r.q_id, r.rank, r.vec_id, r.cos)
-                     for r in brute_topk_np(corpus, k=5, query_mod=10).collect())
-    assert sql_rows == clean
-    assert np_rows == clean
-
-
-def test_lsh_topk_finds_planted_neighbors(emb):
-    """Random-hyperplane LSH recovers STRONG neighbors (cos ≈ 0.999
-    planted twins) with high recall — the regime sign-LSH is built for.
-    (On this corpus the true top-5 sit at cos ≈ 0.3, where no sketch
-    can prune and brute force is the right tool — see brute_topk_*.)"""
-    from openie_spark.datapipe.similarity import lsh_topk
-
-    base = emb.select("vec_id", "embedding")
-    noised = base.select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.transform("embedding", lambda x, i: F.when(i == 0, x * 1.05).otherwise(x)).alias("embedding"),
-    )
-    planted = base.unionByName(noised)
-    got = lsh_topk(planted, k=1, query_mod=10).collect()
-    orig_queries = [r for r in got if r.q_id < 100000]
-    assert orig_queries, "query sample empty"
-    hits = sum(1 for r in orig_queries if r.vec_id == r.q_id + 100000)
-    assert hits / len(orig_queries) >= 0.9, f"planted-twin recall {hits}/{len(orig_queries)}"
-
-
-def test_embedding_pairs_planted(emb):
-    from openie_spark.datapipe.similarity import embedding_pairs, embedding_pairs_exact
-
-    base = emb.select("vec_id", "embedding")
-    noised = base.select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.transform("embedding", lambda x, i: F.when(i == 0, x * 1.05).otherwise(x)).alias("embedding"),
-    )
-    planted = base.unionByName(noised)
-    want = {(r.vec_id, r.vec_id + 100000) for r in base.collect()}
-
-    # exact all-pairs ground truth: exactly the planted twins and
-    # nothing else (random 64-dim vectors never hit 0.95)
-    exact = {(r.a, r.b) for r in embedding_pairs_exact(planted, threshold=0.95).collect()}
-    assert exact == want
-
-    # LSH-gated path: verified subset of exact with near-total recall
-    # on the cos≈0.999 twins (the regime the sketch is built for)
-    got = {(r.a, r.b) for r in embedding_pairs(planted, threshold=0.95).collect()}
-    assert got <= exact
-    assert len(got) >= 0.98 * len(exact), f"LSH recall {len(got)}/{len(exact)}"
+    assert minhash_pairs_docs(df).collect() == []
 
 
 # --------------------------------------------------------- textstats
@@ -230,185 +125,6 @@ def test_fingerprint_order_sensitive(spark):
         [(1, "a b c"), (2, "c b a"), (3, "a b c")], "doc_id long, text string")
     fp = {r.doc_id: r.fp for r in fingerprint(docs).collect()}
     assert fp[1] == fp[3] and fp[1] != fp[2]
-
-
-# -------------------------------------------------------- multimodal
-
-def test_media_features_and_frames(docs):
-    from openie_spark.datapipe.multimodal import (
-        FRAME_BYTES,
-        FRAME_STRIDE,
-        derive_media,
-        media_features,
-        frame_sample,
-    )
-
-    media = derive_media(docs)
-    feats = media_features(media).collect()
-    assert len(feats) == docs.count()
-    for r in feats:
-        assert len(r.feature) == 16
-        assert abs(sum(r.feature) - 1.0) < 1e-4
-        assert r.n_bytes > 0
-        # integer counts are the exact histogram behind the feature
-        assert len(r.hist) == 16 and sum(r.hist) == r.n_bytes
-    frames = frame_sample(media).collect()
-    n_video = media.filter(F.col("kind") == "video").count()
-    assert n_video > 0 and len(frames) > 0
-    by_media = {}
-    for r in frames:
-        by_media.setdefault(r.media_id, []).append(r)
-    sizes = {r.media_id: r.n_bytes for r in media.select("media_id", F.octet_length("payload").alias("n_bytes")).collect()}
-    for mid, rows in by_media.items():
-        n_frames = (sizes[mid] + FRAME_BYTES - 1) // FRAME_BYTES
-        assert len(rows) == (n_frames + FRAME_STRIDE - 1) // FRAME_STRIDE
-        assert all(r.frame_idx % FRAME_STRIDE == 0 for r in rows)
-
-
-def test_decode_real_is_gated():
-    from openie_spark.datapipe.multimodal import decode_real
-
-    with pytest.raises(NotImplementedError):
-        decode_real(b"xx", "image")
-
-
-def test_ivf_topk_finds_planted_neighbors(emb):
-    """IVF coarse quantization recovers cos ≈ 0.999 planted twins: a
-    twin's direction is nearly identical to its original's, so both
-    argmax to the same centroid cell and the twin survives the nprobe
-    gate. (Weak cos ≈ 0.3 neighbors are brute force's regime, same
-    caveat as sign-LSH above.)"""
-    from openie_spark.datapipe.similarity import ivf_topk
-
-    base = emb.select("vec_id", "embedding")
-    noised = base.select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.transform("embedding", lambda x, i: F.when(i == 0, x * 1.05).otherwise(x)).alias("embedding"),
-    )
-    planted = base.unionByName(noised)
-    got = ivf_topk(planted, k=1, query_mod=10).collect()
-    orig_queries = [r for r in got if r.q_id < 100000]
-    assert orig_queries, "query sample empty"
-    assert all(r.rank == 1 for r in got)
-    hits = sum(1 for r in orig_queries if r.vec_id == r.q_id + 100000)
-    assert hits / len(orig_queries) >= 0.9, f"planted-twin recall {hits}/{len(orig_queries)}"
-
-def test_lsh_band_width_bounds_buckets(spark):
-    """The r2 scale hazard: 4-bit bands gave only 16 bucket values per
-    band, so every bucket held ~n/16 of the corpus and the candidate
-    join degraded to ~n². The shipped 15-bit bands must keep buckets
-    tiny on a generic (hash-direction) corpus, and lsh_bucket_stats
-    must surface a genuinely skewed (same-direction) cluster instead of
-    hiding it."""
-    import hashlib
-
-    from openie_spark.datapipe.similarity import (
-        LSH_PLANE_BANDS,
-        LSH_PLANES,
-        lsh_bucket_stats,
-    )
-
-    dim, n = 64, 2000
-
-    def vec(i, scale=1.0, base=None):
-        if base is None:
-            return [
-                (int(hashlib.md5(f"v{i}d{d}".encode()).hexdigest()[:8], 16)
-                 / 0x7FFFFFFF) - 1.0
-                for d in range(dim)
-            ]
-        return [x * scale for x in base]
-
-    rows = [(i, vec(i)) for i in range(n)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    stats = {r.band_idx: r for r in lsh_bucket_stats(df).collect()}
-    assert len(stats) == LSH_PLANE_BANDS
-    n_pairs_all = n * (n - 1) // 2
-    for r in stats.values():
-        # bound, not an average: no band bucket may hold more than a
-        # sliver of the corpus (old 4-bit config: max_bucket ≈ n/16·3)
-        assert r.max_bucket <= 16, r
-        assert r.cand_pairs <= n_pairs_all // 100, r
-
-    # adversarial skew: 300 co-directional vectors (same direction =
-    # identical sketch by construction) — observability must report a
-    # 300-deep hot bucket, mirroring kg/linking.py's block stats
-    hot_base = vec(0)
-    hot = [(100_000 + j, [x * (1.0 + j * 1e-9) for x in hot_base])
-           for j in range(300)]
-    skewed = df.unionByName(
-        spark.createDataFrame(hot, "vec_id long, embedding array<double>"))
-    sk_stats = lsh_bucket_stats(skewed).collect()
-    assert max(r.max_bucket for r in sk_stats) >= 300
-    assert LSH_PLANES // LSH_PLANE_BANDS >= 15  # pin the width itself
-
-
-def test_neardup_groups_transitive_clusters(spark):
-    """a~b and b~c must collapse into ONE group labeled by the min
-    member, even when a and c never share an LSH bucket directly;
-    unrelated docs stay singleton keepers."""
-    import pyspark.sql.functions as F
-
-    from openie_spark.datapipe.dedup import neardup_groups, planted_docs
-
-    base = " ".join(f"tok{i}" for i in range(40))
-    docs = spark.createDataFrame(
-        [(1, base), (50, "completely different words " * 5)],
-        "doc_id long, text string")
-    # planted twin of doc 1 (id 1+PLANT_OFFSET) is near-dup of doc 1;
-    # the twin chain makes the cluster transitive
-    out = {r["doc_id"]: r for r in neardup_groups(planted_docs(docs)).collect()}
-    from openie_spark.datapipe.dedup import PLANT_OFFSET
-
-    assert out[1]["group_id"] == 1 and out[1]["is_keeper"]
-    assert out[1 + PLANT_OFFSET]["group_id"] == 1
-    assert not out[1 + PLANT_OFFSET]["is_keeper"]
-    assert out[1]["group_size"] == out[1 + PLANT_OFFSET]["group_size"] == 2
-    # the "different" doc and its twin form their own group
-    assert out[50]["group_id"] == 50 and out[50]["is_keeper"]
-    # every group has exactly one keeper
-    from collections import Counter
-
-    keepers = Counter(r["group_id"] for r in out.values() if r["is_keeper"])
-    assert all(v == 1 for v in keepers.values())
-
-
-def test_embedding_groups_transitive_collapse(spark):
-    """a~b, b~c chains collapse to one keeper; isolated vectors are
-    singleton keepers of themselves."""
-    from openie_spark.datapipe.similarity import embedding_groups
-
-    dim = 8
-    def v(*scale):
-        base = [1.0] + [0.1] * (dim - 1)
-        return [x * s for x, s in zip(base, [scale[0]] + [1.0] * (dim - 1))]
-    rows = [
-        (1, v(1.00)), (2, v(1.02)), (3, v(1.04)),   # near-identical chain
-        (4, [0.0] * (dim - 1) + [1.0]),             # orthogonal singleton
-    ]
-    out = {r.vec_id: (r.group_id, r.group_size, r.is_keeper)
-           for r in embedding_groups(
-               spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-           ).collect()}
-    assert out[1] == (1, 3, True)
-    assert out[2] == (1, 3, False)
-    assert out[3] == (1, 3, False)
-    assert out[4] == (4, 1, True)
-
-
-def test_embedding_groups_no_pairs_all_singletons(spark):
-    """A corpus with no near-duplicates (orthogonal vectors) must hit
-    the empty-pair-graph path: every vector a singleton keeper."""
-    from openie_spark.datapipe.similarity import embedding_groups
-
-    dim = 8
-    rows = [(i, [1.0 if j == i else 0.0 for j in range(dim)])
-            for i in range(4)]
-    out = {r.vec_id: (r.group_id, r.group_size, r.is_keeper)
-           for r in embedding_groups(
-               spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-           ).collect()}
-    assert out == {i: (i, 1, True) for i in range(4)}
 
 
 def test_bpe_pair_counts_hand_values(spark):
@@ -488,8 +204,8 @@ def test_kmv_estimator_accuracy_and_determinism(spark, docs):
     salted two-level top-k equals the unsalted global top-k."""
     from pyspark.sql import functions as F
 
-    from openie_spark.datapipe.hashing import tokens_of, word_ngrams
     from openie_spark.datapipe.textstats import KMV_K, kmv_distinct
+    from openie_spark.functions.hashing import tokens_of, word_ngrams
 
     a = sorted(tuple(r) for r in kmv_distinct(docs).collect())
     b = sorted(tuple(r) for r in kmv_distinct(docs.repartition(7)).collect())
@@ -524,8 +240,8 @@ def test_quantiles_exact_small_group(spark):
 def test_quantiles_sample_accuracy_and_determinism(spark, docs):
     """Sampled p50 lands within the binomial envelope of the true
     median; partitioning-independent; salted two-level == global."""
-    from openie_spark.datapipe.hashing import tokens_of
     from openie_spark.datapipe.textstats import sampled_quantiles
+    from openie_spark.functions.hashing import tokens_of
 
     a = sorted(tuple(r) for r in sampled_quantiles(docs).collect())
     b = sorted(tuple(r) for r in sampled_quantiles(docs.repartition(7)).collect())
@@ -584,8 +300,8 @@ def test_hll_accuracy_and_determinism(spark, docs):
     """Raw HLL estimate lands within the m=256 error envelope of the
     true per-lang distinct-3-gram count on every row outside the
     documented linear-counting gate; partitioning-independent."""
-    from openie_spark.datapipe.hashing import tokens_of, word_ngrams
     from openie_spark.datapipe.textstats import hll_distinct
+    from openie_spark.functions.hashing import tokens_of, word_ngrams
 
     a = sorted(tuple(r) for r in hll_distinct(docs).collect())
     b = sorted(tuple(r) for r in hll_distinct(docs.repartition(7)).collect())
@@ -596,87 +312,6 @@ def test_hll_accuracy_and_determinism(spark, docs):
     for lang, _n_zero, _s, est, gated in a:
         if not gated:  # ~6.5% stderr at m=256; generous 4+ sigma
             assert abs(est - true[lang]) / true[lang] < 0.3
-
-
-def test_ivfpq_topk_exact_twin_rank1(emb):
-    """An exact-duplicate vector shares its original's cell and PQ
-    codes, so ADC ranks it first and the exact rescore returns it at
-    rank 1 with cos 1.0 — end-to-end coverage of encode → inverted
-    list → ADC shortlist → rescore."""
-    from openie_spark.datapipe.similarity import ivfpq_topk
-
-    base = emb.select("vec_id", "embedding")
-    twins = base.select(
-        (F.col("vec_id") + 100000).alias("vec_id"), F.col("embedding"))
-    got = ivfpq_topk(base.unionByName(twins), k=1, query_mod=10).collect()
-    orig = [r for r in got if r.q_id < 100000]
-    assert orig, "query sample empty"
-    for r in orig:
-        assert r.vec_id == r.q_id + 100000 and r.cos == 1.0, r
-
-
-def test_ivfpq_topk_deterministic_and_rescored(emb):
-    """Partitioning-independent results; every reported cos equals the
-    brute-force exact cosine for that (q, vec) pair (the rescore is
-    exact — only the CANDIDATE SET is approximate)."""
-    from openie_spark.datapipe.similarity import brute_topk_sql, ivfpq_topk
-
-    a = ivfpq_topk(emb).orderBy("q_id", "rank").collect()
-    b = ivfpq_topk(emb.repartition(13)).orderBy("q_id", "rank").collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
-    # exact cosines for all (q, vec) pairs via the brute path at k=corpus
-    exact = {(r.q_id, r.vec_id): r.cos
-             for r in brute_topk_sql(emb, k=10**9).collect()}
-    for r in a:
-        assert exact[(r.q_id, r.vec_id)] == r.cos
-
-
-def test_with_unit_degenerate_vectors_marked_null(spark):
-    """The NULL-unit contract (the only degenerate marker that
-    round-trips pandas→Arrow — NaN list elements are masked to null):
-    zero-norm, NULL, NaN-bearing, and too-short vectors all get a NULL
-    unit; well-formed vectors normalize exactly; overlong vectors
-    normalize by the first-dim norm (the old expression fold's
-    semantics)."""
-    from openie_spark.datapipe.similarity import with_unit
-
-    df = spark.createDataFrame(
-        [(1, [0.0, 0.0]), (2, [3.0, 4.0]), (3, None),
-         (4, [1.0]), (5, [float("nan"), 1.0]), (6, [3.0, 4.0, 7.0])],
-        "vec_id long, embedding array<double>")
-    out = {r.vec_id: r.unit for r in with_unit(df, dim=2).collect()}
-    assert out[1] is None and out[3] is None and out[4] is None \
-        and out[5] is None
-    assert out[2] == [0.6, 0.8]
-    assert out[6] == [0.6, 0.8, 1.4]  # norm over first 2 dims only
-
-
-def test_similarity_entry_points_drop_degenerate_vectors(spark, emb):
-    """Every bucketed ANN path (lsh / ivf / ivfpq) and the near-dup
-    pair graph must treat a planted zero vector as a non-event: same
-    results as the clean corpus, no ANSI divide-by-zero abort, and the
-    zero vec_id absent from candidates. (The brute paths have their
-    own planted-zero test above.)"""
-    from openie_spark.datapipe.similarity import (
-        embedding_pairs,
-        ivf_topk,
-        ivfpq_topk,
-        lsh_topk,
-    )
-
-    dim = len(emb.select("embedding").first()[0])
-    base = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
-    corrupt = base.unionByName(spark.createDataFrame(
-        [(999_950, [0.0] * dim)], "vec_id long, embedding array<double>"))
-
-    for fn in (lsh_topk, ivf_topk, ivfpq_topk):
-        clean = sorted(map(tuple, fn(base, k=3, query_mod=100).collect()))
-        dirty = sorted(map(tuple, fn(corrupt, k=3, query_mod=100).collect()))
-        assert dirty == clean, fn.__name__
-    clean_p = sorted((r.a, r.b) for r in embedding_pairs(base).collect())
-    dirty_p = sorted((r.a, r.b) for r in embedding_pairs(corrupt).collect())
-    assert dirty_p == clean_p
 
 
 def _winnow_py(text, k=8, w=4):

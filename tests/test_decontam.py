@@ -1,7 +1,6 @@
 """Benchmark decontamination (datapipe.decontam): randomized parity vs
 a brute-force Python reference, planted-duplicate semantics, hostile
-inputs. Oracle parity is covered by the driver gate (dp_decontam
-hash-green vs DuckDB)."""
+inputs."""
 
 from __future__ import annotations
 

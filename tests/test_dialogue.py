@@ -237,46 +237,3 @@ def test_tool_sequences_skips_non_tool_turns(spark):
         ("a", "b"): (3, 2, 1000000),
         ("b", "a"): (1, 1, 1000000),
     }
-
-
-def test_minhash_exact_duplicate_groups_full_pairset(spark):
-    """The exact-duplicate collapse is semantics-preserving: a corpus
-    with a 3-copy group and a 2-copy near-dup of it must emit ALL
-    member-level pairs — within-group pairs at exactly 1.0 and every
-    cross-group member combination at the rep-level jaccard. Empty
-    texts carry the [''] fallback shingle (word_ngrams), so identical
-    empties pair at 1.0 — same as the pre-collapse path."""
-    from openie_spark.kg.dialogue import minhash_pairs_docs
-
-    base = ("the quick brown fox jumps over the lazy dog and then "
-            "runs far away into the deep dark quiet forest tonight")
-    near = base.replace("quiet", "loud")      # high-jaccard neighbor
-    rows = [(1, base), (2, base), (3, base),  # 3-copy exact group
-            (10, near), (11, near),           # 2-copy exact group
-            (20, "completely different text about spark shuffles and "
-                 "partition sizing at terabyte scale for web corpora"),
-            (30, ""), (31, "")]               # empty texts: no pairs
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {(r.a, r.b): r.jaccard
-           for r in minhash_pairs_docs(df).collect()}
-    for pair in [(1, 2), (1, 3), (2, 3), (10, 11)]:
-        assert got.get(pair) == 1.0, (pair, got)
-    cross = {(1, 10), (1, 11), (2, 10), (2, 11), (3, 10), (3, 11)}
-    assert cross <= set(got)
-    assert len({got[p] for p in cross}) == 1       # same rep-level score
-    assert 0.5 <= got[(1, 10)] < 1.0
-    assert got.get((30, 31)) == 1.0     # identical empties: [''] shingle
-    assert not any(20 in (a, b) for a, b in got)   # singleton: no pairs
-    assert not any(a >= 30 or b >= 30 for a, b in got if (a, b) != (30, 31))
-
-
-def test_minhash_null_text_is_not_the_null_marker_text(spark):
-    """A NULL-text document and one whose text is the string
-    "\\x00NULL" are different documents: the exact-duplicate collapse
-    must not group them, so no pair comes back (NULL text has no
-    shingles)."""
-    from openie_spark.kg.dialogue import minhash_pairs_docs
-
-    df = spark.createDataFrame([(1, None), (2, "\x00NULL")],
-                               "doc_id long, text string")
-    assert minhash_pairs_docs(df).collect() == []

@@ -891,7 +891,10 @@ def test_graph_integrity_all_zero_when_healthy(spark):
 def test_new_ops_survive_hostile_transcripts(spark):
     """The verify-skill probe set over the session's transcript-facing
     operators: null text / empty / whitespace-only / punct-only / long
-    turn and null ts must not crash dialogue stats or reply latency."""
+    turn and null ts must not crash dialogue stats, reply latency,
+    substring spans, or BPE learning."""
+    from openie_spark.datapipe.dedup import substr_dup_spans
+    from openie_spark.datapipe.textstats import bpe_learn_merges
     from openie_spark.kg.dialogue import dialogue_stats
     from openie_spark.kg.analytics import reply_latency  # noqa: F401
 
@@ -911,6 +914,10 @@ def test_new_ops_survive_hostile_transcripts(spark):
     assert len(ds) == 1 and ds[0].n_turns == 5
     rl = reply_latency(t).collect()          # null-ts gaps stay null, no crash
     assert len(rl) <= 1
+    docs = t.select(F.col("turn_idx").cast("long").alias("doc_id"), "text")
+    assert substr_dup_spans(docs).count() >= 0
+    m = bpe_learn_merges(docs, n_merges=3).collect()
+    assert all(r.n >= 1 for r in m)          # learned only from real words
 
 
 def test_community_stats_two_cliques(spark):

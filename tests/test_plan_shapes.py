@@ -27,6 +27,10 @@ def _count(plan: str, pat: str) -> int:
     return len(re.findall(pat, plan))
 
 
+def _docs(spark):
+    return spark.read.parquet(f"{SF}/documents.parquet")
+
+
 @pytest.fixture(scope="module")
 def entry(spark):
     import importlib.util
@@ -52,10 +56,47 @@ def test_no_nested_loop_joins_on_scale_paths(spark, entry):
     """The minhash-LSH pair paths exist to avoid the quadratic join —
     a BroadcastNestedLoopJoin/CartesianProduct appearing there means
     the bucketing broke."""
+    from openie_spark.datapipe.decontam import decontaminate
+
     qs = entry.queries()
     for name in ("kg_conv_neardup", "kg_pairs_minhash"):
         plan = _plan(qs[name](spark, SF))
         assert _count(plan, r"CartesianProduct|BroadcastNestedLoopJoin") == 0, name
+    plan = _plan(decontaminate(_docs(spark)))
+    assert _count(plan, r"CartesianProduct|BroadcastNestedLoopJoin") == 0
+
+
+def test_chunking_is_map_only(spark):
+    from openie_spark.datapipe.quality import chunk_documents
+
+    plan = _plan(chunk_documents(_docs(spark)))
+    assert _count(plan, r"\bExchange\b") == 0
+    assert _count(plan, r"ArrowEvalPython|BatchEvalPython|MapInPandas") == 0
+
+
+def test_mixture_window_runs_post_aggregation(spark):
+    """corpus_mixture's unpartitioned window is safe ONLY because it
+    sees the post-agg stratum table: the plan must place HashAggregate
+    below the Window, and the single-partition exchange must feed the
+    window, not the scan."""
+    from openie_spark.datapipe.quality import corpus_mixture
+
+    plan = _plan(corpus_mixture(_docs(spark)))
+    w = plan.find("Window")
+    agg = [m.start() for m in re.finditer("HashAggregate", plan)]
+    assert w != -1 and agg and min(agg) > w  # formatted plan prints top-down
+
+
+def test_hll_registers_are_pure_codegen_group(spark):
+    """hll_distinct's point is the bounded register aggregation:
+    no Python stage, no sort/window, no join anywhere in the plan."""
+    from openie_spark.datapipe.textstats import hll_distinct
+
+    plan = _plan(hll_distinct(_docs(spark)))
+    assert _count(plan, r"ArrowEvalPython|BatchEvalPython|MapInPandas") == 0
+    assert _count(plan, r"CartesianProduct|BroadcastNestedLoopJoin") == 0
+    assert _count(plan, r"\bWindow\b") == 0
+    assert _count(plan, r"\bJoin\b") == 0
 
 
 def test_entity_types_is_map_only(spark, entry):
@@ -74,6 +115,18 @@ def test_salience_has_exactly_one_scalar_broadcast(spark, entry):
     # formatted explain prints every node twice (tree + detail block)
     assert _count(plan, r"BroadcastNestedLoopJoin") == 2
     assert _count(plan, r"CartesianProduct") == 0
+
+
+def test_winnow_is_map_only(spark):
+    """Winnowing must stay embarrassingly parallel: no Exchange, no
+    Python stage, no join — and the k-gram hash array must be owned by
+    a Generate barrier (md5 once per gram, not re-inlined per window)."""
+    from openie_spark.datapipe.textstats import winnow_fingerprints
+
+    plan = _plan(winnow_fingerprints(_docs(spark)))
+    assert _count(plan, r"\bExchange\b") == 0
+    assert _count(plan, r"ArrowEvalPython|BatchEvalPython|MapInPandas") == 0
+    assert _count(plan, r"\bJoin\b") == 0
 
 
 def test_coref_is_single_window_no_join(spark, entry):

@@ -1,7 +1,5 @@
 """Corpus-quality operators (datapipe.quality): Gopher signals,
-TF-IDF top terms, PII scrub — hand-computed goldens + edge guards.
-Oracle parity is covered by the driver gate (dp_quality_gopher /
-dp_tfidf_terms / dp_pii_scrub all hash-green vs DuckDB)."""
+TF-IDF top terms, PII scrub — hand-computed goldens + edge guards."""
 
 from __future__ import annotations
 
@@ -315,7 +313,12 @@ def test_ppm_wide_exact_at_corpus_scale(spark):
     import duckdb
 
     from openie_spark.datapipe.textstats import _ppm, _ppm_wide
-    from openie_spark.plans.datapipe_oracles import _ppm_wide_sql
+
+    def _ppm_wide_sql(num: str, den: str) -> str:
+        # DuckDB twin of _ppm_wide: the same BIGINT decomposition
+        a = f"((({num}) * 1000) // ({den}))"
+        ra = f"((({num}) * 1000) % ({den}))"
+        return f"{a} * 1000 + (2 * {ra} * 1000 + ({den})) // (2 * ({den}))"
 
     cases = [
         # (num, den): small / per-doc magnitudes (must equal _ppm too)
