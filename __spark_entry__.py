@@ -18,23 +18,9 @@ from pyspark.sql import functions as F
 
 def _tune(spark: SparkSession) -> SparkSession:
     """Driver may hand us a vanilla session; apply runtime-settable conf."""
-    for k, v in {
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.session.timeZone": "UTC",
-    }.items():
-        spark.conf.set(k, v)
-    # One BLAS thread per python worker: task-level parallelism already
-    # fills every core, and 2 OpenBLAS threads/worker × N workers just
-    # spin-contend (measured 2x slower decode). sc.environment feeds
-    # the envVars of every subsequently-created python UDF worker, so
-    # this works even on the driver's vanilla already-started session.
-    for k in ("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS", "MKL_NUM_THREADS"):
-        spark.sparkContext.environment.setdefault(k, "1")
-    from openie_spark.session import ship_package
+    from openie_spark.session import tune_runtime
 
-    ship_package(spark)
-    return spark
+    return tune_runtime(spark)
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -106,20 +92,6 @@ def _q_turn_invariant(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_triples_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fused Arrow extraction backend — row-identical to
-    triples_extract (same DuckDB oracle); timings vs the codegen path
-    in operators/fast_extract.py."""
-    from openie_spark.operators.extract import extract_triples
-    from openie_spark.sources.transcripts import read_transcripts
-
-    return extract_triples(
-        read_transcripts(_tune(spark), sf_dir), backend="rule_arrow"
-    ).select(
-        "conv_id", "turn_idx", "sent_idx", "ext_idx", "sent", "pred", "subj", "obj", "confidence"
-    )
-
-
 def _q_triples_neural(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Neural (numpy BiLSTM+CRF mapInPandas) extraction path — not
     SQL-expressible, driver records the weaker rows-only check."""
@@ -181,13 +153,11 @@ def _shared(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def _job(spark: SparkSession, sf_dir: str):
     """The pipeline whose stage builds make the shared KG tables; it is
-    never run, so it writes nothing. Backend rule_arrow: row-identical
-    to 'rule' (pinned by tests/test_fast_extract.py) and the cheaper
-    one to materialize warm (measurements in
-    operators/fast_extract.py)."""
+    never run, so it writes nothing. Its defaults are KGPipeline.run's,
+    so the shared tables are the tables a run writes."""
     from openie_spark.pipeline import KGPipeline
 
-    return KGPipeline(spark, sf_dir, None, backend="rule_arrow")
+    return KGPipeline(spark, sf_dir, None)
 
 
 def _stage_build(stage):
@@ -1086,7 +1056,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sentence_segment": _q_sentences,
         "predicate_spans": _q_spans,
         "triples_extract": _q_triples,
-        "triples_extract_arrow": _q_triples_arrow,
         "triples_extract_neural": _q_triples_neural,
         "carb_score_self": _q_carb_self,
         "carb_score_degraded": _q_carb_degraded,
@@ -1175,7 +1144,6 @@ def oracle_sql() -> dict[str, str]:
         "sentence_segment": o.sentences_sql(),
         "predicate_spans": o.spans_sql(),
         "triples_extract": o.triples_sql(),
-        "triples_extract_arrow": o.triples_sql(),
         "carb_score_self": o.carb_self_sql(),
         "kg_mentions": o.kg_mentions_sql(),
         "kg_pairs_exact": o.kg_pairs_sql(),

@@ -5,8 +5,6 @@ Reference invariants (SURVEY.md §1.2):
   * MAX_LEN = 98 words per sentence (/root/reference/utils/dataset.py:10,39-41).
     The reference crashes on longer sentences; we segment deterministically
     instead and record the deviation in lineage.
-  * PREDICATE_LIMIT = 3 predicate spans per sentence
-    (/root/reference/configs/joint.cfg:59).
   * confidence = 1.0 literal for every emitted tuple
     (/root/reference/eval/oie_eval/oie_readers/goldReader.py:26,31).
 """
@@ -14,7 +12,6 @@ Reference invariants (SURVEY.md §1.2):
 from __future__ import annotations
 
 MAX_SENT_WORDS = 98
-PREDICATE_LIMIT = 3
 CONFIDENCE = 1.0
 
 # Sentence-terminal punctuation tokens (text is pre-tokenized,

@@ -211,23 +211,23 @@ def _quantized_counts(raw: DataFrame, max_thresholds: int):
     ``max_thresholds`` values (logged deviation)."""
     import logging
 
-    counts = raw.agg(
-        F.sum("correct_add").alias("correct"),
-        F.sum("unmatched_add").alias("unmatched")).first()
-    y = raw.filter(F.col("y").isNotNull())
-    n_distinct = y.agg(F.count_distinct("score")).first()[0]
+    # one action for the trailer sums and the grid: the NULL scores are
+    # exactly the trailer rows, and percentile_approx and min skip them
     qs = [i / (max_thresholds - 1) for i in range(max_thresholds)]
-    row = y.agg(F.percentile_approx("score", qs, 10_000).alias("g"),
-                F.min("score").alias("m")).first()
+    row = raw.agg(F.sum("correct_add").alias("correct"),
+                  F.sum("unmatched_add").alias("unmatched"),
+                  F.percentile_approx("score", qs, 10_000).alias("g"),
+                  F.min("score").alias("m")).first()
     grid = sorted({float(row.m), *(float(v) for v in row.g)})
     logging.getLogger(__name__).warning(
-        "oie16_compare: %d distinct scores > %d; snapping to a "
-        "%d-value grid", n_distinct, max_thresholds, len(grid))
+        "oie16_compare: more than %d distinct scores; snapping to a "
+        "%d-value grid", max_thresholds, len(grid))
     # floor-snap via a broadcast theta-join on the tiny grid table:
     # each sample keeps the largest grid value <= its score
     gdf = raw.sparkSession.createDataFrame(
         pa.table({"gs": pa.array(grid, pa.float64())}))
-    y = (y.withColumn("_rid", F.monotonically_increasing_id())
+    y = (raw.filter(F.col("y").isNotNull())
+         .withColumn("_rid", F.monotonically_increasing_id())
          .join(F.broadcast(gdf), F.col("score") >= F.col("gs"), "left")
          .groupBy("_rid")
          .agg(F.first("y").alias("y"),
@@ -237,7 +237,7 @@ def _quantized_counts(raw: DataFrame, max_thresholds: int):
         .agg(F.sum("y").alias("tp"), F.count(F.lit(1)).alias("n"))
         .orderBy(F.desc("score"))
         .collect())
-    return int(counts.correct or 0), int(counts.unmatched or 0), by_score
+    return int(row.correct or 0), int(row.unmatched or 0), by_score
 
 
 def oie16_compare(gold: DataFrame, pred: DataFrame,

@@ -4,7 +4,6 @@ from openie_spark.functions.arrays import (  # noqa: F401
     rule_pred_tags,
     seqie_spans,
     tag2span_spans,
-    rule_ext_tags,
     pred_string,
     arg_string,
     args_array,

@@ -158,44 +158,6 @@ def tag2span_spans(tags: Column) -> Column:
     return F.when(F.size(tags) > 0, spans).otherwise(F.expr(_EMPTY_SPANS))
 
 
-def rule_ext_tags(words: Column, span_l: Column, span_r: Column) -> Column:
-    """Deterministic stage-2 tagger (rule backend): given the words and
-    one CONTIGUOUS predicate span [span_l, span_r], produce the full
-    18-tag extraction sequence: span → P-B/P-I, non-punct words before
-    the span → A0, non-punct words after → A1, everything else O. The
-    first non-punct word of each arg region gets the -B tag.
-
-    Contiguity is guaranteed on the rule path (P-I only ever follows a
-    P word); the neural path gets its extraction tags from the arg
-    model, never from this function. Single O(n) transform — the arg
-    run starts are precomputed scalars, not a second fix-up pass.
-    """
-    def first_nonpunct(lo: Column, hi: Column) -> Column:
-        # smallest 0-based index in [lo, hi] whose word is not punct;
-        # null when the range is empty or all-punct.
-        idxs = F.when(lo <= hi, F.sequence(lo, hi)).otherwise(F.expr(_EMPTY_INTS))
-        return F.try_element_at(
-            F.filter(idxs, lambda i: ~F.element_at(words, i + 1).isin(*SENT_PUNCT)),
-            F.lit(1),
-        )
-
-    a0_first = first_nonpunct(F.lit(0), span_l - 1)
-    a1_first = first_nonpunct(span_r + 1, F.size(words) - 1)
-
-    def tag(w, i):
-        punct = w.isin(*SENT_PUNCT)
-        return (
-            F.when(i == span_l, F.lit("P-B"))
-            .when((i > span_l) & (i <= span_r), F.lit("P-I"))
-            .when(punct, F.lit("O"))
-            .when(i < span_l, F.when(i == a0_first, F.lit("A0-B")).otherwise(F.lit("A0-I")))
-            .when(i == a1_first, F.lit("A1-B"))
-            .otherwise(F.lit("A1-I"))
-        )
-
-    return F.transform(words, tag)
-
-
 def _pairs(words: Column, tags: Column) -> Column:
     return F.arrays_zip(words.alias("w"), tags.alias("t"))
 

@@ -33,7 +33,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     ArrayType,
-    IntegerType,
     StringType,
     StructField,
     StructType,
@@ -91,111 +90,6 @@ def tag_predicates_neural(sentences: DataFrame, seed: int | None = None) -> Data
                 tags = _decode_words(words, None, use_seed)
                 out = chunk.copy()
                 out["pred_tags"] = tags
-                yield out
-
-    return sentences.mapInPandas(run, schema)
-
-
-def _seqie_spans_py(tags: list[str]) -> list[list[int]]:
-    """Python twin of functions.arrays.seqie_spans (same port of
-    Joint.get_predicate_span, /root/reference/models/seqie.py:58-72):
-    P-B flushes the open span and starts a new one, P-I extends (even
-    across non-P gaps — the open span survives O tags), the trailing
-    open span is flushed at the end."""
-    done: list[list[int]] = []
-    cur: list[int] = []
-    for i, t in enumerate(tags):
-        if t == "P-B":
-            if cur:
-                done.append(cur)
-            cur = [i]
-        elif t == "P-I":
-            cur = cur + [i]
-    if cur:
-        done.append(cur)
-    return done
-
-
-def tag_joint_neural(sentences: DataFrame) -> DataFrame:
-    """Stages B+C+D fused into ONE mapInPandas (neural joint path).
-
-    Row-identical to tag_predicates_neural → fan_out_spans →
-    tag_arguments_neural (pinned by tests/test_model.py), but with the
-    span fan-out done python-side between the two decodes:
-
-    * one python worker per core instead of two — the unfused chain
-      pipelines two mapInPandas stages inside each task, so every core
-      holds BOTH a stage-B and a stage-D worker (measured 64 workers
-      on local[32]; each pays its own pandas/pyarrow/numpy import and
-      weight build);
-    * the sentence ``words`` arrays cross the JVM↔python Arrow
-      boundary once instead of three times (B out, C explode ships
-      them back per-span, D in) — stage C multiplies rows ~6x, so the
-      saved traffic is the fanned copy, the largest of the three.
-
-    The plan stays narrow (the only exchange is segment_transcripts'
-    upstream ``spread``), so the fusion changes nothing at
-    100 TB scale except fewer workers and less Arrow traffic.
-    """
-    from openie_spark.model.weights import ARG_SEED, PRED_SEED
-
-    schema = StructType(
-        [sentences.schema[n] for n in ("conv_id", "turn_idx", "sent_idx",
-                                       "words", "sent")]
-        + [
-            StructField("ext_idx", IntegerType()),
-            StructField("span", ArrayType(IntegerType())),
-            StructField("span_l", IntegerType()),
-            StructField("span_r", IntegerType()),
-            StructField("tags", ArrayType(StringType())),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            for chunk in _length_sorted_chunks(pdf):
-                words = [list(ws) for ws in chunk["words"]]
-                pred_tags = _decode_words(words, None, PRED_SEED)
-                # stage C, python-side: one output row per span
-                rep_idx: list[int] = []
-                ext_idx: list[int] = []
-                spans: list[list[int]] = []
-                for row_i, tags in enumerate(pred_tags):
-                    for k, span in enumerate(_seqie_spans_py(tags)):
-                        rep_idx.append(row_i)
-                        ext_idx.append(k)
-                        spans.append(span)
-                if not spans:
-                    continue
-                fanned_words = [words[i] for i in rep_idx]
-                segs = []
-                for ws, span in zip(fanned_words, spans):
-                    seg = np.zeros(len(ws), dtype=np.int8)
-                    idx = np.asarray(span, dtype=np.int64)
-                    seg[idx[idx < len(ws)]] = 1
-                    segs.append(seg)
-                # fanned rows inherit the chunk's length-sorted order,
-                # so fixed-size sub-slices keep padding waste bounded
-                arg_tags: list[list[str]] = []
-                for s in range(0, len(fanned_words), SUB_BATCH):
-                    arg_tags.extend(_decode_words(
-                        fanned_words[s:s + SUB_BATCH],
-                        segs[s:s + SUB_BATCH], ARG_SEED))
-                base = chunk.iloc[rep_idx]
-                out = pd.DataFrame({
-                    "conv_id": base["conv_id"].to_numpy(),
-                    "turn_idx": base["turn_idx"].to_numpy(),
-                    "sent_idx": base["sent_idx"].to_numpy(),
-                    "words": base["words"].to_numpy(),
-                    "sent": base["sent"].to_numpy(),
-                    "ext_idx": np.asarray(ext_idx, dtype=np.int32),
-                    "span": spans,
-                    "span_l": np.asarray([min(s) for s in spans], dtype=np.int32),
-                    "span_r": np.asarray([max(s) for s in spans], dtype=np.int32),
-                    "tags": arg_tags,
-                })
                 yield out
 
     return sentences.mapInPandas(run, schema)

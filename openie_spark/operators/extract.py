@@ -10,9 +10,8 @@ row-multiplier (~spans-per-sentence ×), never a shuffle.
 Reference parity:
   * stage-1 tags ≙ `preds` after head-projection (/root/reference/run.py:233-235)
   * spans ≙ Joint.get_predicate_span (/root/reference/models/seqie.py:58-72);
-    joint inference applies NO span cap (seqie.py:169-177) — ``limit``
-    defaults to None for parity, PREDICATE_LIMIT=3 applies only on the
-    pipeline-style path (run.py:75-76, configs/joint.cfg:59).
+    joint inference applies NO span cap (seqie.py:169-177), and neither
+    does this path.
   * triple assembly ≙ write_output (/root/reference/run.py:148-178)
     including arg-slot compaction and the empty-predicate ' ' literal.
   * confidence = 1.0 literal (goldReader.py:26,31; decoder returns no
@@ -28,7 +27,6 @@ from openie_spark.config import CONFIDENCE, SENT_PUNCT
 from openie_spark.functions.arrays import (
     args_array,
     pred_string,
-    rule_ext_tags,
     rule_pred_tags,
     seqie_spans,
 )
@@ -47,41 +45,24 @@ def tag_predicates(sentences: DataFrame, backend: str = "rule") -> DataFrame:
     raise ValueError(f"unknown tagger backend: {backend}")
 
 
-def fan_out_spans(tagged: DataFrame, limit: int | None = None) -> DataFrame:
+def fan_out_spans(tagged: DataFrame) -> DataFrame:
     """tagged → one row per predicate span (stage C). Narrow
     row-multiplier; span bounds are materialized once per row."""
-    spans = seqie_spans(F.col("pred_tags"))
-    if limit is not None:
-        spans = F.slice(spans, 1, limit)
     return tagged.select(
         *_KEYS, "words", "sent",
-        F.posexplode(spans).alias("ext_idx", "span"),
+        F.posexplode(seqie_spans(F.col("pred_tags"))).alias("ext_idx", "span"),
     ).withColumns({
         "span_l": F.array_min("span"),
         "span_r": F.array_max("span"),
     })
 
 
-def explode_extractions(tagged: DataFrame, backend: str = "rule", limit: int | None = None) -> DataFrame:
-    """tagged → extractions: one row per predicate span, with the full
-    18-tag argument sequence. Stages C+D."""
-    fanned = fan_out_spans(tagged, limit)
-    if backend == "rule":
-        # inline(array(struct(...))) is a Generate: it evaluates the tag
-        # expression exactly once per row. A plain withColumn would let
-        # CollapseProject re-inline the O(n) lambda into every consumer
-        # in the next projection (measured 20-50x slowdown).
-        return fanned.select(
-            *_KEYS, "words", "sent", "ext_idx", "span",
-            F.inline(F.array(F.struct(
-                rule_ext_tags(F.col("words"), F.col("span_l"), F.col("span_r")).alias("tags")
-            ))),
-        )
-    if backend == "neural":
-        from openie_spark.model.infer import tag_arguments_neural
+def explode_extractions(tagged: DataFrame) -> DataFrame:
+    """neural-tagged sentences → extractions: one row per predicate
+    span, with the full 18-tag argument sequence. Stages C+D."""
+    from openie_spark.model.infer import tag_arguments_neural
 
-        return tag_arguments_neural(fanned)
-    raise ValueError(f"unknown tagger backend: {backend}")
+    return tag_arguments_neural(fan_out_spans(tagged))
 
 
 def assemble_triples(extractions: DataFrame) -> DataFrame:
@@ -120,11 +101,12 @@ def assemble_triples(extractions: DataFrame) -> DataFrame:
 def assemble_triples_fast(fanned: DataFrame) -> DataFrame:
     """Fused rule-path assembly (stages D+E in one projection).
 
-    Semantically identical to rule_ext_tags → assemble_triples for the
-    contiguous spans the rule tagger produces, but built ONLY from
-    codegen'd builtins (slice / array_join / array_remove) — no
-    interpreted higher-order lambdas. Measured ~20x faster than the
-    tags-based path on local[32].
+    The rule tagger's spans are contiguous (P-I only ever follows a P
+    word), so the argument regions are plain slices around the span:
+    built ONLY from codegen'd builtins (slice / array_join /
+    array_remove) — no interpreted higher-order lambdas. Measured ~20x
+    faster than tagging every word and assembling through
+    ``assemble_triples`` on local[32].
 
     arg0 = non-punct words before the span, arg1 = non-punct words
     after; the write_output compaction (run.py:174-175) makes
@@ -155,40 +137,14 @@ def assemble_triples_fast(fanned: DataFrame) -> DataFrame:
     )
 
 
-def extract_triples(transcripts: DataFrame, backend: str = "rule", limit: int | None = None) -> DataFrame:
+def extract_triples(transcripts: DataFrame, backend: str = "rule") -> DataFrame:
     """transcripts → triples: the full extraction pipeline A→E.
 
-    backend: 'rule' (pure codegen column expressions) |
-    'rule_arrow' (same semantics fused into one mapInPandas,
-    row-identical by tests/test_fast_extract.py; timings vs 'rule' in
-    operators/fast_extract.py) | 'neural' (numpy BiLSTM+CRF) |
-    'neural_fused' (the neural chain in one mapInPandas)."""
+    backend: 'rule' (pure codegen column expressions) | 'neural'
+    (numpy BiLSTM+CRF, stages B and D each one mapInPandas)."""
     from openie_spark.operators.sentences import segment_transcripts
 
-    if backend == "rule_arrow":
-        if limit is not None:
-            raise ValueError("rule_arrow implements the joint path (no span cap)")
-        from openie_spark.operators.fast_extract import extract_triples_arrow
-
-        return extract_triples_arrow(transcripts)
-    sentences = segment_transcripts(transcripts)
-    if backend == "neural_fused":
-        # B+C+D fused into one mapInPandas (row-identical to the
-        # staged chain, tests/test_model.py): one python worker per
-        # core instead of two and one Arrow crossing of the words
-        # arrays instead of three — it wins when worker startup
-        # dominates (cold short jobs), but the STAGED chain is ~10%
-        # faster in steady state at fixed cores (measured pinned-4:
-        # 347s vs 380s on 100k turns) because the JVM-side explode and
-        # Arrow shuttling overlap with python compute across the two
-        # pipelined workers. Staged is therefore the default.
-        if limit is not None:
-            raise ValueError("neural_fused implements the joint path (no span cap)")
-        from openie_spark.model.infer import tag_joint_neural
-
-        return assemble_triples(tag_joint_neural(sentences))
-    tagged = tag_predicates(sentences, backend=backend)
+    tagged = tag_predicates(segment_transcripts(transcripts), backend=backend)
     if backend == "rule":
-        return assemble_triples_fast(fan_out_spans(tagged, limit))
-    extractions = explode_extractions(tagged, backend=backend, limit=limit)
-    return assemble_triples(extractions)
+        return assemble_triples_fast(fan_out_spans(tagged))
+    return assemble_triples(explode_extractions(tagged))

@@ -76,7 +76,7 @@ from openie_spark.kg.incremental import (
     merge_vocab,
     remap_edges,
 )
-from openie_spark.kg.linking import exact_pairs, minhash_pairs, skew_stats
+from openie_spark.kg.linking import exact_pairs, skew_stats
 from openie_spark.kg.mentions import mention_vocab, mentions_from_norm
 from openie_spark.operators.extract import extract_triples
 from openie_spark.sources.transcripts import read_transcripts
@@ -183,12 +183,10 @@ def _fingerprint() -> dict:
 
 
 def model_version(backend: str) -> str:
-    # neural and neural_fused run the same tagger weights
-    if backend in ("neural", "neural_fused"):
+    if backend == "neural":
         from openie_spark.model.weights import ARG_SEED, PRED_SEED, get_tagger
 
         return f"{get_tagger(PRED_SEED).version}+{get_tagger(ARG_SEED).version}"
-    # rule and rule_arrow are the same model (row-identical outputs)
     return "rule-v1"
 
 
@@ -211,7 +209,7 @@ class StageResult:
 @dataclass(frozen=True)
 class Stage:
     """One stage: ``build(job, *tables)`` gets the KGPipeline (its
-    spark, input_dir, backend and pair_mode) and the upstream tables,
+    spark, input_dir and backend) and the upstream tables,
     in ``upstream`` order and without their ``bucket`` column.
     ``bucket`` is the column hashed into the persisted ``bucket``
     lineage column; ``metrics(out)`` adds manifest metrics over the
@@ -241,21 +239,12 @@ def _vocab(job, tnorm: DataFrame) -> DataFrame:
     return mention_vocab(mentions_from_norm(tnorm))
 
 
-def _pairs(job, vocab: DataFrame) -> DataFrame:
-    return (exact_pairs if job.pair_mode == "exact" else minhash_pairs)(vocab)
-
-
 def _components(job, vocab: DataFrame, pairs: DataFrame) -> DataFrame:
     # imported here, not at module level: connected_components is
     # looked up at call time so a tracer can wrap it
     from openie_spark.kg.canon import connected_components
 
     return canonical_map(vocab, connected_components(pairs))
-
-
-def _edges(job, tnorm: DataFrame, components: DataFrame) -> DataFrame:
-    strategy = "salted" if job.pair_mode == "minhash" else "broadcast"
-    return build_edges_from_norm(tnorm, components, strategy=strategy)
 
 
 def _vocab_skew(out: DataFrame) -> dict:
@@ -267,10 +256,10 @@ KG_STAGES = (
     # normalization materialized ONCE; vocab and edges reuse it
     Stage("triples_norm", _pure(norm_triples), ("triples",), "conv_id"),
     Stage("vocab", _vocab, ("triples_norm",), "norm", _vocab_skew),
-    Stage("pairs", _pairs, ("vocab",), "a"),
+    Stage("pairs", _pure(exact_pairs), ("vocab",), "a"),
     Stage("components", _components, ("vocab", "pairs"), "component"),
     Stage("nodes", _pure(build_nodes), ("components",), "entity_id"),
-    Stage("edges", _edges, ("triples_norm", "components"), "src_id"),
+    Stage("edges", _pure(build_edges_from_norm), ("triples_norm", "components"), "src_id"),
     # compact weighted sink: what a KG consumer reads instead of the
     # occurrence-scale provenance edges (north rule: "finally
     # materializing node/edge tables")
@@ -308,17 +297,19 @@ class Merge:
         return out
 
 
-def _merge_edges(job, prior_edges: DataFrame, remap: DataFrame,
+def _merge_edges(prior_edges: DataFrame, remap: DataFrame,
                  tnorm: DataFrame, components: DataFrame) -> DataFrame:
     # old edges only get their ids rewritten; the delta's are built
     # against the merged components
-    return remap_edges(prior_edges, remap).unionByName(_edges(job, tnorm, components))
+    return remap_edges(prior_edges, remap).unionByName(
+        build_edges_from_norm(tnorm, components))
 
 
-def _merge_relations(job, prior_relations: DataFrame, remap: DataFrame,
+def _merge_relations(prior_relations: DataFrame, remap: DataFrame,
                      tnorm: DataFrame, components: DataFrame,
                      edges: DataFrame) -> DataFrame:
-    return merge_relations(prior_relations, remap, _edges(job, tnorm, components), edges)
+    return merge_relations(prior_relations, remap,
+                           build_edges_from_norm(tnorm, components), edges)
 
 
 # prior entity id -> merged entity id, for every prior entity: built
@@ -334,9 +325,9 @@ MERGES = {m.name: m for m in (
           lambda job, v, pc, p: canonical_map(v, merge_components(pc, p)),
           ("vocab", "prior_components", "pairs")),
     REMAP,
-    Merge("edges", _merge_edges,
+    Merge("edges", _pure(_merge_edges),
           ("prior_edges", "remap", "triples_norm", "components")),
-    Merge("relations", _merge_relations,
+    Merge("relations", _pure(_merge_relations),
           ("prior_relations", "remap", "triples_norm", "components", "edges")),
 )}
 
@@ -408,14 +399,12 @@ class KGPipeline:
     manifest."""
 
     def __init__(self, spark: SparkSession, input_dir: str, output_dir: str,
-                 backend: str = "rule", pair_mode: str = "exact",
-                 table_io=None, analytics: bool = False,
+                 backend: str = "rule", table_io=None, analytics: bool = False,
                  export: bool = False, enrich: bool = False):
         self.spark = spark
         self.input_dir = input_dir
         self.output_dir = output_dir
         self.backend = backend
-        self.pair_mode = pair_mode
         self.analytics = analytics
         self.export = export
         self.enrich = enrich
@@ -509,7 +498,6 @@ class KGPipeline:
         return {
             "config": _fingerprint(),
             "backend": self.backend,
-            "pair_mode": self.pair_mode,
             "model_version": model_version(self.backend),
             "input_dir": self.input_dir,
             "upstream": {
@@ -709,12 +697,6 @@ class KGPipeline:
                 "run_incremental merges the KG stages only: the analytics, "
                 "export and enrich rows are not merged (several read the "
                 "delta's transcripts alone)")
-        if self.pair_mode != "exact":
-            raise ValueError(
-                "run_incremental supports pair_mode='exact' (the "
-                "touched-block recompute is defined on blocking keys; "
-                "the same pattern applies to minhash band buckets but "
-                "is not wired here)")
 
         t_total = time.time()
         prior = {}          # prior manifests, read once per run

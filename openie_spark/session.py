@@ -20,7 +20,7 @@ _PKG_ZIP: str | None = None
 _SHIPPED: set[str] = set()
 
 
-def _driver_memory() -> str:
+def driver_memory() -> str:
     """``SPARK_GRAFT_DRIVER_MEM`` if set, else min(8g, a quarter of
     physical RAM): every local session (tests, tools, bench) is one
     driver JVM, and two fixed 8g heaps side by side can exhaust a
@@ -65,6 +65,29 @@ def ship_package(spark: SparkSession) -> None:
         _SHIPPED.add(app)
 
 
+def tune_runtime(spark: SparkSession) -> SparkSession:
+    """The runtime-settable part of ``get_spark``'s defaults, for a
+    session built elsewhere (a driver's vanilla session, a
+    spark-submit launch): AQE with skew-join splitting, UTC
+    timestamps, one BLAS thread per Python worker, and the package
+    shipped to the executors."""
+    for k, v in {
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+    }.items():
+        spark.conf.set(k, v)
+    # One BLAS thread per python worker: task-level parallelism already
+    # fills every core, and 2 OpenBLAS threads/worker × N workers just
+    # spin-contend (measured 2x slower decode). sc.environment feeds
+    # the envVars of every subsequently-created python UDF worker, so
+    # this works even on an already-started session.
+    for k in ("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS", "MKL_NUM_THREADS"):
+        spark.sparkContext.environment.setdefault(k, "1")
+    ship_package(spark)
+    return spark
+
+
 def get_spark(
     app_name: str = "openie-spark",
     master: str | None = None,
@@ -91,7 +114,7 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         # --- Deterministic timestamps in tests regardless of host TZ.
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", _driver_memory())
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         # One BLAS thread per python worker — Spark tasks are the
         # parallelism; multi-threaded OpenBLAS inside each of N

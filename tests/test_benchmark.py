@@ -233,6 +233,20 @@ def test_oie16_quantized_path_values(spark):
     assert recall == pytest.approx([0.43661971830985913, 0.0, 0.0], rel=1e-12)
 
 
+def test_oie16_quantized_path_runs_at_most_15_jobs(spark, job_ids):
+    """Past max_thresholds, one aggregate reads the trailer counts and
+    the quantile grid, and one grouped read the snapped (tp, n): no
+    extra job for the trailer sums or a distinct-score count."""
+    from openie_spark.eval.benchmark import oie16_compare
+
+    gold, pred = _oie16_frames(spark)
+    got, jobs = job_ids("oie16-quantized",
+                        lambda: oie16_compare(gold, pred, max_thresholds=2))
+    assert len(jobs) <= 15, len(jobs)
+    assert got["correct_total"] == 71 and got["unmatched"] == 40
+    assert got["curve"][2] == [0.03, 0.911]
+
+
 def test_oie16_summary_df_schema(spark):
     """The one-row summary frame keeps the gate's schema (nullable
     columns) and values."""

@@ -135,7 +135,7 @@ def test_neural_pipeline_end_to_end(spark):
         assert len(r.pred_tags) == r.n_words
         assert all(tag in TAGSET_OIE2016 for tag in r.pred_tags)
 
-    exts = explode_extractions(tagged, backend="neural")
+    exts = explode_extractions(tagged)
     for r in exts.collect():
         assert len(r.tags) == len(r.words)
 
@@ -182,7 +182,7 @@ def _content_hash(df):
     return len(lines), h.hexdigest()
 
 
-@pytest.mark.parametrize("backend", ["neural", "neural_fused"])
+@pytest.mark.parametrize("backend", ["neural"])
 def test_neural_plan_builds_without_spark_jobs(spark, job_ids, backend):
     """Building a neural extraction plan runs no Spark job: no schema
     inference on the documents read, and no partition-count probe below
@@ -196,22 +196,6 @@ def test_neural_plan_builds_without_spark_jobs(spark, job_ids, backend):
         read_transcripts(spark, _SF0001), backend=backend))
     assert jobs == []
     assert plan.rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism
-
-
-def test_neural_staged_equals_fused_sf0001(spark):
-    """backend='neural_fused' (B+C+D in one mapInPandas,
-    model/infer.tag_joint_neural) must be ROW-IDENTICAL to the staged
-    chain — the r2 coverage gap: the fused backend shipped with zero
-    test coverage."""
-    from openie_spark.operators.extract import extract_triples
-    from openie_spark.sources.transcripts import derive_transcripts
-
-    t = derive_transcripts(spark, _SF0001)
-    key = ["conv_id", "turn_idx", "sent_idx", "ext_idx"]
-    staged = extract_triples(t, backend="neural").orderBy(*key).collect()
-    fused = extract_triples(t, backend="neural_fused").orderBy(*key).collect()
-    assert len(staged) == len(fused) > 0
-    assert staged == fused
 
 
 def test_neural_content_golden_sf0001(spark):

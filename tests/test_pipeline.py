@@ -286,14 +286,6 @@ def test_read_transcripts_runs_no_job(spark, job_ids):
     assert got == want
 
 
-def test_model_version_pins_the_neural_fused_weights():
-    """neural_fused runs the neural tagger weights, so its manifests
-    pin their hash and a weights change invalidates its resume."""
-    from openie_spark.pipeline import model_version
-
-    assert model_version("neural_fused") == model_version("neural") != "rule-v1"
-
-
 def test_full_resume_skips_everything(spark, pipeline_out):
     from openie_spark.pipeline import KGPipeline
 
@@ -588,7 +580,7 @@ def test_kg_job_python_udf_backend_runs_from_any_cwd(tmp_path):
     r = subprocess.run(
         [sys.executable, os.path.join(root, "tools", "kg_job.py"),
          "--input", SF, "--output", str(tmp_path / "out"),
-         "--backend", "rule_arrow", "--master", "local[2]",
+         "--backend", "neural", "--master", "local[2]",
          "--driver-memory", "2g", "--shuffle-partitions", "4"],
         cwd=str(tmp_path), env=env, capture_output=True, text=True, timeout=540,
     )
@@ -616,7 +608,7 @@ def test_pipeline_tables_equal_the_driver_shared_tables(spark, pipeline_out):
     """One DAG: the stage tables KGPipeline writes equal, row for row,
     the in-memory tables the driver queries share
     (__spark_entry__._shared), which are built from the same stage
-    table (different extraction backend: rule vs rule_arrow)."""
+    table with the same defaults."""
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(

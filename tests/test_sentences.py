@@ -5,6 +5,7 @@ reconstruction invariant (BASELINE.json input_hint)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from openie_spark.functions.arrays import segment_words, words_of
@@ -98,3 +99,38 @@ def test_hostile_turns_do_not_crash_pipeline(spark):
     # the all-predicate sentence yields one span covering everything
     allp = [r for r in rows if r.turn_idx == 4]
     assert len(allp) == 1 and allp[0].pred == "is was are" and allp[0].subj == ""
+
+
+def test_hostile_turns_match_the_duckdb_oracle(spark, tmp_path):
+    """The probe set above plus mixed terminal punctuation, a >98-word
+    all-predicate turn and a >98-word turn with a short tail sentence:
+    the extraction's rows equal the DuckDB oracle's, and a backend that
+    is not 'rule' or 'neural' is refused."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from openie_spark.operators.extract import extract_triples
+    from openie_spark.plans.oracles import triples_sql
+    from openie_spark.sources.transcripts import read_transcripts
+
+    texts = [None, "", "   ", ". ! ?", "is was are",
+             " ".join(["word"] * 150) + " .",
+             "a . b ! c ?",
+             " ".join(["is"] * 120),
+             " ".join(f"w{i}" for i in range(120)) + " . tail is here"]
+    docs = str(tmp_path / "documents.parquet")
+    pq.write_table(pa.table({"doc_id": pa.array(range(len(texts)), pa.int64()),
+                             "text": pa.array(texts, pa.string())}), docs)
+
+    t = read_transcripts(spark, str(tmp_path))
+    cols = ["conv_id", "turn_idx", "sent_idx", "ext_idx", "sent",
+            "pred", "subj", "obj", "confidence"]
+    got = sorted(map(tuple, extract_triples(t).select(*cols).collect()), key=repr)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{docs}'")
+    want = sorted(con.execute(triples_sql()).fetchall(), key=repr)
+    assert len(got) == len(want) > 0
+    assert got == want
+    with pytest.raises(ValueError):
+        extract_triples(t, backend="rule_arrow")

@@ -6,13 +6,16 @@ Cluster usage (north_rule contract):
     zip -r kgpipe.zip openie_spark
     spark-submit --py-files kgpipe.zip tools/kg_job.py \
         --input  <transcripts dir / Iceberg table path> \
-        --output <warehouse dir> [--backend rule|neural] \
-        [--pair-mode exact|minhash] [--no-resume]
+        --output <warehouse dir> [--backend rule|neural] [--no-resume]
 
 Local usage (also how the scaling bench invokes it):
 
     python tools/kg_job.py --input /root/testdata/sf0.01 --output /tmp/kg \
         --master "local[8]"
+
+Extraction backends: ``rule`` (codegen column expressions, the
+default) and ``neural`` (the BiLSTM+CRF tagger, stages B and D each
+one mapInPandas). Entity linking is exact blocked token Jaccard.
 
 Prints the pipeline summary (stage rows/seconds, triples/sec) as one
 JSON line on stdout.
@@ -29,14 +32,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
+    from openie_spark.session import driver_memory, tune_runtime
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True)
     ap.add_argument("--output", required=True)
-    # 'rule' default; rule vs rule_arrow measurements are recorded in
-    # openie_spark/operators/fast_extract.py.
-    ap.add_argument("--backend", default="rule",
-                    choices=["rule", "rule_arrow", "neural", "neural_fused"])
-    ap.add_argument("--pair-mode", default="exact", choices=["exact", "minhash"])
+    ap.add_argument("--backend", default="rule", choices=["rule", "neural"])
     ap.add_argument("--no-resume", action="store_true")
     ap.add_argument("--analytics", action="store_true",
                     help="Also materialize stage-I graph analytics tables "
@@ -61,10 +62,11 @@ def main() -> None:
     ap.add_argument("--master", default=None,
                     help="Override master (local runs). Under spark-submit leave unset.")
     ap.add_argument("--shuffle-partitions", type=int, default=None)
-    ap.add_argument("--driver-memory",
-                    default=os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+    ap.add_argument("--driver-memory", default=driver_memory(),
                     help="Heap for local-mode runs (local = all tasks share "
-                         "the driver JVM). Ignored under spark-submit --deploy-mode cluster.")
+                         "the driver JVM); default $SPARK_GRAFT_DRIVER_MEM, "
+                         "else min(8g, RAM/4). Ignored under spark-submit "
+                         "--deploy-mode cluster.")
     ap.add_argument("--max-cores", type=int, default=None,
                     help="spark.cores.max — with a standalone master and "
                          "--executor-cores C this fixes the executor count at "
@@ -84,26 +86,17 @@ def main() -> None:
                    .config("spark.executor.memory", args.executor_memory))
     if args.master:
         builder = builder.master(args.master)
-    spark = builder.getOrCreate()
-    for k, v in {
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.session.timeZone": "UTC",
-    }.items():
-        spark.conf.set(k, v)
+    spark = tune_runtime(builder.getOrCreate())  # ships the package to the workers
     if args.shuffle_partitions:
         spark.conf.set("spark.sql.shuffle.partitions", str(args.shuffle_partitions))
     spark.sparkContext.setLogLevel("ERROR")
 
     from openie_spark.pipeline import KGPipeline
-    from openie_spark.session import ship_package
-
-    ship_package(spark)     # Python-UDF backends import it on the workers
 
     if "://" not in args.output:        # remote warehouse paths are
         os.makedirs(args.output, exist_ok=True)  # created by the FS writers
     pipe = KGPipeline(spark, args.input, args.output,
-                      backend=args.backend, pair_mode=args.pair_mode,
+                      backend=args.backend,
                       analytics=args.analytics, export=args.export,
                       enrich=args.enrich)
     if args.prior:

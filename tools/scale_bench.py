@@ -55,15 +55,17 @@ def gen_input(sf_dir: str, copies: int, out_dir: str) -> int:
 
 
 def run_job(input_dir: str, output_dir: str, cpus: int,
-            backend: str = "rule", driver_memory: str = "32g",
+            backend: str = "rule", driver_memory: str | None = None,
             pin: bool = False) -> dict:
+    from openie_spark import session
+
     cmd = [
         sys.executable, os.path.join(REPO, "tools", "kg_job.py"),
         "--input", input_dir, "--output", output_dir,
         "--master", f"local[{cpus}]",
         "--shuffle-partitions", str(2 * cpus),
         "--backend", backend,
-        "--driver-memory", driver_memory,
+        "--driver-memory", driver_memory or session.driver_memory(),
         "--no-resume",
     ]
     if pin:
@@ -101,11 +103,12 @@ def main() -> None:
     # decomposition (2->8 cores, 8->32 threads, 1->4 executor JVMs).
     ap.add_argument("--cpus", default="2,8")
     ap.add_argument("--backend", default="rule",
-                    choices=["rule", "rule_arrow", "neural", "neural_fused"],
+                    choices=["rule", "neural"],
                     help="extraction backend for both legs (the neural "
                          "path is the north-star-shaped one: batched "
                          "pandas UDFs calling the sequence model)")
-    ap.add_argument("--driver-memory", default="32g")
+    ap.add_argument("--driver-memory", default=None,
+                    help="default $SPARK_GRAFT_DRIVER_MEM, else min(8g, RAM/4)")
     ap.add_argument("--pin", action="store_true",
                     help="taskset each leg to exactly N hardware cores "
                          "(JVM + GC + python workers), emulating an "

@@ -269,7 +269,7 @@ def main() -> None:
     g.add_argument("--factor", type=int, default=FACTOR)
     p = sub.add_parser("pipeline")
     p.add_argument("--sf1-dir", default=SF1_DIR)
-    p.add_argument("--backends", default="rule,neural,neural_fused")
+    p.add_argument("--backends", default="rule,neural")
     p.add_argument("--workdir", default="/tmp/openie_sf1_work")
     p.add_argument("--json-out", default="/tmp/sf1_pipeline.json")
     r = sub.add_parser("report")
