@@ -37,7 +37,6 @@ TAGSET_OIE2016 = (
     "A0-I", "A1-I", "A2-I", "A3-I", "A4-I", "A5-I",
     "P-B", "P-I",
 )
-TAG2IDX = {t: i for i, t in enumerate(TAGSET_OIE2016)}
 IDX2TAG = dict(enumerate(TAGSET_OIE2016))
 
 # Deterministic transcripts derivation from the driver's `documents`

@@ -1,5 +1,5 @@
 """Document-curation operators over a ``documents`` table (doc_id,
-text): exact and substring-level deduplication, benchmark
-decontamination, corpus-quality signals and text statistics. No KG
-stage reads them; hashing helpers live in ``openie_spark.functions``.
+text): exact and substring-level deduplication (``dedup``) and text
+statistics and sketches (``textstats``). No KG stage, driver query or
+tool reads them; hashing helpers live in ``openie_spark.functions``.
 """

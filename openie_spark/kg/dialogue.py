@@ -30,7 +30,6 @@ from openie_spark.functions.hashing import (
     tokens_of,
     word_ngrams,
 )
-from openie_spark.functions.partitioning import spread
 
 # conversation near-dup: word-3-gram minhash-LSH, 8 bands x 2 rows
 # (threshold ≈ (1/8)^(1/2) ≈ 0.35 — high recall at j ≥ 0.5), verified
@@ -199,13 +198,13 @@ def minhash_pairs_docs(docs: DataFrame) -> DataFrame:
     (plans/oracles.conv_minhash_pairs_sql) recomputes the full LSH
     structure.
 
-    Plan shape (scale-deliberate): the md5-heavy signature projection
-    runs ONCE per doc behind an exchange barrier (spread = full-core
-    parallelism AND no projection collapse into the 8-way band
-    explode); the band self-join carries only (doc_id, band hash) —
-    candidate (a, b) pairs dedup WITHOUT the shingle arrays in the
-    shuffle, and shingles re-attach afterwards by doc_id join for the
-    exact-Jaccard verify.
+    Plan shape (scale-deliberate): the md5-heavy shingle and signature
+    projections run ONCE per doc at full-core parallelism (a repartition
+    to the default parallelism first), the signature behind an exchange
+    barrier below the banded checkpoint; the band self-join carries
+    only (doc_id, band hash) — candidate (a, b) pairs dedup WITHOUT the
+    shingle arrays in the shuffle, and shingles re-attach afterwards by
+    doc_id join for the exact-Jaccard verify.
 
     Exact-duplicate collapse (semantics-preserving): byte-identical
     texts share the full signature (every band collides) and score
@@ -215,9 +214,13 @@ def minhash_pairs_docs(docs: DataFrame) -> DataFrame:
     Without this, a corpus where popular conversations repeat m times
     pays m² shingle-array verifies per duplicate group (measured 703s
     vs ~10s on a 10x replica with 10-copy groups)."""
+    # repartitioned unconditionally: partitioning.spread would ask docs
+    # and reps (each below a shuffle) for their partition count, and
+    # under AQE that executes the shuffle as a separate job
+    n = docs.sparkSession.sparkContext.defaultParallelism
     # group key = (text IS NULL, md5(text)) as one string: md5 is 32
     # hex digits, so the NULL marker collides with no text at all
-    keyed = spread(docs, "doc_id").select(
+    keyed = docs.repartition(n, "doc_id").select(
         "doc_id", "text",
         F.coalesce(F.md5(F.col("text")), F.lit("NULL")).alias("gkey"),
     ).localCheckpoint(eager=False)     # feeds reps AND the member map
@@ -237,14 +240,15 @@ def minhash_pairs_docs(docs: DataFrame) -> DataFrame:
     # verify joins; banded feeds both sides of the self-join (without
     # the checkpoint the 16-slot md5 projection is evaluated twice per
     # doc — the same fix kg exact_pairs carries)
-    sh = spread(reps, "doc_id").select(
+    sh = reps.repartition(n, "doc_id").select(
         "doc_id", word_ngrams(tokens_of(F.col("text"))).alias("shingles"),
     ).localCheckpoint(eager=False)
-    sig = spread(
-        sh.select("doc_id", minhash_sig_md5(F.col("shingles"),
-                                            DOC_BANDS * DOC_ROWS).alias("sig")),
-        "doc_id",
-    )
+    # the exchange under banded's checkpoint is load-bearing: with sig
+    # read straight from sh, kg_conv_neardup's run logs bursts of
+    # "Failed to update accumulator ... (Unknown class)" on the driver
+    sig = sh.select(
+        "doc_id", minhash_sig_md5(F.col("shingles"), DOC_BANDS * DOC_ROWS).alias("sig"),
+    ).repartition(n, "doc_id")
     banded = sig.select(
         "doc_id",
         F.posexplode(band_hashes_md5(F.col("sig"), DOC_BANDS, DOC_ROWS))

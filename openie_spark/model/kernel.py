@@ -25,10 +25,6 @@ def _layer_norm(x: np.ndarray, eps: float = 1e-5) -> np.ndarray:
     return (x - mu) / np.sqrt(var + eps)
 
 
-def _sigmoid(x: np.ndarray) -> np.ndarray:
-    return 1.0 / (1.0 + np.exp(-x))
-
-
 def _sigmoid_(x: np.ndarray) -> np.ndarray:
     """In-place sigmoid: same op sequence as 1/(1+exp(-x))."""
     np.negative(x, out=x)

@@ -1,5 +1,5 @@
-"""Document-curation operator tests (dedup / textstats / decontam
-bloom) on /root/testdata/sf0.001."""
+"""Document-curation operator tests (dedup / textstats) on
+/root/testdata/sf0.001."""
 
 from __future__ import annotations
 
@@ -630,52 +630,6 @@ def test_cms_no_collision_is_exact_and_deterministic(spark, docs):
         assert r[2] >= r[3] >= 1 and r[4] >= 0
     keys = [( -t[2], t[1]) for t in sorted(rows, key=lambda t: t[0])]
     assert keys == sorted(keys)
-
-
-def test_bloom_flags_never_misses_and_audits_fp(spark):
-    """Bloom one-sidedness: every true member is flagged; the audit
-    columns expose false positives exactly (checked vs a pure-python
-    rebuild of the same bitmap)."""
-    import hashlib
-
-    from openie_spark.datapipe.decontam import (
-        DECON_HOLDOUT_PPM,
-        DECON_SALT,
-        bloom_flags,
-        planted_exact,
-    )
-
-    def h60(s):
-        return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
-
-    docs = spark.createDataFrame(
-        [(i, f"doc body {i % 37} tail") for i in range(120)],
-        "doc_id long, text string")
-    # tiny filter forces real false positives
-    got = {r.doc_id: (r.bloom_hit, r.true_member)
-           for r in bloom_flags(planted_exact(docs),
-                                m_bits=64, k=2).collect()}
-    rows = [(i, f"doc body {i % 37} tail") for i in range(120)]
-    from openie_spark.datapipe.dedup import PLANT_OFFSET
-    planted = rows + [(i + PLANT_OFFSET, t) for i, t in rows]
-    is_eval = {i: h60(f"{DECON_SALT}#{i}") % 1_000_000 < DECON_HOLDOUT_PPM
-               for i, _ in planted}
-    texts = {i: t for i, t in planted}
-    keys = {hashlib.md5(texts[i].encode()).hexdigest()
-            for i in texts if is_eval[i]}
-    bits = {h60(f"bloom{j}#{h}") % 64 for h in keys for j in range(2)}
-    want = {}
-    for i, t in planted:
-        if is_eval[i]:
-            continue
-        h = hashlib.md5(t.encode()).hexdigest()
-        hit = all(h60(f"bloom{j}#{h}") % 64 in bits for j in range(2))
-        want[i] = (hit, h in keys)
-    assert got == want
-    assert any(m for _h, m in got.values())          # true members exist
-    for hit, member in got.values():
-        assert hit or not member                     # no false negatives
-    assert any(h and not m for h, m in got.values())  # fp audit non-vacuous
 
 
 def test_containment_excerpt_is_asymmetric(spark):

@@ -589,6 +589,24 @@ def test_kg_job_python_udf_backend_runs_from_any_cwd(tmp_path):
     assert not list(tmp_path.glob("openie_spark_pkg*"))
 
 
+def test_kg_job_help_names_every_optional_stage():
+    """`tools/kg_job.py --help` names every row of the analytics,
+    export and enrich stage tables its three flags add (no JVM)."""
+    import re
+    import subprocess
+    import sys
+
+    from openie_spark.pipeline import ANALYTICS_STAGES, ENRICH_STAGES, EXPORT_STAGES
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    r = subprocess.run(
+        [sys.executable, os.path.join(root, "tools", "kg_job.py"), "--help"],
+        capture_output=True, text=True, timeout=60, check=True)
+    words = set(re.findall(r"\w+", r.stdout))
+    stages = (*ANALYTICS_STAGES, *EXPORT_STAGES, *ENRICH_STAGES)
+    assert [s.name for s in stages if s.name not in words] == []
+
+
 def test_manifest_storage_stats(pipeline_out):
     """Every stage manifest carries physical-layout lineage: data file
     count and total bytes of the written table (sidecars excluded)."""

@@ -32,7 +32,16 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
+    from openie_spark.pipeline import (
+        ANALYTICS_STAGES,
+        ENRICH_STAGES,
+        EXPORT_STAGES,
+        KGPipeline,
+    )
     from openie_spark.session import driver_memory, tune_runtime
+
+    def names(stages) -> str:
+        return ", ".join(s.name for s in stages)
 
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True)
@@ -40,19 +49,14 @@ def main() -> None:
     ap.add_argument("--backend", default="rule", choices=["rule", "neural"])
     ap.add_argument("--no-resume", action="store_true")
     ap.add_argument("--analytics", action="store_true",
-                    help="Also materialize stage-I graph analytics tables "
-                         "(pagerank, triangles, khop, harmonic, "
-                         "seed_distances, communities, kcore, "
-                         "degree_hist) with manifests.")
+                    help="Also materialize the stage-I graph analytics "
+                         f"tables ({names(ANALYTICS_STAGES)}) with manifests.")
     ap.add_argument("--export", action="store_true",
-                    help="Also materialize consumer-facing sinks: temporal "
-                         "relation intervals and the N-Triples table.")
+                    help="Also materialize the consumer-facing sinks "
+                         f"({names(EXPORT_STAGES)}).")
     ap.add_argument("--enrich", action="store_true",
-                    help="Also materialize stage-I+ enrichment tables: "
-                         "entity types, relation schema signatures, "
-                         "per-conversation salience, coref-recovered "
-                         "edges, topic segments, entity timelines, "
-                         "link-prediction splits, extraction yield.")
+                    help="Also materialize the stage-I+ enrichment tables "
+                         f"({names(ENRICH_STAGES)}).")
     ap.add_argument("--prior", default=None,
                     help="Incremental mode: merge --input (NEW conv_ids "
                          "only) into the completed pipeline output at this "
@@ -90,8 +94,6 @@ def main() -> None:
     if args.shuffle_partitions:
         spark.conf.set("spark.sql.shuffle.partitions", str(args.shuffle_partitions))
     spark.sparkContext.setLogLevel("ERROR")
-
-    from openie_spark.pipeline import KGPipeline
 
     if "://" not in args.output:        # remote warehouse paths are
         os.makedirs(args.output, exist_ok=True)  # created by the FS writers
